@@ -5,11 +5,12 @@ import java.io.File
 /** Lifecycle management for the engine's scratch artifacts. Every
   * stored artifact the query layer persists (stats tables, IVF index
   * roots, staged stream sources/sinks, MV parquet dirs) lives under
-  * `java.io.tmpdir` as `graft_<kind>_…_<applicationId>` and is keyed
-  * to the owning Spark application. The per-call memo caches evict
-  * stale ENTRIES when the application changes, but the directories
-  * themselves used to outlive the JVM — repeated application runs
-  * accumulated orphans. Three cooperating mechanisms close that:
+  * `java.io.tmpdir` in a root [[Artifacts]] names
+  * `graft_<kind>_<dirTag>_<applicationId>`, keyed to the owning Spark
+  * application. [[Artifacts.memo]] evicts stale ENTRIES when the
+  * application changes, but the directories themselves used to
+  * outlive the JVM — repeated application runs accumulated orphans.
+  * Three cooperating mechanisms close that:
   *
   *  - a JVM shutdown hook (armed once per application id) deletes the
   *    CURRENT application's `graft_*_<appId>` dirs at exit — the

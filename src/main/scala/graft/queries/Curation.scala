@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Artifacts
 import org.apache.spark.sql.types.DecimalType
 
 /** The composed curation pipeline — the "a user could switch" showcase:
@@ -405,8 +406,7 @@ object Curation {
     def rollup(df: DataFrame): DataFrame =
       df.groupBy("o_custkey", "month")
         .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("cents"))
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_c08_mv_${s.sparkContext.applicationId}").getAbsolutePath
+    val stateDir = Artifacts.root(s, "c08_mv", dir).getAbsolutePath
     rollup(orders.filter(col("o_orderdate") < split))
       .write.mode("overwrite").parquet(stateDir)
     val base = s.read.parquet(stateDir) // the stored view, read back
@@ -451,8 +451,7 @@ object Curation {
     def sketch(df: DataFrame): DataFrame =
       df.groupBy("o_orderpriority")
         .agg(expr("hll_sketch_agg(o_custkey, 12)").as("sk"))
-    val stateDir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_c09_sk_${s.sparkContext.applicationId}").getAbsolutePath
+    val stateDir = Artifacts.root(s, "c09_sk", dir).getAbsolutePath
     sketch(orders.filter(col("o_orderdate") < split))
       .write.mode("overwrite").parquet(stateDir)
     val base = s.read.parquet(stateDir) // stored sketches, read back
@@ -997,8 +996,7 @@ object Curation {
     // ---- the stored view (c08's discipline: write, read back; the
     // dir is TAGGED by sf dir so a second dir in the same application
     // cannot overwrite state a still-lazy first plan will re-read) ----
-    val stateDir = graft.core.Scratch.root("c16_mv", dir,
-      s.sparkContext.applicationId).getAbsolutePath
+    val stateDir = Artifacts.root(s, "c16_mv", dir).getAbsolutePath
     base.groupBy("o_orderpriority", "month")
       .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("cents"),
         min(col("cents")).as("cents_min"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Artifacts
 
 /** Iterative graph analytics expressed as the canonical
   * Pregel-as-DataFrame loop: each superstep is ONE edge⋈rank join +
@@ -36,6 +37,10 @@ object Graph {
       .union(pairs.select(col("cust").as("src"), col("supp").as("dst")))
   }
 
+  /** Malformed broadcastRows values already reported. */
+  private val warnedBroadcastRows =
+    scala.collection.concurrent.TrieMap.empty[String, Unit]
+
   /** Superstep join-strategy choice from a MEASURED row count — the
     * sk07/sk12 stored-stats discipline applied to iterative loops.
     * Every graph round joins the persisted edge set with a per-round
@@ -60,9 +65,11 @@ object Graph {
       .getOption("spark.graft.superstep.broadcastRows")
       .flatMap(v => scala.util.Try(v.trim.toLong).toOption.orElse {
         // a malformed conf value must not throw from inside a query
-        // builder — name the key, fall back to the default
-        System.err.println("[graft] ignoring malformed " +
-          s"spark.graft.superstep.broadcastRows='$v' (expected a long)")
+        // builder — name the key once per value, fall back to the
+        // default
+        if (warnedBroadcastRows.putIfAbsent(v, ()).isEmpty)
+          System.err.println("[graft] ignoring malformed " +
+            s"spark.graft.superstep.broadcastRows='$v' (expected a long)")
         None
       }).getOrElse(2000000L)
     if (rows <= cap) broadcast(df) else df
@@ -989,33 +996,20 @@ object Graph {
     * localCheckpoint-backed frame: checkpoint blocks die with their
     * executor and never self-heal, so a memoized frame would poison
     * every later caller after a block loss, and pinned blocks would
-    * accumulate per (dir, cap) for the application's lifetime. A
-    * vanished dir simply falls out of the memo and rebuilds. */
-  private val lpaLabelsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int),
-      String]()
-
-  /** `prebuilt`: an already-materialized edge frame the caller owns
+    * accumulate per (dir, cap) for the application's lifetime.
+    *
+    * `prebuilt`: an already-materialized edge frame the caller owns
     * (gr12 passes its audit checkpoint), so a cold memo never builds
     * the join+distinct edge list twice in one query. */
   private def lpaLabels(s: SparkSession, dir: String, cap: Int,
       prebuilt: Option[DataFrame] = None): DataFrame = {
-    lpaLabelsCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    val path = lpaLabelsCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, cap), _ => {
-        val tag = graft.core.Scratch.dirTag(dir)
-        val out = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_gr11lab_${tag}_c${cap}_" +
-            s.sparkContext.applicationId)
-        val owned = prebuilt.isEmpty
-        val e = prebuilt.getOrElse(edges(s, dir).persist())
-        lpaOnEdges(e, LpRounds, cap)
-          .write.mode("overwrite").parquet(out.getAbsolutePath)
-        if (owned) e.unpersist(false)
-        out.getAbsolutePath
-      })
+    val path = Artifacts.memo(s, s"gr11lab_c$cap", dir) { out =>
+      val owned = prebuilt.isEmpty
+      val e = prebuilt.getOrElse(edges(s, dir).persist())
+      lpaOnEdges(e, LpRounds, cap)
+        .write.mode("overwrite").parquet(out.getAbsolutePath)
+      if (owned) e.unpersist(false)
+    }
     s.read.parquet(path)
   }
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Artifacts
 
 /** Multi-dimensional data layout: Z-order (Morton) clustering, the
   * standard write-side organization for tables that are filtered on
@@ -190,9 +191,6 @@ object Layout {
       .orderBy("pred_id")
   }
 
-  private val zmCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
-
   /** Build-once: lineitem re-laid-out CLUSTERED ON THE FILTER COLUMN
     * (calendar-quarter shards of l_shipdate, hive `partitionBy`) plus
     * a stored per-shard ZONE MAP (min/max ship day + row count) — the
@@ -200,26 +198,15 @@ object Layout {
     * deterministic (no sampled split points), so the zone map — and
     * therefore every skipping decision below — replays exactly in the
     * oracle. */
-  private def zmRoot(s: SparkSession, dir: String): String = {
-    zmCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    zmCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val tag = graft.core.Scratch.dirTag(dir)
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_q44_${tag}_${s.sparkContext.applicationId}")
-        if (root.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(root)
-        val base = root.getAbsolutePath
-        zmProjected(s, dir)
-          .write.partitionBy("shard").mode("overwrite")
-          .parquet(s"$base/table")
-        zmStats(s.read.parquet(s"$base/table"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$base/manifest")
-        base
-      })
-  }
+  private def zmRoot(s: SparkSession, dir: String): String =
+    Artifacts.memo(s, "q44", dir) { root =>
+      val base = root.getAbsolutePath
+      zmProjected(s, dir)
+        .write.partitionBy("shard").mode("overwrite")
+        .parquet(s"$base/table")
+      zmStats(s.read.parquet(s"$base/table"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$base/manifest")
+    }
 
   /** Zone-qualifying shard ids for a [lo, hi] ship-day predicate —
     * read from the KB-sized stored manifest, driver-side (the s24
@@ -291,9 +278,6 @@ object Layout {
   }
 
   // ----------------------------------- q45 time-travel snapshot reads
-  private val ttCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
-
   /** Builds the versioned layout once per (application, sf dir):
     * `base/` (the version-0 snapshot of orders as (k, cents)) plus
     * delta dirs `deltas/v=1..3`, each a CDC batch of (k, cents, op)
@@ -335,19 +319,8 @@ object Layout {
   }
 
   private[graft] def buildVersionedOrders(s: SparkSession, dir: String)
-      : String = {
-    ttCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    ttCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val tag = graft.core.Scratch.dirTag(dir)
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_q45_${tag}_${s.sparkContext.applicationId}")
-        writeVersionedOrders(s, dir, root)
-        root.getAbsolutePath
-      })
-  }
+      : String =
+    Artifacts.memo(s, "q45", dir)(writeVersionedOrders(s, dir, _))
 
   /** The layout's commit pointer — (base_version, base dir name),
     * defaulting to (0, "base") when no compaction has run. The meta
@@ -508,9 +481,6 @@ object Layout {
     ttVacuum(root, upTo, s"base_v$upTo")
   }
 
-  private val ttCompactCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
-
   /** q46 — the layout of q45 COMPACTED to horizon v=2 and served for
     * the still-live versions: reads at v ∈ {2, 3} come from the
     * snapshot + the v=3 tail delta and must equal the uncompacted
@@ -519,18 +489,10 @@ object Layout {
     * version rejection, and the crash window where the meta swap
     * landed but cleanup did not). */
   def timeTravelCompacted(s: SparkSession, dir: String): DataFrame = {
-    ttCompactCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    val root = ttCompactCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val tag = graft.core.Scratch.dirTag(dir)
-        val r = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_q46_${tag}_${s.sparkContext.applicationId}")
-        writeVersionedOrders(s, dir, r)
-        compactVersions(s, r.getAbsolutePath, upTo = 2)
-        r.getAbsolutePath
-      })
+    val root = Artifacts.memo(s, "q46", dir) { r =>
+      writeVersionedOrders(s, dir, r)
+      compactVersions(s, r.getAbsolutePath, upTo = 2)
+    }
     (2 to 3).map { v =>
       readOrdersAsOf(s, root, v)
         .agg(count(lit(1)).as("n_rows"),
@@ -673,10 +635,7 @@ object Layout {
       s"writer $writerId: gave up after $maxAttempts OCC attempts")
   }
 
-  private val occCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
-
-  /** Build-once memo for q47: the q45 fixture plus a DETERMINISTIC
+  /** q47's root: the q45 fixture plus a DETERMINISTIC
     * two-writer race — both writers stage from the same v3 snapshot
     * and meet at a barrier immediately before the claim, so exactly
     * one wins v4 and the other provably conflicts, rebases onto the
@@ -685,49 +644,40 @@ object Layout {
     * from current state), so the final table is deterministic and
     * directly oracle-checkable even though the winner is not. */
   private[graft] def buildOccOrders(s: SparkSession, dir: String)
-      : String = {
-    occCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    occCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val tag = graft.core.Scratch.dirTag(dir)
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_q47_${tag}_${s.sparkContext.applicationId}")
-        writeVersionedOrders(s, dir, root)
-        val barrier = new java.util.concurrent.CyclicBarrier(2)
-        val meet: (Int, Int) => Unit = (attempt, _) =>
-          if (attempt == 0) {
-            barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)
-            ()
-          }
-        // writer A: erase k%20==5 and bump k%20==7 by 100 (read-
-        // modify-write); writer B: bump k%20==7 by 3. A lost update
-        // would make the final bump 100 or 3 instead of 103.
-        def bump(state: DataFrame, by: Long): DataFrame =
-          state.filter(pmod(col("k"), lit(20)) === 7)
-            .select(col("k"), (col("cents") + by).as("cents"),
-              lit("U").as("op"))
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        try {
-          val fa = pool.submit(new java.util.concurrent.Callable[Int] {
-            def call(): Int = commitDeltaOcc(s, root.getAbsolutePath,
-              "A", st => st.filter(pmod(col("k"), lit(20)) === 5)
-                .select(col("k"), lit(0L).as("cents"),
-                  lit("D").as("op"))
-                .unionByName(bump(st, 100)), beforeClaim = meet)
-          })
-          val fb = pool.submit(new java.util.concurrent.Callable[Int] {
-            def call(): Int = commitDeltaOcc(s, root.getAbsolutePath,
-              "B", st => bump(st, 3), beforeClaim = meet)
-          })
-          val committed = Seq(fa.get(), fb.get()).sorted
-          require(committed == Seq(4, 5),
-            s"the race must commit exactly v4 and v5, got $committed")
-        } finally pool.shutdown()
-        root.getAbsolutePath
-      })
-  }
+      : String =
+    Artifacts.memo(s, "q47", dir) { root =>
+      writeVersionedOrders(s, dir, root)
+      val barrier = new java.util.concurrent.CyclicBarrier(2)
+      val meet: (Int, Int) => Unit = (attempt, _) =>
+        if (attempt == 0) {
+          barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)
+          ()
+        }
+      // writer A: erase k%20==5 and bump k%20==7 by 100 (read-
+      // modify-write); writer B: bump k%20==7 by 3. A lost update
+      // would make the final bump 100 or 3 instead of 103.
+      def bump(state: DataFrame, by: Long): DataFrame =
+        state.filter(pmod(col("k"), lit(20)) === 7)
+          .select(col("k"), (col("cents") + by).as("cents"),
+            lit("U").as("op"))
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        val fa = pool.submit(new java.util.concurrent.Callable[Int] {
+          def call(): Int = commitDeltaOcc(s, root.getAbsolutePath,
+            "A", st => st.filter(pmod(col("k"), lit(20)) === 5)
+              .select(col("k"), lit(0L).as("cents"),
+                lit("D").as("op"))
+              .unionByName(bump(st, 100)), beforeClaim = meet)
+        })
+        val fb = pool.submit(new java.util.concurrent.Callable[Int] {
+          def call(): Int = commitDeltaOcc(s, root.getAbsolutePath,
+            "B", st => bump(st, 3), beforeClaim = meet)
+        })
+        val committed = Seq(fa.get(), fb.get()).sorted
+        require(committed == Seq(4, 5),
+          s"the race must commit exactly v4 and v5, got $committed")
+      } finally pool.shutdown()
+    }
 
   /** q47 — CONCURRENT COMMITS serialized by optimistic concurrency:
     * two writers race from the same snapshot (barrier-pinned, so the

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.core.Artifacts
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -265,14 +266,6 @@ object Similarity {
   }
 
   // --------------------------------------- s24 stored IVF index (serve)
-  /** Build-once memo per (application, sf dir) — the index is an
-    * ARTIFACT: building it per serve call would re-scan the corpus,
-    * which is exactly what a stored index exists to avoid. Stale
-    * entries (prior SparkContext, tmp-cleaned dirs) are evicted the
-    * way the streaming weekly-source memo does it. */
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** Builds and PERSISTS the IVF index for the embeddings corpus:
     * `centroids/` (k rows: cid → vector) and `postings/` — every
     * corpus vector assigned to its nearest centroid in one broadcast
@@ -283,23 +276,14 @@ object Similarity {
     * layout (FAISS IVF on object storage): at 100 TB the postings are
     * ~sqrt(n) directories, each internally splittable, and index build
     * cost is one corpus pass. Returns the index root. */
-  private[graft] def buildIvfIndex(s: SparkSession, dir: String): String = {
-    ivfIndexCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    ivfIndexCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val tag = graft.core.Scratch.dirTag(dir)
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_s24_${tag}_${s.sparkContext.applicationId}")
-        val emb = Relational.table(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding"))
-        // shared writer (centroids + postings + idmap) — s24 indexes
-        // are upsertable with the s25 machinery out of the box
-        writeIvfIndexTrained(s, emb, root)
-        root.getAbsolutePath
-      })
-  }
+  private[graft] def buildIvfIndex(s: SparkSession, dir: String): String =
+    Artifacts.memo(s, "s24", dir) { root =>
+      val emb = Relational.table(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding"))
+      // shared writer (centroids + postings + idmap) — s24 indexes
+      // are upsertable with the s25 machinery out of the box
+      writeIvfIndexTrained(s, emb, root)
+    }
 
   /** s24 — ANN answered from the STORED index (the serve path): the
     * MV discipline sk04/sk06 apply to sketches, applied to similarity
@@ -529,41 +513,28 @@ object Similarity {
     * (base build + upserted delta) and the FULL-REBUILD reference
     * (one-shot assignment of the union corpus with the SAME stored
     * centroid set). */
-  private val ivfUpsertCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (String, String)]()
-
   private[graft] def buildUpsertedIvfIndex(s: SparkSession, dir: String)
       : (String, String) = {
-    ivfUpsertCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue._1).isDirectory ||
-        !new java.io.File(e.getValue._2).isDirectory)
-    ivfUpsertCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val tag = graft.core.Scratch.dirTag(dir)
-        val emb = Relational.table(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding"))
-        // base corpus = 3/4 of the vectors; the delta batch is the
-        // remaining quarter PLUS re-writes of every vec_id % 8 == 0
-        // vector (ids already present in the base — the REPLACE half
-        // of upsert; payload identical, so the union corpus is still
-        // exactly the full table)
-        val base = emb.filter(pmod(col("vec_id"), lit(4)) =!= 3)
-        val delta = emb.filter(pmod(col("vec_id"), lit(4)) === 3)
-          .unionByName(emb.filter(pmod(col("vec_id"), lit(8)) === 0))
-        // centroids train on the BASE (that is what existed at build
-        // time) and stay immutable through the upsert
-        val cents = ivfCentroids(base, IvfK, IvfIters, seed = 9000)
-        val incRoot = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_s25inc_${tag}_${s.sparkContext.applicationId}")
-        val fullRoot = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_s25full_${tag}_${s.sparkContext.applicationId}")
-        writeIvfIndex(s, base, cents, incRoot)
-        upsertIvfIndex(s, incRoot.getAbsolutePath, delta)
-        writeIvfIndex(s, emb, cents, fullRoot)
-        (incRoot.getAbsolutePath, fullRoot.getAbsolutePath)
-      })
+    val root = Artifacts.memo(s, "s25", dir) { root =>
+      val emb = Relational.table(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding"))
+      // base corpus = 3/4 of the vectors; the delta batch is the
+      // remaining quarter PLUS re-writes of every vec_id % 8 == 0
+      // vector (ids already present in the base — the REPLACE half
+      // of upsert; payload identical, so the union corpus is still
+      // exactly the full table)
+      val base = emb.filter(pmod(col("vec_id"), lit(4)) =!= 3)
+      val delta = emb.filter(pmod(col("vec_id"), lit(4)) === 3)
+        .unionByName(emb.filter(pmod(col("vec_id"), lit(8)) === 0))
+      // centroids train on the BASE (that is what existed at build
+      // time) and stay immutable through the upsert
+      val cents = ivfCentroids(base, IvfK, IvfIters, seed = 9000)
+      val incRoot = new java.io.File(root, "inc")
+      writeIvfIndex(s, base, cents, incRoot)
+      upsertIvfIndex(s, incRoot.getAbsolutePath, delta)
+      writeIvfIndex(s, emb, cents, new java.io.File(root, "full"))
+    }
+    (s"$root/inc", s"$root/full")
   }
 
   /** s25 — ANN served from the UPSERTED index: the s24 serve path
@@ -801,28 +772,16 @@ object Similarity {
     hot.toSeq
   }
 
-  private val ivfRebalCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  /** Build-once memo for the s31 root: the s24 build, then a
-    * top-2-list rebalance applied in place. */
+  /** The s31 root: the s24 build, then a top-2-list rebalance
+    * applied in place. */
   private[graft] def buildRebalancedIvfIndex(s: SparkSession,
-      dir: String): String = {
-    ivfRebalCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    ivfRebalCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val tag = graft.core.Scratch.dirTag(dir)
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_s31_${tag}_${s.sparkContext.applicationId}")
-        val emb = Relational.table(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding"))
-        writeIvfIndexTrained(s, emb, root)
-        rebalanceIvfIndex(s, root.getAbsolutePath)
-        root.getAbsolutePath
-      })
-  }
+      dir: String): String =
+    Artifacts.memo(s, "s31", dir) { root =>
+      val emb = Relational.table(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding"))
+      writeIvfIndexTrained(s, emb, root)
+      rebalanceIvfIndex(s, root.getAbsolutePath)
+    }
 
   /** s31 — ANN served from the REBALANCED index: the unchanged s24
     * serve path over an index whose two hottest lists were split in
@@ -1091,55 +1050,38 @@ object Similarity {
   private def erasurePred(idCol: String) =
     pmod(col(idCol), lit(7)) === 3 && col(idCol) >= NumQueries
 
-  /** Build-once memo for the s32 root quartet: (BM25 erased, BM25
+  /** The s32 root quartet: (BM25 erased, BM25
     * rebuilt-without-the-docs, IVF erased, IVF rebuilt-without — the
     * IVF pair sharing one full-corpus-trained centroid set, the s25
     * immutable-centroid contract). The erase legs build the FULL
     * index first, then delete — and replay the delete a second time,
     * which must be a no-op (Round14Spec pins it at file level). */
-  private val erasureCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (String, String, String, String)]()
-
   private[graft] def buildErasedIndexes(s: SparkSession, dir: String)
       : (String, String, String, String) = {
-    erasureCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue._1).isDirectory ||
-        !new java.io.File(e.getValue._2).isDirectory ||
-        !new java.io.File(e.getValue._3).isDirectory ||
-        !new java.io.File(e.getValue._4).isDirectory)
-    erasureCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val tag = graft.core.Scratch.dirTag(dir)
-        def root(kind: String) = new java.io.File(
-          sys.props("java.io.tmpdir"),
-          s"graft_s32${kind}_${tag}_${s.sparkContext.applicationId}")
-        val docs = Relational.table(s, dir, "documents")
-          .select(col("doc_id"), col("text"))
-        val bmErased = root("bm")
-        val bmRef = root("bmref")
-        writeBm25Index(s, docs, bmErased)
-        val delDocs = docs.filter(erasurePred("doc_id"))
-          .select("doc_id")
-        deleteFromBm25Index(s, bmErased.getAbsolutePath, delDocs)
-        deleteFromBm25Index(s, bmErased.getAbsolutePath, delDocs) // replay
-        writeBm25Index(s, docs.filter(!erasurePred("doc_id")), bmRef)
-        val emb = Relational.table(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding"))
-        val cents = ivfCentroids(emb, IvfK, IvfIters, seed = 9000)
-        val ivfErased = root("ivf")
-        val ivfRef = root("ivfref")
-        writeIvfIndex(s, emb, cents, ivfErased)
-        val delVecs = emb.filter(erasurePred("vec_id"))
-          .select("vec_id")
-        deleteFromIvfIndex(s, ivfErased.getAbsolutePath, delVecs)
-        deleteFromIvfIndex(s, ivfErased.getAbsolutePath, delVecs) // replay
-        writeIvfIndex(s, emb.filter(!erasurePred("vec_id")), cents,
-          ivfRef)
-        (bmErased.getAbsolutePath, bmRef.getAbsolutePath,
-          ivfErased.getAbsolutePath, ivfRef.getAbsolutePath)
-      })
+    val root = Artifacts.memo(s, "s32", dir) { root =>
+      val docs = Relational.table(s, dir, "documents")
+        .select(col("doc_id"), col("text"))
+      val bmErased = new java.io.File(root, "bm")
+      writeBm25Index(s, docs, bmErased)
+      val delDocs = docs.filter(erasurePred("doc_id"))
+        .select("doc_id")
+      deleteFromBm25Index(s, bmErased.getAbsolutePath, delDocs)
+      deleteFromBm25Index(s, bmErased.getAbsolutePath, delDocs) // replay
+      writeBm25Index(s, docs.filter(!erasurePred("doc_id")),
+        new java.io.File(root, "bmref"))
+      val emb = Relational.table(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding"))
+      val cents = ivfCentroids(emb, IvfK, IvfIters, seed = 9000)
+      val ivfErased = new java.io.File(root, "ivf")
+      writeIvfIndex(s, emb, cents, ivfErased)
+      val delVecs = emb.filter(erasurePred("vec_id"))
+        .select("vec_id")
+      deleteFromIvfIndex(s, ivfErased.getAbsolutePath, delVecs)
+      deleteFromIvfIndex(s, ivfErased.getAbsolutePath, delVecs) // replay
+      writeIvfIndex(s, emb.filter(!erasurePred("vec_id")), cents,
+        new java.io.File(root, "ivfref"))
+    }
+    (s"$root/bm", s"$root/bmref", s"$root/ivf", s"$root/ivfref")
   }
 
   /** s32 — the lexical arm served from the ERASED BM25 index: every
@@ -2037,9 +1979,6 @@ object Similarity {
       : org.apache.spark.sql.Column =
     pmod(xxhash64(t), lit(Bm25Buckets)).cast("int")
 
-  private val bm25IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** Doc-hash bucket of the `docmap/` sidecar — the BM25 analog of
     * the IVF `idmap/`: an upsert must evict a REPLACED document's old
     * postings rows, which live scattered across the token buckets of
@@ -2128,20 +2067,11 @@ object Similarity {
     * pass + one (token, doc) aggregation — the same one-shuffle shape
     * as the in-plan arm, paid once. */
   private[graft] def buildBm25Index(s: SparkSession, dir: String)
-      : String = {
-    bm25IndexCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    bm25IndexCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val tag = graft.core.Scratch.dirTag(dir)
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_s29_${tag}_${s.sparkContext.applicationId}")
-        writeBm25Index(s, Relational.table(s, dir, "documents")
-          .select(col("doc_id"), col("text")), root)
-        root.getAbsolutePath
-      })
-  }
+      : String =
+    Artifacts.memo(s, "s29", dir) { root =>
+      writeBm25Index(s, Relational.table(s, dir, "documents")
+        .select(col("doc_id"), col("text")), root)
+    }
 
   /** The lexical arm SERVED from the stored BM25 index: the bounded
     * per-request query set (8 docs' texts) resolves to a vocabulary
@@ -2341,37 +2271,24 @@ object Similarity {
     ()
   }
 
-  /** Build-once memo for the s30 root pair: the base-plus-upsert
+  /** The s30 root pair: the base-plus-upsert
     * index and the full-rebuild reference (same split as s25: base =
     * 3/4 of the docs, delta = the rest PLUS identical-payload
     * re-writes of every doc_id % 8 == 0 — the REPLACE half). */
-  private val bm25UpsertCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (String, String)]()
-
   private[graft] def buildUpsertedBm25Index(s: SparkSession,
       dir: String): (String, String) = {
-    bm25UpsertCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue._1).isDirectory ||
-        !new java.io.File(e.getValue._2).isDirectory)
-    bm25UpsertCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val tag = graft.core.Scratch.dirTag(dir)
-        val docs = Relational.table(s, dir, "documents")
-          .select(col("doc_id"), col("text"))
-        val base = docs.filter(pmod(col("doc_id"), lit(4)) =!= 3)
-        val delta = docs.filter(pmod(col("doc_id"), lit(4)) === 3)
-          .unionByName(docs.filter(pmod(col("doc_id"), lit(8)) === 0))
-        val incRoot = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_s30inc_${tag}_${s.sparkContext.applicationId}")
-        val fullRoot = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_s30full_${tag}_${s.sparkContext.applicationId}")
-        writeBm25Index(s, base, incRoot)
-        upsertBm25Index(s, incRoot.getAbsolutePath, delta)
-        writeBm25Index(s, docs, fullRoot)
-        (incRoot.getAbsolutePath, fullRoot.getAbsolutePath)
-      })
+    val root = Artifacts.memo(s, "s30", dir) { root =>
+      val docs = Relational.table(s, dir, "documents")
+        .select(col("doc_id"), col("text"))
+      val base = docs.filter(pmod(col("doc_id"), lit(4)) =!= 3)
+      val delta = docs.filter(pmod(col("doc_id"), lit(4)) === 3)
+        .unionByName(docs.filter(pmod(col("doc_id"), lit(8)) === 0))
+      val incRoot = new java.io.File(root, "inc")
+      writeBm25Index(s, base, incRoot)
+      upsertBm25Index(s, incRoot.getAbsolutePath, delta)
+      writeBm25Index(s, docs, new java.io.File(root, "full"))
+    }
+    (s"$root/inc", s"$root/full")
   }
 
   /** s30 — the lexical retrieval arm served from the UPSERTED BM25
@@ -2635,8 +2552,6 @@ object Similarity {
     ORDER BY query_id, rank"""
 
   // -------------------------------- s28 stored IVF-PQ index (serve)
-  private val ivfpqCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
   /** Fetch-shard count for the refine sidecar (id-keyed full
     * vectors): candidate ids are known driver-side after the ADC
     * pass, and vbucket = vec_id % shards is driver-computable, so the
@@ -2660,46 +2575,35 @@ object Similarity {
     * `partitionBy(vbucket)`), the cold refine sidecar touched only
     * for re-rank candidates. */
   private[graft] def buildIvfPqIndex(s: SparkSession, dir: String)
-      : String = {
-    ivfpqCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    ivfpqCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        import s.implicits._
-        val tag = graft.core.Scratch.dirTag(dir)
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_s28_${tag}_${s.sparkContext.applicationId}")
-        if (root.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(root)
-        val emb = Relational.table(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding"))
-        val cents = ivfCentroids(emb, IvfK, IvfIters, seed = 9000)
-        val cbs = pqCodebooks(emb, seed = 11000)
-        cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-          .toDF("cid", "centroid").coalesce(1).write.mode("overwrite")
-          .parquet(new java.io.File(root, "centroids").getAbsolutePath)
-        (for (m <- 0 until PqM; k <- 0 until PqK)
-          yield (m, k, cbs(m)(k).toSeq)).toDF("m", "k", "sub")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new java.io.File(root, "codebooks").getAbsolutePath)
-        // ONE corpus pass emits both tiers: coarse cid + PQ code for
-        // the hot postings, full vector into the bucketed cold tier
-        val assigned = emb.select(col("vec_id"), col("embedding"),
-          nearestCentroidCol(col("embedding"), cents).as("cid"),
-          graft.expr.PqEncode.pqEncode(col("embedding"), cbs).as("code"))
-          .persist()
-        assigned.select(col("vec_id"), col("cid"), col("code"))
-          .write.partitionBy("cid").mode("overwrite")
-          .parquet(new java.io.File(root, "postings").getAbsolutePath)
-        assigned.select(col("vec_id"), col("embedding"),
-            (col("vec_id") % VecBuckets).cast("int").as("vbucket"))
-          .write.partitionBy("vbucket").mode("overwrite")
-          .parquet(new java.io.File(root, "vectors").getAbsolutePath)
-        assigned.unpersist(false)
-        root.getAbsolutePath
-      })
-  }
+      : String =
+    Artifacts.memo(s, "s28", dir) { root =>
+      import s.implicits._
+      val emb = Relational.table(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding"))
+      val cents = ivfCentroids(emb, IvfK, IvfIters, seed = 9000)
+      val cbs = pqCodebooks(emb, seed = 11000)
+      cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cid", "centroid").coalesce(1).write.mode("overwrite")
+        .parquet(new java.io.File(root, "centroids").getAbsolutePath)
+      (for (m <- 0 until PqM; k <- 0 until PqK)
+        yield (m, k, cbs(m)(k).toSeq)).toDF("m", "k", "sub")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(new java.io.File(root, "codebooks").getAbsolutePath)
+      // ONE corpus pass emits both tiers: coarse cid + PQ code for
+      // the hot postings, full vector into the bucketed cold tier
+      val assigned = emb.select(col("vec_id"), col("embedding"),
+        nearestCentroidCol(col("embedding"), cents).as("cid"),
+        graft.expr.PqEncode.pqEncode(col("embedding"), cbs).as("code"))
+        .persist()
+      assigned.select(col("vec_id"), col("cid"), col("code"))
+        .write.partitionBy("cid").mode("overwrite")
+        .parquet(new java.io.File(root, "postings").getAbsolutePath)
+      assigned.select(col("vec_id"), col("embedding"),
+          (col("vec_id") % VecBuckets).cast("int").as("vbucket"))
+        .write.partitionBy("vbucket").mode("overwrite")
+        .parquet(new java.io.File(root, "vectors").getAbsolutePath)
+      assigned.unpersist(false)
+    }
 
   private[graft] def readCodebooks(s: SparkSession, root: String)
       : Array[Array[Array[Float]]] = {

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Artifacts
 
 /** Count-min sketch heavy hitters — the streaming-friendly frequency
   * sketch (Cormode & Muthukrishnan 2005). The sketch build is ONE
@@ -426,8 +427,7 @@ object Sketches {
       .agg(gkSketch(col("m"), QAcc).as("state"))
     // persist through a REAL sink and read back — the round-trip is
     // the point (stored bytes, not in-plan partials)
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_sk04_${s.sparkContext.applicationId}").getAbsolutePath
+    val path = Artifacts.root(s, "sk04", dir).getAbsolutePath
     perEpoch.write.mode("overwrite").parquet(path)
     s.read.parquet(path)
       .groupBy("event_type")
@@ -469,8 +469,7 @@ object Sketches {
       .groupBy(col("event_type"),
         date_trunc("week", col("ts")).as("epoch"))
       .agg(hll_sketch_agg(col("user_id"), lit(HllLgK)).as("sk"))
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_sk06_${s.sparkContext.applicationId}").getAbsolutePath
+    val path = Artifacts.root(s, "sk06", dir).getAbsolutePath
     perEpoch.write.mode("overwrite").parquet(path)
     s.read.parquet(path)
       .groupBy("event_type")
@@ -570,8 +569,7 @@ object Sketches {
     // (the sk04 discipline — a production engine stores these in its
     // catalog and re-ANALYZEs incrementally), and the estimator below
     // reads ONLY the stored stats, never the data
-    val statsPath = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_sk05_${s.sparkContext.applicationId}").getAbsolutePath
+    val statsPath = Artifacts.root(s, "sk05", dir).getAbsolutePath
     Seq(("orders", "o_orderkey"), ("lineitem", "l_orderkey"),
       ("events", "user_id"))
       .map { case (table, key) =>
@@ -749,8 +747,7 @@ object Sketches {
     // the ANALYZE pass: exact row counts, persisted as the catalog
     // artifact (one scan per table; re-ANALYZE is incremental in a
     // real catalog). Stored → read back → decisions from stored only.
-    val statsPath = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_sk07_${s.sparkContext.applicationId}").getAbsolutePath
+    val statsPath = Artifacts.root(s, "sk07", dir).getAbsolutePath
     tables.map(t => Relational.table(s, dir, t)
         .agg(count(lit(1)).as("n")).select(lit(t).as("tbl"), col("n")))
       .reduce(_ unionAll _)
@@ -895,8 +892,7 @@ object Sketches {
     // ANALYZE: one partial-agg'd scan per table → (n, kmv(pk)) rows
     // persisted as the catalog artifact; decisions read back from
     // storage only (est path touches just the sketch column)
-    val statsPath = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_sk08_${s.sparkContext.applicationId}").getAbsolutePath
+    val statsPath = Artifacts.root(s, "sk08", dir).getAbsolutePath
     pks.map { case (t, pk) =>
         Relational.table(s, dir, t)
           .agg(count(lit(1)).as("n"),
@@ -1060,8 +1056,7 @@ object Sketches {
   def selectivityEstimation(s: SparkSession, dir: String): DataFrame = {
     import graft.expr.GkSketchAgg._
     import s.implicits._
-    val statsPath = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_sk09_${s.sparkContext.applicationId}").getAbsolutePath
+    val statsPath = Artifacts.root(s, "sk09", dir).getAbsolutePath
     // ANALYZE: one scan per table → (n, histogram state), persisted
     SelSpecs.map { case (t, c, _) =>
         Relational.table(s, dir, t)
@@ -1150,8 +1145,7 @@ object Sketches {
   def cboJoinOrder(s: SparkSession, dir: String): DataFrame = {
     import graft.expr.KmvSketchAgg._
     import s.implicits._
-    val statsPath = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_sk10_${s.sparkContext.applicationId}").getAbsolutePath
+    val statsPath = Artifacts.root(s, "sk10", dir).getAbsolutePath
     val cust = Relational.table(s, dir, "customer").select("c_custkey")
     val ord = Relational.table(s, dir, "orders")
       .select("o_custkey", "o_orderkey")
@@ -1310,8 +1304,7 @@ object Sketches {
     import graft.expr.KmvSketchAgg._
     import graft.expr.GkSketchAgg._
     import s.implicits._
-    val statsPath = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_sk11_${s.sparkContext.applicationId}").getAbsolutePath
+    val statsPath = Artifacts.root(s, "sk11", dir).getAbsolutePath
     val cust = Relational.table(s, dir, "customer").select("c_custkey")
     val ord = Relational.table(s, dir, "orders")
       .select("o_custkey", "o_orderkey")
@@ -1538,9 +1531,6 @@ object Sketches {
   }
 
   // --------------- sk12: the CBO decisions APPLIED by the optimizer
-  private val cboAnalyzeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** sk12's ANALYZE: one scan per table builds every catalog artifact
     * that table contributes — exact count, a KMV sketch per join
     * column, a GK histogram per predicate column — persists them as
@@ -1552,26 +1542,17 @@ object Sketches {
       : String = {
     import graft.expr.KmvSketchAgg._
     import graft.expr.GkSketchAgg._
-    cboAnalyzeCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    cboAnalyzeCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val tag = graft.core.Scratch.dirTag(dir)
-        val statsPath = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_sk12_${tag}_${s.sparkContext.applicationId}")
-          .getAbsolutePath
-        // one scan per table → one row per (table, column, artifact).
-        // Each row also records the table's file-listing fingerprint
-        // AT ANALYZE TIME — the staleness marker CboReorder checks
-        // before trusting the entry (sk13).
-        analyzeTableRow(s, dir, "nation")
-          .unionByName(analyzeTableRow(s, dir, "customer"))
-          .unionByName(analyzeTableRow(s, dir, "orders"))
-          .unionByName(analyzeTableRow(s, dir, "lineitem"))
-          .write.mode("overwrite").parquet(statsPath)
-        statsPath
-      })
+    Artifacts.memo(s, "sk12", dir) { stats =>
+      // one scan per table → one row per (table, column, artifact).
+      // Each row also records the table's file-listing fingerprint
+      // AT ANALYZE TIME — the staleness marker CboReorder checks
+      // before trusting the entry (sk13).
+      analyzeTableRow(s, dir, "nation")
+        .unionByName(analyzeTableRow(s, dir, "customer"))
+        .unionByName(analyzeTableRow(s, dir, "orders"))
+        .unionByName(analyzeTableRow(s, dir, "lineitem"))
+        .write.mode("overwrite").parquet(stats.getAbsolutePath)
+    }
   }
 
   /** One table's ANALYZE artifact row (count + per-column KMV/GK
@@ -1877,9 +1858,6 @@ object Sketches {
         col("ruleoff_audit"), col("decision_matches_exact"))
 
   // --------------- sk13: the staleness guard — expired stats don't plan
-  private val cboScratchCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** sk13's fixture: the three join tables copied into a scratch
     * layout as DIRECTORY tables (so the gate can append a data file
     * — the stock single-file tables are read-only). The copy is
@@ -1888,33 +1866,22 @@ object Sketches {
     * (non-joining key, out-of-range predicate column) so that stays
     * true across the whole fire → stale → re-analyze arc. */
   private[graft] def buildCboScratchTables(s: SparkSession, dir: String,
-      kind: String = "sk13"): String = {
-    cboScratchCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    cboScratchCache.computeIfAbsent(
-      (s.sparkContext.applicationId, s"$kind:$dir"), _ => {
-        val tag = graft.core.Scratch.dirTag(dir)
-        val root = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_${kind}_${tag}_${s.sparkContext.applicationId}")
-        if (root.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(root)
-        Seq("nation", "customer", "orders", "lineitem").foreach { t =>
-          val tdir = new java.io.File(root, s"$t.parquet")
-          val src = new java.io.File(s"$dir/$t.parquet")
-          // a stock table is a single parquet file; a scaled dir's
-          // (ScaleUpTestData) is a directory of parts — copy either
-          if (src.isDirectory)
-            org.apache.commons.io.FileUtils.copyDirectory(src, tdir)
-          else {
-            tdir.mkdirs()
-            org.apache.commons.io.FileUtils.copyFile(src,
-              new java.io.File(tdir, "part-00000.parquet"))
-          }
+      kind: String = "sk13"): String =
+    Artifacts.memo(s, kind, dir) { root =>
+      Seq("nation", "customer", "orders", "lineitem").foreach { t =>
+        val tdir = new java.io.File(root, s"$t.parquet")
+        val src = new java.io.File(s"$dir/$t.parquet")
+        // a stock table is a single parquet file; a scaled dir's
+        // (ScaleUpTestData) is a directory of parts — copy either
+        if (src.isDirectory)
+          org.apache.commons.io.FileUtils.copyDirectory(src, tdir)
+        else {
+          tdir.mkdirs()
+          org.apache.commons.io.FileUtils.copyFile(src,
+            new java.io.File(tdir, "part-00000.parquet"))
         }
-        root.getAbsolutePath
-      })
-  }
+      }
+    }
 
   /** Re-ANALYZE after an append — INCREMENTALLY: recompute only the
     * tables whose CURRENT file fingerprint differs from the stored
@@ -1927,32 +1894,24 @@ object Sketches {
     * rescanned for artifact rows that could not have changed
     * (r15-opt, guide §1.2: don't compute things you throw away). */
   private def analyzeForCboFresh(s: SparkSession, dir: String): String = {
-    val key = (s.sparkContext.applicationId, dir)
-    val statsPath = Option(cboAnalyzeCache.get(key))
-      .filter(p => new java.io.File(p).isDirectory)
-    statsPath match {
-      case None =>
-        cboAnalyzeCache.remove(key)
-        analyzeForCbo(s, dir)
-      case Some(path) =>
-        val stored = s.read.parquet(path)
-        val byTbl = stored.collect().map(r => r.getString(0) -> r).toMap
-        val tables = Seq("nation", "customer", "orders", "lineitem")
-        val stale = tables.filter { t =>
-          !byTbl.get(t).map(_.getString(4)).contains(
-            graft.plans.CboCatalog.fingerprintOf(s"$dir/$t.parquet"))
-        }
-        if (stale.nonEmpty) {
-          import scala.jdk.CollectionConverters._
-          val kept = s.createDataFrame(
-            tables.filterNot(stale.contains).map(byTbl).asJava,
-            stored.schema)
-          stale.map(analyzeTableRow(s, dir, _))
-            .foldLeft(kept)(_.unionByName(_))
-            .write.mode("overwrite").parquet(path)
-        }
-        path
+    val path = analyzeForCbo(s, dir)
+    val stored = s.read.parquet(path)
+    val byTbl = stored.collect().map(r => r.getString(0) -> r).toMap
+    val tables = Seq("nation", "customer", "orders", "lineitem")
+    val stale = tables.filter { t =>
+      !byTbl.get(t).map(_.getString(4)).contains(
+        graft.plans.CboCatalog.fingerprintOf(s"$dir/$t.parquet"))
     }
+    if (stale.nonEmpty) {
+      import scala.jdk.CollectionConverters._
+      val kept = s.createDataFrame(
+        tables.filterNot(stale.contains).map(byTbl).asJava,
+        stored.schema)
+      stale.map(analyzeTableRow(s, dir, _))
+        .foldLeft(kept)(_.unionByName(_))
+        .write.mode("overwrite").parquet(path)
+    }
+    path
   }
 
   /** Append a few INERT rows to the scratch lineitem table — the

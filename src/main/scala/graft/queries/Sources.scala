@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Artifacts
 import org.apache.spark.sql.types.{DecimalType, LongType, StringType,
   StructField, StructType}
 
@@ -27,8 +28,7 @@ object Sources {
       .select(col("doc_id"), col("source"), col("text"))
     // per-session dir: two concurrent JVMs (test run alongside bench)
     // must not race on the same overwrite-mode output path
-    val out = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_j01_jsonl_${s.sparkContext.applicationId}").getAbsolutePath
+    val out = Artifacts.root(s, "j01_jsonl", dir).getAbsolutePath
     docs.write.mode("overwrite").json(out)
     val schema = StructType(Seq(
       StructField("doc_id", LongType),
@@ -66,8 +66,7 @@ object Sources {
   def partitionedSink(s: SparkSession, dir: String): DataFrame = {
     val docs = Relational.table(s, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"), col("lang"))
-    val out = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_j02_part_${s.sparkContext.applicationId}").getAbsolutePath
+    val out = Artifacts.root(s, "j02_part", dir).getAbsolutePath
     docs.write.mode("overwrite").partitionBy("lang").parquet(out)
     // j15's fail-fast pattern: the read below prunes to lang=en/de
     // DIRECTORIES — if the hive layout ever changes shape (missing
@@ -110,8 +109,7 @@ object Sources {
     val docs = Relational.table(s, dir, "documents")
       .filter(col("lang") === "de")
       .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
-    val out = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_j03_orc_${s.sparkContext.applicationId}").getAbsolutePath
+    val out = Artifacts.root(s, "j03_orc", dir).getAbsolutePath
     docs.write.mode("overwrite").orc(out)
     val schema = StructType(Seq(
       StructField("doc_id", LongType),
@@ -149,10 +147,8 @@ object Sources {
   def compaction(s: SparkSession, dir: String): DataFrame = {
     val li = Relational.table(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
-    val frag = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_j04_frag_${s.sparkContext.applicationId}").getAbsolutePath
-    val compact = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_j04_comp_${s.sparkContext.applicationId}").getAbsolutePath
+    val frag = Artifacts.root(s, "j04_frag", dir).getAbsolutePath
+    val compact = Artifacts.root(s, "j04_comp", dir).getAbsolutePath
     li.repartition(64).write.mode("overwrite").parquet(frag)
     val fragged = s.read.parquet(frag)
     fragged.repartition(4).write.mode("overwrite").parquet(compact)
@@ -210,8 +206,7 @@ object Sources {
       .select(col("doc_id"), col("lang"),
         concat(lit("\""), col("source"), lit("\",\n"),
           col("text")).as("text"))
-    val out = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_j05_csv_${s.sparkContext.applicationId}").getAbsolutePath
+    val out = Artifacts.root(s, "j05_csv", dir).getAbsolutePath
     planted.write.mode("overwrite")
       .option("quoteAll", "true").option("escape", "\"")
       .csv(out)
@@ -311,8 +306,7 @@ object Sources {
     * map-side-combinable aggregate. */
   def schemaEvolution(s: SparkSession, dir: String): DataFrame = {
     val docs = Relational.table(s, dir, "documents")
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_j07_${s.sparkContext.applicationId}").getAbsolutePath
+    val base = Artifacts.root(s, "j07", dir).getAbsolutePath
     docs.filter(col("doc_id") % 2 === 0)
       .select(col("doc_id"), col("text"), col("lang"))
       .write.mode("overwrite").parquet(s"$base/epoch=0")
@@ -364,8 +358,7 @@ object Sources {
     val docs = Relational.table(s, dir, "documents")
       .select(col("doc_id"), col("n_chars"),
         concat(lit("b"), col("doc_id") % 3).as("bucket"))
-    val out = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_j08_dyn_${s.sparkContext.applicationId}").getAbsolutePath
+    val out = Artifacts.root(s, "j08_dyn", dir).getAbsolutePath
     docs.write.mode("overwrite").partitionBy("bucket").parquet(out)
     docs.filter(col("bucket") === "b1")
       .withColumn("n_chars", col("n_chars") + 1000L)
@@ -407,8 +400,7 @@ object Sources {
     * nested pruning is the difference between scanning 2 columns and
     * scanning the whole document. */
   def nestedProjection(s: SparkSession, dir: String): DataFrame = {
-    val out = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_j09_nested_${s.sparkContext.applicationId}").getAbsolutePath
+    val out = Artifacts.root(s, "j09_nested", dir).getAbsolutePath
     val o = Relational.table(s, dir, "orders")
     val c = Relational.table(s, dir, "customer")
     val li = Relational.table(s, dir, "lineitem")
@@ -500,8 +492,7 @@ object Sources {
   private[graft] def writeBucketed(s: SparkSession,
       dir: String): (String, String) = {
     val app = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_j10_bucketed_$app").getAbsolutePath
+    val base = Artifacts.root(s, "j10_bucketed", dir).getAbsolutePath
     val oTab = s"graft_j10_orders_$app"
     val cTab = s"graft_j10_customer_$app"
     // repartition ON THE BUCKET KEY before the write: each task then
@@ -582,16 +573,13 @@ object Sources {
     * complete layout, and no reader ever sees a partial directory. */
   private[graft] def dppJoinRead(s: SparkSession,
       dir: String): DataFrame = {
-    val tag = java.lang.Integer.toHexString(dir.hashCode)
     val fp = graft.plans.CboCatalog.fingerprintOf(
       s"$dir/lineitem.parquet")
-    val outDir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_j11_dpp_${tag}_v$fp")
+    val outDir = Artifacts.sharedRoot("j11_dpp", dir, fp)
     val out = outDir.getAbsolutePath
     val marker = new java.io.File(outDir, "_SUCCESS")
     if (!marker.exists()) {
-      val stage = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_j11_stage_${tag}_${s.sparkContext.applicationId}")
+      val stage = Artifacts.root(s, "j11_stage", dir)
       if (stage.exists())
         org.apache.commons.io.FileUtils.deleteDirectory(stage)
       Relational.table(s, dir, "lineitem")
@@ -764,8 +752,7 @@ object Sources {
     val docs = Relational.table(s, dir, "documents")
       .filter(col("lang") === "es")
       .select(col("doc_id"), col("source"), col("text"))
-    val out = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_j14_xml_${s.sparkContext.applicationId}").getAbsolutePath
+    val out = Artifacts.root(s, "j14_xml", dir).getAbsolutePath
     docs.write.mode("overwrite").option("rowTag", "doc")
       .format("xml").save(out)
     val schema = StructType(Seq(
@@ -806,8 +793,7 @@ object Sources {
     * The oracle reproduces the counts from the logical table,
     * proving metadata projection changes no row. */
   def metadataColumns(s: SparkSession, dir: String): DataFrame = {
-    val out = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_j15_meta_${s.sparkContext.applicationId}").getAbsolutePath
+    val out = Artifacts.root(s, "j15_meta", dir).getAbsolutePath
     Relational.table(s, dir, "documents")
       .select(col("doc_id"), col("source"))
       .repartition(8)

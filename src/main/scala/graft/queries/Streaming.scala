@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Artifacts
 import org.apache.spark.sql.types.DecimalType
 import graft.streaming.EventStreams
 
@@ -482,8 +483,7 @@ $counts
     * equality proves the incremental upsert path converges to the
     * batch compaction regardless of batch slicing. */
   def foreachUpsert(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_st17_${s.sparkContext.applicationId}").getAbsolutePath
+    val base = Artifacts.root(s, "st17", dir).getAbsolutePath
     val src = s"$base/src"
     events(s, dir).repartition(8).write.mode("overwrite").parquet(src)
     val stream = s.readStream.schema(EventStreams.EventsSchema)
@@ -699,8 +699,7 @@ $counts
     // clean seam: a stale checkpoint + sink _spark_metadata would
     // treat the re-written tail files as NEW batches and append a
     // duplicated tail. Wipe the whole working dir up front.
-    val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_st20_${s.sparkContext.applicationId}")
+    val baseDir = Artifacts.root(s, "st20", dir)
     if (baseDir.exists())
       org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
     val base = baseDir.getAbsolutePath
@@ -765,40 +764,25 @@ $counts
     * weeks with `coalesce(1)` per week exists only to stage a
     * deterministic ≥4-batch replay over a bounded test calendar — a
     * production ingest never single-files its input. */
-  private val weeklySrcCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private def weeklyEventSrc(s: SparkSession, dir: String): String =
+    srcOf(Artifacts.memo(s, "stweeks", dir) { baseDir =>
+      val ev = events(s, dir)
+        .withColumn("wk", date_trunc("week", col("ts")))
+      val weeks = ev.select("wk").distinct().orderBy("wk")
+        .collect().map(_.getTimestamp(0))
+      stageEpochFiles(baseDir,
+        weeks.zipWithIndex.toSeq.map { case (wk, i) =>
+          i -> ev.filter(col("wk") === lit(wk)).drop("wk")
+        }, prefix = "week")
+    })
 
-  private def weeklyEventSrc(s: SparkSession, dir: String): String = {
-    // evict stale entries: staging from a previous SparkContext in
-    // this JVM, or a src dir an OS tmp cleaner removed mid-suite —
-    // returning a cached path that no longer exists would fail the
-    // replay with FileNotFound instead of restaging
-    weeklySrcCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    weeklySrcCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        // collision-resistant dir tag: two sf dirs in one application
-        // must never share a staging root (String.hashCode collides)
-        val tag = graft.core.Scratch.dirTag(dir)
-        val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_stweeks_${tag}_${s.sparkContext.applicationId}")
-        if (baseDir.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
-        val ev = events(s, dir)
-          .withColumn("wk", date_trunc("week", col("ts")))
-        val weeks = ev.select("wk").distinct().orderBy("wk")
-          .collect().map(_.getTimestamp(0))
-        stageEpochFiles(baseDir,
-          weeks.zipWithIndex.toSeq.map { case (wk, i) =>
-            i -> ev.filter(col("wk") === lit(wk)).drop("wk")
-          }, prefix = "week")
-      })
-  }
+  private type Ev = org.apache.spark.sql.Dataset[EventStreams.Event]
 
   /** Run SEVERAL event-stream transforms as CONCURRENT streaming
     * queries off the same staged weekly source, memoized per
-    * (application, sf dir, tag set) — the st26/st27 consolidation:
+    * (application, sf dir, tag set): the kind is the tags joined by
+    * `-`, and each stream owns `<tag>/out` and `<tag>/ckpt` under the
+    * one root. This is the st26/st27 consolidation:
     * the two attribution gates replay the SAME weekly source through
     * two independent checkpointed stream-stream joins, so running
     * them sequentially paid the full replay twice (9.2 s combined at
@@ -825,22 +809,12 @@ $counts
     * weekly family's 7 streams at 4 partitions each, ≤28 store
     * instances run concurrently — well inside the 32-core gate host,
     * and a real deployment runs each query in its own job anyway.
-    * Each stream's work dir (checkpoint + sink) is wiped up front on
-    * a fresh build (st20's lesson: stale checkpoints + sink metadata
-    * double-count on same-JVM re-runs). */
-  private val sharedStreamCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), Seq[String]]()
-
+    * The root is wiped before a build (st20's lesson: stale
+    * checkpoints + sink metadata double-count on same-JVM re-runs). */
   private def runEventStreamsShared(s: SparkSession, dir: String,
-      jobs: Seq[(String,
-        org.apache.spark.sql.Dataset[EventStreams.Event] => DataFrame)])
-      : Seq[DataFrame] = {
+      jobs: Seq[(String, Ev => DataFrame)]): Seq[DataFrame] = {
     import s.implicits._
-    val key = (s.sparkContext.applicationId, dir, jobs.map(_._1).mkString(","))
-    sharedStreamCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !e.getValue.forall(p => new java.io.File(p).isDirectory))
-    val outs = sharedStreamCache.computeIfAbsent(key, _ => {
+    val root = Artifacts.memo(s, familyKind(jobs.map(_._1)), dir) { root =>
       val src = weeklyEventSrc(s, dir)
       val started = jobs.map { case (tag, f) =>
         // each stream gets its own session CLONE: same SparkContext,
@@ -857,36 +831,32 @@ $counts
         sc.conf.set("spark.sql.shuffle.partitions", "4")
         sc.conf.set("spark.sql.streaming.stateStore.rocksdb." +
           "changelogCheckpointing.enabled", "true")
-        val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_${tag}_${s.sparkContext.applicationId}")
-        if (baseDir.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
-        val base = baseDir.getAbsolutePath
+        val base = s"$root/$tag"
         val stream = sc.readStream.schema(EventStreams.EventsSchema)
           .option("maxFilesPerTrigger", "1").parquet(src)
-        val outDir = s"$base/out"
-        val q = f(stream.as[EventStreams.Event]).writeStream
+        f(stream.as[EventStreams.Event]).writeStream
           .format("parquet")
-          .option("path", outDir)
+          .option("path", s"$base/out")
           .option("checkpointLocation", s"$base/ckpt")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        (q, outDir)
       }
       // first failure stops the remaining queries — otherwise the
       // exception propagates with up to 6 live MicroBatchExecutions
       // still running in the session and the memo entry never
       // populates (r15 advice)
-      try started.foreach(_._1.awaitTermination())
+      try started.foreach(_.awaitTermination())
       catch {
         case e: Throwable =>
-          started.foreach(q => try q._1.stop() catch { case _: Throwable => () })
+          started.foreach(q => try q.stop() catch { case _: Throwable => () })
           throw e
       }
-      started.map(_._2)
-    })
-    outs.map(s.read.parquet(_))
+    }
+    jobs.map { case (tag, _) => s.read.parquet(s"$root/$tag/out") }
   }
+
+  /** The memo kind of a [[runEventStreamsShared]] group. */
+  private def familyKind(tags: Seq[String]): String = tags.mkString("-")
 
   /** The seven independent weekly-replay streams (st21–st25 five
     * state APIs, st28 GK profiler, st29 stateless enrichment)
@@ -912,34 +882,35 @@ $counts
     * per-query transform into its own checkpointed sink. */
   private def weeklyStateFamily(s: SparkSession, dir: String,
       tag: String): DataFrame = {
-    type Ev = org.apache.spark.sql.Dataset[EventStreams.Event]
-    val jobs: Seq[(String, Ev => DataFrame)] = Seq(
-      "st21" -> ((ev: Ev) =>
-        EventStreams.spendAlertsStream(ev, SpendThresholdMicros).toDF()),
-      "st22" -> ((ev: Ev) =>
-        EventStreams.recentBasketStream(ev, BasketN).toDF()),
-      "st23" -> ((ev: Ev) => EventStreams.profileStream(ev).toDF()),
-      "st24" -> ((ev: Ev) =>
-        EventStreams.idleStream(ev, IdleGapMinutes,
-          s"$IdleWmMinutes minutes").toDF()),
-      "st25" -> ((ev: Ev) =>
-        EventStreams.quotaStream(
-          ev.withWatermark("ts", "10 minutes"), QuotaN).toDF()),
-      "st28" -> ((ev: Ev) =>
-        EventStreams.gkProfileStream(ev, GkAcc).toDF()),
-      "st29" -> ((ev: Ev) => {
-        // the static dim must come from the STREAM's (cloned) session
-        // so the whole plan resolves under one SessionState
-        val dim = Relational.table(ev.sparkSession, dir, "customer")
-          .select(col("c_custkey"), col("c_mktsegment"))
-        ev.toDF().join(broadcast(dim),
-          col("user_id") === col("c_custkey"))
-          .select(col("c_mktsegment"), col("event_type"),
-            col("user_id"), col("value"))
-      }))
+    val jobs = weeklyJobs(dir)
     val outs = runEventStreamsShared(s, dir, jobs)
     outs(jobs.indexWhere(_._1 == tag))
   }
+
+  private def weeklyJobs(dir: String): Seq[(String, Ev => DataFrame)] = Seq(
+    "st21" -> ((ev: Ev) =>
+      EventStreams.spendAlertsStream(ev, SpendThresholdMicros).toDF()),
+    "st22" -> ((ev: Ev) =>
+      EventStreams.recentBasketStream(ev, BasketN).toDF()),
+    "st23" -> ((ev: Ev) => EventStreams.profileStream(ev).toDF()),
+    "st24" -> ((ev: Ev) =>
+      EventStreams.idleStream(ev, IdleGapMinutes,
+        s"$IdleWmMinutes minutes").toDF()),
+    "st25" -> ((ev: Ev) =>
+      EventStreams.quotaStream(
+        ev.withWatermark("ts", "10 minutes"), QuotaN).toDF()),
+    "st28" -> ((ev: Ev) =>
+      EventStreams.gkProfileStream(ev, GkAcc).toDF()),
+    "st29" -> ((ev: Ev) => {
+      // the static dim must come from the STREAM's (cloned) session
+      // so the whole plan resolves under one SessionState
+      val dim = Relational.table(ev.sparkSession, dir, "customer")
+        .select(col("c_custkey"), col("c_mktsegment"))
+      ev.toDF().join(broadcast(dim),
+        col("user_id") === col("c_custkey"))
+        .select(col("c_mktsegment"), col("event_type"),
+          col("user_id"), col("value"))
+    }))
 
   /** st40 — the HONEST wall-clock row for the overlapped stream
     * families: after the first family build in a session, every other
@@ -948,15 +919,18 @@ $counts
     * source files means nothing processes — but the recorded number
     * times a read, not stream execution, and min-of-iters discards
     * the one iteration that did pay the build). This row drops the
-    * memo up front, so EVERY timed iteration pays the real overlapped
-    * build of all nine streams (the 7-stream weekly family plus the
-    * st26/st27 attribution pair): stream startup, per-micro-batch
-    * RocksDB open/commit, watermark/timer work, checkpoint
-    * round-trips, sink commits. It returns st21's committed result,
-    * so the oracle is the same cumulative-sum SQL as the batch twin
-    * and the rows/schema/hash match st21 exactly. */
+    * two family entries up front, so EVERY timed iteration pays the
+    * real build of the 7-stream weekly family, then of the st26/st27
+    * attribution pair — two overlapped groups run back to back:
+    * stream startup, per-micro-batch RocksDB open/commit,
+    * watermark/timer work, checkpoint round-trips, sink commits. Every
+    * other memo entry (the staged weekly source included) stays
+    * cached. It returns st21's committed result, so the oracle is the
+    * same cumulative-sum SQL as the batch twin and the
+    * rows/schema/hash match st21 exactly. */
   def familyRebuild(s: SparkSession, dir: String): DataFrame = {
-    sharedStreamCache.clear()
+    Seq(weeklyJobs(dir), attributionJobs).foreach(jobs =>
+      Artifacts.invalidate(s, familyKind(jobs.map(_._1)), dir))
     val weekly = weeklyStateFamily(s, dir, "st21") // rebuilds 7 streams
     attributionPair(s, dir) // rebuilds the st26/st27 pair
     weekly.orderBy("user_id", "event_id")
@@ -1070,13 +1044,15 @@ $counts
     * already-committed sink. */
   private def attributionPair(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val outs = runEventStreamsShared(s, dir, Seq(
-      "st26" -> ((ev: org.apache.spark.sql.Dataset[EventStreams.Event]) =>
-        EventStreams.attributionStream(ev.toDF(), AttribWindowMinutes)),
-      "st27" -> ((ev: org.apache.spark.sql.Dataset[EventStreams.Event]) =>
-        EventStreams.attributionOuterStream(ev.toDF(), AttribWindowMinutes))))
+    val outs = runEventStreamsShared(s, dir, attributionJobs)
     (outs(0), outs(1))
   }
+
+  private def attributionJobs: Seq[(String, Ev => DataFrame)] = Seq(
+    "st26" -> ((ev: Ev) =>
+      EventStreams.attributionStream(ev.toDF(), AttribWindowMinutes)),
+    "st27" -> ((ev: Ev) =>
+      EventStreams.attributionOuterStream(ev.toDF(), AttribWindowMinutes)))
 
   val attributionStreamedSql: String = s"""
     SELECT p.user_id, p.event_id AS purchase_id, c.event_id AS click_id,
@@ -1214,28 +1190,12 @@ $counts
     * (coalesce(1) per slice stages a deterministic ≥7-batch replay);
     * memoized per (application, sf dir) because both the gate row and
     * its inv companion replay the same feed. */
-  private val lshSrcCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
-
-  private[graft] def lshDocSrc(s: SparkSession, dir: String): String = {
-    lshSrcCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    lshSrcCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val tag = graft.core.Scratch.dirTag(dir)
-        val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_st30src_${tag}_${s.sparkContext.applicationId}")
-        if (baseDir.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
-        val reps = Dedup.nearDupReps(s, dir)
-        stageEpochFiles(baseDir, (0 until 7).map(i =>
-          i -> reps.filter(pmod(col("doc_id"), lit(7)) === i)))
-      })
-  }
-
-  private val lshSinkCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
+  private[graft] def lshDocSrc(s: SparkSession, dir: String): String =
+    srcOf(Artifacts.memo(s, "st30src", dir) { baseDir =>
+      val reps = Dedup.nearDupReps(s, dir)
+      stageEpochFiles(baseDir, (0 until 7).map(i =>
+        i -> reps.filter(pmod(col("doc_id"), lit(7)) === i)))
+    })
 
   /** st30 — d02's MinHash-LSH near-dup candidate generation executed
     * AS A STREAM: documents arrive in 7 checkpointed AvailableNow
@@ -1313,12 +1273,9 @@ $counts
     }
   }
 
-  /** 8-hex content tag of an sf dir for scratch-root names: roots
-    * memoized per (application, dir) MUST embed the dir identity, or
-    * a second sf dir in the same application would rebuild into the
-    * first's path and silently poison its still-cached entry. */
-  private def dirTag(dir: String): String =
-    graft.core.Scratch.dirTag(dir)
+  /** The `src/` dir [[stageEpochFiles]] stages into under `root`. */
+  private def srcOf(root: String): String =
+    new java.io.File(root, "src").getAbsolutePath
 
   /** Stage pre-sliced arrival epochs as single parquet files with
     * strictly increasing mtimes (mtime drives FileStreamSource's
@@ -1345,21 +1302,12 @@ $counts
   }
 
   def lshDedupStreamed(s: SparkSession, dir: String): DataFrame = {
-    lshSinkCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    val outDir = lshSinkCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val src = lshDocSrc(s, dir)
-        val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_st30_${dirTag(dir)}_${s.sparkContext.applicationId}")
-        if (baseDir.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
-        val base = baseDir.getAbsolutePath
-        runLshEpoch(s, src, s"$base/out", s"$base/ckpt")
-        s"$base/out"
-      })
-    s.read.parquet(outDir)
+    val root = Artifacts.memo(s, "st30", dir) { baseDir =>
+      val src = lshDocSrc(s, dir)
+      val base = baseDir.getAbsolutePath
+      runLshEpoch(s, src, s"$base/out", s"$base/ckpt")
+    }
+    s.read.parquet(s"$root/out")
       .filter(col("est_jaccard") >= 0.5)
       .dropDuplicates("a", "b")
       .select(col("a"), col("b"), col("est_jaccard"))
@@ -1390,9 +1338,6 @@ $counts
     "SELECT TRUE AS parity_ok, TRUE AS nonempty"
 
   // ---- st31 epoch re-shard handoff (stream state → stored index → batch)
-  private val handoffCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
-
   /** Builds the st31 artifact tree once per (application, sf dir):
     * runs the retiring shard's stream, EXPORTS its state, runs the
     * new shard with fresh state, and materializes the combined
@@ -1402,99 +1347,90 @@ $counts
   private[graft] def buildLshHandoff(s: SparkSession, dir: String)
       : String = {
     import s.implicits._
-    handoffCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    handoffCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val src = lshDocSrc(s, dir)
-        val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_st31_${dirTag(dir)}_${s.sparkContext.applicationId}")
-        if (baseDir.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
-        val base = baseDir.getAbsolutePath
-        // the re-shard split: epochs 0-3 are the RETIRING shard,
-        // 4-6 arrive after the handoff (planted near-dup pairs sit
-        // one epoch apart — ids differ by 1e6 ≡ 1 mod 7 — so the
-        // 3↔4 and 6↔0 pairs can ONLY be found by the handoff join)
-        val files = new java.io.File(src).listFiles()
-          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-        val srcA = new java.io.File(baseDir, "srcA"); srcA.mkdirs()
-        val srcB = new java.io.File(baseDir, "srcB"); srcB.mkdirs()
-        files.take(4).foreach(f => java.nio.file.Files.copy(f.toPath,
-          new java.io.File(srcA, f.getName).toPath))
-        files.drop(4).foreach(f => java.nio.file.Files.copy(f.toPath,
-          new java.io.File(srcB, f.getName).toPath))
-        // the retiring shard runs to its final epoch...
-        runLshEpoch(s, srcA.getAbsolutePath, s"$base/outA",
-          s"$base/ckptA")
-        // ...then its state is EXPORTED through the state data source:
-        // RocksDB ListState rows → SigEntryCodec decode → the
-        // signature table, persisted as parquet. This is the
-        // retire-side of the epoch handoff a 100 TB/day deployment
-        // performs — the state store's contents become a stored index
-        // artifact the batch layer can join against, instead of state
-        // living forever in one ever-growing stream.
-        val overrides = Seq(
-          "spark.sql.streaming.stateStore.providerClass" ->
-            ("org.apache.spark.sql.execution.streaming.state." +
-              "RocksDBStateStoreProvider"))
-        val prevs = overrides.map { case (k, _) =>
-          k -> s.conf.getOption(k) }
-        overrides.foreach { case (k, v) => s.conf.set(k, v) }
-        try {
-          s.read.format("statestore")
-            .option("path", s"$base/ckptA")
-            .option("stateVarName", "docs")
-            .load()
-            .select(col("list_element.value").as("bytes"))
-            .as[Array[Byte]]
-            .map { bytes =>
-              val (id, sig) = graft.streaming.EventStreams
-                .SigEntryCodec.decode(bytes)
-              (id, sig.toSeq)
-            }
-            .toDF("doc_id", "sig")
-            .dropDuplicates("doc_id") // 16 band rows/doc, same sig
-            .write.mode("overwrite").parquet(s"$base/snapshot")
-        } finally {
-          prevs.foreach {
-            case (k, Some(v)) => s.conf.set(k, v)
-            case (k, None) => s.conf.unset(k)
+    Artifacts.memo(s, "st31", dir) { baseDir =>
+      val src = lshDocSrc(s, dir)
+      val base = baseDir.getAbsolutePath
+      // the re-shard split: epochs 0-3 are the RETIRING shard,
+      // 4-6 arrive after the handoff (planted near-dup pairs sit
+      // one epoch apart — ids differ by 1e6 ≡ 1 mod 7 — so the
+      // 3↔4 and 6↔0 pairs can ONLY be found by the handoff join)
+      val files = new java.io.File(src).listFiles()
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      val srcA = new java.io.File(baseDir, "srcA"); srcA.mkdirs()
+      val srcB = new java.io.File(baseDir, "srcB"); srcB.mkdirs()
+      files.take(4).foreach(f => java.nio.file.Files.copy(f.toPath,
+        new java.io.File(srcA, f.getName).toPath))
+      files.drop(4).foreach(f => java.nio.file.Files.copy(f.toPath,
+        new java.io.File(srcB, f.getName).toPath))
+      // the retiring shard runs to its final epoch...
+      runLshEpoch(s, srcA.getAbsolutePath, s"$base/outA",
+        s"$base/ckptA")
+      // ...then its state is EXPORTED through the state data source:
+      // RocksDB ListState rows → SigEntryCodec decode → the
+      // signature table, persisted as parquet. This is the
+      // retire-side of the epoch handoff a 100 TB/day deployment
+      // performs — the state store's contents become a stored index
+      // artifact the batch layer can join against, instead of state
+      // living forever in one ever-growing stream.
+      val overrides = Seq(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming.state." +
+            "RocksDBStateStoreProvider"))
+      val prevs = overrides.map { case (k, _) =>
+        k -> s.conf.getOption(k) }
+      overrides.foreach { case (k, v) => s.conf.set(k, v) }
+      try {
+        s.read.format("statestore")
+          .option("path", s"$base/ckptA")
+          .option("stateVarName", "docs")
+          .load()
+          .select(col("list_element.value").as("bytes"))
+          .as[Array[Byte]]
+          .map { bytes =>
+            val (id, sig) = graft.streaming.EventStreams
+              .SigEntryCodec.decode(bytes)
+            (id, sig.toSeq)
           }
+          .toDF("doc_id", "sig")
+          .dropDuplicates("doc_id") // 16 band rows/doc, same sig
+          .write.mode("overwrite").parquet(s"$base/snapshot")
+      } finally {
+        prevs.foreach {
+          case (k, Some(v)) => s.conf.set(k, v)
+          case (k, None) => s.conf.unset(k)
         }
-        // the new shard starts with FRESH state over the later epochs
-        runLshEpoch(s, srcB.getAbsolutePath, s"$base/outB",
-          s"$base/ckptB")
-        // cross-shard candidates: the exported signature table joined
-        // against the new shard's corpus in BATCH — same band keys
-        // (Dedup.bandStructs), same estimate arithmetic
-        // (Dedup.estJaccardCol), so handoff pairs are bit-identical
-        // to what the uninterrupted stream would have emitted
-        val snapBands = s.read.parquet(s"$base/snapshot")
-          .select(col("doc_id"), col("sig"),
-            explode(array(Dedup.bandStructs: _*)).as("bb"))
-          .select(col("bb"), col("doc_id").as("a_id"),
-            col("sig").as("sig_a"))
-        val newBands = s.read.parquet(srcB.getAbsolutePath)
-          .select(col("doc_id"),
-            graft.expr.MinHashSignature.minhashSignature(col("text"),
-              Dedup.MinhashK).as("sig"))
-          .select(col("doc_id"), col("sig"),
-            explode(array(Dedup.bandStructs: _*)).as("bb"))
-          .select(col("bb"), col("doc_id").as("b_id"),
-            col("sig").as("sig_b"))
-        val cross = snapBands.join(newBands, Seq("bb"))
-          .select(least(col("a_id"), col("b_id")).as("a"),
-            greatest(col("a_id"), col("b_id")).as("b"),
-            Dedup.estJaccardCol(col("sig_a"), col("sig_b"))
-              .as("est_jaccard"))
-        s.read.parquet(s"$base/outA")
-          .unionByName(s.read.parquet(s"$base/outB"))
-          .unionByName(cross)
-          .write.mode("overwrite").parquet(s"$base/combined")
-        base
-      })
+      }
+      // the new shard starts with FRESH state over the later epochs
+      runLshEpoch(s, srcB.getAbsolutePath, s"$base/outB",
+        s"$base/ckptB")
+      // cross-shard candidates: the exported signature table joined
+      // against the new shard's corpus in BATCH — same band keys
+      // (Dedup.bandStructs), same estimate arithmetic
+      // (Dedup.estJaccardCol), so handoff pairs are bit-identical
+      // to what the uninterrupted stream would have emitted
+      val snapBands = s.read.parquet(s"$base/snapshot")
+        .select(col("doc_id"), col("sig"),
+          explode(array(Dedup.bandStructs: _*)).as("bb"))
+        .select(col("bb"), col("doc_id").as("a_id"),
+          col("sig").as("sig_a"))
+      val newBands = s.read.parquet(srcB.getAbsolutePath)
+        .select(col("doc_id"),
+          graft.expr.MinHashSignature.minhashSignature(col("text"),
+            Dedup.MinhashK).as("sig"))
+        .select(col("doc_id"), col("sig"),
+          explode(array(Dedup.bandStructs: _*)).as("bb"))
+        .select(col("bb"), col("doc_id").as("b_id"),
+          col("sig").as("sig_b"))
+      val cross = snapBands.join(newBands, Seq("bb"))
+        .select(least(col("a_id"), col("b_id")).as("a"),
+          greatest(col("a_id"), col("b_id")).as("b"),
+          Dedup.estJaccardCol(col("sig_a"), col("sig_b"))
+            .as("est_jaccard"))
+      s.read.parquet(s"$base/outA")
+        .unionByName(s.read.parquet(s"$base/outB"))
+        .unionByName(cross)
+        .write.mode("overwrite").parquet(s"$base/combined")
+    }
   }
 
   /** st31 — the epoch RE-SHARD handoff st30's scaladoc promises: the
@@ -1555,59 +1491,48 @@ $counts
     "SELECT TRUE AS parity_ok, TRUE AS cross_used, TRUE AS snapshot_ok"
 
   // ------- st32 streamed vector ingest into the stored IVF index
-  private val ivfIngestCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
-
   /** Builds the st32 index once per (application, sf dir): base index
     * from 1/5 of the corpus, then the remaining vectors STREAMED in
     * as 4 checkpointed micro-batches, each upserted through the s25
     * machinery inside `foreachBatch`. Returns the index root. */
   private[graft] def buildIngestedIvfIndex(s: SparkSession, dir: String)
       : String = {
-    ivfIngestCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    ivfIngestCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_st32_${dirTag(dir)}_${s.sparkContext.applicationId}")
-        if (baseDir.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
-        val root = new java.io.File(baseDir, "index")
-        val emb = Relational.table(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding"))
-        // the index exists BEFORE the stream: centroids train on the
-        // initial corpus slice (the s25 contract — centroids are
-        // immutable under ingest; retraining is a rebuild)
-        Similarity.writeIvfIndexTrained(s,
-          emb.filter(pmod(col("vec_id"), lit(5)) === 0), root)
-        // stage the remaining vectors as 4 arrival epochs (the shared
-        // staging discipline: one parquet file per slice)
-        val src = new java.io.File(stageEpochFiles(baseDir,
-          (1 until 5).map(i =>
-            i -> emb.filter(pmod(col("vec_id"), lit(5)) === i))))
-        val embSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("embedding",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.FloatType))))
-        val doBatch: (org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], Long) => Unit =
-          (batch, _) => Similarity.upsertIvfIndex(
-            batch.sparkSession, root.getAbsolutePath,
-            batch.select(col("vec_id"), col("embedding")))
-        val q = s.readStream.schema(embSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.getAbsolutePath)
-          .writeStream
-          .foreachBatch(doBatch)
-          .option("checkpointLocation", s"$baseDir/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        root.getAbsolutePath
-      })
+    val base = Artifacts.memo(s, "st32", dir) { baseDir =>
+      val root = new java.io.File(baseDir, "index")
+      val emb = Relational.table(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding"))
+      // the index exists BEFORE the stream: centroids train on the
+      // initial corpus slice (the s25 contract — centroids are
+      // immutable under ingest; retraining is a rebuild)
+      Similarity.writeIvfIndexTrained(s,
+        emb.filter(pmod(col("vec_id"), lit(5)) === 0), root)
+      // stage the remaining vectors as 4 arrival epochs (the shared
+      // staging discipline: one parquet file per slice)
+      val src = new java.io.File(stageEpochFiles(baseDir,
+        (1 until 5).map(i =>
+          i -> emb.filter(pmod(col("vec_id"), lit(5)) === i))))
+      val embSchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("vec_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("embedding",
+          org.apache.spark.sql.types.ArrayType(
+            org.apache.spark.sql.types.FloatType))))
+      val doBatch: (org.apache.spark.sql.Dataset[
+        org.apache.spark.sql.Row], Long) => Unit =
+        (batch, _) => Similarity.upsertIvfIndex(
+          batch.sparkSession, root.getAbsolutePath,
+          batch.select(col("vec_id"), col("embedding")))
+      val q = s.readStream.schema(embSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src.getAbsolutePath)
+        .writeStream
+        .foreachBatch(doBatch)
+        .option("checkpointLocation", s"$baseDir/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    }
+    s"$base/index"
   }
 
   /** st32 — CONTINUOUS vector ingest: the s25 upsert path run as the
@@ -1679,10 +1604,6 @@ $counts
     "SELECT TRUE AS parity_ok, TRUE AS no_dup, TRUE AS k_bounded"
 
   // ------- st38 IVF rebalance UNDER the ingest stream
-  private val rebalIngestCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      String]()
-
   /** Builds the st38 index once per (application, sf dir): the st32
     * ingest pipeline with the s31 REBALANCE dropped into the middle
     * of it — inside micro-batch 2's `foreachBatch`, before that
@@ -1711,78 +1632,70 @@ $counts
     * the inv can pin row-identity. Returns the index root. */
   private[graft] def buildRebalanceUnderIngest(s: SparkSession,
       dir: String): String = {
-    rebalIngestCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    rebalIngestCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_st38_${dirTag(dir)}_${s.sparkContext.applicationId}")
-        if (baseDir.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
-        val root = new java.io.File(baseDir, "index")
-        val emb = Relational.table(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding"))
-        Similarity.writeIvfIndexTrained(s,
-          emb.filter(pmod(col("vec_id"), lit(5)) === 0), root)
-        val src = new java.io.File(stageEpochFiles(baseDir,
-          (1 until 5).map(i =>
-            i -> emb.filter(pmod(col("vec_id"), lit(5)) === i))))
-        val embSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("embedding",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.FloatType))))
-        val marker = new java.io.File(baseDir, "rebalanced_once")
-        val straddle = new java.io.File(baseDir, "straddling_batch")
-        val doBatch: (org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], Long) => Unit = (batch, id) => {
-          if (id == 2) {
-            if (!marker.exists()) {
-              Similarity.rebalanceIvfIndex(batch.sparkSession,
-                root.getAbsolutePath, splits = 1)
-              require(marker.mkdirs(),
-                s"st38: rebalance marker create failed at $marker")
-            }
-            // keep the straddling batch's rows for the explicit
-            // replay below (overwrite = replay-safe)
-            batch.select(col("vec_id"), col("embedding"))
-              .write.mode("overwrite")
-              .parquet(straddle.getAbsolutePath)
+    val base = Artifacts.memo(s, "st38", dir) { baseDir =>
+      val root = new java.io.File(baseDir, "index")
+      val emb = Relational.table(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding"))
+      Similarity.writeIvfIndexTrained(s,
+        emb.filter(pmod(col("vec_id"), lit(5)) === 0), root)
+      val src = new java.io.File(stageEpochFiles(baseDir,
+        (1 until 5).map(i =>
+          i -> emb.filter(pmod(col("vec_id"), lit(5)) === i))))
+      val embSchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("vec_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("embedding",
+          org.apache.spark.sql.types.ArrayType(
+            org.apache.spark.sql.types.FloatType))))
+      val marker = new java.io.File(baseDir, "rebalanced_once")
+      val straddle = new java.io.File(baseDir, "straddling_batch")
+      val doBatch: (org.apache.spark.sql.Dataset[
+        org.apache.spark.sql.Row], Long) => Unit = (batch, id) => {
+        if (id == 2) {
+          if (!marker.exists()) {
+            Similarity.rebalanceIvfIndex(batch.sparkSession,
+              root.getAbsolutePath, splits = 1)
+            require(marker.mkdirs(),
+              s"st38: rebalance marker create failed at $marker")
           }
-          Similarity.upsertIvfIndex(batch.sparkSession,
-            root.getAbsolutePath,
-            batch.select(col("vec_id"), col("embedding")))
+          // keep the straddling batch's rows for the explicit
+          // replay below (overwrite = replay-safe)
+          batch.select(col("vec_id"), col("embedding"))
+            .write.mode("overwrite")
+            .parquet(straddle.getAbsolutePath)
         }
-        val q = s.readStream.schema(embSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.getAbsolutePath)
-          .writeStream
-          .foreachBatch(doBatch)
-          .option("checkpointLocation", s"$baseDir/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // snapshot, then REPLAY the straddling batch: the marker
-        // makes it take the plain upsert path, which must be
-        // row-identical (the inv compares against these snapshots)
-        s.read.parquet(new java.io.File(root, "postings")
+        Similarity.upsertIvfIndex(batch.sparkSession,
+          root.getAbsolutePath,
+          batch.select(col("vec_id"), col("embedding")))
+      }
+      val q = s.readStream.schema(embSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src.getAbsolutePath)
+        .writeStream
+        .foreachBatch(doBatch)
+        .option("checkpointLocation", s"$baseDir/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      // snapshot, then REPLAY the straddling batch: the marker
+      // makes it take the plain upsert path, which must be
+      // row-identical (the inv compares against these snapshots)
+      s.read.parquet(new java.io.File(root, "postings")
+          .getAbsolutePath)
+        .select("vec_id", "embedding", "cid")
+        .write.mode("overwrite").parquet(
+          new java.io.File(baseDir, "postings_snapshot")
             .getAbsolutePath)
-          .select("vec_id", "embedding", "cid")
-          .write.mode("overwrite").parquet(
-            new java.io.File(baseDir, "postings_snapshot")
-              .getAbsolutePath)
-        s.read.parquet(new java.io.File(root, "idmap")
+      s.read.parquet(new java.io.File(root, "idmap")
+          .getAbsolutePath)
+        .select("vec_id", "cid", "bucket")
+        .write.mode("overwrite").parquet(
+          new java.io.File(baseDir, "idmap_snapshot")
             .getAbsolutePath)
-          .select("vec_id", "cid", "bucket")
-          .write.mode("overwrite").parquet(
-            new java.io.File(baseDir, "idmap_snapshot")
-              .getAbsolutePath)
-        Similarity.upsertIvfIndex(s, root.getAbsolutePath,
-          s.read.parquet(straddle.getAbsolutePath))
-        root.getAbsolutePath
-      })
+      Similarity.upsertIvfIndex(s, root.getAbsolutePath,
+        s.read.parquet(straddle.getAbsolutePath))
+    }
+    s"$base/index"
   }
 
   /** st38 — the s31 REBALANCE run while the st32 ingest stream owns
@@ -1866,10 +1779,6 @@ $counts
       "TRUE AS replay_idempotent"
 
   // ------- st39 right-to-erasure inside the streamed LSH index state
-  private val lshErasureCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      String]()
-
   /** Builds the st39 artifact tree once per (application, sf dir):
     * the st30 stream with a TOMBSTONE epoch in the middle. Arrival
     * order (doc_id mod 7 slices): ingest 0,1,2 → tombstones for ALL
@@ -1881,30 +1790,20 @@ $counts
     * after the tombstones, and an index that failed to forget would
     * emit them. Returns the base dir (`out` sink + `ckpt` state). */
   private[graft] def buildLshErasure(s: SparkSession, dir: String)
-      : String = {
-    lshErasureCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    lshErasureCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_st39_${dirTag(dir)}_${s.sparkContext.applicationId}")
-        if (baseDir.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
-        val reps = Dedup.nearDupReps(s, dir)
-        def slice(i: Int, op: String): DataFrame =
-          reps.filter(pmod(col("doc_id"), lit(7)) === i)
-            .select(col("doc_id"), col("text"), lit(op).as("op"))
-        val src = stageEpochFiles(baseDir, Seq(
-          0 -> slice(0, "I"), 1 -> slice(1, "I"), 2 -> slice(2, "I"),
-          3 -> slice(2, "D"),
-          4 -> slice(3, "I"), 5 -> slice(4, "I"), 6 -> slice(5, "I"),
-          7 -> slice(6, "I")))
-        runLshEpoch(s, src, s"${baseDir.getAbsolutePath}/out",
-          s"${baseDir.getAbsolutePath}/ckpt", hasOps = true)
-        baseDir.getAbsolutePath
-      })
-  }
+      : String =
+    Artifacts.memo(s, "st39", dir) { baseDir =>
+      val reps = Dedup.nearDupReps(s, dir)
+      def slice(i: Int, op: String): DataFrame =
+        reps.filter(pmod(col("doc_id"), lit(7)) === i)
+          .select(col("doc_id"), col("text"), lit(op).as("op"))
+      val src = stageEpochFiles(baseDir, Seq(
+        0 -> slice(0, "I"), 1 -> slice(1, "I"), 2 -> slice(2, "I"),
+        3 -> slice(2, "D"),
+        4 -> slice(3, "I"), 5 -> slice(4, "I"), 6 -> slice(5, "I"),
+        7 -> slice(6, "I")))
+      runLshEpoch(s, src, s"${baseDir.getAbsolutePath}/out",
+        s"${baseDir.getAbsolutePath}/ckpt", hasOps = true)
+    }
 
   /** st39 — RIGHT-TO-ERASURE inside the streamed LSH dedup index
     * (closing the s32 story's last artifact: c13 purges the fact
@@ -2008,28 +1907,14 @@ $counts
       "TRUE AS state_forgot, TRUE AS survivor_parity"
 
   // ---- st33 streamed fuzzy decontamination (t42 as the ingest gate)
-  private val deconSrcCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
-  private val deconSinkCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
-
   /** Stage t42's train corpus (clean docs + planted near-copies of
     * eval docs) into 5 epoch files — the arriving crawl batches. */
-  private[graft] def deconSrc(s: SparkSession, dir: String): String = {
-    deconSrcCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    deconSrcCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_st33src_${dirTag(dir)}_${s.sparkContext.applicationId}")
-        if (baseDir.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
-        val train = TextAnalysis.deconTrain(s, dir)
-        stageEpochFiles(baseDir, (0 until 5).map(i =>
-          i -> train.filter(pmod(col("doc_id"), lit(5)) === i)))
-      })
-  }
+  private[graft] def deconSrc(s: SparkSession, dir: String): String =
+    srcOf(Artifacts.memo(s, "st33src", dir) { baseDir =>
+      val train = TextAnalysis.deconTrain(s, dir)
+      stageEpochFiles(baseDir, (0 until 5).map(i =>
+        i -> train.filter(pmod(col("doc_id"), lit(5)) === i)))
+    })
 
   /** st33 — t42's fuzzy eval-set decontamination run as the INGEST
     * GATE of a checkpointed stream: crawl batches arrive as 5
@@ -2047,42 +1932,33 @@ $counts
     * to batch t42's. Signature values are engine-specific → rows-only;
     * the inv is the oracle companion. */
   def deconStreamed(s: SparkSession, dir: String): DataFrame = {
-    deconSinkCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    val outDir = deconSinkCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val src = deconSrc(s, dir)
-        val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_st33_${dirTag(dir)}_${s.sparkContext.applicationId}")
-        if (baseDir.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
-        val base = baseDir.getAbsolutePath
-        val docSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType)))
-        // persist the static side: a stream-static join re-evaluates
-        // it per micro-batch — without this, the eval suite would be
-        // re-signed and re-banded on every one of the 5 batches
-        val evalB = TextAnalysis.deconBanded(
-          TextAnalysis.deconEval(s, dir)).persist()
-        val stream = s.readStream.schema(docSchema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-        try {
-          val q = TextAnalysis.deconCandidates(
-              TextAnalysis.deconBanded(stream), evalB)
-            .writeStream.format("parquet")
-            .option("path", s"$base/out")
-            .option("checkpointLocation", s"$base/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        } finally evalB.unpersist(false)
-        s"$base/out"
-      })
-    s.read.parquet(outDir)
+    val root = Artifacts.memo(s, "st33", dir) { baseDir =>
+      val src = deconSrc(s, dir)
+      val base = baseDir.getAbsolutePath
+      val docSchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType)))
+      // persist the static side: a stream-static join re-evaluates
+      // it per micro-batch — without this, the eval suite would be
+      // re-signed and re-banded on every one of the 5 batches
+      val evalB = TextAnalysis.deconBanded(
+        TextAnalysis.deconEval(s, dir)).persist()
+      val stream = s.readStream.schema(docSchema)
+        .option("maxFilesPerTrigger", "1").parquet(src)
+      try {
+        val q = TextAnalysis.deconCandidates(
+            TextAnalysis.deconBanded(stream), evalB)
+          .writeStream.format("parquet")
+          .option("path", s"$base/out")
+          .option("checkpointLocation", s"$base/ckpt")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      } finally evalB.unpersist(false)
+    }
+    s.read.parquet(s"$root/out")
       .dropDuplicates("train_id", "eval_id")
       .select(col("train_id"), col("eval_id"), col("est_jaccard"))
       .orderBy("train_id", "eval_id")
@@ -2110,9 +1986,6 @@ $counts
     "SELECT TRUE AS parity_ok, TRUE AS nonempty"
 
   // ---- st34 streamed zone-map maintenance (q44 under continuous append)
-  private val zmIngestCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
-
   /** One ingest batch's writes — IDEMPOTENT by construction, factored
     * out so the spec can replay a batch and pin the output unchanged:
     * data lands under (shard, ingest_batch) with dynamic partition
@@ -2127,11 +2000,6 @@ $counts
     Layout.zmStats(batch).coalesce(1).write.mode("overwrite")
       .parquet(s"$root/manifests/batch=$id")
   }
-
-  /** Spec hook: the built ingest root for this (application, dir). */
-  private[graft] def st34Root(s: SparkSession, dir: String)
-      : Option[String] =
-    Option(zmIngestCache.get((s.sparkContext.applicationId, dir)))
 
   /** st34's manifest COMPACTION — the Iceberg `rewrite_manifests`
     * problem: continuous ingest writes `manifests/batch=<id>` forever
@@ -2218,64 +2086,56 @@ $counts
     * exact zone merge), so this STREAMED operator carries q44's
     * DIRECT DuckDB oracle — not just an inv companion. */
   def zonemapIngestStreamed(s: SparkSession, dir: String): DataFrame = {
-    zmIngestCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    val root = zmIngestCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_st34_${dirTag(dir)}_${s.sparkContext.applicationId}")
-        if (baseDir.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
-        val base = baseDir.getAbsolutePath
-        // stage the projected rows into 5 arrival epochs
-        val projected = Layout.zmProjected(s, dir)
-        val src = new java.io.File(stageEpochFiles(baseDir,
-          (0 until 5).map(i =>
-            i -> projected.filter(pmod(col("l_orderkey"), lit(5)) === i))))
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("l_orderkey",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("ship_day",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("shard",
-            org.apache.spark.sql.types.IntegerType)))
-        val confKey = "spark.sql.sources.partitionOverwriteMode"
-        val prev = s.conf.getOption(confKey)
-        s.conf.set(confKey, "dynamic")
-        try {
-          val q = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src.getAbsolutePath)
-            .writeStream
-            .foreachBatch { (batch: DataFrame, id: Long) =>
-              st34WriteBatch(batch, id, base)
-            }
-            .option("checkpointLocation", s"$base/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        } finally {
-          prev match {
-            case Some(v) => s.conf.set(confKey, v)
-            case None => s.conf.unset(confKey)
-          }
-        }
-        // compact the first three batches' manifests into one epoch
-        // manifest, leaving batches 3-4 as the uncompacted tail — the
-        // gate thereby serves from the epoch+tail read every round
-        // (reader equivalence pre/post compaction is Round13Spec's pin)
-        st34CompactManifests(s, base, upTo = 2L)
-        base
-      })
+    val root = st34Root(s, dir)
     Layout.zmAnswer(s, s"$root/table",
       st34ReadManifests(s, root).drop("batch"))
   }
 
-  // ------- st35 streamed TEXT ingest into the stored BM25 index
-  private val bm25IngestCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
+  /** The built st34 ingest root for this (application, dir). */
+  private[graft] def st34Root(s: SparkSession, dir: String): String =
+    Artifacts.memo(s, "st34", dir) { baseDir =>
+      val base = baseDir.getAbsolutePath
+      // stage the projected rows into 5 arrival epochs
+      val projected = Layout.zmProjected(s, dir)
+      val src = new java.io.File(stageEpochFiles(baseDir,
+        (0 until 5).map(i =>
+          i -> projected.filter(pmod(col("l_orderkey"), lit(5)) === i))))
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("l_orderkey",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("ship_day",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("shard",
+          org.apache.spark.sql.types.IntegerType)))
+      val confKey = "spark.sql.sources.partitionOverwriteMode"
+      val prev = s.conf.getOption(confKey)
+      s.conf.set(confKey, "dynamic")
+      try {
+        val q = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(src.getAbsolutePath)
+          .writeStream
+          .foreachBatch { (batch: DataFrame, id: Long) =>
+            st34WriteBatch(batch, id, base)
+          }
+          .option("checkpointLocation", s"$base/ckpt")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      } finally {
+        prev match {
+          case Some(v) => s.conf.set(confKey, v)
+          case None => s.conf.unset(confKey)
+        }
+      }
+      // compact the first three batches' manifests into one epoch
+      // manifest, leaving batches 3-4 as the uncompacted tail — the
+      // gate thereby serves from the epoch+tail read every round
+      // (reader equivalence pre/post compaction is Round13Spec's pin)
+      st34CompactManifests(s, base, upTo = 2L)
+    }
 
+  // ------- st35 streamed TEXT ingest into the stored BM25 index
   /** Builds the st35 index once per (application, sf dir): base BM25
     * index from 1/5 of the documents, the remaining docs STREAMED in
     * as 4 checkpointed micro-batches through the s30 upsert inside
@@ -2285,50 +2145,42 @@ $counts
     * oracle). Returns the index root. */
   private[graft] def buildIngestedBm25Index(s: SparkSession, dir: String)
       : String = {
-    bm25IngestCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    bm25IngestCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_st35_${dirTag(dir)}_${s.sparkContext.applicationId}")
-        if (baseDir.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
-        val root = new java.io.File(baseDir, "index")
-        val docs = Relational.table(s, dir, "documents")
-          .select(col("doc_id"), col("text"))
-        Similarity.writeBm25Index(s,
-          docs.filter(pmod(col("doc_id"), lit(5)) === 0), root)
-        val slices = (1 until 5).map { i =>
-          val sl = docs.filter(pmod(col("doc_id"), lit(5)) === i)
-          // batch 4 carries replaces of slice 1 (ingested 3 batches
-          // earlier): the docmap eviction runs against STORED state
-          i -> (if (i == 4)
-            sl.unionByName(docs.filter(pmod(col("doc_id"), lit(5)) === 1))
-          else sl)
-        }
-        val src = new java.io.File(stageEpochFiles(baseDir, slices))
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType)))
-        val doBatch: (org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], Long) => Unit =
-          (batch, _) => Similarity.upsertBm25Index(
-            batch.sparkSession, root.getAbsolutePath,
-            batch.select(col("doc_id"), col("text")))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.getAbsolutePath)
-          .writeStream
-          .foreachBatch(doBatch)
-          .option("checkpointLocation", s"$baseDir/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        root.getAbsolutePath
-      })
+    val base = Artifacts.memo(s, "st35", dir) { baseDir =>
+      val root = new java.io.File(baseDir, "index")
+      val docs = Relational.table(s, dir, "documents")
+        .select(col("doc_id"), col("text"))
+      Similarity.writeBm25Index(s,
+        docs.filter(pmod(col("doc_id"), lit(5)) === 0), root)
+      val slices = (1 until 5).map { i =>
+        val sl = docs.filter(pmod(col("doc_id"), lit(5)) === i)
+        // batch 4 carries replaces of slice 1 (ingested 3 batches
+        // earlier): the docmap eviction runs against STORED state
+        i -> (if (i == 4)
+          sl.unionByName(docs.filter(pmod(col("doc_id"), lit(5)) === 1))
+        else sl)
+      }
+      val src = new java.io.File(stageEpochFiles(baseDir, slices))
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType)))
+      val doBatch: (org.apache.spark.sql.Dataset[
+        org.apache.spark.sql.Row], Long) => Unit =
+        (batch, _) => Similarity.upsertBm25Index(
+          batch.sparkSession, root.getAbsolutePath,
+          batch.select(col("doc_id"), col("text")))
+      val q = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src.getAbsolutePath)
+        .writeStream
+        .foreachBatch(doBatch)
+        .option("checkpointLocation", s"$baseDir/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    }
+    s"$base/index"
   }
 
   /** st35 — CONTINUOUS text ingest: the s30 BM25 upsert run as the
@@ -2350,8 +2202,6 @@ $counts
       .orderBy("query_id", "lex_rank")
 
   // ------- st36 streamed retraction-aware MV maintenance (c16's twin)
-  private val retractMvCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
   private val C16Buckets = 16
 
   /** Runs the st36 pipeline once per (application, sf dir): the
@@ -2375,82 +2225,72 @@ $counts
     * and re-derives identical bytes; view time travel falls out for
     * free. Returns the pipeline root. */
   private[graft] def buildRetractMvStream(s: SparkSession, dir: String)
-      : String = {
-    retractMvCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    retractMvCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val baseDir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_st36_${dirTag(dir)}_${s.sparkContext.applicationId}")
-        if (baseDir.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
-        val basePath = new java.io.File(baseDir, "base").getAbsolutePath
-        val viewPath = new java.io.File(baseDir, "view").getAbsolutePath
-        val kb = pmod(xxhash64(col("o_orderkey")), lit(C16Buckets))
-          .cast("int").as("kb")
-        val facts = Curation.c16Facts(s, dir)
-        val split = lit(Curation.C16Split).cast("timestamp")
-        val basePart = facts.filter(col("o_orderdate") < split)
-        basePart.select(col("o_orderkey"), col("o_orderpriority"),
-            col("month"), col("cents"), kb)
-          .write.partitionBy("kb").mode("overwrite").parquet(basePath)
-        basePart.groupBy("o_orderpriority", "month")
-          .agg(count(lit(1)).as("n_orders"),
-            sum(col("cents")).as("cents"),
-            min(col("cents")).as("cents_min"),
-            max(col("cents")).as("cents_max"))
-          .write.mode("overwrite").parquet(s"$viewPath/epoch=0")
-        // the CDC feed, before-imaged (c16's deterministic rules)
-        val km7 = pmod(col("o_orderkey"), lit(7))
-        val km11 = pmod(col("o_orderkey"), lit(11))
-        val del = basePart.filter(km7 === 0)
-          .select(lit("D").as("op"), col("o_orderkey"),
-            col("o_orderpriority"), col("month"),
-            col("cents").as("cents_old"), lit(0L).as("cents_new"))
-        val upd = basePart.filter(km7 =!= 0 && km11 === 3)
-          .select(lit("U").as("op"), col("o_orderkey"),
-            col("o_orderpriority"), col("month"),
-            col("cents").as("cents_old"),
-            (col("cents") + 10000L).as("cents_new"))
-        val ins = facts.filter(col("o_orderdate") >= split)
-          .select(lit("I").as("op"), col("o_orderkey"),
-            col("o_orderpriority"), col("month"),
-            lit(0L).as("cents_old"), col("cents").as("cents_new"))
-        val cdc = del.unionByName(upd).unionByName(ins)
-        val src = new java.io.File(stageEpochFiles(baseDir,
-          (0 until 4).map(i =>
-            i -> cdc.filter(pmod(col("o_orderkey"), lit(4)) === i))))
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("op",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("o_orderkey",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("o_orderpriority",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("month",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("cents_old",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("cents_new",
-            org.apache.spark.sql.types.LongType)))
-        val doBatch: (org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], Long) => Unit = (batch, id) => {
-          val s2 = batch.sparkSession
-          st36ApplyBatch(s2, batch.toDF(), id, basePath, viewPath)
-        }
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.getAbsolutePath)
-          .writeStream
-          .foreachBatch(doBatch)
-          .option("checkpointLocation", s"$baseDir/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        baseDir.getAbsolutePath
-      })
-  }
+      : String =
+    Artifacts.memo(s, "st36", dir) { baseDir =>
+      val basePath = new java.io.File(baseDir, "base").getAbsolutePath
+      val viewPath = new java.io.File(baseDir, "view").getAbsolutePath
+      val kb = pmod(xxhash64(col("o_orderkey")), lit(C16Buckets))
+        .cast("int").as("kb")
+      val facts = Curation.c16Facts(s, dir)
+      val split = lit(Curation.C16Split).cast("timestamp")
+      val basePart = facts.filter(col("o_orderdate") < split)
+      basePart.select(col("o_orderkey"), col("o_orderpriority"),
+          col("month"), col("cents"), kb)
+        .write.partitionBy("kb").mode("overwrite").parquet(basePath)
+      basePart.groupBy("o_orderpriority", "month")
+        .agg(count(lit(1)).as("n_orders"),
+          sum(col("cents")).as("cents"),
+          min(col("cents")).as("cents_min"),
+          max(col("cents")).as("cents_max"))
+        .write.mode("overwrite").parquet(s"$viewPath/epoch=0")
+      // the CDC feed, before-imaged (c16's deterministic rules)
+      val km7 = pmod(col("o_orderkey"), lit(7))
+      val km11 = pmod(col("o_orderkey"), lit(11))
+      val del = basePart.filter(km7 === 0)
+        .select(lit("D").as("op"), col("o_orderkey"),
+          col("o_orderpriority"), col("month"),
+          col("cents").as("cents_old"), lit(0L).as("cents_new"))
+      val upd = basePart.filter(km7 =!= 0 && km11 === 3)
+        .select(lit("U").as("op"), col("o_orderkey"),
+          col("o_orderpriority"), col("month"),
+          col("cents").as("cents_old"),
+          (col("cents") + 10000L).as("cents_new"))
+      val ins = facts.filter(col("o_orderdate") >= split)
+        .select(lit("I").as("op"), col("o_orderkey"),
+          col("o_orderpriority"), col("month"),
+          lit(0L).as("cents_old"), col("cents").as("cents_new"))
+      val cdc = del.unionByName(upd).unionByName(ins)
+      val src = new java.io.File(stageEpochFiles(baseDir,
+        (0 until 4).map(i =>
+          i -> cdc.filter(pmod(col("o_orderkey"), lit(4)) === i))))
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("op",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("o_orderkey",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("o_orderpriority",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("month",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("cents_old",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("cents_new",
+          org.apache.spark.sql.types.LongType)))
+      val doBatch: (org.apache.spark.sql.Dataset[
+        org.apache.spark.sql.Row], Long) => Unit = (batch, id) => {
+        val s2 = batch.sparkSession
+        st36ApplyBatch(s2, batch.toDF(), id, basePath, viewPath)
+      }
+      val q = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src.getAbsolutePath)
+        .writeStream
+        .foreachBatch(doBatch)
+        .option("checkpointLocation", s"$baseDir/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    }
 
   /** One st36 micro-batch: idempotent base-table merge, then the
     * shared retraction fold into the next view epoch. Split out so
@@ -2539,9 +2379,6 @@ $counts
   }
 
   // ------- st37 streamed ANALYZE: the CBO catalog maintained by the stream
-  private val analyzeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
-
   /** The two range scenarios st37's decision parity runs — chosen
     * far from every decision boundary at every gate SF so an in-band
     * estimate can never flip the decision (the sk08 boundary
@@ -2568,52 +2405,42 @@ $counts
     * global k smallest hashes are a subset of the per-batch k
     * smallest), GK by `gk_merge`. */
   private[graft] def buildStreamedAnalyze(s: SparkSession, dir: String)
-      : String = {
-    analyzeCache.entrySet().removeIf(e =>
-      e.getKey._1 != s.sparkContext.applicationId ||
-        !new java.io.File(e.getValue).isDirectory)
-    analyzeCache.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val baseDir = graft.core.Scratch.root("st37", dir,
-          s.sparkContext.applicationId)
-        if (baseDir.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
-        val line = Relational.table(s, dir, "lineitem")
-          .select(col("l_orderkey"),
-            col("l_extendedprice").cast("double").as("price"))
-        val src = new java.io.File(stageEpochFiles(baseDir,
-          (0 until 4).map(i =>
-            i -> line.filter(pmod(col("l_orderkey"), lit(4)) === i))))
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("l_orderkey",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("price",
-            org.apache.spark.sql.types.DoubleType)))
-        val statsRoot = new java.io.File(baseDir, "stats")
-        val doBatch: (org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], Long) => Unit = (batch, id) => {
-          batch.agg(count(lit(1)).as("n"),
-              graft.expr.KmvSketchAgg.kmvSketch(
-                xxhash64(col("l_orderkey")), Sketches.JoinK).as("sk"),
-              graft.expr.GkSketchAgg.gkSketch(col("price"),
-                Sketches.SelAccuracy).as("gk"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(new java.io.File(statsRoot, s"batch=$id")
-              .getAbsolutePath)
-          ()
-        }
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.getAbsolutePath)
-          .writeStream
-          .foreachBatch(doBatch)
-          .option("checkpointLocation", s"$baseDir/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        baseDir.getAbsolutePath
-      })
-  }
+      : String =
+    Artifacts.memo(s, "st37", dir) { baseDir =>
+      val line = Relational.table(s, dir, "lineitem")
+        .select(col("l_orderkey"),
+          col("l_extendedprice").cast("double").as("price"))
+      val src = new java.io.File(stageEpochFiles(baseDir,
+        (0 until 4).map(i =>
+          i -> line.filter(pmod(col("l_orderkey"), lit(4)) === i))))
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("l_orderkey",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("price",
+          org.apache.spark.sql.types.DoubleType)))
+      val statsRoot = new java.io.File(baseDir, "stats")
+      val doBatch: (org.apache.spark.sql.Dataset[
+        org.apache.spark.sql.Row], Long) => Unit = (batch, id) => {
+        batch.agg(count(lit(1)).as("n"),
+            graft.expr.KmvSketchAgg.kmvSketch(
+              xxhash64(col("l_orderkey")), Sketches.JoinK).as("sk"),
+            graft.expr.GkSketchAgg.gkSketch(col("price"),
+              Sketches.SelAccuracy).as("gk"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(new java.io.File(statsRoot, s"batch=$id")
+            .getAbsolutePath)
+        ()
+      }
+      val q = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src.getAbsolutePath)
+        .writeStream
+        .foreachBatch(doBatch)
+        .option("checkpointLocation", s"$baseDir/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    }
 
   /** st37 — STREAMED ANALYZE: the statistics the CBO stool (sk05–
     * sk11) decides from, maintained BY THE INGEST STREAM instead of

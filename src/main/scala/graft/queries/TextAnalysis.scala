@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Artifacts
 
 /** Text-analysis operators for training-data pipelines (Layer B
   * north-star; absent in the reference): token counting, quality
@@ -2574,8 +2575,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("lang"),
         col("b.w1").as("w1"), col("b.w2").as("w2"))
     // ANALYZE: train + persist the model (one scan, two partial aggs)
-    val lmPath = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_t41_${s.sparkContext.applicationId}").getAbsolutePath
+    val lmPath = Artifacts.root(s, "t41", dir).getAbsolutePath
     bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
       .write.mode("overwrite").parquet(s"$lmPath/bigrams")
     // c(w1) = Σ_w2 c(w1, w2): derived from the STORED bigram table at

@@ -217,7 +217,7 @@ class Round12bSpec extends SparkSpec {
     assert(streamed == batch, s"streamed $streamed vs batch $batch")
     // replay batch 2: same rows, same id → idempotent overwrite of
     // exactly its own sub-directories and manifest
-    val root = Streaming.st34Root(spark, sfDir).get
+    val root = Streaming.st34Root(spark, sfDir)
     val replay = Layout.zmProjected(spark, sfDir)
       .filter(pmod(col("l_orderkey"), lit(5)) === 2)
     val confKey = "spark.sql.sources.partitionOverwriteMode"

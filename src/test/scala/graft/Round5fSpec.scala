@@ -729,8 +729,7 @@ class Round5fSpec extends SparkSpec {
     val df = graft.queries.Sources.nestedProjection(spark, sfDir)
     assert(df.collect().length == 1)
     // re-run the read side alone to inspect the scan's ReadSchema
-    val out = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_j09_nested_${spark.sparkContext.applicationId}")
+    val out = core.Artifacts.root(spark, "j09_nested", sfDir)
       .getAbsolutePath
     val plan = spark.read.parquet(out)
       .select(col("customer.acctbal").as("acctbal"),
