@@ -4,49 +4,25 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, writes the metrics JSON to bench.json (in
-  * SPARK_GRAFT_OUT, or the working dir) and prints it, followed by a
-  * compact headline-subset line sized to fit the driver's 2000-char
+  * SPARK_GRAFT_OUT, or the working dir) and prints it, followed by the
+  * compact line of [[driverKeys]] that fits the driver's 2000-char
   * stdout tail — the file is the canonical machine-readable artifact;
-  * the compact stdout line is what tail-parsing drivers read. */
+  * the compact stdout line is what tail-parsing drivers read. A full
+  * run whose compact line loses a driver key or overflows the tail
+  * exits 1 after printing both lines. */
 object Bench {
-  // ---- compact-line machinery, object-level so Round16Spec can test the
-  // budget math without running a bench ----
-
-  // Keys the driver has read off the compact line in rounds 14/15 (59
-  // common + sk14 new-in-15 + gr11 on the r14 line): NONE of these may
-  // ever be budget-truncated — a key that vanishes from the line is a
-  // "dropped query" to the driver regardless of bench.json (the r15
-  // verdict's gate regression was exactly gr11 falling off when sk14's
-  // insertion pushed the strict-prefix cut past the 1900 budget).
-  // Everything in `headline` after position guaranteedCount-1 is
-  // best-effort filler for leftover budget.
-  val guaranteedCount = 61
-
-  // The driver stores a 2000-char tail of stdout and parses the LAST
-  // line as JSON, so line + '\n' must fit in 2000 chars. 1988 leaves an
-  // 11-char safety margin while fitting the 61-key guaranteed prefix
-  // even when every value needs 5 chars ("45.78"): 61 keys cost 1718
-  // chars of queries-JSON and the fixed head+tail ~262 → 1980 worst
-  // case (Round16Spec proves this with synthetic worst-case values).
-  val lineTotalBudget = 1988
-
-  // pruned when the 2000-char budget tightens: m13/m20/t01/st01,
-  // then g07/st06/st03/mm02 for the round-5 session-3 keys, then
-  // q24/t18/st12/mm06/mm07/st14/t16/s08 for the session-4 keys,
-  // then q29/q06/s07/t05/mm04/d12/q22/s12/st10/t17/mm05/t20 for the
-  // session-5 keys, then t26/t27/q32/e02/s14 and
-  // q01/s09/c04/st11/t09/st07/j01/q23/st08/j03/st09 for the
-  // session-6 keys, then s16/q30/st18/q31/t22/st15/c10/s13/q26/t25/
-  // q27/t31 for the session-7 keys
-  // (stable sub-0.2s rows for 4+ rounds; bench.json keeps them all)
-  val headline: Seq[String] = Seq(
+  /** The keys of the compact stdout line, in line order: the 61 keys
+    * the driver has tracked since round 15, then st40 and gr12 — the
+    * 63 keys on the parsed line of BENCH_r16.json and
+    * BENCH_r16_c8.json. Every key is serialized on every run; a key
+    * missing from the line reads as a dropped query to the driver
+    * regardless of bench.json. */
+  val driverKeys: Seq[String] = Seq(
     "a01_bench_generate_1m", "a02_bench_mutate_1m",
     "q03_top_revenue_orders", "q07_top_orders_per_customer",
     "q13_order_lineitem_smj", "q16_salted_join", "q17_asof_join",
     "d01_dedup_exact", "d02_dedup_minhash_lsh", "d06_dedup_clusters",
     "d08_paragraph_dedup", "d09_semantic_dedup", "q21_range_join",
-    // round-6 session-2 flagships — early so the enforced line
-    // budget never truncates them
     "j10_bucketed_join", "j11_dpp_join", "j13_bloom_join",
     "q42_recursive_spine", "q43_lateral_topk",
     "s23_contrastive_triplets", "t37_pretrain_manifest",
@@ -55,17 +31,11 @@ object Bench {
     "sk02_hll_overlap", "sk03_quantile_sketch", "sk04_gk_profile",
     "sk05_join_card", "sk06_hll_mv",
     "st28_quantile_profile_streamed", "st29_enrich_streamed",
-    // round-11 flagships
     "st30_lsh_dedup_streamed", "s24_ann_stored_ivf",
     "sk07_cbo_strategy", "t40_compression_quality",
-    // round-12 flagships
     "sk08_cbo_sketch", "s25_ann_upsert", "st31_epoch_handoff",
     "sk09_selectivity", "st32_ann_ingest_streamed",
-    "t41_lm_perplexity",
-    // round-13/14 flagships — early so the enforced line budget
-    // never truncates them
-    // round-15 flagship
-    "sk14_cbo_chain",
+    "t41_lm_perplexity", "sk14_cbo_chain",
     "sk11_cbo_planner", "sk12_cbo_applied", "s29_hybrid_stored",
     "s30_bm25_upserted", "s31_ann_rebalanced", "s32_index_erasure",
     "q45_time_travel", "q46_time_travel_compacted",
@@ -73,80 +43,47 @@ object Bench {
     "st35_bm25_ingest_streamed", "st36_retract_mv_streamed",
     "st37_analyze_streamed", "st38_rebalance_under_ingest",
     "st39_state_erasure", "a03_bench_generate_mutate_100m",
-    // round-12 extension flagships
     "s26_hybrid_rrf", "s27_ann_filtered", "gr11_label_propagation",
-    // round-16 flagship: honest stream-family build timer — filler
-    // region (after the guaranteed prefix), must never displace a
-    // guaranteed key
-    "st40_family_rebuild",
-    "gr12_modularity", "t42_fuzzy_decontaminate", "st33_decon_streamed",
-    "q44_zonemap_pruning", "s28_ann_stored_ivfpq", "st34_zonemap_ingest",
-    "sk10_cbo_join_order",
-    "s01_ann_brute_force", "s02_ann_lsh_bucketed",
-    "s04_ann_ivf", "s06_embedding_clusters", "t11_tfidf",
-    "t14_quality_gate",
-    "c01_curation_pipeline",
-    "j02_partitioned_sink",
-    "t15_bloom_decontaminate", "c03_snapshot_diff",
-    "t19_bm25_topk",
-    "t21_dup_ngrams", "d10_incremental_dedup", "q25_corr_subquery",
-    "s10_ann_pq", "l03_sorted_neighborhood",
-    "c05_scd2_history", "l04_fellegi_sunter", "s11_curriculum",
-    "mm08_scene_changes",
-    "st13_idle_users", "d11_golden_records",
-    "q28_grouping_sets",
-    "st16_session_window", "j04_compaction",
-    "t23_bpe_merges",
-    "t24_bpe_apply", "c06_expectations", "j05_csv_roundtrip",
-    "c07_robust_outliers", "gr01_pagerank", "gr02_components",
-    "gr03_triangles", "gr04_dense_core",
-    "st17_foreach_upsert", "t28_eval_gram_overlap",
-    "c08_incremental_mv",
-    "q34_unpivot", "gr05_link_prediction", "t30_pmi_collocations",
-    "d13_containment_dedup",
-    "q35_open_order_concurrency", "c11_referential_integrity",
-    "j07_schema_evolution", "s15_kcenter_coreset",
-    "l05_entity_resolution",
-    "q36_null_aware_anti", "q37_bag_set_ops", "gr06_bfs_hops",
-    "gr07_personalized_pagerank", "d14_url_dedup",
-    "s17_temperature_mixture", "t32_mojibake_audit",
-    "c12_drift_audit", "mm09_vad_segments", "s18_ann_topk_agg",
-    "l06_edit_distance", "t33_training_sequences",
-    "j08_dynamic_overwrite", "st19_watermark_tuning",
-    "c13_retention_purge", "t34_decontaminated_split",
-    "mm10_phash_dedup", "e03_hamming_ann", "s19_grouped_kfold",
-    "gr08_weighted_paths", "q39_cohort_retention",
-    "d15_cross_source_mirrors", "d16_semantic_calibration",
-    "q40_ordered_string_agg", "st20_backfill_seam",
-    "l07_blocking_audit", "s21_exact_holdout",
-    "j09_nested_projection", "q41_map_profile",
-    "c14_reconciliation", "t35_domain_quality",
-    "gr09_khop_features")
+    "st40_family_rebuild", "gr12_modularity")
 
-  /** Greedy STRICT priority-prefix serializer: emit headline keys in
-    * order, stop at the FIRST entry that would exceed the budget (a
-    * long-named flagship must never be dropped while lower-priority
-    * short keys survive). Returns (queriesJson, truncatedHeadlineKeys).
-    */
-  def compactQueries(
-      headline: Seq[String],
-      resultMap: Map[String, Double],
-      queriesBudget: Int): (String, Seq[String]) = {
-    val sb = new StringBuilder
-    val truncated = Seq.newBuilder[String]
-    var budgetHit = false
-    headline.foreach { k =>
-      resultMap.get(k).foreach { v =>
-        if (budgetHit) truncated += k
-        else {
-          val entry = (if (sb.isEmpty) "" else ",") +
-            "\"" + k + "\":" + (math.rint(v * 100) / 100)
-          if (sb.length + entry.length <= queriesBudget) sb.append(entry)
-          else { budgetHit = true; truncated += k }
-        }
-      }
-    }
-    (sb.toString, truncated.result())
+  /** The driver keeps a 2000-char tail of stdout and parses its last
+    * line as JSON, so the compact line plus its newline must fit. */
+  val driverTailChars = 2000
+
+  private def r2(d: Double): Double = math.rint(d * 100) / 100
+
+  /** The host-noise control fields shared by bench.json and the
+    * compact line. */
+  def controlJson(pre: Double, post: Double, shufflePre: Double,
+      shufflePost: Double, normalizedTotal: Double): String =
+    s""""control_pre":${r2(pre)},"control_post":${r2(post)},""" +
+      s""""control_shuffle_pre":${r2(shufflePre)},""" +
+      s""""control_shuffle_post":${r2(shufflePost)},""" +
+      s""""normalized_total":${r2(normalizedTotal)}"""
+
+  /** The compact stdout line: total, every [[driverKeys]] result at
+    * centisecond resolution, then the run fields. Returns the line and
+    * what is wrong with it for the driver — a driver key absent from
+    * `results`, or a line that overflows [[driverTailChars]] — so a
+    * full run can fail instead of losing a key silently. */
+  def compactLine(results: Map[String, Double], total: Double,
+      sfDir: String, cpus: Int, iters: Int, controls: String,
+      full: String): (String, Seq[String]) = {
+    val missing = driverKeys.filterNot(results.contains)
+    val queries = driverKeys.filter(results.contains)
+      .map(k => "\"" + k + "\":" + r2(results(k))).mkString(",")
+    val line =
+      s"""{"metric":"total","value":${r2(total)},"unit":"sec",""" +
+        s""""queries":{$queries},"sf":"$sfDir","cpus":$cpus,""" +
+        s""""iters":$iters,"n_queries":${results.size},$controls,""" +
+        s""""full":"$full"}"""
+    val overflow =
+      if (line.length + 1 > driverTailChars)
+        Seq(s"compact line is ${line.length + 1} chars with its newline; " +
+          s"the driver reads $driverTailChars")
+      else Nil
+    (line, missing.map(k => s"driver key missing from results: $k") ++
+      overflow)
   }
 
   def main(args: Array[String]): Unit = {
@@ -253,7 +190,6 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    def r2(d: Double): Double = math.rint(d * 100) / 100
     // the control-NORMALIZED headline: suite-seconds per
     // shuffle-control-second (mean of pre/post). BASELINE r10
     // computed ≈270 by hand for two same-code runs whose absolute
@@ -265,70 +201,22 @@ object Bench {
       if (controlShufflePre > 0 && controlShufflePost > 0)
         total / ((controlShufflePre + controlShufflePost) / 2)
       else -1.0
-    val controlJson =
-      s""""control_pre":${r2(controlPre)},"control_post":${r2(controlPost)},""" +
-        s""""control_shuffle_pre":${r2(controlShufflePre)},""" +
-        s""""control_shuffle_post":${r2(controlShufflePost)},""" +
-        s""""normalized_total":${r2(normalizedTotal)}"""
+    val controls = controlJson(controlPre, controlPost, controlShufflePre,
+      controlShufflePost, normalizedTotal)
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""sf":"$sfDir","cpus":$cpus,"iters":$iters,$controlJson}"""
-    // The driver stores only a 2000-char tail of stdout (BENCH_r0*.json
-    // "tail") and parses the metrics JSON out of it; the full per-query
-    // line is ~4-5 KB, so its opening brace falls outside the tail and
-    // the parse has returned null for three rounds. Emit a compact
-    // headline-subset line (<1.5 KB) as the LITERAL LAST stdout line so
-    // the whole object always fits the tail; bench.json and the full
-    // line (printed just before) still carry every query.
-    val headline = Bench.headline
-    val resultMap = results.toMap
-    // a headline key that stops matching a query name would otherwise
-    // silently vanish from the tail-parsed line — fail loudly instead
-    // (not meaningful under a dev-only subset run)
-    if (only.isEmpty)
-      headline.filterNot(resultMap.contains).foreach(k =>
-        System.err.println(s"[bench] headline key missing from results: $k"))
-    // 2 decimals: centisecond resolution is enough for the driver's
-    // trend reading and buys the 2000-char stdout-tail budget ~1 char
-    // per key — the list is at 1973 chars with 3 decimals and 67 keys
-    // ENFORCED budget: the headline list has outgrown the hand-pruned
-    // 2000-char budget twice (BENCH_r04/r05 "parsed": null — the
-    // compact line's opening brace fell outside the driver's tail),
-    // so serialize greedily in headline priority order and STOP
-    // before the line would exceed the budget; bench.json still
-    // carries every query
-    val compactHead =
-      s"""{"metric":"total","value":${math.rint(total * 100) / 100},""" +
-        s""""unit":"sec","queries":{"""
-    val compactTail =
-      s"""},"sf":"$sfDir","cpus":$cpus,"iters":$iters,""" +
-        s""""n_queries":${results.size},$controlJson,""" +
-        s""""full":"${if (only.isEmpty) "bench.json" else "bench_subset.json"}"}"""
-    val lineBudget =
-      Bench.lineTotalBudget - compactHead.length - compactTail.length
-    val (qsCompact, truncatedKeys) =
-      Bench.compactQueries(headline, resultMap, lineBudget)
-    if (truncatedKeys.nonEmpty)
-      System.err.println(
-        s"[bench] compact-line budget hit at '${truncatedKeys.head}' — " +
-          "later headline keys omitted from the tail line (bench.json has all)")
-    // the loud-fail the r15 regression was missing: a GUARANTEED key
-    // (one the driver has tracked on past lines) silently truncated off
-    // the line reads as a dropped query to the driver — shout, don't
-    // just note the budget hit (gr11 fell off exactly this way in r15)
-    val guaranteedSet = headline.take(Bench.guaranteedCount).toSet
-    truncatedKeys.filter(guaranteedSet.contains).foreach(k =>
-      System.err.println(s"[bench] headline key truncated: $k — " +
-        "GUARANTEED driver-line key lost; raise lineTotalBudget or trim " +
-        "filler keys (Round16Spec enforces the budget math)"))
-    val jsonCompact = compactHead + qsCompact + compactTail
-
-    // file first: survives any stdout interleaving from sbt/Spark.
+        s""""sf":"$sfDir","cpus":$cpus,"iters":$iters,$controls}"""
     // Dev-subset runs write bench_subset.json — a quick
-    // SPARK_GRAFT_BENCH_ONLY probe must never clobber the canonical
-    // full-run artifact (it did, twice, in round 10)
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_OUT", ".")
+    // SPARK_GRAFT_BENCH_ONLY run must never clobber the canonical
+    // full-run artifact (it did, twice, in round 10) — and lack most
+    // driver keys by design, so only a full run's line is checked
     val outName = if (only.isEmpty) "bench.json" else "bench_subset.json"
+    val (jsonCompact, lineProblems) = compactLine(results.toMap, total,
+      sfDir, cpus.toInt, iters, controls, outName)
+    val problems = if (only.isEmpty) lineProblems else Nil
+
+    // file first: survives any stdout interleaving from sbt/Spark
+    val outDir = sys.env.getOrElse("SPARK_GRAFT_OUT", ".")
     try {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
       java.nio.file.Files.write(
@@ -340,7 +228,8 @@ object Bench {
     }
 
     // stop Spark BEFORE the JSON lines so no executor-shutdown noise
-    // lands after them — the compact JSON must be the last stdout line.
+    // lands after them — the compact JSON must be the last stdout line
+    // (the full per-query line is far longer than the driver's tail).
     // That alone was not enough in r13: a maintenance-thread WARN
     // (StateStore) fired from a JVM shutdown hook AFTER the last
     // println and broke the driver's tail parse — so force every
@@ -350,9 +239,11 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setRootLevel(
       org.apache.logging.log4j.Level.OFF)
     spark.stop()
+    problems.foreach(p => System.err.println(s"[bench] $p"))
     System.out.flush()
     println(json)
     println(jsonCompact)
     System.out.flush()
+    if (problems.nonEmpty) sys.exit(1)
   }
 }

@@ -227,32 +227,30 @@ object Graph {
     * hash-exactly; the oracle SQL keeps the equivalent wedge+EXISTS
     * formulation because DuckDB has no array intersection over
     * grouped adjacency — same semantics, engine-appropriate plans. */
-  def triangles(s: SparkSession, dir: String): DataFrame =
-    trianglesWithCap(s, dir, TriOrderCap)
+  def triangles(s: SparkSession, dir: String): DataFrame = {
+    val (out, caches) = trianglesPlan(s, dir, TriOrderCap)
+    CacheScope.materializeAndRelease(out, caches: _*)
+  }
 
   /** The per-order fanout cap is the gr03 cost knob: candidate wedge
     * volume grows ~cap² per order. Measured sensitivity on the
-    * round-8 draw with the edge-iterator closing (tools/PerfAudit
-    * gr03, cold single runs incl. ~9 s session/JIT fixed cost):
+    * round-8 draw with the edge-iterator closing (cold single runs
+    * incl. ~9 s session/JIT fixed cost; BASELINE_HISTORY.md, "Round-8:
+    * gr03 triangle rework"):
     * sf0.1 — cap 4: 13.9 s / 20,000 triangle-bearing nodes (every
     * part); cap 8: 16.0 s / 20,000. sf1 — cap 2: 20.6 s / 32,730;
     * cap 4: 25.4 s / 200,000; cap 8: 42.6 s / 200,000. Warm (second
-    * run in a live session, tools/TriProbe): cap 4 is 5.0 s at sf0.1
-    * and 16.0 s at sf1, with wedge volume measured exactly linear in
+    * run in a live session): cap 4 is 5.0 s at sf0.1 and 16.0 s at
+    * sf1, with wedge volume measured exactly linear in
     * SF (21.5M → 215M in-array candidates — never shuffle rows).
     * Cap 4 keeps full node coverage; cap 2 drops 5/6 of the
     * triangle-bearing nodes for ~20% of the cost back; cap 8 doubles
     * the cost and adds no coverage — hence 4. (Pre-r8 wedge-join
-    * numbers for the same knob: 50.9 s cap 4 / 118.2 s cap 8 at
+    * numbers for the same knob, from "gr03 orientation-cap
+    * sensitivity": 50.9 s cap 4 / 118.2 s cap 8 at
     * sf1 — the rework is 2–2.8× on the knee and turned the 100×
     * story from materialized-row growth into linear CPU.) */
   private[graft] val TriOrderCap = 4
-
-  private[graft] def trianglesWithCap(s: SparkSession, dir: String,
-      cap: Int): DataFrame = {
-    val (out, caches) = trianglesPlan(s, dir, cap)
-    CacheScope.materializeAndRelease(out, caches: _*)
-  }
 
   /** The gr03/gr04 co-purchase edge list (u < v part pairs from each
     * order's `cap` lowest part keys), built in ONE shuffle: per-order

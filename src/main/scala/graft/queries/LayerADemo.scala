@@ -325,17 +325,12 @@ object LayerADemo {
     * exchange-free end to end. Wall time vs a02 is the linearity
     * check (BASELINE row; any superlinearity is a bug in the fused
     * stats pass or the generator expressions). */
-  def bench100mGenerateMutate(s: SparkSession, dir: String): DataFrame =
-    bench100mGenerateMutateAt(s, dir, A03Rows)
-
-  /** Row-count-parameterized a03 body (probe hook; the gate row is
-    * fixed at [[A03Rows]]). */
-  private[graft] def bench100mGenerateMutateAt(s: SparkSession,
-      dir: String, rows: Long): DataFrame = {
+  def bench100mGenerateMutate(s: SparkSession, dir: String): DataFrame = {
     val segs = customers(s, dir).select("c_mktsegment").distinct()
       .collect().map(_.getString(0)).sorted.toSeq ++
       Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
-    // Measured r15-opt (A03Probe): the row is two passes over the
+    // Measured in round 15 (OPTIMIZATION_r15.md, "Examined, measured,
+    // and deliberately left alone"): the row is two passes over the
     // generated lineage — the fused stats agg evaluates only the
     // stats-bearing columns (dob/segment/u/nation) and the output
     // agg only (segment/u/score); column pruning already cuts both
@@ -344,7 +339,7 @@ object LayerADemo {
     // bench's 4 GB heap (a ~10 GB 6-column cache thrashes to disk
     // and defeats pruning in BOTH passes) — so the double pruned
     // pass is kept deliberately.
-    benchMutate(s, dir, rows).agg(
+    benchMutate(s, dir, A03Rows).agg(
       count(lit(1)).as("n"),
       sum(col("segment").isin(segs.distinct: _*).cast("long")).as("n_seg"),
       sum((col("u") === "" || col("u").rlike("^\\d\\.\\d{6}$"))

@@ -967,7 +967,8 @@ $counts
     * TRAILING alerts are decided by real watermark/timer machinery,
     * which Spark quantizes to milliseconds (watermark = floor_ms(max
     * event time) − delay; a timer fires iff timer_ms <= wm_ms —
-    * pinned empirically by tools/TimerProbe and StreamingSpec), so
+    * pinned by StreamingSpec's "event-time timers fire iff ..."
+    * test), so
     * the oracle's trailing predicate uses the SAME ms-floored
     * arithmetic instead of st13's micros comparison. On ms-aligned
     * data the two predicates coincide; on micro-jittered testdata

@@ -1110,10 +1110,10 @@ object TextAnalysis {
     * (Heaps' law — t38 measures the saturation curve on this very
     * corpus), so collect it once and run every merge round driver-
     * side in memory; the corpus is touched exactly twice total (vocab
-    * build + final encode) for ANY merge count. Measured (BpeProbe,
-    * sf0.1, r9): 16 rounds in 0.41 s TOTAL vs 1.2 s/merge for this
-    * loop — the gap is pure per-job overhead and widens linearly with
-    * merge count (BASELINE.md r9). */
+    * build + final encode) for ANY merge count. Measured (sf0.1, r9):
+    * 16 rounds in 0.41 s TOTAL vs 1.2 s/merge for this loop — the gap
+    * is pure per-job overhead and widens linearly with merge count
+    * (BASELINE_HISTORY.md, "BPE merge-count envelope"). */
   private def bpeRules(s: SparkSession,
       dir: String): Seq[(Int, String, String, Long)] = {
     val words = Relational.table(s, dir, "documents")

@@ -435,8 +435,9 @@ object EventStreams {
     *    marks the stored `lastUs` as already-alerted, and the
     *    input-row path skips the (stored, first-new) pair iff marked.
     *  - Timer/watermark arithmetic is ms-floored (pinned by
-    *    tools/TimerProbe + StreamingSpec: watermark = floor_ms(max
-    *    event time) − delay; a timer fires iff timer_ms <= wm_ms);
+    *    StreamingSpec's "event-time timers fire iff ..." test:
+    *    watermark = floor_ms(max event time) − delay; a timer fires
+    *    iff timer_ms <= wm_ms);
     *    alert VALUES are computed from the micros-exact state, never
     *    from `ExpiredTimerInfo`. */
   class IdleDetector(gapMs: Long)

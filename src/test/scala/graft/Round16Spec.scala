@@ -1,22 +1,26 @@
 package graft
 
+import java.io.File
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-16: compact bench line budget math. The r15 gate regression
-  * was gr11_label_propagation silently truncated off the driver-parsed
-  * compact stdout line when sk14's headline insertion pushed the
-  * strict-prefix cut past the budget. These tests pin the invariants
-  * WITHOUT running a bench: (1) every driver-tracked key is inside the
-  * guaranteed prefix, (2) the guaranteed prefix survives serialization
-  * even at worst-case value widths, (3) the whole line fits the
-  * driver's 2000-char stdout tail.
+import scala.jdk.CollectionConverters._
+
+/** Round-16: the compact bench line. A key missing from the
+  * driver-parsed line reads as a dropped query (gr11 in r15), so the
+  * line carries every [[Bench.driverKeys]] entry and
+  * [[Bench.compactLine]] reports a lost key or an overflow, which a
+  * full bench run turns into a non-zero exit. These tests run that
+  * same builder WITHOUT running a bench.
   */
 class Round16Spec extends AnyFunSuite {
 
-  // Independent copy of the keys the driver has read off the compact
-  // line in rounds 14/15 (59 common + sk14 + gr11). Deliberately NOT
-  // derived from Bench.headline: if someone removes or reorders one of
-  // these in Bench.scala, this list catches it.
+  // Independent copy of the 63 keys on the driver-parsed line of
+  // BENCH_r16.json and BENCH_r16_c8.json: the 61 keys tracked since
+  // round 15, then st40 and gr12. Deliberately NOT derived from
+  // Bench.driverKeys: if someone removes or reorders one of these in
+  // Bench.scala, this list catches it.
   private val driverTracked = Seq(
     "a01_bench_generate_1m", "a02_bench_mutate_1m",
     "q03_top_revenue_orders", "q07_top_orders_per_customer",
@@ -43,45 +47,83 @@ class Round16Spec extends AnyFunSuite {
     "st35_bm25_ingest_streamed", "st36_retract_mv_streamed",
     "st37_analyze_streamed", "st38_rebalance_under_ingest",
     "st39_state_erasure", "a03_bench_generate_mutate_100m",
-    "s26_hybrid_rrf", "s27_ann_filtered", "gr11_label_propagation")
+    "s26_hybrid_rrf", "s27_ann_filtered", "gr11_label_propagation",
+    "st40_family_rebuild", "gr12_modularity")
 
-  test("every driver-tracked key sits inside the guaranteed prefix, " +
-    "in Bench.headline order") {
-    assert(driverTracked.size === Bench.guaranteedCount)
-    assert(Bench.headline.take(Bench.guaranteedCount) === driverTracked)
+  /** A full run's results: the given driver values plus filler rows up
+    * to `nQueries` entries (filler never reaches the line). */
+  private def fullRun(values: Map[String, Double],
+      nQueries: Int): Map[String, Double] =
+    values ++ (values.size until nQueries).map(i => s"filler_$i" -> 0.01)
+
+  private val worstControls = Bench.controlJson(12.34, 12.34, 12.34,
+    12.34, 1234.56)
+
+  test("the driver-tracked keys equal Bench.driverKeys, in order") {
+    assert(driverTracked.size === 63)
+    assert(Bench.driverKeys === driverTracked)
   }
 
   test("guaranteed prefix survives worst-case serialization and the " +
     "line fits the driver's 2000-char stdout tail") {
-    // worst realistic widths: every value 5 chars ("45.78" — the widest
-    // any sf0.1 row has ever measured is a03's 45.78 at 8 cores)
-    val worstValues =
-      Bench.headline.map(k => k -> 45.78).toMap
-    // fixed head/tail sized like a real r15 line, padded pessimistically:
-    // head with a 4-digit total, tail with 3-digit n_queries and full
-    // control block (the r15 actuals were head 57 + tail 205 = 262)
-    val fixedWorst = 270
-    val budget = Bench.lineTotalBudget - fixedWorst
-    val (qsJson, truncated) =
-      Bench.compactQueries(Bench.headline, worstValues, budget)
-    val guaranteed = Bench.headline.take(Bench.guaranteedCount).toSet
-    val lostGuaranteed = truncated.filter(guaranteed.contains)
-    assert(lostGuaranteed.isEmpty,
-      s"guaranteed driver-line keys truncated: $lostGuaranteed")
-    driverTracked.foreach(k =>
-      assert(qsJson.contains("\"" + k + "\":"),
-        s"guaranteed key $k missing from serialized line"))
-    // whole line must fit the 2000-char tail with its newline
-    assert(fixedWorst + qsJson.length + 1 <= 2000)
+    // Every value under 10 s at its widest (4 chars), the only two
+    // rows over 10 s on the r14-r16 driver lines (a03, st40) at 6
+    // chars, a 7-char total, 5-char controls, a 4-digit
+    // normalized_total, 3-digit n_queries and a 30-char sf path. With
+    // every value at 5 chars the line would be ~2050 chars; a host
+    // that slow is caught by the runtime check instead.
+    val values = driverTracked.map(k => k -> 9.99).toMap ++ Map(
+      "a03_bench_generate_mutate_100m" -> 123.45,
+      "st40_family_rebuild" -> 123.45)
+    val (line, problems) = Bench.compactLine(fullRun(values, 353),
+      1234.56, "/" + "d" * 29, 32, 3, worstControls, "bench.json")
+    assert(problems.isEmpty, problems)
+    assert(line.length <= 1999, s"line is ${line.length} chars")
+    val parsed = new ObjectMapper().readTree(line)
+    assert(parsed.get("queries").fieldNames().asScala.toSeq ===
+      driverTracked)
+    assert(parsed.get("n_queries").asInt === 353)
   }
 
-  test("strict priority-prefix: serializer stops at the first " +
-    "over-budget entry instead of back-filling short keys") {
-    val vals = Map("aaaa_long_key_that_overflows" -> 1.0, "b" -> 1.0)
-    val order = Seq("aaaa_long_key_that_overflows", "b")
-    val (qsJson, truncated) = Bench.compactQueries(order, vals, 10)
-    assert(qsJson.isEmpty)
-    assert(truncated === order)
+  test("on the r16 driver lines' values the line is byte-identical") {
+    val mapper = new ObjectMapper()
+    Seq("BENCH_r16.json", "BENCH_r16_c8.json").foreach { name =>
+      val tail = mapper.readTree(new File(name)).get("tail").asText
+      val old = tail.split("\n").filter(_.nonEmpty).last
+      val p = mapper.readTree(old)
+      val values = p.get("queries").properties().asScala
+        .map(e => e.getKey -> e.getValue.asDouble).toMap
+      def d(k: String) = p.get(k).asDouble
+      val (line, problems) = Bench.compactLine(
+        fullRun(values, p.get("n_queries").asInt), d("value"),
+        p.get("sf").asText, p.get("cpus").asInt, p.get("iters").asInt,
+        Bench.controlJson(d("control_pre"), d("control_post"),
+          d("control_shuffle_pre"), d("control_shuffle_post"),
+          d("normalized_total")),
+        p.get("full").asText)
+      assert(problems.isEmpty, s"$name: $problems")
+      assert(line === old, name)
+    }
+  }
+
+  test("a driver key missing from the results is rejected") {
+    val values = driverTracked.map(k => k -> 1.0).toMap -
+      "gr11_label_propagation"
+    val (line, problems) = Bench.compactLine(fullRun(values, 353), 100.0,
+      "sf", 4, 3, worstControls, "bench.json")
+    assert(problems ===
+      Seq("driver key missing from results: gr11_label_propagation"))
+    assert(!line.contains("gr11_label_propagation"))
+  }
+
+  test("a line over the driver's 2000-char tail is rejected") {
+    val values = driverTracked.map(k => k -> 1.0).toMap
+    val sfDir = "/" + "d" * 300
+    val (line, problems) = Bench.compactLine(fullRun(values, 353), 100.0,
+      sfDir, 4, 3, worstControls, "bench.json")
+    assert(line.length + 1 > 2000)
+    assert(problems === Seq(s"compact line is ${line.length + 1} chars " +
+      "with its newline; the driver reads 2000"))
   }
 
   test("st40_family_rebuild bypasses the stream memo and reproduces " +

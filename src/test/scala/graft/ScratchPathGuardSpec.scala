@@ -4,18 +4,29 @@ import java.io.File
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the query layer on the one artifact module: scratch roots
-  * come from [[core.Artifacts]], never from a hand-built
-  * `java.io.tmpdir` path, and no query file keeps its own memo map.
-  * The single exception is `Sources.bloomSessions`, which caches a
-  * SparkSession rather than a scratch artifact. */
+/** Keeps the engine on the one artifact module: scratch roots come
+  * from [[core.Artifacts]], never from a hand-built `java.io.tmpdir`
+  * path anywhere in the main sources, and no query file keeps its own
+  * memo map. The single memo-map exception is `Sources.bloomSessions`,
+  * which caches a SparkSession rather than a scratch artifact. */
 class ScratchPathGuardSpec extends AnyFunSuite {
 
-  private val queryFiles: Seq[File] = {
-    val dir = new File("src/main/scala/graft/queries")
-    Option(dir.listFiles()).getOrElse(Array.empty[File])
-      .filter(_.getName.endsWith(".scala")).sortBy(_.getName).toSeq
-  }
+  private val mainRoot = new File("src/main/scala/graft")
+
+  private def scalaFiles(dir: File): Seq[File] =
+    Option(dir.listFiles()).getOrElse(Array.empty[File]).toSeq
+      .sortBy(_.getName).flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f)
+        else Nil
+      }
+
+  private val queryFiles: Seq[File] =
+    scalaFiles(new File(mainRoot, "queries"))
+
+  // the artifact module itself and the sweeper of its roots
+  private val tmpdirOwners = Set("core/Artifacts.scala",
+    "core/TmpHousekeeping.scala")
 
   private def text(f: File): String =
     new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
@@ -25,12 +36,15 @@ class ScratchPathGuardSpec extends AnyFunSuite {
       s"no query sources under ${new File(".").getAbsolutePath}")
   }
 
-  test("no query file builds a java.io.tmpdir path by hand") {
+  test("no main source outside core.Artifacts builds a tmpdir path") {
     val hits = for {
-      f <- queryFiles
+      f <- scalaFiles(mainRoot)
+      rel = mainRoot.toPath.relativize(f.toPath).toString
+      if !tmpdirOwners.contains(rel)
       (line, i) <- text(f).split("\n").zipWithIndex
-      if line.contains("java.io.tmpdir")
-    } yield s"${f.getName}:${i + 1}"
+      if line.contains("java.io.tmpdir") ||
+        line.contains("createTempDirectory")
+    } yield s"$rel:${i + 1}"
     assert(hits.isEmpty, s"use core.Artifacts.root instead: $hits")
   }
 

@@ -958,6 +958,69 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("event-time timers fire iff timer_ms <= floor_ms(max event " +
+    "time) - delay (the comparator and ms floor st24's oracle uses)") {
+    // AvailableNow into a file sink, one file per trigger. File 0
+    // registers one timer per user around the final watermark; file 1
+    // is a watermark driver whose max event time is 2,000,000.999 ms.
+    // Flooring to ms makes the final watermark 2,000,000 - 10,000 ms;
+    // rounding would make it one ms later and fire user 3 too.
+    val root = java.nio.file.Files.createTempDirectory("timer-pin")
+    val wm = 2000000L - 10000L
+    val driverTs = new java.sql.Timestamp(2000000L)
+    driverTs.setNanos(999000)
+    val files = Seq(
+      (1L to 3L).map(u => TimerPins.In(new java.sql.Timestamp(1000000L), u)),
+      Seq(TimerPins.In(driverTs, 99L)))
+    files.zipWithIndex.foreach { case (rows, i) =>
+      val stage = s"$root/stage_$i"
+      rows.toDS().coalesce(1).write.parquet(stage)
+      val part = new java.io.File(stage).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = new java.io.File(s"$root/in")
+      dst.mkdirs()
+      val f = new java.io.File(dst, f"in-$i%02d.parquet")
+      java.nio.file.Files.move(part.toPath, f.toPath)
+      f.setLastModified(1700000000000L + i * 60000L)
+    }
+    // user 1: 1 ms below the final watermark, user 2: exactly at it,
+    // user 3: 1 ms above it; the driver's own timer is far above
+    val timerAt = Map(1L -> (wm - 1), 2L -> wm, 3L -> (wm + 1),
+      99L -> (wm + 1000000L))
+    val prevProvider =
+      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider")
+    try {
+      val q = spark.readStream
+        .schema(org.apache.spark.sql.Encoders.product[TimerPins.In].schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$root/in")
+        .as[TimerPins.In]
+        .withWatermark("ts", "10 seconds")
+        .groupByKey(_.user_id)
+        .transformWithState(new TimerPins.AtMs(timerAt),
+          org.apache.spark.sql.streaming.TimeMode.EventTime(),
+          org.apache.spark.sql.streaming.OutputMode.Append())
+        .writeStream.format("parquet")
+        .option("path", s"$root/out")
+        .option("checkpointLocation", s"$root/ckpt")
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val fired = spark.read.parquet(s"$root/out").as[TimerPins.Fired]
+        .collect().sortBy(_.user_id).toSeq
+      assert(fired === Seq(TimerPins.Fired(1L, wm - 1, wm),
+        TimerPins.Fired(2L, wm, wm)))
+    } finally {
+      prevProvider match {
+        case Some(v) => spark.conf
+          .set("spark.sql.streaming.stateStore.providerClass", v)
+        case None => spark.conf
+          .unset("spark.sql.streaming.stateStore.providerClass")
+      }
+    }
+  }
+
   test("quota gate slicing pin: 4 checkpointed AvailableNow " +
     "micro-batches into a file sink keep exactly the batch twin's " +
     "rows (st25's gate shape)") {
@@ -1262,5 +1325,36 @@ object TwsUpgrades {
         EventStreams.ProfileRow(key, e.event_id, n.toLong, 0L, 0L, 0L, 0L)
       }
     }
+  }
+}
+
+/** The event-time timer pin's input, output and processor — top-level
+  * so the closure serializer never drags the ScalaTest suite along. */
+object TimerPins {
+  case class In(ts: java.sql.Timestamp, user_id: Long)
+  case class Fired(user_id: Long, expiry_ms: Long, wm_ms: Long)
+
+  /** Registers one timer per key at `timerAtMs(key)` and emits the
+    * expiry and the current watermark when it fires. */
+  class AtMs(timerAtMs: Map[Long, Long])
+      extends org.apache.spark.sql.streaming.StatefulProcessor[
+        Long, In, Fired] {
+    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
+        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = ()
+
+    override def handleInputRows(key: Long, rows: Iterator[In],
+        timers: org.apache.spark.sql.streaming.TimerValues)
+        : Iterator[Fired] = {
+      rows.foreach(_ => ())
+      getHandle.registerTimer(timerAtMs(key))
+      Iterator.empty
+    }
+
+    override def handleExpiredTimer(key: Long,
+        timers: org.apache.spark.sql.streaming.TimerValues,
+        info: org.apache.spark.sql.streaming.ExpiredTimerInfo)
+        : Iterator[Fired] =
+      Iterator.single(Fired(key, info.getExpiryTimeInMs(),
+        timers.getCurrentWatermarkInMs()))
   }
 }
