@@ -25,35 +25,28 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimization (legs are in final shape), before Spark's own
     // join-reorder batch. Inert unless every leg is analyzed.
     ext.injectPreCBORule(_ => graft.plans.CboReorder)
-    ext.injectFunction(GraftExtensions.minhashSignatureFn)
-    ext.injectFunction(GraftExtensions.cosineSimilarityFn)
-    ext.injectFunction(GraftExtensions.ngramHashesFn)
-    ext.injectFunction(GraftExtensions.intDotFn)
-    ext.injectFunction(GraftExtensions.hyperplaneBucketsFn)
-    ext.injectFunction(GraftExtensions.simhash64Fn)
-    ext.injectFunction(GraftExtensions.deflateLengthFn)
-    ext.injectFunction(GraftExtensions.mgTopKFn)
-    ext.injectFunction(GraftExtensions.topkPairsFn)
-    ext.injectFunction(GraftExtensions.kmvSketchFn)
-    ext.injectFunction(GraftExtensions.gkSketchFn)
-    ext.injectFunction(GraftExtensions.gkMergeFn)
-    ext.injectFunction(GraftExtensions.gkEstimateFn)
-    ext.injectFunction(GraftExtensions.gkCountFn)
-    ext.injectFunction(GraftExtensions.gkRankFn)
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
   }
 }
 
 object GraftExtensions {
 
-  private def buildMinhash(exprs: Seq[Expression]): Expression = {
-    val k = exprs.lift(1) match {
-      case Some(Literal(v: Int, _)) => v
-      case Some(other) => throw new IllegalArgumentException(
-        s"minhash_signature: k must be an integer literal, got $other")
-      case None => 32
-    }
-    MinHashSignature(exprs.head, k)
+  private def notIntLiteral(fn: String, arg: String, e: Expression): Nothing =
+    throw new IllegalArgumentException(
+      s"$fn: $arg must be an integer literal, got $e")
+
+  /** Argument `arg` of SQL function `fn`, which must be an Int literal. */
+  private def intArg(fn: String, arg: String)(e: Expression): Int = e match {
+    case Literal(v: Int, _) => v
+    case other => notIntLiteral(fn, arg, other)
   }
+
+  private def buildMinhash(exprs: Seq[Expression]): Expression =
+    MinHashSignature(exprs.head,
+      exprs.lift(1).fold(32)(intArg("minhash_signature", "k")))
 
   private def buildCosine(exprs: Seq[Expression]): Expression = {
     require(exprs.size == 2,
@@ -61,26 +54,10 @@ object GraftExtensions {
     CosineSimilarity(exprs.head, exprs(1))
   }
 
-  private[graft] val minhashSignatureFn = (
-    FunctionIdentifier("minhash_signature"),
-    new ExpressionInfo(classOf[MinHashSignature].getName,
-      "minhash_signature"),
-    (exprs: Seq[Expression]) => buildMinhash(exprs))
-
   private def buildNgram(exprs: Seq[Expression]): Expression = {
     require(exprs.size == 2, s"ngram_hashes takes (text, n), got ${exprs.size}")
-    val n = exprs(1) match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"ngram_hashes: n must be an integer literal, got $other")
-    }
-    NgramHashes(exprs.head, n)
+    NgramHashes(exprs.head, intArg("ngram_hashes", "n")(exprs(1)))
   }
-
-  private[graft] val ngramHashesFn = (
-    FunctionIdentifier("ngram_hashes"),
-    new ExpressionInfo(classOf[NgramHashes].getName, "ngram_hashes"),
-    (exprs: Seq[Expression]) => buildNgram(exprs))
 
   private def buildIntDot(exprs: Seq[Expression]): Expression = {
     require(exprs.size == 2,
@@ -88,41 +65,19 @@ object GraftExtensions {
     IntDotProduct(exprs.head, exprs(1))
   }
 
-  private[graft] val intDotFn = (
-    FunctionIdentifier("int_dot"),
-    new ExpressionInfo(classOf[IntDotProduct].getName, "int_dot"),
-    (exprs: Seq[Expression]) => buildIntDot(exprs))
-
   private def buildHyperplaneBuckets(exprs: Seq[Expression]): Expression = {
     require(exprs.size == 5,
       s"hyperplane_buckets takes (vec, tables, planes, dim, seed), " +
         s"got ${exprs.size}")
-    def intLit(i: Int): Int = exprs(i) match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"hyperplane_buckets: argument $i must be an integer literal, " +
-          s"got $other")
-    }
+    def intLit(i: Int): Int =
+      intArg("hyperplane_buckets", s"argument $i")(exprs(i))
     val seed = exprs(4) match {
       case Literal(v: Long, _) => v
       case Literal(v: Int, _) => v.toLong
-      case other => throw new IllegalArgumentException(
-        s"hyperplane_buckets: seed must be an integer literal, got $other")
+      case other => notIntLiteral("hyperplane_buckets", "seed", other)
     }
     HyperplaneBuckets(exprs.head, intLit(1), intLit(2), intLit(3), seed)
   }
-
-  private[graft] val hyperplaneBucketsFn = (
-    FunctionIdentifier("hyperplane_buckets"),
-    new ExpressionInfo(classOf[HyperplaneBuckets].getName,
-      "hyperplane_buckets"),
-    (exprs: Seq[Expression]) => buildHyperplaneBuckets(exprs))
-
-  private[graft] val cosineSimilarityFn = (
-    FunctionIdentifier("cosine_similarity"),
-    new ExpressionInfo(classOf[CosineSimilarity].getName,
-      "cosine_similarity"),
-    (exprs: Seq[Expression]) => buildCosine(exprs))
 
   private def buildSimhash(exprs: Seq[Expression]): Expression = {
     require(exprs.size == 1,
@@ -130,81 +85,36 @@ object GraftExtensions {
     SimHash64(exprs.head)
   }
 
-  private[graft] val simhash64Fn = (
-    FunctionIdentifier("simhash64"),
-    new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-    (exprs: Seq[Expression]) => buildSimhash(exprs))
-
   private def buildDeflateLength(exprs: Seq[Expression]): Expression = {
     require(exprs.size == 1,
       s"deflate_length takes exactly 1 argument, got ${exprs.size}")
     DeflateLength(exprs.head)
   }
 
-  private[graft] val deflateLengthFn = (
-    FunctionIdentifier("deflate_length"),
-    new ExpressionInfo(classOf[DeflateLength].getName, "deflate_length"),
-    (exprs: Seq[Expression]) => buildDeflateLength(exprs))
-
   // the analyzer wraps a bare AggregateFunction from a registry
   // builder in an AggregateExpression, same as builtin aggregates
   private def buildMgTopK(exprs: Seq[Expression]): Expression = {
     require(exprs.size == 2,
       s"mg_topk takes (token, k), got ${exprs.size}")
-    val k = exprs(1) match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"mg_topk: k must be an integer literal, got $other")
-    }
-    MisraGriesTopK(exprs.head, k)
+    MisraGriesTopK(exprs.head, intArg("mg_topk", "k")(exprs(1)))
   }
-
-  private[graft] val mgTopKFn = (
-    FunctionIdentifier("mg_topk"),
-    new ExpressionInfo(classOf[MisraGriesTopK].getName, "mg_topk"),
-    (exprs: Seq[Expression]) => buildMgTopK(exprs))
 
   private def buildTopkPairs(exprs: Seq[Expression]): Expression = {
     require(exprs.size == 3,
       s"topk_pairs takes (score, tag, k), got ${exprs.size}")
-    val k = exprs(2) match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"topk_pairs: k must be an integer literal, got $other")
-    }
-    TopKPairs(exprs(0), exprs(1), k)
+    TopKPairs(exprs(0), exprs(1), intArg("topk_pairs", "k")(exprs(2)))
   }
-
-  private[graft] val topkPairsFn = (
-    FunctionIdentifier("topk_pairs"),
-    new ExpressionInfo(classOf[TopKPairs].getName, "topk_pairs"),
-    (exprs: Seq[Expression]) => buildTopkPairs(exprs))
 
   private def buildKmvSketch(exprs: Seq[Expression]): Expression = {
     require(exprs.size == 2,
       s"kmv_sketch takes (hash, k), got ${exprs.size}")
-    val k = exprs(1) match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"kmv_sketch: k must be an integer literal, got $other")
-    }
-    KmvSketchAgg(exprs.head, k)
+    KmvSketchAgg(exprs.head, intArg("kmv_sketch", "k")(exprs(1)))
   }
-
-  private[graft] val kmvSketchFn = (
-    FunctionIdentifier("kmv_sketch"),
-    new ExpressionInfo(classOf[KmvSketchAgg].getName, "kmv_sketch"),
-    (exprs: Seq[Expression]) => buildKmvSketch(exprs))
 
   private def buildGkSketch(exprs: Seq[Expression]): Expression = {
     require(exprs.size == 2,
       s"gk_sketch takes (value, accuracy), got ${exprs.size}")
-    val acc = exprs(1) match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"gk_sketch: accuracy must be an integer literal, got $other")
-    }
-    GkSketchAgg(exprs.head, acc)
+    GkSketchAgg(exprs.head, intArg("gk_sketch", "accuracy")(exprs(1)))
   }
 
   private def buildGkMerge(exprs: Seq[Expression]): Expression = {
@@ -236,62 +146,32 @@ object GraftExtensions {
         org.apache.spark.sql.types.DoubleType))
   }
 
-  private[graft] val gkSketchFn = (
-    FunctionIdentifier("gk_sketch"),
-    new ExpressionInfo(classOf[GkSketchAgg].getName, "gk_sketch"),
-    (exprs: Seq[Expression]) => buildGkSketch(exprs))
-
-  private[graft] val gkMergeFn = (
-    FunctionIdentifier("gk_merge"),
-    new ExpressionInfo(classOf[GkMergeAgg].getName, "gk_merge"),
-    (exprs: Seq[Expression]) => buildGkMerge(exprs))
-
-  private[graft] val gkEstimateFn = (
-    FunctionIdentifier("gk_estimate"),
-    new ExpressionInfo(classOf[GkEstimate].getName, "gk_estimate"),
-    (exprs: Seq[Expression]) => buildGkEstimate(exprs))
-
-  private[graft] val gkCountFn = (
-    FunctionIdentifier("gk_count"),
-    new ExpressionInfo(classOf[GkCount].getName, "gk_count"),
-    (exprs: Seq[Expression]) => buildGkCount(exprs))
-
-  private[graft] val gkRankFn = (
-    FunctionIdentifier("gk_rank"),
-    new ExpressionInfo(classOf[GkRank].getName, "gk_rank"),
-    (exprs: Seq[Expression]) => buildGkRank(exprs))
+  /** Every SQL function the engine provides: (name, expression class,
+    * builder). Both the extension and [[register]] install this one
+    * list, so a session gets the same functions either way. */
+  private[graft] val functions
+      : Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("minhash_signature", classOf[MinHashSignature], buildMinhash),
+    ("cosine_similarity", classOf[CosineSimilarity], buildCosine),
+    ("ngram_hashes", classOf[NgramHashes], buildNgram),
+    ("int_dot", classOf[IntDotProduct], buildIntDot),
+    ("hyperplane_buckets", classOf[HyperplaneBuckets],
+      buildHyperplaneBuckets),
+    ("simhash64", classOf[SimHash64], buildSimhash),
+    ("deflate_length", classOf[DeflateLength], buildDeflateLength),
+    ("mg_topk", classOf[MisraGriesTopK], buildMgTopK),
+    ("topk_pairs", classOf[TopKPairs], buildTopkPairs),
+    ("kmv_sketch", classOf[KmvSketchAgg], buildKmvSketch),
+    ("gk_sketch", classOf[GkSketchAgg], buildGkSketch),
+    ("gk_merge", classOf[GkMergeAgg], buildGkMerge),
+    ("gk_estimate", classOf[GkEstimate], buildGkEstimate),
+    ("gk_count", classOf[GkCount], buildGkCount),
+    ("gk_rank", classOf[GkRank], buildGkRank))
 
   /** Register the engine's SQL functions on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_signature", buildMinhash, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity", buildCosine, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_hashes", buildNgram, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int_dot", buildIntDot, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_buckets", buildHyperplaneBuckets, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", buildSimhash, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "deflate_length", buildDeflateLength, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mg_topk", buildMgTopK, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_pairs", buildTopkPairs, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_sketch", buildKmvSketch, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gk_sketch", buildGkSketch, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gk_merge", buildGkMerge, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gk_estimate", buildGkEstimate, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gk_count", buildGkCount, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gk_rank", buildGkRank, "scala_udf")
-  }
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, build, "scala_udf")
+    }
 }

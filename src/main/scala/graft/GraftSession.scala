@@ -48,6 +48,20 @@ object GraftSession {
       // notebook, a multi-query job) near their isolated cost.
       .config("spark.cleaner.periodicGC.interval", "5min")
 
+  /** Run `body` with the settings `kv` on `s`, then put each key back:
+    * the value it had before, or unset if it had none. This holds
+    * whether `body` returns or throws. It mutates `s` itself, not a
+    * clone, so everything `body` runs on `s` sees the settings. */
+  def withConf[A](s: SparkSession, kv: (String, String)*)(body: => A): A = {
+    val prev = kv.map { case (k, _) => k -> s.conf.getOption(k) }
+    kv.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
   /** Local session sized to `cores` (tests, notebooks, smoke runs). */
   def local(cores: Int): SparkSession =
     builder(cores)

@@ -172,7 +172,7 @@ object CboCatalog {
   * Cluster registration: `spark.sql.extensions=graft.GraftExtensions`
   * (injected as a pre-CBO rule — after operator optimization, in the
   * slot Spark reserves for exactly this); for an already-built
-  * session, append to `spark.experimental.extraOptimizations`.
+  * session, call [[CboReorder.install]].
   * sk12_cbo_applied is the gate: executed-plan equality with the
   * sk11-audited decision, with a rule-off run proving the rule is
   * load-bearing. */
@@ -180,6 +180,17 @@ object CboReorder extends Rule[LogicalPlan] with PredicateHelper {
   import CboCatalog._
 
   private def cap: Long = graft.queries.Sketches.BroadcastRowCap
+
+  /** Idempotently activate the rule on a session built without
+    * [[graft.GraftExtensions]] (tests, foreign notebooks). Harmless
+    * when the extension slot already runs it: a decided tree carries
+    * hints, which the rule's match guard rejects. */
+  def install(spark: org.apache.spark.sql.SparkSession): Unit =
+    synchronized {
+      if (!spark.experimental.extraOptimizations.contains(this))
+        spark.experimental.extraOptimizations =
+          spark.experimental.extraOptimizations :+ this
+    }
 
   /** One analyzed leg: its full subtree (Projects/Filters intact),
     * the catalog entry behind it, and the estimated post-filter row

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Artifacts
+import graft.GraftSession.withConf
 
 /** Count-min sketch heavy hitters — the streaming-friendly frequency
   * sketch (Cormode & Muthukrishnan 2005). The sketch build is ONE
@@ -641,6 +642,16 @@ object Sketches {
     * routes the join to shuffle. */
   private[graft] val BroadcastRowCap = 10000L
 
+  /** Static and adaptive auto-broadcast both off: under these settings
+    * every join strategy in an audited plan comes from a hint. */
+  private val ForceShuffle = Seq(
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
+
+  /** [[ForceShuffle]] with the CBO rule on (sk13, sk14). */
+  private val ForceShuffleRuleOn =
+    ForceShuffle :+ (graft.plans.CboCatalog.EnabledKey -> "true")
+
   /** The ONE broadcast/shuffle cap rule every CBO leg (sk07/sk08/
     * sk11) executes and every DuckDB oracle replay encodes: broadcast
     * the smaller side when its (stored, sketched, or estimated) row
@@ -652,15 +663,6 @@ object Sketches {
     val (small, sn) = if (na <= nb) (aName, na) else (bName, nb)
     if (sn <= BroadcastRowCap) s"broadcast_$small" else "shuffle"
   }
-
-  /** Final physical plan string AFTER execution (AQE unwrapped — the
-    * re-optimized plan, not the initial guess). */
-  private def finalPlanString(df: DataFrame): String =
-    (df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
-    }).toString
 
   /** Every BaseJoinExec in an EXECUTED DataFrame's post-AQE plan, in
     * pre-order (outermost first, innermost `.last`). The finalized
@@ -699,8 +701,12 @@ object Sketches {
       case other => other.children.flatMap(leafCols)
     }
 
-  /** BroadcastHashJoin / SortMergeJoin / … classifier for one decided
-    * strategy string ('broadcast_*' or 'shuffle'). */
+  /** The operator a decided strategy ('broadcast_*' or 'shuffle') must
+    * execute as, in [[joinOpName]]'s vocabulary. */
+  private def expectedOp(decision: String): String =
+    if (decision == "shuffle") "SortMergeJoin" else "BroadcastHashJoin"
+
+  /** BroadcastHashJoin / SortMergeJoin / … name of one executed join. */
   private def joinOpName(
       j: org.apache.spark.sql.execution.joins.BaseJoinExec): String =
     j match {
@@ -760,12 +766,7 @@ object Sketches {
       ("customer-orders", "customer", "orders", "c_custkey", "o_custkey"),
       ("orders-lineitem", "orders", "lineitem", "o_orderkey",
         "l_orderkey"))
-    val overrides = Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val prevs = overrides.map { case (k, _) => k -> s.conf.getOption(k) }
-    overrides.foreach { case (k, v) => s.conf.set(k, v) }
-    val rows = try {
+    val rows = withConf(s, ForceShuffle: _*) {
       pairs.map { case (pair, ta, tb, ka, kb) =>
         val decision = capRule(n(ta).toDouble, ta, n(tb).toDouble, tb)
         val dfa = Relational.table(s, dir, ta).select(col(ka))
@@ -786,21 +787,9 @@ object Sketches {
         // made at runtime is visible to plan_matches.
         val cnt = joined.groupBy().count()
         val nOut = cnt.collect().head.getLong(0)
-        val plan = finalPlanString(cnt)
-        val executed =
-          if (plan.contains("BroadcastHashJoin")) "BroadcastHashJoin"
-          else if (plan.contains("SortMergeJoin")) "SortMergeJoin"
-          else if (plan.contains("ShuffledHashJoin")) "ShuffledHashJoin"
-          else "Other"
-        val expected =
-          if (decision == "shuffle") "SortMergeJoin" else "BroadcastHashJoin"
-        (pair, n(ta), n(tb), decision, executed, executed == expected,
-          nOut)
-      }
-    } finally {
-      prevs.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+        val executed = joinOpName(executedJoins(cnt).head)
+        (pair, n(ta), n(tb), decision, executed,
+          executed == expectedOp(decision), nOut)
       }
     }
     rows.toDF("pair", "n_left", "n_right", "decision", "executed_join",
@@ -920,12 +909,7 @@ object Sketches {
         "o_custkey"),
       ("orders-lineitem", "orders", "lineitem", "o_orderkey",
         "l_orderkey"))
-    val overrides = Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val prevs = overrides.map { case (k, _) => k -> s.conf.getOption(k) }
-    overrides.foreach { case (k, v) => s.conf.set(k, v) }
-    val rows = try {
+    val rows = withConf(s, ForceShuffle: _*) {
       pairs.map { case (pair, ta, tb, ka, kb) =>
         val dEst = decide(nEst, ta, tb)
         val dExact = decide(nExact, ta, tb)
@@ -944,24 +928,13 @@ object Sketches {
         // post-AQE — the sk07 discipline)
         val cnt = joined.groupBy().count()
         val nOut = cnt.collect().head.getLong(0)
-        val plan = finalPlanString(cnt)
-        val executed =
-          if (plan.contains("BroadcastHashJoin")) "BroadcastHashJoin"
-          else if (plan.contains("SortMergeJoin")) "SortMergeJoin"
-          else if (plan.contains("ShuffledHashJoin")) "ShuffledHashJoin"
-          else "Other"
-        val expected =
-          if (dEst == "shuffle") "SortMergeJoin" else "BroadcastHashJoin"
+        val executed = joinOpName(executedJoins(cnt).head)
         val estOk = Seq(ta, tb).forall(t =>
           math.abs(nEst(t) - nExact(t)) <=
             nExact(t) * JoinBoundPct / 100.0 + JoinK)
         (pair, nExact(ta), nExact(tb), nEst(ta), nEst(tb), dEst, dExact,
-          dEst != dExact, executed, executed == expected, estOk, nOut)
-      }
-    } finally {
-      prevs.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+          dEst != dExact, executed, executed == expectedOp(dEst), estOk,
+          nOut)
       }
     }
     rows.toDF("pair", "n_left", "n_right", "est_left", "est_right",
@@ -1355,12 +1328,7 @@ object Sketches {
     val exactCo = cust
       .join(ord, col("c_custkey") === col("o_custkey")).count()
     val estOlBase = estJoinFromStats(nO, skOo, nL, skL)
-    val overrides = Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val prevs = overrides.map { case (k, _) => k -> s.conf.getOption(k) }
-    overrides.foreach { case (k, v) => s.conf.set(k, v) }
-    val rows = try {
+    val rows = withConf(s, ForceShuffle: _*) {
       Sk11Scenarios.map { case (scenario, lo, hi) =>
         val estF = selRows(scenario)
         val sel = estF / nL
@@ -1414,8 +1382,6 @@ object Sketches {
           else Set("o_orderkey", "l_orderkey")
         val orderAudit = joins.size == 2 &&
           expectedCols.subsetOf(innerColsSet)
-        def expectedOp(st: String): String =
-          if (st == "shuffle") "SortMergeJoin" else "BroadcastHashJoin"
         val strategyAudit = execInner == expectedOp(innerStrat) &&
           execOuter == expectedOp(outerStrat)
         // ---- exact replay values ----
@@ -1448,11 +1414,6 @@ object Sketches {
           chosen == exactChoice && innerStrat == exactInner &&
             outerStrat == exactOuter,
           finalRows)
-      }
-    } finally {
-      prevs.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     }
     rows.toDF().orderBy("scenario")
@@ -1673,14 +1634,7 @@ object Sketches {
   def cboApplied(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     registerCboStats(s, analyzeForCbo(s, dir), dir)
-    // sessions built without spark.sql.extensions=graft.GraftExtensions
-    // (tests, foreign notebooks) attach the rule post-hoc; harmless
-    // when the extension slot already runs it (a decided tree carries
-    // hints, which the rule's match guard rejects)
-    if (!s.experimental.extraOptimizations.contains(
-        graft.plans.CboReorder))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.CboReorder
+    graft.plans.CboReorder.install(s)
     val stored = s.read.parquet(analyzeForCbo(s, dir)).collect()
       .map(r => r.getString(0) -> r).toMap
     def kmvOf(tbl: String, c: String): Array[Long] =
@@ -1703,12 +1657,7 @@ object Sketches {
         col("l_extendedprice").cast("double").as("price"))
     val exactCo = cust
       .join(ord, col("c_custkey") === col("o_custkey")).count()
-    val overrides = Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val prevs = overrides.map { case (k, _) => k -> s.conf.getOption(k) }
-    overrides.foreach { case (k, v) => s.conf.set(k, v) }
-    val rows = try {
+    val rows = try withConf(s, ForceShuffle: _*) {
       Sk11Scenarios.map { case (scenario, lo, hi) =>
         // ---- the HINT-FREE user query, fixed user order ----
         def userQuery(): DataFrame =
@@ -1750,16 +1699,13 @@ object Sketches {
           else (estOl, nC.toDouble, "customer")
         val outerStrat = capRule(interEst, "intermediate", thirdEst,
           thirdName)
-        def expectedOp(st: String): String =
-          if (st == "shuffle") "SortMergeJoin" else "BroadcastHashJoin"
         // ---- rule ON ----
         s.conf.set(graft.plans.CboCatalog.EnabledKey, "true")
         val (finalRows, execFirst, execInner, execOuter) =
           audit(userQuery())
         // ---- rule OFF: same query, user order, no hints ----
-        s.conf.set(graft.plans.CboCatalog.EnabledKey, "false")
-        val (offRows, offFirst, offInner, offOuter) = audit(userQuery())
-        s.conf.set(graft.plans.CboCatalog.EnabledKey, "true")
+        val (offRows, offFirst, offInner, offOuter) = withConf(s,
+          graft.plans.CboCatalog.EnabledKey -> "false")(audit(userQuery()))
         // ---- exact replays for the oracle ----
         // counts are strategy-independent, so the replay join need
         // not honor the forced-SMJ overrides the AUDITED queries run
@@ -1802,10 +1748,6 @@ object Sketches {
           finalRows)
       }
     } finally {
-      prevs.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
       // confine the rewrite to this gate: with the catalog empty the
       // rule is inert for every subsequent session query (production
       // keeps the registrations — that is the whole point there)
@@ -1961,18 +1903,9 @@ object Sketches {
   def cboStaleness(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val scratch = buildCboScratchTables(s, dir)
-    if (!s.experimental.extraOptimizations.contains(
-        graft.plans.CboReorder))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.CboReorder
+    graft.plans.CboReorder.install(s)
     val (lo, hi) = (0.0, 2000.0) // the sk11/sk12 narrow scenario
-    val overrides = Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-      graft.plans.CboCatalog.EnabledKey -> "true")
-    val prevs = overrides.map { case (k, _) => k -> s.conf.getOption(k) }
-    overrides.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+    try withConf(s, ForceShuffleRuleOn: _*) {
       def userQuery(): DataFrame = {
         val cust = Relational.table(s, scratch, "customer")
           .select("c_custkey")
@@ -2014,13 +1947,7 @@ object Sketches {
         .toDF("lo", "hi", "fresh_first", "stale_first",
           "stale_inner", "stale_outer", "reanalyzed_first",
           "final_rows", "rows_stable")
-    } finally {
-      prevs.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
-      graft.plans.CboCatalog.clear()
-    }
+    } finally graft.plans.CboCatalog.clear()
   }
 
   val cboStalenessSql: String = """
@@ -2106,17 +2033,8 @@ object Sketches {
       .getOrElse(Array.empty)
       .filter(_.getName.startsWith("part-append-"))
       .foreach(f => require(f.delete(), s"sk14: could not drop $f"))
-    if (!s.experimental.extraOptimizations.contains(
-        graft.plans.CboReorder))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.CboReorder
-    val overrides = Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-      graft.plans.CboCatalog.EnabledKey -> "true")
-    val prevs = overrides.map { case (k, _) => k -> s.conf.getOption(k) }
-    overrides.foreach { case (k, v) => s.conf.set(k, v) }
-    val rows = try {
+    graft.plans.CboReorder.install(s)
+    val rows = try withConf(s, ForceShuffleRuleOn: _*) {
       // the CLEAN-state ANALYZE artifact is computed once per session
       // and snapshotted aside: the narrow staleness arc overwrites
       // the live artifact with post-append stats, so later
@@ -2259,11 +2177,10 @@ object Sketches {
         val (chosen1, chosen2, chosen3) =
           greedy(estNc, estCo, estOl, stC.n.toDouble, stO.n.toDouble)
         // ---- rule ON / OFF
-        s.conf.set(graft.plans.CboCatalog.EnabledKey, "true")
         val (finalRows, exec1, exec2, exec3, _) = audit(userQuery(lo, hi))
-        s.conf.set(graft.plans.CboCatalog.EnabledKey, "false")
-        val (offRows, off1, _, _, offInner) = audit(userQuery(lo, hi))
-        s.conf.set(graft.plans.CboCatalog.EnabledKey, "true")
+        val (offRows, off1, _, _, offInner) = withConf(s,
+          graft.plans.CboCatalog.EnabledKey -> "false")(
+          audit(userQuery(lo, hi)))
         // ---- exact replays (xNc/xCo/xOlf hoisted above the loop)
         val xOlf = xOlfByScenario(scenario)
         val (exact1, exact2, exact3) =
@@ -2293,13 +2210,7 @@ object Sketches {
           staleStable && offRows == finalRows,
           finalRows)
       }
-    } finally {
-      prevs.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
-      graft.plans.CboCatalog.clear()
-    }
+    } finally graft.plans.CboCatalog.clear()
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       "scenario" -> StringType, "lo" -> DoubleType, "hi" -> DoubleType,

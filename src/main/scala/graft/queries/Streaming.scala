@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Artifacts
 import org.apache.spark.sql.types.DecimalType
-import graft.streaming.EventStreams
+import graft.GraftSession.withConf
+import graft.streaming.{EventStreams, Replay}
 
 /** Driver-facing demos of the streaming transformations, run in batch
   * mode (same code path Structured Streaming executes incrementally;
@@ -486,10 +487,8 @@ $counts
     val base = Artifacts.root(s, "st17", dir).getAbsolutePath
     val src = s"$base/src"
     events(s, dir).repartition(8).write.mode("overwrite").parquet(src)
-    val stream = s.readStream.schema(EventStreams.EventsSchema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
-    val q = EventStreams.upsertSink(stream, s"$base/state", s"$base/ckpt")
-    q.awaitTermination()
+    Replay.await(EventStreams.upsertSink(s, src, s"$base/state",
+      s"$base/ckpt", filesPerTrigger = 2))
     EventStreams.upsertStateRead(s, s"$base/state").get
       .select(col("user_id"), col("event_type"),
         unix_micros(col("latest.ts")).as("latest_us"),
@@ -714,18 +713,11 @@ $counts
     // static dedup side: only the overlap window's historical ids
     val seamIds = hist.filter(col("event_id") >= overlapStart)
       .select(col("event_id").as("seen_id"))
-    val stream = s.readStream.schema(EventStreams.EventsSchema)
-      .option("maxFilesPerTrigger", "1").parquet(tailSrc)
     val dedupedOut = s"$base/tail_clean"
-    val q = stream
-      .join(seamIds, col("event_id") === col("seen_id"), "left_outer")
-      .filter(col("seen_id").isNull).drop("seen_id")
-      .writeStream.format("parquet")
-      .option("path", dedupedOut)
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Replay.await(Replay.start(s, EventStreams.EventsSchema, tailSrc,
+      s"$base/ckpt", Replay.ToParquet(dedupedOut),
+      transform = _.join(seamIds, col("event_id") === col("seen_id"),
+        "left_outer").filter(col("seen_id").isNull).drop("seen_id")))
     val micro = (col("value").cast(DecimalType(18, 6)) * 1000000)
       .cast("long")
     val tailClean = s.read.schema(EventStreams.EventsSchema)
@@ -778,6 +770,18 @@ $counts
 
   private type Ev = org.apache.spark.sql.Dataset[EventStreams.Event]
 
+  private val RocksDbProvider =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** The settings every stateful replay here runs under: the RocksDB
+    * provider, 4 shuffle partitions and changelog checkpointing (why
+    * each: see [[runEventStreamsShared]]). */
+  private val RocksDbStreamConf = Seq(RocksDbProvider,
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.streaming.stateStore.rocksdb." +
+      "changelogCheckpointing.enabled" -> "true")
+
   /** Run SEVERAL event-stream transforms as CONCURRENT streaming
     * queries off the same staged weekly source, memoized per
     * (application, sf dir, tag set): the kind is the tags joined by
@@ -820,37 +824,20 @@ $counts
         // each stream gets its own session CLONE: same SparkContext,
         // separate SessionState — concurrent MicroBatchExecutions on
         // one session contend on shared analyzer/optimizer state, and
-        // the clone also scopes the stream conf overrides without a
-        // save/restore dance on the caller's session (measured: the
-        // shared-session pair overlapped poorly, 9.4 s vs ~6 cloned)
+        // the clone scopes RocksDbStreamConf to this one stream, where
+        // a shared session would need GraftSession.withConf around the
+        // whole group (measured: the shared-session pair overlapped
+        // poorly, 9.4 s vs ~6 cloned)
         val sc = org.apache.spark.sql.graftbridge.DatasetBridge
           .cloneSession(s)
-        sc.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-        sc.conf.set("spark.sql.shuffle.partitions", "4")
-        sc.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled", "true")
-        val base = s"$root/$tag"
-        val stream = sc.readStream.schema(EventStreams.EventsSchema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-        f(stream.as[EventStreams.Event]).writeStream
-          .format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
+        RocksDbStreamConf.foreach { case (k, v) => sc.conf.set(k, v) }
+        Replay.start(sc, EventStreams.EventsSchema, src, s"$root/$tag/ckpt",
+          Replay.ToParquet(s"$root/$tag/out"),
+          transform = df => f(df.as[EventStreams.Event]))
       }
-      // first failure stops the remaining queries — otherwise the
-      // exception propagates with up to 6 live MicroBatchExecutions
-      // still running in the session and the memo entry never
-      // populates (r15 advice)
-      try started.foreach(_.awaitTermination())
-      catch {
-        case e: Throwable =>
-          started.foreach(q => try q.stop() catch { case _: Throwable => () })
-          throw e
-      }
+      // a failed stream stops its siblings, so the group never leaves
+      // live queries behind and the memo entry is not populated
+      Replay.await(started: _*)
     }
     jobs.map { case (tag, _) => s.read.parquet(s"$root/$tag/out") }
   }
@@ -1198,59 +1185,21 @@ $counts
         i -> reps.filter(pmod(col("doc_id"), lit(7)) === i)))
     })
 
-  /** st30 — d02's MinHash-LSH near-dup candidate generation executed
-    * AS A STREAM: documents arrive in 7 checkpointed AvailableNow
-    * micro-batches, the per-doc signature is the SAME native
-    * [[graft.expr.MinHashSignature]] expression and the band/bucket
-    * keys the SAME [[Dedup.bandStructs]] as the batch plan, and the
-    * per-bucket signature lists that batch d02 materializes as a
-    * self-join live here as keyed RocksDB ListState
-    * ([[EventStreams.LshBucketMatcher]]): each arriving doc is
-    * matched against, then appended to, its bucket's stored list.
-    * Threshold filter + cross-band pair dedup happen on the committed
-    * sink — order-independent, so the final pair SET is
-    * replay-slicing-independent by construction, and st30_lsh_inv
-    * pins it EQUAL to batch d02's output. Signature values are
-    * engine-specific (xxhash64) → rows-only; the inv is the oracle
-    * companion.
-    *
-    * 100 TB/day shape: the state IS the incremental dedup index — one
-    * (id, signature) entry per doc per band, sharded by the state
-    * store; per-key lists stay small because that is LSH's job, and
-    * the input is exact-deduped upstream (the same staging guard as
-    * batch d02) so planted exact copies can't blow a bucket up
-    * quadratically. */
+  /** The schema of the staged document feeds (st30, st31, st33, st35;
+    * st39 adds an `op` column). */
+  private val DocSchema = "doc_id LONG, text STRING"
+
   /** One checkpointed AvailableNow replay of the LSH dedup stream
     * over a staged epoch dir — the st30 pipeline, factored out so
-    * st31 can run it twice (pre- and post-handoff epochs). Streaming
-    * conf (RocksDB provider, changelog checkpointing, small shuffle
-    * width) is applied for the run and restored after. */
+    * st31 can run it twice (pre- and post-handoff epochs). It runs
+    * under [[RocksDbStreamConf]], restored after. */
   private[graft] def runLshEpoch(s: SparkSession, src: String,
       outPath: String, ckptPath: String,
       hasOps: Boolean = false): Unit = {
     import s.implicits._
-    val docSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)) ++
-      (if (hasOps) Seq(org.apache.spark.sql.types.StructField("op",
-        org.apache.spark.sql.types.StringType))
-      else Seq.empty))
-    val overrides = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        ("org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider"),
-      "spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled" -> "true")
-    val prevs = overrides.map { case (k, _) => k -> s.conf.getOption(k) }
-    overrides.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      val stream = s.readStream.schema(docSchema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val opCol = if (hasOps) col("op") else lit("I")
-      val banded = stream
+    val opCol = if (hasOps) col("op") else lit("I")
+    def banded(stream: DataFrame): DataFrame =
+      EventStreams.lshDedupStream(stream
         .select(col("doc_id"),
           graft.expr.MinHashSignature.minhashSignature(col("text"),
             Dedup.MinhashK).as("sig"), opCol.as("op"))
@@ -1258,19 +1207,34 @@ $counts
           explode(array(Dedup.bandStructs: _*)).as("bb"))
         .select(col("doc_id"), col("bb.band").as("band"),
           col("bb.bh").as("bh"), col("sig"), col("op"))
-        .as[EventStreams.BandedDoc]
-      val q = EventStreams.lshDedupStream(banded).toDF()
-        .writeStream.format("parquet")
-        .option("path", outPath)
-        .option("checkpointLocation", ckptPath)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      prevs.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+        .as[EventStreams.BandedDoc]).toDF()
+    withConf(s, RocksDbStreamConf: _*) {
+      Replay.await(Replay.start(s,
+        if (hasOps) s"$DocSchema, op STRING" else DocSchema, src, ckptPath,
+        Replay.ToParquet(outPath), transform = banded))
+    }
+  }
+
+  /** Run `use` over the (doc_id, sig) entries of an LSH dedup
+    * stream's `docs` ListState, exported from the checkpoint `ckpt`
+    * through the state data source — one row per stored band entry.
+    * The RocksDB provider setting must hold while the read executes,
+    * so `use` runs the action inside the scope. */
+  private def lshStateDocs[A](s: SparkSession, ckpt: String)(
+      use: DataFrame => A): A = {
+    import s.implicits._
+    withConf(s, RocksDbProvider) {
+      use(s.read.format("statestore")
+        .option("path", ckpt)
+        .option("stateVarName", "docs")
+        .load()
+        .select(col("list_element.value").as("bytes"))
+        .as[Array[Byte]]
+        .map { bytes =>
+          val (id, sig) = EventStreams.SigEntryCodec.decode(bytes)
+          (id, sig.toSeq)
+        }
+        .toDF("doc_id", "sig"))
     }
   }
 
@@ -1302,6 +1266,28 @@ $counts
     src.getAbsolutePath
   }
 
+  /** st30 — d02's MinHash-LSH near-dup candidate generation executed
+    * AS A STREAM: documents arrive in 7 checkpointed AvailableNow
+    * micro-batches, the per-doc signature is the SAME native
+    * [[graft.expr.MinHashSignature]] expression and the band/bucket
+    * keys the SAME [[Dedup.bandStructs]] as the batch plan, and the
+    * per-bucket signature lists that batch d02 materializes as a
+    * self-join live here as keyed RocksDB ListState
+    * ([[EventStreams.LshBucketMatcher]]): each arriving doc is
+    * matched against, then appended to, its bucket's stored list.
+    * Threshold filter + cross-band pair dedup happen on the committed
+    * sink — order-independent, so the final pair SET is
+    * replay-slicing-independent by construction, and st30_lsh_inv
+    * pins it EQUAL to batch d02's output. Signature values are
+    * engine-specific (xxhash64) → rows-only; the inv is the oracle
+    * companion.
+    *
+    * 100 TB/day shape: the state IS the incremental dedup index — one
+    * (id, signature) entry per doc per band, sharded by the state
+    * store; per-key lists stay small because that is LSH's job, and
+    * the input is exact-deduped upstream (the same staging guard as
+    * batch d02) so planted exact copies can't blow a bucket up
+    * quadratically. */
   def lshDedupStreamed(s: SparkSession, dir: String): DataFrame = {
     val root = Artifacts.memo(s, "st30", dir) { baseDir =>
       val src = lshDocSrc(s, dir)
@@ -1347,7 +1333,6 @@ $counts
     * signature table), `combined` (all candidates). */
   private[graft] def buildLshHandoff(s: SparkSession, dir: String)
       : String = {
-    import s.implicits._
     Artifacts.memo(s, "st31", dir) { baseDir =>
       val src = lshDocSrc(s, dir)
       val base = baseDir.getAbsolutePath
@@ -1373,34 +1358,9 @@ $counts
       // performs — the state store's contents become a stored index
       // artifact the batch layer can join against, instead of state
       // living forever in one ever-growing stream.
-      val overrides = Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          ("org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider"))
-      val prevs = overrides.map { case (k, _) =>
-        k -> s.conf.getOption(k) }
-      overrides.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        s.read.format("statestore")
-          .option("path", s"$base/ckptA")
-          .option("stateVarName", "docs")
-          .load()
-          .select(col("list_element.value").as("bytes"))
-          .as[Array[Byte]]
-          .map { bytes =>
-            val (id, sig) = graft.streaming.EventStreams
-              .SigEntryCodec.decode(bytes)
-            (id, sig.toSeq)
-          }
-          .toDF("doc_id", "sig")
-          .dropDuplicates("doc_id") // 16 band rows/doc, same sig
-          .write.mode("overwrite").parquet(s"$base/snapshot")
-      } finally {
-        prevs.foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None) => s.conf.unset(k)
-        }
-      }
+      lshStateDocs(s, s"$base/ckptA")(
+        _.dropDuplicates("doc_id") // 16 band rows/doc, same sig
+          .write.mode("overwrite").parquet(s"$base/snapshot"))
       // the new shard starts with FRESH state over the later epochs
       runLshEpoch(s, srcB.getAbsolutePath, s"$base/outB",
         s"$base/ckptB")
@@ -1509,32 +1469,18 @@ $counts
         emb.filter(pmod(col("vec_id"), lit(5)) === 0), root)
       // stage the remaining vectors as 4 arrival epochs (the shared
       // staging discipline: one parquet file per slice)
-      val src = new java.io.File(stageEpochFiles(baseDir,
-        (1 until 5).map(i =>
-          i -> emb.filter(pmod(col("vec_id"), lit(5)) === i))))
-      val embSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType))))
-      val doBatch: (org.apache.spark.sql.Dataset[
-        org.apache.spark.sql.Row], Long) => Unit =
-        (batch, _) => Similarity.upsertIvfIndex(
+      val src = stageEpochFiles(baseDir, (1 until 5).map(i =>
+        i -> emb.filter(pmod(col("vec_id"), lit(5)) === i)))
+      Replay.await(Replay.start(s, EmbSchema, src, s"$baseDir/ckpt",
+        Replay.ForEachBatch((batch, _) => Similarity.upsertIvfIndex(
           batch.sparkSession, root.getAbsolutePath,
-          batch.select(col("vec_id"), col("embedding")))
-      val q = s.readStream.schema(embSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.getAbsolutePath)
-        .writeStream
-        .foreachBatch(doBatch)
-        .option("checkpointLocation", s"$baseDir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+          batch.select(col("vec_id"), col("embedding"))))))
     }
     s"$base/index"
   }
+
+  /** The schema of the staged vector feeds (st32, st38). */
+  private val EmbSchema = "vec_id LONG, embedding ARRAY<FLOAT>"
 
   /** st32 — CONTINUOUS vector ingest: the s25 upsert path run as the
     * sink of a checkpointed stream, the way a vector database's
@@ -1639,19 +1585,11 @@ $counts
         .select(col("vec_id"), col("embedding"))
       Similarity.writeIvfIndexTrained(s,
         emb.filter(pmod(col("vec_id"), lit(5)) === 0), root)
-      val src = new java.io.File(stageEpochFiles(baseDir,
-        (1 until 5).map(i =>
-          i -> emb.filter(pmod(col("vec_id"), lit(5)) === i))))
-      val embSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType))))
+      val src = stageEpochFiles(baseDir, (1 until 5).map(i =>
+        i -> emb.filter(pmod(col("vec_id"), lit(5)) === i)))
       val marker = new java.io.File(baseDir, "rebalanced_once")
       val straddle = new java.io.File(baseDir, "straddling_batch")
-      val doBatch: (org.apache.spark.sql.Dataset[
-        org.apache.spark.sql.Row], Long) => Unit = (batch, id) => {
+      val doBatch: (DataFrame, Long) => Unit = (batch, id) => {
         if (id == 2) {
           if (!marker.exists()) {
             Similarity.rebalanceIvfIndex(batch.sparkSession,
@@ -1669,15 +1607,8 @@ $counts
           root.getAbsolutePath,
           batch.select(col("vec_id"), col("embedding")))
       }
-      val q = s.readStream.schema(embSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.getAbsolutePath)
-        .writeStream
-        .foreachBatch(doBatch)
-        .option("checkpointLocation", s"$baseDir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Replay.await(Replay.start(s, EmbSchema, src, s"$baseDir/ckpt",
+        Replay.ForEachBatch(doBatch)))
       // snapshot, then REPLAY the straddling batch: the marker
       // makes it take the plain upsert path, which must be
       // row-identical (the inv compares against these snapshots)
@@ -1841,7 +1772,6 @@ $counts
     *     value for value: the index serves survivors as if the
     *     purged docs never existed. */
   def lshStateErasureInv(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val base = buildLshErasure(s, dir)
     val streamed = lshStateErasure(s, dir)
     def m7(c: String) = pmod(col(c), lit(7))
@@ -1869,29 +1799,8 @@ $counts
       .crossJoin(sPost.join(bPost, cols)
         .agg(count(lit(1)).as("n_both")))
     // final state via the state data source (st31's export path)
-    val overrides = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        ("org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider"))
-    val prevs = overrides.map { case (k, _) => k -> s.conf.getOption(k) }
-    overrides.foreach { case (k, v) => s.conf.set(k, v) }
-    val nErasedInState = try {
-      s.read.format("statestore")
-        .option("path", s"$base/ckpt")
-        .option("stateVarName", "docs")
-        .load()
-        .select(col("list_element.value").as("bytes"))
-        .as[Array[Byte]]
-        .map(bytes => graft.streaming.EventStreams
-          .SigEntryCodec.decode(bytes)._1)
-        .filter(id => id % 7 == 2)
-        .count()
-    } finally {
-      prevs.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
-    }
+    val nErasedInState = lshStateDocs(s, s"$base/ckpt")(
+      _.filter(col("doc_id") % 7 === 2).count())
     prePart.crossJoin(future).crossJoin(suppressed).crossJoin(parity)
       .select(
         (col("n_pre") > 0).as("pre_purge_participation"),
@@ -1936,28 +1845,16 @@ $counts
     val root = Artifacts.memo(s, "st33", dir) { baseDir =>
       val src = deconSrc(s, dir)
       val base = baseDir.getAbsolutePath
-      val docSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
       // persist the static side: a stream-static join re-evaluates
       // it per micro-batch — without this, the eval suite would be
       // re-signed and re-banded on every one of the 5 batches
       val evalB = TextAnalysis.deconBanded(
         TextAnalysis.deconEval(s, dir)).persist()
-      val stream = s.readStream.schema(docSchema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      try {
-        val q = TextAnalysis.deconCandidates(
-            TextAnalysis.deconBanded(stream), evalB)
-          .writeStream.format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally evalB.unpersist(false)
+      try Replay.await(Replay.start(s, DocSchema, src, s"$base/ckpt",
+        Replay.ToParquet(s"$base/out"), transform = stream =>
+          TextAnalysis.deconCandidates(TextAnalysis.deconBanded(stream),
+            evalB)))
+      finally evalB.unpersist(false)
     }
     s.read.parquet(s"$root/out")
       .dropDuplicates("train_id", "eval_id")
@@ -2098,36 +1995,13 @@ $counts
       val base = baseDir.getAbsolutePath
       // stage the projected rows into 5 arrival epochs
       val projected = Layout.zmProjected(s, dir)
-      val src = new java.io.File(stageEpochFiles(baseDir,
-        (0 until 5).map(i =>
-          i -> projected.filter(pmod(col("l_orderkey"), lit(5)) === i))))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("l_orderkey",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ship_day",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("shard",
-          org.apache.spark.sql.types.IntegerType)))
-      val confKey = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.getOption(confKey)
-      s.conf.set(confKey, "dynamic")
-      try {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.getAbsolutePath)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            st34WriteBatch(batch, id, base)
-          }
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set(confKey, v)
-          case None => s.conf.unset(confKey)
-        }
+      val src = stageEpochFiles(baseDir, (0 until 5).map(i =>
+        i -> projected.filter(pmod(col("l_orderkey"), lit(5)) === i)))
+      withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        Replay.await(Replay.start(s,
+          "l_orderkey LONG, ship_day STRING, shard INT", src,
+          s"$base/ckpt", Replay.ForEachBatch((batch, id) =>
+            st34WriteBatch(batch, id, base))))
       }
       // compact the first three batches' manifests into one epoch
       // manifest, leaving batches 3-4 as the uncompacted tail — the
@@ -2160,26 +2034,11 @@ $counts
           sl.unionByName(docs.filter(pmod(col("doc_id"), lit(5)) === 1))
         else sl)
       }
-      val src = new java.io.File(stageEpochFiles(baseDir, slices))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      val doBatch: (org.apache.spark.sql.Dataset[
-        org.apache.spark.sql.Row], Long) => Unit =
-        (batch, _) => Similarity.upsertBm25Index(
+      Replay.await(Replay.start(s, DocSchema,
+        stageEpochFiles(baseDir, slices), s"$baseDir/ckpt",
+        Replay.ForEachBatch((batch, _) => Similarity.upsertBm25Index(
           batch.sparkSession, root.getAbsolutePath,
-          batch.select(col("doc_id"), col("text")))
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.getAbsolutePath)
-        .writeStream
-        .foreachBatch(doBatch)
-        .option("checkpointLocation", s"$baseDir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+          batch.select(col("doc_id"), col("text"))))))
     }
     s"$base/index"
   }
@@ -2261,36 +2120,13 @@ $counts
           col("o_orderpriority"), col("month"),
           lit(0L).as("cents_old"), col("cents").as("cents_new"))
       val cdc = del.unionByName(upd).unionByName(ins)
-      val src = new java.io.File(stageEpochFiles(baseDir,
-        (0 until 4).map(i =>
-          i -> cdc.filter(pmod(col("o_orderkey"), lit(4)) === i))))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("op",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("o_orderkey",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("o_orderpriority",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("month",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("cents_old",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cents_new",
-          org.apache.spark.sql.types.LongType)))
-      val doBatch: (org.apache.spark.sql.Dataset[
-        org.apache.spark.sql.Row], Long) => Unit = (batch, id) => {
-        val s2 = batch.sparkSession
-        st36ApplyBatch(s2, batch.toDF(), id, basePath, viewPath)
-      }
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.getAbsolutePath)
-        .writeStream
-        .foreachBatch(doBatch)
-        .option("checkpointLocation", s"$baseDir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val src = stageEpochFiles(baseDir, (0 until 4).map(i =>
+        i -> cdc.filter(pmod(col("o_orderkey"), lit(4)) === i)))
+      Replay.await(Replay.start(s, "op STRING, o_orderkey LONG, " +
+        "o_orderpriority STRING, month STRING, cents_old LONG, " +
+        "cents_new LONG", src, s"$baseDir/ckpt",
+        Replay.ForEachBatch((batch, id) => st36ApplyBatch(
+          batch.sparkSession, batch, id, basePath, viewPath))))
     }
 
   /** One st36 micro-batch: idempotent base-table merge, then the
@@ -2411,36 +2247,19 @@ $counts
       val line = Relational.table(s, dir, "lineitem")
         .select(col("l_orderkey"),
           col("l_extendedprice").cast("double").as("price"))
-      val src = new java.io.File(stageEpochFiles(baseDir,
-        (0 until 4).map(i =>
-          i -> line.filter(pmod(col("l_orderkey"), lit(4)) === i))))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("l_orderkey",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("price",
-          org.apache.spark.sql.types.DoubleType)))
+      val src = stageEpochFiles(baseDir, (0 until 4).map(i =>
+        i -> line.filter(pmod(col("l_orderkey"), lit(4)) === i)))
       val statsRoot = new java.io.File(baseDir, "stats")
-      val doBatch: (org.apache.spark.sql.Dataset[
-        org.apache.spark.sql.Row], Long) => Unit = (batch, id) => {
-        batch.agg(count(lit(1)).as("n"),
-            graft.expr.KmvSketchAgg.kmvSketch(
-              xxhash64(col("l_orderkey")), Sketches.JoinK).as("sk"),
-            graft.expr.GkSketchAgg.gkSketch(col("price"),
-              Sketches.SelAccuracy).as("gk"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new java.io.File(statsRoot, s"batch=$id")
-            .getAbsolutePath)
-        ()
-      }
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.getAbsolutePath)
-        .writeStream
-        .foreachBatch(doBatch)
-        .option("checkpointLocation", s"$baseDir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Replay.await(Replay.start(s, "l_orderkey LONG, price DOUBLE", src,
+        s"$baseDir/ckpt", Replay.ForEachBatch((batch, id) =>
+          batch.agg(count(lit(1)).as("n"),
+              graft.expr.KmvSketchAgg.kmvSketch(
+                xxhash64(col("l_orderkey")), Sketches.JoinK).as("sk"),
+              graft.expr.GkSketchAgg.gkSketch(col("price"),
+                Sketches.SelAccuracy).as("gk"))
+            .coalesce(1).write.mode("overwrite")
+            .parquet(new java.io.File(statsRoot, s"batch=$id")
+              .getAbsolutePath))))
     }
 
   /** st37 — STREAMED ANALYZE: the statistics the CBO stool (sk05–

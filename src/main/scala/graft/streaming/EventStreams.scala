@@ -823,17 +823,20 @@ object EventStreams {
     * Scale shape: per batch, O(|delta| + |state|) — one partial-agg
     * shuffle for the delta compaction and one merge agg; at 100 TB
     * the state table would be bucketed on (user_id, event_type), so
-    * the merge co-partitions without re-shuffling the state side. */
-  def upsertSink(stream: DataFrame, stateDir: String,
-                 checkpointDir: String)
+    * the merge co-partitions without re-shuffling the state side.
+    *
+    * Starts the [[Replay]] of the staged events under `src`,
+    * `filesPerTrigger` files per micro-batch; the caller waits on the
+    * returned query. */
+  def upsertSink(s: SparkSession, src: String, stateDir: String,
+      checkpointDir: String, filesPerTrigger: Int)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val doBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
+    val doBatch: (DataFrame, Long) => Unit =
       (batch, batchId) => {
-        val s = batch.sparkSession
         val vdir = new java.io.File(stateDir, f"v$batchId%09d")
         if (!vdir.exists()) { // replayed batch: already committed, skip
           val delta = compactLatest(batch)
-          val merged = upsertStateRead(s, stateDir) match {
+          val merged = upsertStateRead(batch.sparkSession, stateDir) match {
             case Some(cur) => cur.unionByName(delta)
               .groupBy("user_id", "event_type")
               .agg(max(col("latest")).as("latest"))
@@ -846,11 +849,8 @@ object EventStreams {
           }
         }
       }
-    stream.writeStream
-      .foreachBatch(doBatch)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    Replay.start(s, EventsSchema, src, checkpointDir,
+      Replay.ForEachBatch(doBatch), filesPerTrigger)
   }
 
   // ------------- streaming near-dup dedup (LSH bucket state) -------------

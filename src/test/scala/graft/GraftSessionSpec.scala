@@ -21,4 +21,38 @@ class GraftSessionSpec extends SparkSpec {
       .collect().head.getLong(0)
     assert(got == 23L)
   }
+
+  test("register installs every function in GraftExtensions.functions") {
+    val names = GraftExtensions.functions.map(_._1)
+    assert(names.distinct == names, s"a name is listed twice: $names")
+    GraftExtensions.register(spark)
+    val missing = names.filterNot(spark.catalog.functionExists)
+    assert(missing.isEmpty, s"not registered: $missing")
+  }
+
+  test("withConf restores a key that was set and unsets a key that " +
+    "was absent, when the body returns and when it throws") {
+    val (set, absent) =
+      ("spark.graft.test.withConf.set", "spark.graft.test.withConf.absent")
+    spark.conf.set(set, "before")
+    spark.conf.unset(absent)
+    def assertRestored(): Unit = {
+      assert(spark.conf.get(set) == "before")
+      assert(spark.conf.getOption(absent).isEmpty)
+    }
+    try {
+      val inside = GraftSession.withConf(spark, set -> "in", absent -> "in") {
+        (spark.conf.get(set), spark.conf.get(absent))
+      }
+      assert(inside == ("in", "in"))
+      assertRestored()
+      val e = intercept[IllegalStateException] {
+        GraftSession.withConf(spark, set -> "in", absent -> "in") {
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(e.getMessage == "body failed")
+      assertRestored()
+    } finally spark.conf.unset(set)
+  }
 }

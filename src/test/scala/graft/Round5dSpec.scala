@@ -245,12 +245,8 @@ class Round5dSpec extends SparkSpec {
     val ev = queries.Streaming.events(spark, sfDir)
     ev.repartition(6).write.mode("overwrite").parquet(src)
     def run(ckpt: String): Seq[org.apache.spark.sql.Row] = {
-      val stream = spark.readStream
-        .schema(graft.streaming.EventStreams.EventsSchema)
-        .option("maxFilesPerTrigger", "2").parquet(src)
-      val q = graft.streaming.EventStreams.upsertSink(
-        stream, s"$base/state", ckpt)
-      q.awaitTermination()
+      graft.streaming.Replay.await(graft.streaming.EventStreams
+        .upsertSink(spark, src, s"$base/state", ckpt, filesPerTrigger = 2))
       graft.streaming.EventStreams
         .upsertStateRead(spark, s"$base/state").get
         .orderBy("user_id", "event_type").collect().toSeq

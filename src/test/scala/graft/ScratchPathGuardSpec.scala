@@ -4,11 +4,14 @@ import java.io.File
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the engine on the one artifact module: scratch roots come
+/** Keeps the engine on its one-module helpers: scratch roots come
   * from [[core.Artifacts]], never from a hand-built `java.io.tmpdir`
   * path anywhere in the main sources, and no query file keeps its own
   * memo map. The single memo-map exception is `Sources.bloomSessions`,
-  * which caches a SparkSession rather than a scratch artifact. */
+  * which caches a SparkSession rather than a scratch artifact. Query
+  * files scope settings with `GraftSession.withConf`, replay streams
+  * with `streaming.Replay` and install rules through the rule's own
+  * `install`, so none of them touches the underlying calls. */
 class ScratchPathGuardSpec extends AnyFunSuite {
 
   private val mainRoot = new File("src/main/scala/graft")
@@ -60,5 +63,28 @@ class ScratchPathGuardSpec extends AnyFunSuite {
       if (uses > ok) Some(s"${f.getName}: ${uses - ok}") else None
     }
     assert(extra.isEmpty, s"use core.Artifacts.memo instead: $extra")
+  }
+
+  test("no query file unsets a conf, replays a stream or appends an " +
+    "optimizer rule by hand") {
+    val banned = Seq("conf.unset", "Trigger.AvailableNow",
+      "awaitTermination", "extraOptimizations")
+    val hits = for {
+      f <- queryFiles
+      (line, i) <- text(f).split("\n").zipWithIndex
+      b <- banned
+      if line.contains(b)
+    } yield s"${f.getName}:${i + 1}: $b"
+    assert(hits.isEmpty,
+      s"use GraftSession.withConf, streaming.Replay or install: $hits")
+  }
+
+  test("Trigger.AvailableNow appears in one main file: the replay " +
+    "module") {
+    val owners = scalaFiles(mainRoot)
+      .filter(f => text(f).contains("Trigger.AvailableNow"))
+      .map(f => mainRoot.toPath.relativize(f.toPath).toString)
+    assert(owners == Seq("streaming/Replay.scala"),
+      s"start replays through streaming.Replay: $owners")
   }
 }

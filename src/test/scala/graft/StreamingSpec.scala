@@ -1247,6 +1247,31 @@ class StreamingSpec extends SparkSpec {
       }
     }
   }
+
+  test("Replay.await: when one stream of a group fails, the caller " +
+    "gets the exception and the sibling stream is stopped") {
+    import graft.streaming.Replay
+    val base = java.nio.file.Files.createTempDirectory("graft_replay_fail")
+    val src = s"$base/src"
+    (0 until 8).foreach(i => Seq(i).toDF("id").coalesce(1).write
+      .mode("append").parquet(src))
+    val siblingBatches = new java.util.concurrent.atomic.AtomicInteger()
+    val failing = Replay.start(spark, "id INT", src, s"$base/ckpt_fail",
+      Replay.ForEachBatch((_, _) =>
+        throw new IllegalStateException("batch failed")))
+    val sibling = Replay.start(spark, "id INT", src, s"$base/ckpt_ok",
+      Replay.ForEachBatch { (_, _) =>
+        siblingBatches.incrementAndGet()
+        Thread.sleep(1000)
+      })
+    val e = intercept[Throwable](Replay.await(failing, sibling))
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(c => Option(c.getMessage).exists(_.contains("batch failed"))),
+      s"unexpected failure: $e")
+    assert(!failing.isActive && !sibling.isActive)
+    assert(siblingBatches.get < 8,
+      "the sibling ran all 8 batches instead of being stopped")
+  }
 }
 
 /** Upgrade variants of [[EventStreams.ProfileBuilder]] for the
