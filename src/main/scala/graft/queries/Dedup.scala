@@ -382,37 +382,57 @@ object Dedup {
     ORDER BY 1, 2"""
 
   // ------------------------------- cluster formation / canonical pick
-  /** Transitive closure of near-dup pairs into clusters via the
-    * alternating large-star/small-star algorithm (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14): each
-    * round rewires every node's neighborhood toward its local minimum —
-    *   large-star: for every node u, connect each strictly-larger
-    *     neighbor to min(N(u) ∪ u);
-    *   small-star: on the downward edges (u > v), connect u and each
-    *     smaller neighbor to their minimum.
-    * The edge set contracts to a star per component (every member →
-    * component min) in O(log n) rounds, vs the linear-in-diameter
-    * rounds of plain min-label propagation — the difference between 6
-    * and ~60 rounds on a 64-hop chain, which is what makes the operator
-    * usable on 100 TB graphs with long-chain components (the r2 version
-    * was flagged exactly for that). The dedup decision stays "keep the
-    * minimum doc_id per cluster".
+  /** Transitive closure of near-dup pairs into clusters: every node
+    * labelled with its component's minimum id, and the dedup decision
+    * "keep the minimum doc_id per cluster". Rows are
+    * `(doc_id, cluster_id, keep)`.
     *
-    * ONE job per round: both stars are min-aggregations (map-side
-    * partial min — no skew-fragile window buffering) folded into a
-    * single plan whose fixpoint check — (edge count, xxhash64 multiset
-    * sum) unchanged — rides the round's eager localCheckpoint as an
-    * `observe()` metric, so convergence detection costs no extra
-    * action. The hash-pair equality test is probabilistic in principle
-    * (64-bit sum collision) but vanishingly so, and a false "converged"
-    * requires a collision in the SAME round that also keeps the count
-    * equal. localCheckpoint truncates the per-round lineage — without
-    * it the plan doubles every iteration. */
+    * Which path runs is chosen from the MEASURED size of the input: the
+    * canonical edge set (a > b, self-loops and dupes dropped) is
+    * checkpointed once, and that checkpoint's `observe()` count picks
+    * the path — no extra action.
+    *
+    *  - At most [[Graph.superstepCap]] edges (default 2M, the cap that
+    *    bounds every superstep's trip through the driver): the edges are
+    *    collected once and contracted on the driver with union-find.
+    *    Two actions in all, the checkpoint and the collect, where the
+    *    loop below pays one action of 4–5 stages per round — on small
+    *    graphs that per-round scheduling is nearly all of the cost.
+    *    This path is always exact; `maxRounds` does not apply to it.
+    *    An empty edge set needs neither path: the loop below stops
+    *    before its first round.
+    *  - Above the cap, the alternating large-star/small-star loop
+    *    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    *    SoCC'14), the only path for a graph larger than driver memory.
+    *    Each round rewires every node's neighborhood toward its local
+    *    minimum —
+    *      large-star: for every node u, connect each strictly-larger
+    *        neighbor to min(N(u) ∪ u);
+    *      small-star: on the downward edges (u > v), connect u and each
+    *        smaller neighbor to their minimum.
+    *    The edge set contracts to a star per component (every member →
+    *    component min) in O(log n) rounds, vs the linear-in-diameter
+    *    rounds of plain min-label propagation — the difference between
+    *    6 and ~60 rounds on a 64-hop chain. `maxRounds` bounds this
+    *    loop only.
+    *
+    *    ONE job per round: both stars are min-aggregations (map-side
+    *    partial min — no skew-fragile window buffering) folded into a
+    *    single plan whose fixpoint check — (edge count, xxhash64
+    *    multiset xor) unchanged — rides the round's eager
+    *    localCheckpoint as an `observe()` metric, so convergence
+    *    detection costs no extra action. The hash-pair equality test is
+    *    probabilistic in principle (64-bit collision) but vanishingly
+    *    so, and a false "converged" requires a collision in the SAME
+    *    round that also keeps the count equal. localCheckpoint
+    *    truncates the per-round lineage — without it the plan doubles
+    *    every iteration. */
   def clusterPairs(pairs: DataFrame, maxRounds: Int = 20): DataFrame =
     clusterPairsCounted(pairs, maxRounds)._1
 
-  /** [[clusterPairs]] plus the number of rounds actually run —
-    * exposed so tests can assert the O(log n) round complexity. */
+  /** [[clusterPairs]] plus the number of distributed rounds actually
+    * run (0 on the driver path) — exposed so tests can assert the
+    * O(log n) round complexity. */
   private[graft] def clusterPairsCounted(pairs: DataFrame,
                                          maxRounds: Int = 20)
       : (DataFrame, Int) = {
@@ -439,38 +459,96 @@ object Dedup {
       pairs.select(greatest(col("a"), col("b")).as("a"),
         least(col("a"), col("b")).as("b"))
         .filter(col("a") =!= col("b")).distinct())
-    var round = 0
-    var converged = prev._1 == 0L
-    while (round < maxRounds && !converged) {
-      val sym = edges.unionAll(
-        edges.select(col("b").as("a"), col("a").as("b")))
-      // large-star: min over N(u) ∪ {u}, emitted to larger neighbors —
-      // output edges are strictly downward again (m <= u < v)
-      val lsMin = sym.groupBy("a").agg(min("b").as("mn"))
-        .select(col("a"), least(col("a"), col("mn")).as("m"))
-      val ls = sym.join(lsMin, "a").filter(col("b") > col("a"))
-        .select(col("b").as("a"), col("m").as("b"))
-      // small-star on the downward edges: everyone in N-(u) ∪ {u}
-      // connects to the minimum
-      val ssMin = ls.groupBy("a").agg(min("b").as("m"))
-      val next = ls.join(ssMin, "a")
-        .select(col("b").as("a"), col("m").as("b"))
-        .unionAll(ssMin.select(col("a"), col("m").as("b")))
-        .filter(col("a") =!= col("b"))
+    if (prev._1 > 0L && prev._1 <= Graph.superstepCap(pairs.sparkSession))
+      (contractOnDriver(edges), 0)
+    else {
+      var round = 0
+      var converged = prev._1 == 0L
+      while (round < maxRounds && !converged) {
+        val sym = edges.unionAll(
+          edges.select(col("b").as("a"), col("a").as("b")))
+        // large-star: min over N(u) ∪ {u}, emitted to larger neighbors —
+        // output edges are strictly downward again (m <= u < v)
+        val lsMin = sym.groupBy("a").agg(min("b").as("mn"))
+          .select(col("a"), least(col("a"), col("mn")).as("m"))
+        val ls = sym.join(lsMin, "a").filter(col("b") > col("a"))
+          .select(col("b").as("a"), col("m").as("b"))
+        // small-star on the downward edges: everyone in N-(u) ∪ {u}
+        // connects to the minimum
+        val ssMin = ls.groupBy("a").agg(min("b").as("m"))
+        val next = ls.join(ssMin, "a")
+          .select(col("b").as("a"), col("m").as("b"))
+          .unionAll(ssMin.select(col("a"), col("m").as("b")))
+          .filter(col("a") =!= col("b"))
+          .distinct()
+        val (ck, cur) = observed(next)
+        converged = cur == prev
+        prev = cur
+        edges = ck
+        round += 1
+      }
+      // fixpoint is a star per component: member -> min, plus the roots
+      val labels = edges.select(col("a").as("doc_id"), col("b").as("label"))
+        .unionAll(edges.select(col("b").as("doc_id"), col("b").as("label")))
         .distinct()
-      val (ck, cur) = observed(next)
-      converged = cur == prev
-      prev = cur
-      edges = ck
-      round += 1
+      (labels.select(col("doc_id"), col("label").as("cluster_id"),
+        (col("doc_id") === col("label")).as("keep")), round)
     }
-    // fixpoint is a star per component: member -> min, plus the roots
-    val labels = edges.select(col("a").as("doc_id"), col("b").as("label"))
-      .unionAll(edges.select(col("b").as("doc_id"), col("b").as("label")))
-      .distinct()
-    (labels.select(col("doc_id"), col("label").as("cluster_id"),
-      (col("doc_id") === col("label")).as("keep")), round)
   }
+
+  /** [[clusterPairs]]' driver path: collect the canonical edges `(a, b)`
+    * once, packed per partition into primitive arrays, and label every
+    * node with its component minimum by union-find. Nodes are indexed by
+    * binary search into the sorted distinct ids, so a smaller index is a
+    * smaller id and "union by smaller index" leaves each component's
+    * minimum at its root. Path compression is iterative: a 2M-hop chain
+    * must not overflow the stack. */
+  private def contractOnDriver(edges: DataFrame): DataFrame = {
+    val s = edges.sparkSession
+    import s.implicits._
+    val packed = edges.mapPartitions { it =>
+      val buf = Array.newBuilder[Long]
+      it.foreach { r => buf += r.getLong(0); buf += r.getLong(1) }
+      Iterator.single(buf.result())
+    }.collect()
+    val ends = Array.concat(packed: _*)
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices)
+      if (i == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+    val parent = Array.tabulate(n)(identity)
+    def find(i: Int): Int = {
+      var root = i
+      while (parent(root) != root) root = parent(root)
+      var j = i
+      while (parent(j) != root) {
+        val next = parent(j)
+        parent(j) = root
+        j = next
+      }
+      root
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    var e = 0
+    while (e < ends.length) {
+      val ra = find(index(ends(e)))
+      val rb = find(index(ends(e + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      e += 2
+    }
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](n)
+    for (i <- 0 until n) {
+      val root = find(i)
+      rows.add(org.apache.spark.sql.Row(ids(i), ids(root), i == root))
+    }
+    s.createDataFrame(rows, ClusterSchema)
+  }
+
+  /** The loop's output schema after any round: `min()` is nullable, so
+    * every column is, whatever the input's nullability. */
+  private val ClusterSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "doc_id BIGINT, cluster_id BIGINT, keep BOOLEAN")
 
   /** d11 — golden-record survivorship: instead of d06's min-id keep
     * rule, each near-dup cluster keeps its BEST member, scored by an

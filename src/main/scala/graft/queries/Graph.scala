@@ -41,6 +41,21 @@ object Graph {
   private val warnedBroadcastRows =
     scala.collection.concurrent.TrieMap.empty[String, Unit]
 
+  /** The superstep row cap, `spark.graft.superstep.broadcastRows`
+    * (default 2M): the most rows an iterative loop may move through the
+    * driver, as a broadcast ([[maybeBroadcast]]) or as the whole edge
+    * set of a driver-side contraction ([[Dedup.clusterPairs]]). A
+    * malformed value must not throw from inside a query builder — name
+    * the key once per value, fall back to the default. */
+  private[graft] def superstepCap(s: SparkSession): Long =
+    s.conf.getOption("spark.graft.superstep.broadcastRows")
+      .flatMap(v => scala.util.Try(v.trim.toLong).toOption.orElse {
+        if (warnedBroadcastRows.putIfAbsent(v, ()).isEmpty)
+          System.err.println("[graft] ignoring malformed " +
+            s"spark.graft.superstep.broadcastRows='$v' (expected a long)")
+        None
+      }).getOrElse(2000000L)
+
   /** Superstep join-strategy choice from a MEASURED row count — the
     * sk07/sk12 stored-stats discipline applied to iterative loops.
     * Every graph round joins the persisted edge set with a per-round
@@ -51,29 +66,18 @@ object Graph {
     * sf0.1: 0.8 s/round, almost all fixed exchange/sort machinery).
     * The loop owner knows the row count (it is the node count, or a
     * subset); broadcast the round table while it fits, fall back to
-    * the shuffle join past the cap. The cap is conf'able
-    * (`spark.graft.superstep.broadcastRows`, default 2M rows — note a
-    * built HashedRelation of 2M (long, long) UnsafeRows costs on the
-    * order of ~100 MB with hash-map overhead, not "tens of MB": still
-    * fine for one broadcast on a bench-sized executor, but size the
-    * cap to executor memory in production); at 100 TB a rank table
-    * outgrows it immediately and the loop keeps the bucketed-edges +
-    * shuffled-ranks shape the scaladocs describe, so the choice stays
-    * honest at any scale. */
-  private[graft] def maybeBroadcast(df: DataFrame, rows: Long): DataFrame = {
-    val cap = df.sparkSession.conf
-      .getOption("spark.graft.superstep.broadcastRows")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption.orElse {
-        // a malformed conf value must not throw from inside a query
-        // builder — name the key once per value, fall back to the
-        // default
-        if (warnedBroadcastRows.putIfAbsent(v, ()).isEmpty)
-          System.err.println("[graft] ignoring malformed " +
-            s"spark.graft.superstep.broadcastRows='$v' (expected a long)")
-        None
-      }).getOrElse(2000000L)
-    if (rows <= cap) broadcast(df) else df
-  }
+    * the shuffle join past the cap. The cap is [[superstepCap]]
+    * (default 2M rows — note a built HashedRelation of 2M (long, long)
+    * UnsafeRows costs on the order of ~100 MB with hash-map overhead,
+    * not "tens of MB": still fine for one broadcast on a bench-sized
+    * executor, but size the cap to executor memory in production); the
+    * same cap also selects [[Dedup.clusterPairs]]' driver-side
+    * contraction over its distributed round loop. At 100 TB a rank
+    * table outgrows it immediately and the loop keeps the
+    * bucketed-edges + shuffled-ranks shape the scaladocs describe, so
+    * the choice stays honest at any scale. */
+  private[graft] def maybeBroadcast(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= superstepCap(df.sparkSession)) broadcast(df) else df
 
   /** gr01 — PageRank over the supplier↔customer trade graph, 3
     * supersteps of r(v) ← 0.15 + 0.85·Σ r(u)/outdeg(u) in exact
@@ -155,8 +159,9 @@ object Graph {
   }
 
   /** gr02 — connected components over a SPARSIFIED trade graph,
-    * reusing d06's large-star/small-star machinery (O(log diameter)
-    * rounds, round-count spec'd there) on organically-derived edges
+    * reusing d06's clustering (driver-side union-find under the
+    * superstep cap, large-star/small-star in O(log diameter) rounds
+    * above it; both spec'd there) on organically-derived edges
     * instead of d07's planted chains. The full trade graph is one
     * giant component (every supplier trades with overlapping
     * customers — a vacuous closure), so edges are deterministically
@@ -165,8 +170,8 @@ object Graph {
     * engines must agree on node by node. The DuckDB oracle is a
     * recursive-CTE transitive closure taking min reachable label per
     * node — fine at oracle scale, quadratic-in-component-size in
-    * general, which is exactly WHY the Spark side uses the
-    * star-contraction algorithm instead. */
+    * general, which is exactly WHY the Spark side uses union-find or
+    * star contraction instead. */
   def components(s: SparkSession, dir: String): DataFrame = {
     val pairs = Relational.table(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"))

@@ -1,6 +1,7 @@
 package graft
 
-import graft.queries.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.queries.{Dedup, Graph, Multimodal, Similarity, TextAnalysis}
+import org.apache.spark.sql.DataFrame
 
 /** Semantics tests for the LLM-pipeline operators: planted-duplicate
   * recall for the dedup family, LSH-vs-brute-force recall for ANN,
@@ -8,6 +9,8 @@ import graft.queries.{Dedup, Multimodal, Similarity, TextAnalysis}
 class PipelineOpsSpec extends SparkSpec {
 
   private val Plant = 1000000L
+  /** The superstep cap; "0" pins clusterPairs to its distributed loop. */
+  private val Cap = "spark.graft.superstep.broadcastRows"
 
   test("dedup_exact: planted exact copies collapse; keep_id is original") {
     val rows = Dedup.dedupExact(spark, sfDir).collect()
@@ -83,9 +86,8 @@ class PipelineOpsSpec extends SparkSpec {
     }
   }
 
-  test("dedup_clusters: one action per propagation round (convergence " +
-    "rides the checkpoint job as an observe metric)") {
-    import spark.implicits._
+  /** SQL executions `body` starts, and its result. */
+  private def sqlExecutions[A](body: => A): (Int, A) = {
     val execs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(
@@ -95,23 +97,49 @@ class PipelineOpsSpec extends SparkSpec {
         case _ => ()
       }
     }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      Thread.sleep(500) // listener bus drain
+      (execs.get(), out)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("dedup_clusters: one action per propagation round (convergence " +
+    "rides the checkpoint job as an observe metric)") {
+    import spark.implicits._
     // 6-node path: star-contraction needs ~4 rounds (vs 6 for plain
     // 1-hop label propagation)
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
       .toDF("a", "b").persist()
     pairs.count() // warm the input so only clusterPairs' actions count
-    spark.sparkContext.addSparkListener(listener)
     try {
-      Dedup.clusterPairs(pairs)
-      Thread.sleep(500) // listener bus drain
-      val n = execs.get()
+      // cap 0 pins the distributed loop (the default cap would contract
+      // this graph on the driver in zero rounds)
+      val (n, _) = sqlExecutions {
+        GraftSession.withConf(spark, Cap -> "0") { Dedup.clusterPairs(pairs) }
+      }
       // initial edge checkpoint + <=5 rounds; the r1 version paid an
       // extra isEmpty action per round (>= 13 executions here)
       assert(n <= 6, s"expected <=6 eager actions in clusterPairs, saw $n")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      pairs.unpersist(); ()
-    }
+    } finally { pairs.unpersist(); () }
+  }
+
+  test("dedup_clusters: under the superstep cap the edges are contracted " +
+    "on the driver in two actions and zero rounds") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+      .toDF("a", "b").persist()
+    pairs.count()
+    try {
+      val (n, (labels, rounds)) =
+        sqlExecutions { Dedup.clusterPairsCounted(pairs) }
+      assert(rounds == 0, s"expected the driver path, ran $rounds rounds")
+      // the edge checkpoint and the collect
+      assert(n <= 2, s"expected <=2 eager actions in clusterPairs, saw $n")
+      assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        (1L to 6L).map(_ -> 1L).toMap)
+    } finally { pairs.unpersist(); () }
   }
 
   test("dedup_clusters: large-star/small-star converges in O(log n) " +
@@ -121,7 +149,9 @@ class PipelineOpsSpec extends SparkSpec {
     // far past the maxRounds=20 cap; star contraction must finish in
     // a handful and still produce the exact component
     val pairs = (1L until 65L).map(i => (i, i + 1)).toDF("a", "b")
-    val (labels, rounds) = Dedup.clusterPairsCounted(pairs)
+    val (labels, rounds) = GraftSession.withConf(spark, Cap -> "0") {
+      Dedup.clusterPairsCounted(pairs)
+    }
     assert(rounds <= 10, s"expected <=10 rounds on a 64-hop chain, " +
       s"took $rounds")
     val got = labels.collect()
@@ -144,7 +174,9 @@ class PipelineOpsSpec extends SparkSpec {
     val hub = (2L to 50001L).map(i => (1L, i))
     val tail = (50001L until 50006L).map(i => (i, i + 1))
     val pairs = (hub ++ tail).toDF("a", "b").repartition(8)
-    val (labels, rounds) = Dedup.clusterPairsCounted(pairs)
+    val (labels, rounds) = GraftSession.withConf(spark, Cap -> "0") {
+      Dedup.clusterPairsCounted(pairs)
+    }
     assert(rounds <= 6, s"hub graph should contract almost immediately, " +
       s"took $rounds rounds")
     val got = labels.collect()
@@ -152,6 +184,92 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got.forall(_.getLong(1) == 1L),
       "every node must label to the hub-cluster minimum")
     assert(got.count(_.getBoolean(2)) == 1)
+  }
+
+  /** Rows of `df` as a sorted multiset, and its schema. */
+  private def result(df: DataFrame) =
+    (df.collect().map(_.toString).sorted.toSeq, df.schema)
+
+  /** [[Dedup.clusterPairsCounted]]'s result and round count with the
+    * cap set to `cap` for the call. */
+  private def clustered(pairs: DataFrame, cap: String) =
+    GraftSession.withConf(spark, Cap -> cap) {
+      val (df, rounds) = Dedup.clusterPairsCounted(pairs)
+      (result(df), rounds)
+    }
+
+  /** Clusters `pairs` under `driverCap` (default: the default 2M) and
+    * `loopCap` (default 0, the distributed loop); asserts the same rows
+    * and the same schema, and returns the two round counts. */
+  private def samePaths(pairs: DataFrame, driverCap: String = "2000000",
+                        loopCap: String = "0"): (Int, Int) = {
+    val (driver, driverRounds) = clustered(pairs, driverCap)
+    val (loop, loopRounds) = clustered(pairs, loopCap)
+    assert(driver._2 == loop._2, s"schema ${driver._2} != ${loop._2}")
+    assert(driver._1 == loop._1, "driver and loop clusterings differ")
+    (driverRounds, loopRounds)
+  }
+
+  test("dedup_clusters: the driver path and the distributed loop give " +
+    "the same rows and schema on chains, hubs and a random multigraph") {
+    import spark.implicits._
+    val chain = (1L until 65L).map(i => (i, i + 1)).toDF("a", "b")
+    val hub = ((2L to 50001L).map(i => (1L, i)) ++
+      (50001L until 50006L).map(i => (i, i + 1))).toDF("a", "b")
+    // duplicate edges, both directions, self-loops, ids near ±2^62
+    val rng = new scala.util.Random(20261017L)
+    val ids = (0 until 300).map {
+      case i if i % 3 == 0 => (1L << 62) - i
+      case i if i % 3 == 1 => -(1L << 62) + i
+      case i => i.toLong
+    }
+    val base = Seq.fill(400)((ids(rng.nextInt(ids.size)),
+      ids(rng.nextInt(ids.size))))
+    val random = (base ++ base.take(50) ++ base.slice(50, 100).map(_.swap) ++
+      ids.take(20).map(i => (i, i))).toDF("a", "b").repartition(5)
+    Seq(chain, hub, random).foreach { pairs =>
+      val (driverRounds, loopRounds) = samePaths(pairs)
+      assert(driverRounds == 0 && loopRounds >= 1,
+        s"rounds: driver $driverRounds, loop $loopRounds")
+    }
+  }
+
+  test("dedup_clusters: an empty input and an all-self-loop input give " +
+    "no rows on either path") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Long)].toDF("a", "b")
+    val loops = Seq((1L, 1L), (2L, 2L), (2L, 2L)).toDF("a", "b")
+    Seq(empty, loops).foreach { pairs =>
+      assert(samePaths(pairs) == ((0, 0)))
+      assert(Dedup.clusterPairs(pairs).isEmpty)
+    }
+  }
+
+  test("dedup_clusters: the cap is inclusive — at the edge count the " +
+    "driver path runs, one below it the loop runs") {
+    import spark.implicits._
+    // 5 canonical edges once the reversed duplicate is dropped
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
+      (2L, 1L)).toDF("a", "b")
+    val (atCap, belowCap) = samePaths(pairs, driverCap = "5", loopCap = "4")
+    assert(atCap == 0, s"cap == edge count: expected 0 rounds, ran $atCap")
+    assert(belowCap >= 1, s"cap == edge count - 1: expected the loop, " +
+      s"ran $belowCap rounds")
+  }
+
+  test("dedup_clusters: gr02, d06, d07 and d11 are unchanged when the " +
+    "clustering is pinned to the distributed loop") {
+    val queries: Seq[(String, () => DataFrame)] = Seq(
+      "gr02_components" -> (() => Graph.components(spark, sfDir)),
+      "d06_dedup_clusters" -> (() => Dedup.dedupClusters(spark, sfDir)),
+      "d07_cluster_chain" -> (() => Dedup.clusterChain(spark, sfDir)),
+      "d11_golden_records" -> (() => Dedup.goldenRecords(spark, sfDir)))
+    queries.foreach { case (name, q) =>
+      val driver = result(q())
+      val loop = GraftSession.withConf(spark, Cap -> "0") { result(q()) }
+      assert(driver._1.nonEmpty, s"$name: empty result")
+      assert(driver == loop, s"$name: driver and loop paths differ")
+    }
   }
 
   test("ann_ivf: k-means inverted lists recover a meaningful share of " +
