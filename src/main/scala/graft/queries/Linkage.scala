@@ -25,14 +25,39 @@ import org.apache.spark.sql.functions._
   */
 object Linkage {
 
+  /** The bounded verify every edit-distance filter in the link layer
+    * uses: the Levenshtein distance of `a` and `b` when it is at most
+    * `k`, else -1 (null when either side is null). Keep a pair with
+    * `boundedLevenshtein(a, b, k) >= 0`; the kept value is the exact
+    * distance, so a caller that also outputs the distance reads it
+    * from here instead of running the unbounded kernel again.
+    *
+    * Exact: Spark's thresholded kernel
+    * (`UTF8String.levenshteinDistance(other, k)`) returns -1 only
+    * when the distance exceeds `k`, and the true distance otherwise —
+    * the same pairs and values `levenshtein(a, b) <= k` gives, over
+    * code points in both forms. Cost: it returns -1 before allocating
+    * anything when the lengths differ by more than `k` (a lower bound
+    * on the distance), and otherwise fills only the band of width
+    * 2k+1 around the diagonal, O(k·n) per candidate instead of the
+    * full O(n·m) table. LinkageSpec checks the equivalence on seeded
+    * random strings. */
+  def boundedLevenshtein(a: Column, b: Column, k: Int): Column = {
+    require(k >= 0, s"k must be >= 0, is $k")
+    levenshtein(a, b, k)
+  }
+
   /** Blocked fuzzy join: candidate pairs of (left, right) rows whose
     * `blockOf(name)` keys are equal and whose names are within
     * `maxDist` edits. `left` and `right` must not share column names.
     *
     * Plan shape (PlanSpec-asserted): one equi-join on the block key —
     * shuffle hash / sort-merge at scale, broadcast when one side is
-    * tiny — with levenshtein applied as a post-join filter on
-    * candidates only. No CartesianProduct anywhere. */
+    * tiny — with the verify applied as a post-join filter on
+    * candidates only. No CartesianProduct anywhere. The verify is
+    * [[boundedLevenshtein]], exact and O(maxDist·n) per candidate:
+    * most blocked candidates are far apart, and the banded kernel
+    * gives up on them early, often on the length difference alone. */
   def blockedLevenshteinJoin(left: DataFrame, leftName: String,
                              right: DataFrame, rightName: String,
                              blockOf: Column => Column,
@@ -41,7 +66,7 @@ object Linkage {
     val l = left.withColumn("__block", blockOf(col(leftName)))
     val r = right.withColumn("__block", blockOf(col(rightName)))
     l.join(r, Seq("__block"))
-      .filter(levenshtein(col(leftName), col(rightName)) <= maxDist)
+      .filter(boundedLevenshtein(col(leftName), col(rightName), maxDist) >= 0)
       .drop("__block")
   }
 
@@ -101,7 +126,8 @@ object Linkage {
         corrupted(s, dir), "rec_name",
         n => substring(n, 1, 3), maxDist = 1)
       .select(col("cust_id"), col("rec_id"),
-        levenshtein(col("name"), col("rec_name")).cast("long").as("dist"))
+        boundedLevenshtein(col("name"), col("rec_name"), 1).cast("long")
+          .as("dist"))
 
   val linkagePairsSql: String = s"""
     WITH ids AS ($identitiesSql),
@@ -165,8 +191,8 @@ object Linkage {
     * buckets), so no single window partition sees the corpus. The
     * neighborhood itself is an EQUI-join: each record explodes into
     * [[SnWindow]] (rank+k) probes joined on rank — never a theta
-    * join, fanout bounded by the window. The expensive levenshtein
-    * runs on the W·n candidates only. */
+    * join, fanout bounded by the window. The verify
+    * ([[boundedLevenshtein]]) runs on the W·n candidates only. */
   def sortedNeighborhood(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val u = identities(s, dir)
@@ -202,13 +228,14 @@ object Linkage {
         .withColumnRenamed("side", "b_side"), "r")
       .filter((col("a_side") === "i" && col("b_side") === "c") ||
         (col("a_side") === "c" && col("b_side") === "i"))
-      .filter(levenshtein(col("a_key"), col("b_key")) <= 1)
+      .withColumn("dist", boundedLevenshtein(col("a_key"), col("b_key"), 1))
+      .filter(col("dist") >= 0)
       .select(
         when(col("a_side") === "i", col("a_id")).otherwise(col("b_id"))
           .as("cust_id"),
         when(col("a_side") === "i", col("b_id")).otherwise(col("a_id"))
           .as("rec_id"),
-        levenshtein(col("a_key"), col("b_key")).cast("long").as("dist"),
+        col("dist").cast("long").as("dist"),
         col("k").cast("long").as("rank_gap"))
       .orderBy("cust_id", "rec_id")
   }
@@ -297,7 +324,8 @@ object Linkage {
       l04Corrupted(s, dir), "rec_name",
       blockOf, maxDist = 1)
     val score =
-      when(levenshtein(col("name"), col("rec_name")) === 0,
+      // distance 0 holds exactly when the names are equal
+      when(col("name") === col("rec_name"),
         lit(WNameExact)).otherwise(lit(WNameClose)) +
       when(col("nation") === col("rec_nation"), lit(WNationAgree))
         .otherwise(lit(WNationDis)) +
@@ -532,10 +560,11 @@ object Linkage {
     * legitimate matches both engines must agree on exactly.
     *
     * Scale shape: the verify runs only on BLOCKED candidate pairs
-    * (never all-pairs), and Spark's three-arg `levenshtein` carries
-    * the threshold INTO the DP kernel — rows whose distance exceeds 1
-    * abandon the O(L²) table early, the banded-DP trick every
-    * large-scale fuzzy joiner uses. Blocks here are first-character
+    * (never all-pairs), through [[boundedLevenshtein]]: Spark's
+    * three-arg `levenshtein` carries the threshold INTO the DP kernel
+    * — rows whose distance exceeds 1 abandon the O(L²) table early,
+    * the banded-DP trick every large-scale fuzzy joiner uses, and the
+    * same verify l01-l05 and l08 run. Blocks here are first-character
     * (26-way, demo-sized); in production the same verify rides l01's
     * prefix blocks or l03's sorted neighborhood. */
   def editDistanceLinkage(s: SparkSession, dir: String): DataFrame = {
@@ -558,8 +587,8 @@ object Linkage {
         substring(col("dirty_name"), 1, 1) ===
           substring(col("clean_name"), 1, 1))
       .withColumn("dist",
-        levenshtein(col("dirty_name"), col("clean_name"), 1))
-      .filter(col("dist") >= 0 && col("dist") <= 1)
+        boundedLevenshtein(col("dirty_name"), col("clean_name"), 1))
+      .filter(col("dist") >= 0)
       .select(col("probe_id"), col("dirty_name"), col("clean_name"),
         col("dist").cast("long").as("dist"))
       .orderBy("probe_id", "clean_name")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.execution.datasources.parquet.graftbridge.ParquetSchemaBridge
 
 /** Layer B relational query corpus (SURVEY.md §2.5) over the driver's
   * TPC-H-ish parquet tables, each paired with ANSI SQL for the DuckDB
@@ -26,7 +27,12 @@ object Relational {
     // scratch-artifact lifecycle (shutdown-hook delete of this app's
     // graft_* tmp dirs + age-guarded sweep of prior apps') is armed
     graft.core.TmpHousekeeping.arm(spark.sparkContext.applicationId)
-    spark.read.parquet(s"$dir/$name.parquet")
+    // schema from one footer read on the driver: inference without it
+    // runs a Spark job on every call. No memo — a rewritten table is
+    // read afresh.
+    val path = s"$dir/$name.parquet"
+    ParquetSchemaBridge.footerSchema(spark, path)
+      .fold(spark.read)(spark.read.schema(_)).parquet(path)
   }
 
   /** Exact decimal sum surfaced as double (see object doc). */
