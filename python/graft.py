@@ -31,6 +31,14 @@ Generator/mutator values returned by the factories are opaque JVM
 handles; build them against the same SparkSession you pass to
 ``to_data_frame``.
 
+If you build that SparkSession yourself rather than through
+``GraftSession.builder``, set Spark's compiled-code cache in your
+builder: ``.config("spark.sql.codegen.cache.maxEntries", "1000")``, the
+engine's own value. Spark sizes that cache once per JVM, when the first
+session generates code, and its default of 100 classes is smaller than
+one pass of a typical pipeline, so a pipeline you run again in the same
+session recompiles its generated code on every pass.
+
 Surface parity with the reference (gecko) API:
 
 ======================================  =========================================

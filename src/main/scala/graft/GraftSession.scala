@@ -21,9 +21,26 @@ import org.apache.spark.sql.SparkSession
   *    break the integer-exact oracles.
   *  - [[GraftExtensions]] registered, so `minhash_signature`,
   *    `cosine_similarity`, `ngram_hashes`, `int_dot` work from SQL.
+  *  - Room for [[CodegenCacheEntries]] compiled generated classes, so
+  *    a pipeline that runs again in the same JVM reuses its compiled
+  *    code instead of recompiling it.
+  *
+  * The codegen cache size is a static, JVM-wide setting: Spark sizes
+  * its cache once, when the first session of the JVM generates code,
+  * and later sessions cannot change it. A caller who builds its own
+  * `SparkSession` sets the same key in that builder, or pipelines it
+  * repeats recompile their generated code on every pass.
   *
   * Local smoke use: `GraftSession.local(cores)`. */
 object GraftSession {
+
+  /** Size of Spark's compiled-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). One pass of
+    * the benchmark's `corpus_curation` generates about 230 classes, so
+    * with 100 every warm pass recompiled them all; with 1000 warm
+    * passes compile 0-12, and metaspace does not grow (BASELINE.md,
+    * "corpus_curation: codegen cache"). */
+  val CodegenCacheEntries = 1000
 
   /** Builder pre-loaded with the engine's cluster settings; caller
     * supplies master/deploy specifics and may override anything. */
@@ -47,6 +64,8 @@ object GraftSession {
       // 40s isolated. 5min keeps long-running sessions (a suite, a
       // notebook, a multi-query job) near their isolated cost.
       .config("spark.cleaner.periodicGC.interval", "5min")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
 
   /** Run `body` with the settings `kv` on `s`, then put each key back:
     * the value it had before, or unset if it had none. This holds

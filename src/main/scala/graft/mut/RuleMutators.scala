@@ -3,6 +3,7 @@ package graft.mut
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Warnings
+import graft.expr.ContainsAny
 
 import java.util.regex.{Matcher, Pattern}
 
@@ -31,6 +32,28 @@ object RuleMutators {
   private def pick(u: Double, n: Int): Int = {
     val i = (u * n).toInt
     if (i >= n) n - 1 else i
+  }
+
+  private val backreference = Pattern.compile("""\\(?:\d|k<)""")
+
+  /** "`c` has a match of any of `patterns`" (each with `rlike`'s
+    * unanchored-find semantics) as one `rlike` over the alternation
+    * `(?:p1)|(?:p2)|…`, so an eligibility predicate references its
+    * column once, not once per rule. That matters in a mutator chain:
+    * the planner inlines each mutator's output into every reference of
+    * the next one's predicate, so per-rule terms grow the expression
+    * multiplicatively. Each pattern keeps its own group and inline
+    * flags, since java.util.regex scopes inline flags to the enclosing
+    * group. The per-pattern OR stays when a pattern has a
+    * backreference (the alternation renumbers groups), does not parse
+    * as one closed group (an unterminated `\Q`, a `(?x)` comment), or
+    * when the alternation repeats a group name. */
+  private def matchesAny(c: Column, patterns: Seq[String]): Column = {
+    val alternation = patterns.map(p => s"(?:$p)").mkString("|")
+    def parses(p: String) = scala.util.Try(Pattern.compile(p)).isSuccess
+    val single = !patterns.exists(backreference.matcher(_).find()) &&
+      patterns.forall(p => parses(s"(?:$p)")) && parses(alternation)
+    if (single) c.rlike(alternation) else patterns.map(c.rlike).reduce(_ || _)
   }
 
   /** Shared rule-table CSV loader (reference: mutator.py:556-569): all
@@ -87,8 +110,17 @@ object RuleMutators {
     private def matchExpr(c: Column, s: String): Column =
       if (inline) instr(c, s) > 0 else c === s
 
-    override def eligible(c: Column): Option[Column] =
-      Some(sources.map(s => matchExpr(c, s)).reduce(_ || _))
+    /** Whole values: one `isin`. Inline sources: one byte-level
+      * [[graft.expr.ContainsAny]]; a null source keeps its own `instr`
+      * term (null, never true), as in a per-source OR. */
+    override def eligible(c: Column): Option[Column] = Some(
+      if (!inline) c.isin(sources.toIndexedSeq: _*)
+      else {
+        val (given, nulls) = sources.toSeq.partition(_ != null)
+        val terms = nulls.map(matchExpr(c, _))
+        (if (given.isEmpty) terms
+         else ContainsAny.containsAny(c, given) +: terms).reduce(_ || _)
+      })
 
     /** Eligibility rate + one global match count per source — all carried
       * by the single fused stats job. */
@@ -216,11 +248,12 @@ object RuleMutators {
     require(compiled.nonEmpty,
       "must provide at least one phonetic replacement rule")
 
-    /** Eligibility as codegen'd rlike disjunction (rlike has the same
-      * unanchored-find semantics, and the same java.util.regex engine,
-      * as the UDF's matcher.find()) — no UDF in the selection gate. */
+    /** Eligibility as one codegen'd rlike over the rules' anchored
+      * patterns ([[matchesAny]]; rlike has the same unanchored-find
+      * semantics, and the same java.util.regex engine, as the UDF's
+      * matcher.find()) — no UDF in the selection gate. */
     override def eligible(c: Column): Option[Column] =
-      Some(compiled.map(r => c.rlike(r.pattern.pattern)).reduce(_ || _))
+      Some(matchesAny(c, compiled.map(_.pattern.pattern).toSeq))
 
     override def applyToColumn(df: DataFrame, colName: String, colIdx: Int,
                                sel: Column, rid: Column): DataFrame = {
@@ -372,16 +405,17 @@ object RuleMutators {
       }
     }
 
-    /** Eligibility as codegen'd rlike disjunction; compile-time flags
-      * are re-expressed as inline `(?i)` so rlike (same java.util.regex
-      * engine) matches identically. */
+    /** Eligibility as one codegen'd rlike over the patterns
+      * ([[matchesAny]]); compile-time flags are re-expressed as inline
+      * `(?i)` so rlike (same java.util.regex engine) matches
+      * identically. */
     override def eligible(c: Column): Option[Column] =
-      Some(compiled.map { r =>
+      Some(matchesAny(c, compiled.map { r =>
         val inline =
           if ((r.pattern.flags & Pattern.CASE_INSENSITIVE) != 0) "(?i)"
           else ""
-        c.rlike(inline + r.pattern.pattern)
-      }.reduce(_ || _))
+        inline + r.pattern.pattern
+      }.toSeq))
 
     override def applyToColumn(df: DataFrame, colName: String, colIdx: Int,
                                sel: Column, rid: Column): DataFrame = {

@@ -446,12 +446,10 @@ class Round12Spec extends SparkSpec {
         org.apache.spark.sql.types.StructField("sig",
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.LongType))))
-      val prev = spark.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      try {
+      GraftSession.withConf(spark,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming.state." +
+            "RocksDBStateStoreProvider")) {
         def run(legacy: Boolean): Unit = {
           val banded = spark.readStream.schema(schema)
             .parquet(src.getAbsolutePath)
@@ -482,13 +480,6 @@ class Round12Spec extends SparkSpec {
         assert(msgs.toLowerCase.contains("schema") ||
           msgs.toLowerCase.contains("state"),
           s"expected a state-schema rejection, got:\n$msgs")
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", v)
-          case None => spark.conf.unset(
-            "spark.sql.streaming.stateStore.providerClass")
-        }
       }
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(base)

@@ -221,12 +221,8 @@ class Round12bSpec extends SparkSpec {
     val replay = Layout.zmProjected(spark, sfDir)
       .filter(pmod(col("l_orderkey"), lit(5)) === 2)
     val confKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(confKey)
-    spark.conf.set(confKey, "dynamic")
-    try Streaming.st34WriteBatch(replay, 2L, root)
-    finally prev match {
-      case Some(v) => spark.conf.set(confKey, v)
-      case None => spark.conf.unset(confKey)
+    GraftSession.withConf(spark, confKey -> "dynamic") {
+      Streaming.st34WriteBatch(replay, 2L, root)
     }
     val after = graft.queries.Layout.zmAnswer(spark, s"$root/table",
       spark.read.parquet(s"$root/manifests").drop("batch"))

@@ -419,12 +419,10 @@ class Round14Spec extends SparkSpec {
             org.apache.spark.sql.types.LongType)),
         org.apache.spark.sql.types.StructField("op",
           org.apache.spark.sql.types.StringType)))
-      val prev = spark.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      try {
+      GraftSession.withConf(spark,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming.state." +
+            "RocksDBStateStoreProvider")) {
         val banded = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(src.getAbsolutePath)
@@ -439,13 +437,6 @@ class Round14Spec extends SparkSpec {
             org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", v)
-          case None => spark.conf.unset(
-            "spark.sql.streaming.stateStore.providerClass")
-        }
       }
       val pairs = spark.read.parquet(s"$base/out")
         .select("a", "b").collect()

@@ -10,25 +10,12 @@ import org.apache.spark.sql.functions._
 class Round15Spec extends SparkSpec {
 
   private def withCboRule[T](body: => T): T = {
-    if (!spark.experimental.extraOptimizations.contains(
-        plans.CboReorder))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ plans.CboReorder
-    val overrides = Seq(
+    plans.CboReorder.install(spark)
+    try GraftSession.withConf(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-      plans.CboCatalog.EnabledKey -> "true")
-    val prevs = overrides.map { case (k, _) =>
-      k -> spark.conf.getOption(k) }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally {
-      prevs.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-      plans.CboCatalog.clear()
-    }
+      plans.CboCatalog.EnabledKey -> "true")(body)
+    finally plans.CboCatalog.clear()
   }
 
   // ---- r14 advice #1: a computed alias in the mid-Project must not
@@ -245,12 +232,10 @@ class Round15Spec extends SparkSpec {
             org.apache.spark.sql.types.LongType)),
         org.apache.spark.sql.types.StructField("op",
           org.apache.spark.sql.types.StringType)))
-      val prev = spark.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      try {
+      GraftSession.withConf(spark,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming.state." +
+            "RocksDBStateStoreProvider")) {
         val banded = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(src.getAbsolutePath)
@@ -265,13 +250,6 @@ class Round15Spec extends SparkSpec {
             org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", v)
-          case None => spark.conf.unset(
-            "spark.sql.streaming.stateStore.providerClass")
-        }
       }
       val pairs = spark.read.parquet(s"$base/out")
         .select("a", "b").collect()
@@ -330,8 +308,8 @@ class Round15Spec extends SparkSpec {
       .collect().map(_.toString).toSeq
     val lit16 = queries.Dedup.semanticCalibration(spark, sfDir)
       .collect().map(_.toString).toSeq
-    spark.conf.set(key, "0") // every k takes the join path
-    try {
+    // every k takes the join path
+    GraftSession.withConf(spark, key -> "0") {
       val join09 = queries.Dedup.semanticDedup(spark, sfDir)
         .collect().map(_.toString).toSeq
       val join16 = queries.Dedup.semanticCalibration(spark, sfDir)
@@ -339,7 +317,7 @@ class Round15Spec extends SparkSpec {
       assert(join09 == lit09, "d09 paths must agree")
       assert(join16 == lit16, "d16 paths must agree")
       assert(lit09.nonEmpty && lit16.nonEmpty)
-    } finally spark.conf.unset(key)
+    }
   }
 
   // ---- task 5: semi/anti strategy pinning

@@ -228,21 +228,12 @@ class Round5Spec extends SparkSpec {
 
   test("AQE splits a skewed join partition at runtime (skew=true in " +
     "the executed plan)") {
-    val prev = Seq(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "20KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        "20KB")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-        "2")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    GraftSession.withConf(spark,
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" ->
+        "20KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "20KB",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // 95% of the left side lands on key 0 — one shuffle partition
       // dwarfs the rest and AQE must split it instead of letting a
       // single task carry the join
@@ -256,8 +247,6 @@ class Round5Spec extends SparkSpec {
       joined.collect()
       val p = joined.queryExecution.executedPlan.toString
       assert(p.contains("skew=true"), s"no skew split in:\n$p")
-    } finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
   }
 

@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
+  Expression}
 import org.apache.spark.sql.functions._
 import graft.core.{Gecko, Warnings}
-import graft.mut.{Cldr, RuleMutators}
+import graft.mut.{Cldr, MutateDataFrame, Mutator, RuleMutators}
 
 /** Mirrors the reference's rule-table mutator tests
   * (tests/test_mutator.py: replacement/phonetic/regex/cldr suites),
@@ -325,5 +327,156 @@ class RuleMutatorSpec extends SparkSpec {
     val df = frame(Seq.fill(10)("müller"))
     val got = collectV(m(df, Seq("v"), 1.0, col(Gecko.RowId)))
     assert(got.forall(_ == "mueller"))
+  }
+
+  // ---- eligibility predicates reference their column once
+
+  /** The per-rule OR each rule mutator used as its eligibility
+    * predicate, rebuilt from the tables: the reference the single
+    * predicate must equal row for row. */
+  private def anyOf(terms: Seq[Column]): Column = terms.reduce(_ || _)
+
+  private def phoneticPatterns(rules: Seq[(String, String)]): Seq[String] =
+    rules.flatMap { case (src, flags) =>
+      (if (flags.isEmpty) "^$_" else flags).map {
+        case '^' => "^" + src
+        case '$' => src + "$"
+        case _ => s"^(.+)(?:$src)(.+)$$"
+      }
+    }
+
+  private def regexPatterns(rows: Seq[(String, String)]): Seq[String] =
+    rows.map { case (pat, flags) =>
+      (if (flags.contains('i')) "(?i)" else "") + pat.replace("(?P<", "(?<")
+        .replaceAll("""\(\?P=([A-Za-z][A-Za-z0-9]*)\)""", """\\k<$1>""")
+    }
+
+  /** How often the predicate references its column. */
+  private def refCount(e: Column): Int =
+    Seq("x").toDF("v").select(e).queryExecution.analyzed.expressions
+      .map(_.collect { case a: AttributeReference => a }.size).sum
+
+  /** Seeded values over the tables' own characters, umlauts, digits
+    * and dates, plus nulls, the empty string and values that carry
+    * several rules' sources at once. */
+  private def eligibilityProbe(sources: Seq[String]): DataFrame = {
+    val rnd = new scala.util.Random(20261018L)
+    val alphabet = (sources.mkString + "äöüßÄÖÜéabcdefghiklmnorstuzKS|-0123456789 ")
+      .distinct
+    def word(n: Int) = Seq.fill(n)(alphabet(rnd.nextInt(alphabet.length))).mkString
+    def src() = sources(rnd.nextInt(sources.length))
+    val dates = Seq.fill(200)(f"19${rnd.nextInt(100)}%02d-" +
+      Seq("06", "09", "10", "02", "12")(rnd.nextInt(5)) + "-" +
+      Seq("30", "20", "02", "10", "69", "96", "06")(rnd.nextInt(7)))
+    val multi = Seq.fill(300)(word(rnd.nextInt(3)) + src() +
+      word(rnd.nextInt(3)) + src() + word(rnd.nextInt(2)) + src())
+    val vals = Seq(null, "", " ") ++ sources ++ dates ++ multi ++
+      Seq.fill(1500)(word(rnd.nextInt(13)))
+    frame(vals).repartition(3) // evaluated in generated code, not folded
+  }
+
+  private def assertSameRows(m: Mutator, reference: Column,
+                             sources: Seq[String],
+                             misses: Boolean = true): Unit = {
+    val df = eligibilityProbe(sources)
+    val both = df.select(reference.as("old"), m.eligible(col("v")).get.as("new"))
+    val diff = both.filter(!(col("old") <=> col("new"))).count()
+    assert(diff == 0, s"${m.name}: $diff rows differ")
+    val kinds = both.select("old").distinct().collect().map(r =>
+      Option(r.get(0))).toSet
+    assert(kinds == Set(Some(true), None) ++ Option.when(misses)(Some(false)),
+      s"${m.name}: the probe does not cover match, miss and null: $kinds")
+  }
+
+  test("rule mutators: the single eligibility predicate equals the " +
+    "per-rule OR row for row, nulls included, on the repo's tables") {
+    val v = col("v")
+    val ocr = loadCsv("ocr.csv", header = false).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    val ocrSources = ocr.map(_._1).distinct
+    assertSameRows(WithReplacementTable(ocr, inline = true, seed = 1),
+      anyOf(ocrSources.map(s => instr(v, s) > 0)), ocrSources)
+    assert(refCount(WithReplacementTable(ocr, inline = true, seed = 1)
+      .eligible(v).get) == 1)
+    // a null source leaves a non-matching value unknown, not false
+    assertSameRows(WithReplacementTable(ocr :+ ((null, "x")), inline = true,
+      seed = 1), anyOf((ocrSources :+ null).map(s => instr(v, s) > 0)),
+      ocrSources, misses = false)
+
+    val names = loadCsv("given-name.csv", header = true).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    val nameSources = names.map(_._1).distinct
+    assertSameRows(WithReplacementTable(names, seed = 2),
+      anyOf(nameSources.map(v === _)), nameSources)
+    assert(refCount(WithReplacementTable(names, seed = 2).eligible(v).get) == 1)
+
+    for (table <- Seq("homophone-de.csv", "phonetic-no-header.csv")) {
+      val rows = loadCsv(table, header = false).collect().map(r =>
+        (r.getString(0), r.getString(1),
+          if (r.isNullAt(2)) "" else r.getString(2))).toSeq
+      val m = WithPhoneticReplacementTable(rows, seed = 3)
+      assertSameRows(m,
+        anyOf(phoneticPatterns(rows.map(r => (r._1, r._3))).map(v.rlike)),
+        rows.map(_._1))
+      assert(refCount(m.eligible(v).get) == 1, table)
+    }
+
+    for ((table, flags) <- Seq("dob-year-flip.csv" -> None,
+        "dob-six-nine.csv" -> None, "dob-day-month-flip.csv" -> None,
+        "regex-foobar-case-insensitive.csv" -> Some("flags"))) {
+      val df = loadCsv(table, header = true)
+      val m = WithRegexReplacementTable(df, "pattern", flags, seed = 4)
+      val rows = df.collect().map(r => (r.getAs[String]("pattern"),
+        flags.map(r.getAs[String]).getOrElse(""))).toSeq
+      assertSameRows(m, anyOf(regexPatterns(rows).map(v.rlike)),
+        Seq("foobar", "FOOBAR", "1996-06-09", "1987-12-30"))
+    }
+  }
+
+  test("rule mutators: a backreference or a repeated group name keeps " +
+    "the per-pattern OR, which still matches the same rows") {
+    val v = col("v")
+    val rows = Seq(("""(?P<c>[a-z])(?P=c)""", ""), ("""(\d)\1""", ""),
+      ("""x(y)""", ""))
+    val m = WithRegexReplacementTable(rows.map { case (p, f) =>
+      (p, f, Map("c" -> "", "1" -> ""))
+    }, seed = 5)
+    assert(refCount(m.eligible(v).get) == rows.size)
+    assertSameRows(m, anyOf(regexPatterns(rows).map(v.rlike)),
+      Seq("aa", "11", "xy", "ab"))
+    // one named group per pattern, the same name in every pattern
+    val flipTable = loadCsv("dob-day-month-flip.csv", header = true)
+    val flip = WithRegexReplacementTable(flipTable, "pattern", None, seed = 6)
+    assert(refCount(flip.eligible(v).get) == flipTable.count())
+    // without them, one rlike
+    val plain = WithRegexReplacementTable(
+      loadCsv("dob-six-nine.csv", header = true), "pattern", None, seed = 7)
+    assert(refCount(plain.eligible(v).get) == 1)
+  }
+
+  test("rule mutators: filtering an uncheckpointed German name chain " +
+    "plans an expression that grows with the chain, not with its rules") {
+    val rulesDe = WithPhoneticReplacementTable.fromCsv(spark,
+      asset("homophone-de.csv"), seed = 8)
+    val ocr = WithReplacementTable.fromCsv(spark, asset("ocr.csv"),
+      inline = true, seed = 9)
+    val keymap = WithCldrKeymap(Cldr.neighborCandidates(
+      getClass.getResourceAsStream("/assets/de-t-k0-windows.xml"), None),
+      seed = 10)
+    val people = graft.gen.ToDataFrame(spark, Seq(Seq("name") ->
+      graft.gen.Generators.FromFunction(rid => s"Schiesser Fiene $rid")), 500)
+    val mutated = MutateDataFrame(people,
+      Seq(Seq("name") -> Seq(0.15 -> keymap, 0.15 -> rulesDe, 0.1 -> ocr)))
+    val filtered = mutated.filter(lower(substring(col("name"), 1, 4)) === "schi")
+    val plan = GraftSession.withConf(spark,
+      "spark.sql.adaptive.enabled" -> "false") {
+      filtered.queryExecution.executedPlan
+    }
+    def size(e: Expression): Int = e.collect { case x => x }.size
+    val nodes = plan.collect { case p => p }.flatMap(_.expressions).map(size).sum
+    // measured: 896 nodes when each predicate references the column
+    // once; the per-rule OR it replaced planned 89,766
+    assert(nodes < 5000, s"$nodes expression nodes in\n$plan")
+    assert(filtered.count() > 0)
   }
 }

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * which caches a SparkSession rather than a scratch artifact. Query
   * files scope settings with `GraftSession.withConf`, replay streams
   * with `streaming.Replay` and install rules through the rule's own
-  * `install`, so none of them touches the underlying calls. */
+  * `install`, so none of them touches the underlying calls; tests
+  * scope settings and install rules the same way. */
 class ScratchPathGuardSpec extends AnyFunSuite {
 
   private val mainRoot = new File("src/main/scala/graft")
@@ -26,6 +27,8 @@ class ScratchPathGuardSpec extends AnyFunSuite {
 
   private val queryFiles: Seq[File] =
     scalaFiles(new File(mainRoot, "queries"))
+
+  private val testRoot = new File("src/test/scala/graft")
 
   // the artifact module itself and the sweeper of its roots
   private val tmpdirOwners = Set("core/Artifacts.scala",
@@ -77,6 +80,23 @@ class ScratchPathGuardSpec extends AnyFunSuite {
     } yield s"${f.getName}:${i + 1}: $b"
     assert(hits.isEmpty,
       s"use GraftSession.withConf, streaming.Replay or install: $hits")
+  }
+
+  test("no test unsets a conf or appends an optimizer rule by hand") {
+    // GraftSessionSpec tests withConf itself; this file names the calls
+    val exempt = Set("GraftSessionSpec.scala", "ScratchPathGuardSpec.scala")
+    val tests = scalaFiles(testRoot)
+    assert(tests.exists(_.getName == "Round15Spec.scala"),
+      s"no test sources under ${new File(".").getAbsolutePath}")
+    val hits = for {
+      f <- tests
+      if !exempt.contains(f.getName)
+      (line, i) <- text(f).split("\n").zipWithIndex
+      b <- Seq("conf.unset", "extraOptimizations")
+      if line.contains(b)
+    } yield s"${f.getName}:${i + 1}: $b"
+    assert(hits.isEmpty,
+      s"use GraftSession.withConf or CboReorder.install: $hits")
   }
 
   test("Trigger.AvailableNow appears in one main file: the replay " +
