@@ -1,9 +1,31 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** A gate query's row order is presentation: the queries end without
+    * a sort, and this writer alone fixes the order of every gate file.
+    * It writes [[canonical]] `df`, so the file's bytes do not depend on
+    * the order in which the query's last stage emitted its rows. */
+  def write(df: DataFrame, path: String): Unit =
+    canonical(df).write.mode("overwrite").parquet(path)
+
+  /** `df` in one partition, its rows sorted within it by [[sortKeys]]:
+    * a single-task sort with no range exchange. */
+  def canonical(df: DataFrame): DataFrame =
+    df.coalesce(1).sortWithinPartitions(sortKeys(df.schema)
+      .map(n => col("`" + n.replace("`", "``") + "`")): _*)
+
+  /** Every orderable column, in schema order. Map-typed columns (and
+    * arrays or structs holding one) have no ordering and are skipped. */
+  private[graft] def sortKeys(schema: StructType): Seq[String] =
+    schema.fields.toSeq.filter(f => RowOrdering.isOrderable(f.dataType))
+      .map(_.name)
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -18,8 +40,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try write(fn(spark, sfDir), s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -79,7 +79,6 @@ object AsOf {
         col("user_id"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("purchase_ts"),
         col("asof_value").as("signup_value")) // raw passthrough: no fp op
-      .orderBy("event_id")
   }
 
   // DuckDB ASOF JOIN matches the greatest r.ts <= l.ts per key; ties on
@@ -125,7 +124,6 @@ object AsOf {
         col("user_id"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("purchase_ts"),
         col("asof_value").as("signup_value"))
-      .orderBy("event_id")
   }
 
   /** q33 — FORWARD as-of through the native operator: each signup
@@ -148,7 +146,6 @@ object AsOf {
         col("user_id"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("signup_ts"),
         col("asof_value").as("purchase_value"))
-      .orderBy("event_id")
   }
 
   val q33Sql: String = """

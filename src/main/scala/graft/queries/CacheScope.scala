@@ -18,6 +18,12 @@ import org.apache.spark.sql.DataFrame
   * Only use on results that are orders of magnitude smaller than the
   * cached inputs (final aggregates, top-k frames): the checkpoint
   * holds the full result in block storage until GC.
+  *
+  * Do not sort a result before checkpointing it. A gate query's row
+  * order is presentation: `graft.Verify.write` canonicalizes it and
+  * tests sort before comparing, so a sort here is a range-sampling job
+  * and a range shuffle that every caller pays for nothing. Sort only
+  * where a `limit`, a rank or a consumer reads the order.
   */
 object CacheScope {
 

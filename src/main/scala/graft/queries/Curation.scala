@@ -47,7 +47,6 @@ object Curation {
         col("n_unique") * 2 >= col("n_tokens") &&
         col("en_hits") >= 1)
     gated.select("doc_id", "n_pii", "n_tokens", "n_unique", "en_hits")
-      .orderBy("doc_id")
   }
 
   /** One oracle for the whole chain, each stage a CTE built from the
@@ -95,7 +94,6 @@ object Curation {
         sum(col("n_tokens")).as("total_tokens"),
         sum(col("n_chars")).as("total_chars"),
         sum(col("quality_ok")).as("n_quality"))
-      .orderBy("source", "lang")
   }
 
   val sourceDatacardSql: String = s"""
@@ -140,7 +138,6 @@ object Curation {
           .when(col("fp1") =!= col("fp2"), lit("changed")))
       .filter(col("status").isNotNull)
       .select(col("doc_id"), col("status"))
-      .orderBy("doc_id")
   }
 
   val snapshotDiffSql: String = """
@@ -178,7 +175,6 @@ object Curation {
         unix_micros(col("latest.ts")).as("latest_us"),
         col("latest.event_id").as("latest_event_id"),
         col("latest.value").as("latest_value"))
-      .orderBy("user_id", "event_type")
 
   val cdcCompactSql: String = """
     SELECT user_id, event_type, epoch_us(m.ts) AS latest_us,
@@ -219,7 +215,6 @@ object Curation {
         unix_micros(col("ts")).as("valid_from_us"),
         unix_micros(col("next_ts")).as("valid_to_us"),
         col("next_ts").isNull.cast("long").as("is_current"))
-      .orderBy("user_id", "event_type", "valid_from_us")
   }
 
   val scd2HistorySql: String = """
@@ -283,7 +278,6 @@ object Curation {
         'price_cents_max', price_cents_max,
         'date_epoch_day_min', date_epoch_day_min,
         'date_epoch_day_max', date_epoch_day_max) AS (metric, value)""")
-      .orderBy("metric")
 
   val expectationsSql: String = """
     SELECT metric, value FROM (
@@ -351,7 +345,6 @@ object Curation {
       .filter(abs(col("cents") - col("med")) > col("mad") * 3)
       .select(col("o_orderkey"), col("o_orderstatus"), col("cents"),
         col("med"), col("mad"))
-      .orderBy("o_orderkey")
   }
 
   val robustOutliersSql: String = """
@@ -415,7 +408,6 @@ object Curation {
       .groupBy("o_custkey", "month")
       .agg(sum(col("n_orders")).as("n_orders"),
         sum(col("cents")).as("cents"))
-      .orderBy("o_custkey", "month")
   }
 
   val incrementalMvSql: String = """
@@ -465,7 +457,6 @@ object Curation {
       .agg(countDistinct(col("o_custkey")).as("exact"))
     merged.join(exact, "o_orderpriority")
       .select(col("o_orderpriority"), col("est"), col("exact"))
-      .orderBy("o_orderpriority")
   }
 
   /** Error contract of [[sketchMv]], DuckDB-checkable: every group's
@@ -475,7 +466,6 @@ object Curation {
       .select(col("o_orderpriority"),
         (abs(col("est") - col("exact")) * 100 <= col("exact") * 5)
           .cast("long").as("within_5pct"))
-      .orderBy("o_orderpriority")
 
   val sketchMvInvSql: String = """
     SELECT o_orderpriority, CAST(1 AS BIGINT) AS within_5pct
@@ -517,7 +507,6 @@ object Curation {
         col("hours_expected") - col("hours_present"))
       .withColumn("is_fresh",
         when(col("lag_minutes") <= 60, 1L).otherwise(0L))
-      .orderBy("event_type")
   }
 
   val freshnessAuditSql: String = """
@@ -578,7 +567,6 @@ object Curation {
         Relational.table(s, dir, "part"), "p_partkey"))
       .unionAll(audit("lineitem->supplier", li, "l_suppkey",
         Relational.table(s, dir, "supplier"), "s_suppkey"))
-      .orderBy("relation")
   }
 
   val referentialIntegritySql: String = """
@@ -652,7 +640,6 @@ object Curation {
         expr("(pa_ppm - pb_ppm) * (pa_ppm - pb_ppm) " +
           "div (pa_ppm + pb_ppm + 1)"))
       .select("bucket", "c_a", "c_b", "pa_ppm", "pb_ppm", "drift")
-      .orderBy("bucket")
   }
 
   val driftAuditSql: String = """
@@ -730,7 +717,7 @@ object Curation {
         (col("n_total") - col("n_purged")).as("n_retained"),
         col("tombstones"))
     CacheScope.materializeAndRelease(
-      oLedger.unionAll(liLedger).orderBy("relation"), purgedOrders)
+      oLedger.unionAll(liLedger), purgedOrders)
   }
 
   val retentionPurgeSql: String = """
@@ -800,7 +787,6 @@ object Curation {
       .groupBy("o_orderstatus", "band")
       .agg(count(lit(1)).as("n_orders"),
         sum(coalesce(col("gap"), lit(0L))).as("total_gap_micro"))
-      .orderBy("o_orderstatus", "band")
   }
 
   val reconciliationSql: String = """
@@ -875,7 +861,6 @@ object Curation {
         "(po_ppm - pe_ppm) * 1000000 div (1000000 - pe_ppm)"))
       .select("status", "n", "n11", "n10", "n01", "n00", "po_ppm",
         "pe_ppm", "kappa_ppm")
-      .orderBy("status")
   }
 
   /** c16 — RETRACTION-aware incremental view maintenance: c08 folds
@@ -913,7 +898,6 @@ object Curation {
     retractableMvWithAudit(s, dir)
       .select("o_orderpriority", "month", "n_orders", "cents",
         "cents_min", "cents_max")
-      .orderBy("o_orderpriority", "month")
 
   /** The c16/st36 fact projection: every order as (key, view key,
     * integer cents, date) — shared so the streamed twin's CDC feed

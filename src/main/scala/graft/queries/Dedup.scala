@@ -55,7 +55,6 @@ object Dedup {
       .groupBy(md5(col("text")).as("text_hash"))
       .agg(min(col("doc_id")).as("keep_id"),
         count(lit(1)).as("dup_cnt"))
-      .orderBy("text_hash")
   }
 
   val dedupExactSql: String = s"""
@@ -213,7 +212,6 @@ object Dedup {
     val out = pairs.select(col("a"), col("b"),
         estJaccard.as("est_jaccard"))
       .filter(col("est_jaccard") >= 0.5)
-      .orderBy("a", "b")
     (out, Seq(buckets))
   }
 
@@ -270,7 +268,6 @@ object Dedup {
       .select(col("a"), col("b"),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
       .filter(col("hamming") <= 16)
-      .orderBy("a", "b")
     CacheScope.materializeAndRelease(out, buckets)
   }
 
@@ -303,7 +300,6 @@ object Dedup {
       .select(col("doc_id").as("a"),
         (col("doc_id") + PlantOffset).as("b"),
         jacUdf(col("text"), col("text_b")).as("jaccard"))
-      .orderBy("a")
   }
 
   /** DuckDB replica of [[dedupNgramJaccard]]: same corrupted-copy
@@ -366,7 +362,6 @@ object Dedup {
           col("ea"), col("eb")), 4).as("cos"))
       .filter(col("cos") >= 0.99)
       .dropDuplicates("a", "b")
-      .orderBy("a", "b")
     CacheScope.materializeAndRelease(out, bucketed)
   }
 
@@ -572,7 +567,6 @@ object Dedup {
       .select(col("cluster_id"), col("n_members"),
         (-col("best.neg_id")).as("golden_id"),
         col("best.quality").as("golden_quality"))
-      .orderBy("cluster_id")
   }
 
   val goldenRecordsSql: String = """
@@ -597,7 +591,6 @@ object Dedup {
   /** MinHash candidate pairs → clusters → canonical keep decision. */
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
     clusterPairs(dedupMinhashLsh(s, dir))
-      .orderBy("cluster_id", "doc_id")
 
   /** Oracle harness for the label-propagation operator itself: chain
     * edges i→i+1 for doc_id % 10 ∈ {0,1,2} form 4-node paths whose
@@ -609,7 +602,7 @@ object Dedup {
       .select(col("doc_id")).filter(col("doc_id") % 10 <= 2)
     val edges = sources
       .select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"))
-    clusterPairs(edges).orderBy("cluster_id", "doc_id")
+    clusterPairs(edges)
   }
 
   val clusterChainSql: String = """
@@ -657,7 +650,6 @@ object Dedup {
         array_join(transform(
           array_sort(collect_list(struct(col("pos"), col("para")))),
           x => x.getField("para")), " ").as("text_clean"))
-      .orderBy("doc_id")
   }
 
   /** DuckDB twin: same chunking arithmetic (1-based inclusive list
@@ -832,7 +824,6 @@ object Dedup {
       .agg(min(col("cluster_id")).as("cluster_id"),
         min(col("a_id")).as("keeper_id"))
       .select(col("b_id").as("vec_id"), col("cluster_id"), col("keeper_id"))
-      .orderBy("vec_id")
     CacheScope.materializeAndRelease(out, assigned)
   }
 
@@ -939,7 +930,6 @@ object Dedup {
           .otherwise(0L)).as("n_dups"))
       .withColumn("dup_ppm",
         expr("n_dups * 1000000 div n_candidates"))
-      .orderBy("tau_num")
     CacheScope.materializeAndRelease(out, assigned)
   }
 
@@ -1031,7 +1021,6 @@ object Dedup {
     delta.withColumn("fp", md5(col("text")))
       .join(corpusFp, Seq("fp"), "left_anti")
       .select(col("doc_id"), col("fp"))
-      .orderBy("doc_id")
   }
 
   val incrementalDedupSql: String = """
@@ -1114,7 +1103,6 @@ object Dedup {
           .as("clean_text"),
         (size(col("toks")) - size(col("kept"))).cast("long")
           .as("n_removed"))
-      .orderBy("doc_id")
   }
 
   val substringDedupSql: String = s"""
@@ -1282,7 +1270,6 @@ object Dedup {
       .filter(col("containment_ppm") >= 600000)
       .select("a", "b", "shared_grams", "ng_a", "ng_b",
         "containment_ppm")
-      .orderBy("a", "b")
     (out, Seq(grams))
   }
 
@@ -1375,7 +1362,6 @@ object Dedup {
       .groupBy("canonical_url")
       .agg(min(col("doc_id")).as("keeper_id"),
         count(lit(1)).as("n_dupes"))
-      .orderBy("canonical_url")
   }
 
   val urlDedupSql: String = """
@@ -1446,7 +1432,6 @@ object Dedup {
       .filter(col("source_a") < col("source_b"))
       .groupBy("source_a", "source_b")
       .agg(count(lit(1)).as("n_shared"))
-      .orderBy("source_a", "source_b")
   }
 
   val crossSourceMirrorsSql: String = """

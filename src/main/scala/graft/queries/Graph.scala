@@ -124,7 +124,7 @@ object Graph {
     // references the cached graph — release it so a long suite doesn't
     // accumulate
     CacheScope.materializeAndRelease(ranks, e, withDeg, nodes)
-      .orderBy("node").select(col("node"), col("r").as("rank_micro"))
+      .select(col("node"), col("r").as("rank_micro"))
   }
 
   val pagerankSql: String = {
@@ -185,7 +185,6 @@ object Graph {
     val e = pairs.select(col("supp").as("a"), col("cust").as("b"))
     Dedup.clusterPairs(e)
       .select(col("doc_id").as("node"), col("cluster_id"))
-      .orderBy("node")
   }
 
   val componentsSql: String = s"""
@@ -325,7 +324,6 @@ object Graph {
       .unionAll(closed.select(explode(col("common")).as("node"),
         lit(1L).as("t")))
       .groupBy("node").agg(sum(col("t")).as("n_triangles"))
-      .orderBy("node")
     (out, Seq(edges, orient, adj, closed))
   }
 
@@ -425,7 +423,6 @@ object Graph {
       .unionAll(edges.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("core_degree"))
       .select(col("n").as("node"), col("core_degree"))
-      .orderBy("node")
   }
 
   /** Every multiply-referenced CTE is MATERIALIZED: DuckDB otherwise
@@ -593,7 +590,7 @@ object Graph {
       frontier = fresh.select("node")
     }
     e.unpersist(false) // dist is checkpointed; edge cache no longer needed
-    dist.orderBy("node")
+    dist
   }
 
   val bfsHopsSql: String = {
@@ -668,7 +665,7 @@ object Graph {
     }
     CacheScope.materializeAndRelease(ranks, e, withDeg, nodes)
       .filter(col("r") > 0)
-      .orderBy("node").select(col("node"), col("r").as("rank_micro"))
+      .select(col("node"), col("r").as("rank_micro"))
   }
 
   val personalizedPagerankSql: String = {
@@ -754,7 +751,7 @@ object Graph {
         .localCheckpoint()
     }
     e.unpersist(false) // dist is checkpointed; edge cache no longer needed
-    dist.orderBy("node")
+    dist
   }
 
   val weightedPathsSql: String = {
@@ -818,7 +815,6 @@ object Graph {
     val out = hop1.join(peers, Seq("supp"), "left")
       .select(col("supp"), col("n_partners"),
         coalesce(col("n_peers"), lit(0L)).as("n_peers"))
-      .orderBy("supp")
     CacheScope.materializeAndRelease(out, pairs)
   }
 
@@ -879,7 +875,6 @@ object Graph {
     }
     support.filter(col("sup") >= TrussK - 2)
       .select(col("u"), col("v"), col("sup").as("support"))
-      .orderBy("u", "v")
   }
 
   /** Per-undirected-edge triangle support of the CURRENT edge set:
@@ -1017,7 +1012,7 @@ object Graph {
   }
 
   def labelPropagation(s: SparkSession, dir: String): DataFrame =
-    lpaLabels(s, dir, lpaCap).orderBy("node")
+    lpaLabels(s, dir, lpaCap)
 
   /** gr11/gr12's cost knob (the gr03 treatment): cap each node's
     * VOTING neighbors. Vacuous by default — the gate oracles replay
@@ -1093,7 +1088,7 @@ object Graph {
           coalesce(col("newlab"), col("lab")).as("lab"))
         .localCheckpoint()
     }
-    labels.orderBy("node").select(col("node"), col("lab").as("community"))
+    labels.select(col("node"), col("lab").as("community"))
   }
 
   /** The LPA WITH-clause body (edges + 3 unrolled rounds ending at
@@ -1197,7 +1192,6 @@ object Graph {
         coalesce(col("e2_c"), lit(0L)).as("e2_c"), col("d_c"),
         (col("m2") * coalesce(col("e2_c"), lit(0L)) -
           col("d_c") * col("d_c")).as("q_contrib_scaled"))
-      .orderBy("community")
     out
   }
 

@@ -49,7 +49,6 @@ object Invariants {
       .select(col("c_custkey"),
         length(col("c_name")).cast("long").as("len"),
         (hamming(col("__orig"), col("c_name")) <= 1).as("ham_le1"))
-      .orderBy("c_custkey")
   }
 
   val m02Sql: String =
@@ -63,7 +62,6 @@ object Invariants {
     WithInsert(seed = 606)(base, Seq("c_name"), 1.0, col("c_custkey"))
       .select(col("c_custkey"),
         (length(col("c_name")) - col("__len")).cast("long").as("len_delta"))
-      .orderBy("c_custkey")
   }
 
   val m06Sql: String =
@@ -76,7 +74,6 @@ object Invariants {
     WithDelete(seed = 607)(base, Seq("c_name"), 1.0, col("c_custkey"))
       .select(col("c_custkey"),
         (length(col("c_name")) - col("__len")).cast("long").as("len_delta"))
-      .orderBy("c_custkey")
   }
 
   val m07Sql: String =
@@ -92,7 +89,6 @@ object Invariants {
         array_join(array_sort(split(col("c_name"), "")), "")
           .as("chars_sorted"),
         length(col("c_name")).cast("long").as("len"))
-      .orderBy("c_custkey")
 
   val m08Sql: String =
     """SELECT c_custkey,
@@ -108,7 +104,6 @@ object Invariants {
       .select(col("c_custkey"),
         length(col("c_name")).cast("long").as("len"),
         (hamming(col("__orig"), col("c_name")) <= 1).as("ham_le1"))
-      .orderBy("c_custkey")
   }
 
   val m09Sql: String =
@@ -126,7 +121,6 @@ object Invariants {
       .select(col("c_custkey"),
         col("c_mktsegment").isin(segs: _*).as("in_set"),
         (col("c_mktsegment") =!= col("__orig")).as("changed"))
-      .orderBy("c_custkey")
   }
 
   val m11Sql: String =
@@ -149,7 +143,6 @@ object Invariants {
         (abs(datediff(to_date(col("odate")), to_date(col("__orig")))) <= 10)
           .as("delta_ok"),
         col("odate").rlike("^\\d{4}-\\d{2}-\\d{2}$").as("fmt_ok"))
-      .orderBy("o_orderkey")
   }
 
   val m15Sql: String =
@@ -164,7 +157,6 @@ object Invariants {
         seed = 619)(
       customers(s, dir), Seq("c_name"), 1.0, col("c_custkey"))
       .select(col("c_custkey"), col("c_name"))
-      .orderBy("c_custkey")
 
   val m19Sql: String =
     """SELECT c_custkey, c_name || '+' || c_name AS c_name
@@ -180,7 +172,6 @@ object Invariants {
         Seq((1.0, WithRepeat("-", seed = 720): graft.mut.Mutator)))),
       ridCol = "c_custkey")
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-      .orderBy("c_custkey")
 
   val m20Sql: String =
     """SELECT c_custkey, lower(c_name) AS c_name,
@@ -218,7 +209,7 @@ object Invariants {
     * stable). */
   def g04FreqValues(s: SparkSession, dir: String): DataFrame =
     LayerADemo.g04FrequencyTable(s, dir)
-      .select("c0").distinct().orderBy("c0")
+      .select("c0").distinct()
 
   val g04Sql: String =
     "SELECT DISTINCT c_mktsegment AS c0 FROM customer ORDER BY 1"
@@ -228,7 +219,7 @@ object Invariants {
     * (generator.py:250-252). */
   def g05JointValues(s: SparkSession, dir: String): DataFrame =
     LayerADemo.g05MulticolumnFrequencyTable(s, dir)
-      .select("c0", "c1").distinct().orderBy("c0", "c1")
+      .select("c0", "c1").distinct()
 
   val g05Sql: String =
     """SELECT DISTINCT n_name AS c0, r_name AS c1
@@ -255,7 +246,6 @@ object Invariants {
       .groupBy(when(col("c0").cast("double") < 50, "low")
         .otherwise("high").as("grp"))
       .agg(count(lit(1)).as("n"))
-      .orderBy("grp")
 
   val g07Sql: String =
     """SELECT * FROM (VALUES ('high', CAST(8000 AS BIGINT)),
@@ -504,7 +494,6 @@ object Invariants {
           col("exact_orders") <= 0.05).as("ok_orders"),
         (abs(col("approx_parts") - col("exact_parts")).cast("double") /
           col("exact_parts") <= 0.05).as("ok_parts"))
-      .orderBy("l_returnflag")
 
   val q18ErrSql: String = """
     SELECT l_returnflag, TRUE AS ok_orders, TRUE AS ok_parts
@@ -523,7 +512,6 @@ object Invariants {
           .as("ok_p50"),
         (abs(col("a95") - col("p95_price")) / col("p95_price") <= 0.02)
           .as("ok_p95"))
-      .orderBy("l_returnflag")
   }
 
   val q20ErrSql: String = """

@@ -29,7 +29,6 @@ object LayerADemo {
   def g01FromFunction(s: SparkSession, dir: String): DataFrame =
     FromFunction(rid => s"row-$rid").generate(s, 1000)
       .select(col(Gecko.RowId), col("c0").as("value"))
-      .orderBy(Gecko.RowId)
 
   val g01Sql: String =
     """SELECT CAST(range AS BIGINT) AS __row_id,
@@ -88,7 +87,7 @@ object LayerADemo {
   private def mutDemo(s: SparkSession, dir: String, m: graft.mut.Mutator,
                       p: Double = 1.0): DataFrame =
     m(customers(s, dir), Seq("c_name"), p, col("c_custkey"))
-      .select(col("c_custkey"), col("c_name")).orderBy("c_custkey")
+      .select(col("c_custkey"), col("c_name"))
 
   def m01WithFunction(s: SparkSession, dir: String): DataFrame =
     mutDemo(s, dir, WithFunction(v => v.reverse, seed = 201))
@@ -111,7 +110,7 @@ object LayerADemo {
       ("AUTO", "OTTO", "^"), ("ING", "ENG", "$"), ("URN", "ERN", "_")),
       seed = 203)
     m(customers(s, dir), Seq("c_mktsegment"), 1.0, col("c_custkey"))
-      .select(col("c_custkey"), col("c_mktsegment")).orderBy("c_custkey")
+      .select(col("c_custkey"), col("c_mktsegment"))
   }
 
   val m03Sql: String =
@@ -133,7 +132,7 @@ object LayerADemo {
       ("FURNITURE", "DESK"), ("HOUSEHOLD", "HOME")),
       inline = false, reverse = false, seed = 204)
     m(customers(s, dir), Seq("c_mktsegment"), 1.0, col("c_custkey"))
-      .select(col("c_custkey"), col("c_mktsegment")).orderBy("c_custkey")
+      .select(col("c_custkey"), col("c_mktsegment"))
   }
 
   val m04Sql: String =
@@ -191,7 +190,7 @@ object LayerADemo {
     val m = WithCategoricalValues(customers(s, dir), "c_mktsegment",
       seed = 211)
     m(customers(s, dir), Seq("c_mktsegment"), 0.5, col("c_custkey"))
-      .select(col("c_custkey"), col("c_mktsegment")).orderBy("c_custkey")
+      .select(col("c_custkey"), col("c_mktsegment"))
   }
 
   def m12Permute(s: SparkSession, dir: String): DataFrame =
@@ -199,7 +198,6 @@ object LayerADemo {
     WithPermute(seed = 212)(customers(s, dir),
         Seq("c_name", "c_mktsegment"), 1.0, col("c_custkey"))
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-      .orderBy("c_custkey")
 
   val m12Sql: String =
     """SELECT c_custkey, c_mktsegment AS c_name, c_name AS c_mktsegment
@@ -223,7 +221,6 @@ object LayerADemo {
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("odate"))
     WithDatetimeOffset(10, "d", "%Y-%m-%d", preventWraparound = true,
         seed = 215)(o, Seq("odate"), 0.5, col("o_orderkey"))
-      .orderBy("o_orderkey")
   }
 
   def m16WithGenerator(s: SparkSession, dir: String): DataFrame =
@@ -253,7 +250,6 @@ object LayerADemo {
       (Seq("c_mktsegment"), Seq(
         (0.5, WithLowercase(seed = 225): graft.mut.Mutator)))),
       ridCol = "c_custkey")
-      .orderBy("c_custkey")
 
   // ------------------------------------------- BASELINE.md targets
   /** The bench generation recipe at an arbitrary row count — one fused

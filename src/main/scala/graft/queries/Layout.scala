@@ -75,7 +75,6 @@ object Layout {
       .agg(count(lit(1)).as("n_rows"),
         min(col("xd")).as("x_min"), max(col("xd")).as("x_max"),
         min(col("yd")).as("y_min"), max(col("yd")).as("y_max"))
-      .orderBy("zbucket")
   }
 
   val zorderLayoutSql: String = {
@@ -188,7 +187,6 @@ object Layout {
       (id.toLong, zones.length.toLong, qual.length.toLong, n)
     }
     rows.toDF("pred_id", "shards_total", "shards_read", "n_rows")
-      .orderBy("pred_id")
   }
 
   /** Build-once: lineitem re-laid-out CLUSTERED ON THE FILTER COLUMN
@@ -410,7 +408,7 @@ object Layout {
           sum(col("cents")).as("total_cents"))
         .select(lit(v).as("version"), col("n_rows"),
           col("total_cents"))
-    }.reduce(_ unionByName _).orderBy("version")
+    }.reduce(_ unionByName _)
   }
 
   /** q46's mechanism — version-log COMPACTION (the Delta
@@ -499,7 +497,7 @@ object Layout {
           sum(col("cents")).as("total_cents"))
         .select(lit(v).as("version"), col("n_rows"),
           col("total_cents"))
-    }.reduce(_ unionByName _).orderBy("version")
+    }.reduce(_ unionByName _)
   }
 
   val timeTravelCompactedSql: String = """

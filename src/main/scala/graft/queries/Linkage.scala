@@ -119,9 +119,6 @@ object Linkage {
     * pairs are genuine near-collisions of the identity space — both
     * engines must agree on the full pair set, hash-exactly. */
   def linkagePairs(s: SparkSession, dir: String): DataFrame =
-    pairs(s, dir).orderBy("cust_id", "rec_id")
-
-  private def pairs(s: SparkSession, dir: String): DataFrame =
     blockedLevenshteinJoin(identities(s, dir), "name",
         corrupted(s, dir), "rec_name",
         n => substring(n, 1, 3), maxDist = 1)
@@ -148,7 +145,7 @@ object Linkage {
     * over the candidate pairs + one count of the truth set. */
   def linkageQuality(s: SparkSession, dir: String): DataFrame = {
     val truth = identities(s, dir).agg(count(lit(1)).as("n_truth"))
-    pairs(s, dir)
+    linkagePairs(s, dir)
       .agg(count(lit(1)).as("n_pred"),
         sum(when(col("cust_id") === col("rec_id"), 1L).otherwise(0L))
           .as("n_correct"))
@@ -237,7 +234,6 @@ object Linkage {
           .as("rec_id"),
         col("dist").cast("long").as("dist"),
         col("k").cast("long").as("rank_gap"))
-      .orderBy("cust_id", "rec_id")
   }
 
   val sortedNeighborhoodSql: String = s"""
@@ -337,7 +333,6 @@ object Linkage {
         when(col("score_milli") >= MatchAt, lit("match"))
           .when(col("score_milli") >= ReviewAt, lit("review"))
           .otherwise(lit("non_match")).as("decision"))
-      .orderBy("cust_id", "rec_id")
   }
 
   private val l04IdentitiesSql = """
@@ -481,7 +476,6 @@ object Linkage {
         min(struct(col("node"), col("name"))).as("m"))
       .select(col("entity_id"), col("n_records"),
         col("m").getField("name").as("golden_name"))
-      .orderBy("entity_id")
     CacheScope.materializeAndRelease(out, nodes, edges)
   }
 
@@ -591,7 +585,6 @@ object Linkage {
       .filter(col("dist") >= 0)
       .select(col("probe_id"), col("dirty_name"), col("clean_name"),
         col("dist").cast("long").as("dist"))
-      .orderBy("probe_id", "clean_name")
   }
 
   val editDistanceLinkageSql: String = """
@@ -683,7 +676,6 @@ object Linkage {
     }
     val out = auditRow("first_char", firstChar)
       .unionAll(auditRow("length", lenKey))
-      .orderBy("blocker")
     CacheScope.materializeAndRelease(out, probes, catalog)
   }
 

@@ -122,7 +122,6 @@ object Multimodal {
   /** Metadata-only projection (oracle-checkable). */
   def mediaMeta(s: SparkSession, dir: String): DataFrame =
     mediaTable(s, dir).select(col("doc_id"), col("fmt"), col("n_bytes"))
-      .orderBy("doc_id")
 
   val mediaMetaSql: String = """
     SELECT doc_id, 'text/plain' AS fmt,
@@ -165,7 +164,6 @@ object Multimodal {
           wav.samples.length.toLong, sumAbs, maxAbs)
       }
     }.toDF()
-      .orderBy("doc_id")
   }
 
   /** DuckDB replica: the corpus is pure ASCII < 128, so each PCM
@@ -209,7 +207,6 @@ object Multimodal {
       .select(col("doc_id"), col("frame_no"),
         octet_length(col("frame")).cast("long").as("frame_bytes"),
         md5(col("frame")).as("frame_md5"))
-      .orderBy("doc_id", "frame_no")
   }
 
   /** DuckDB oracle: the corpus is pure ASCII (verified), so character
@@ -318,7 +315,6 @@ object Multimodal {
           img.width.toLong, img.height.toLong, sr, sg, sb)
       }
     }.toDF()
-      .orderBy("doc_id")
   }
 
   /** DuckDB replica via the synth formula: pure-ASCII corpus, so the
@@ -385,7 +381,6 @@ object Multimodal {
           img.width.toLong, img.height.toLong, sr, sg, sb)
       }
     }.toDF()
-      .orderBy("doc_id")
   }
 
   /** Resized replica: pixel x of the output is source pixel 2x, i.e.
@@ -459,7 +454,6 @@ object Multimodal {
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("ok") === 0, 1L).otherwise(0L)).as("n_quarantined"),
         sum(col("sum_r")).as("decoded_sum_r"))
-      .orderBy("source")
   }
 
   /** Closed-form oracle: exactly the planted truncations fail; the
@@ -520,7 +514,6 @@ object Multimodal {
             sumAbs, maxAbs)
         }
       }.toDF()
-      .orderBy("doc_id")
   }
 
   /** Surviving sample i is source sample 2i = the odd-position
@@ -595,7 +588,6 @@ object Multimodal {
         (col("prev").isNotNull &&
           abs(col("sum_r") - col("prev")) > SceneThreshold)
           .cast("long").as("is_scene_change"))
-      .orderBy("doc_id", "frame_no")
   }
 
   /** DuckDB replica via the synth formula (pure-ASCII corpus: the
@@ -672,7 +664,6 @@ object Multimodal {
         count(lit(1)).as("n_frames"),
         sum(col("energy")).as("seg_energy"))
       .select("doc_id", "seg_start", "seg_end", "n_frames", "seg_energy")
-      .orderBy("doc_id", "seg_start")
   }
 
   /** Closed-form synth replica: frame f's energy is the sum of
@@ -777,7 +768,6 @@ object Multimodal {
     hashed.groupBy("width", "phash")
       .agg(count(lit(1)).as("n_images"),
         min(col("doc_id")).as("keeper_id"))
-      .orderBy("width", "phash")
   }
 
   /** Closed-form replica: the red channel is the document's byte

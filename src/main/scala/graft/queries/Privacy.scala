@@ -52,7 +52,6 @@ object Privacy {
         (count(lit(1)) * col("class_size")).as("n_rows"),
         max(when(col("class_size") < K, 1L).otherwise(0L) === 1L)
           .as("at_risk"))
-      .orderBy("class_size")
 
   val kAnonymityAuditSql: String = s"""
     WITH classes AS (
@@ -108,7 +107,6 @@ object Privacy {
       .withColumn("meets_k", col("min_class_size") >= K)
       .select("level", "n_classes", "min_class_size", "rows_at_risk",
         "risk_ppm", "meets_k")
-      .orderBy("level")
   }
 
   val generalizationLadderSql: String = {
@@ -165,7 +163,6 @@ object Privacy {
         sum(col("class_size")).as("n_rows"),
         max(when(col("n_sensitive") < L, 1L).otherwise(0L) === 1L)
           .as("fails_l"))
-      .orderBy("n_sensitive")
 
   val lDiversityAuditSql: String = s"""
     WITH classes AS (
@@ -246,7 +243,6 @@ object Privacy {
         greatest(lit(0L), col("n") + noise).as("noisy_count"),
         lit(693147L).as("eps_micro"), // ε = ln 2 in micro-nats
         lit(12L).as("trunc_at"))
-      .orderBy("nation", "segment")
   }
 
   val dpCountsSql: String = {
@@ -311,7 +307,6 @@ object Privacy {
         (col("n_reported_yes") * 2000L - col("n") * 500L)
           .as("est_true_milli"),
         lit(1098612L).as("eps_micro")) // ε = ln 3 in micro-nats
-      .orderBy("nation")
   }
 
   val randomizedResponseSql: String = """

@@ -62,7 +62,6 @@ object Relational {
         (dsum(col("l_extendedprice"), 2) / count(lit(1))).as("avg_price"),
         (dsum(col("l_discount"), 2) / count(lit(1))).as("avg_disc"),
         count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
   }
 
   val q01Sql: String = s"""
@@ -93,7 +92,6 @@ object Relational {
         count(lit(1)).as("order_cnt"),
         dsum(col("o_totalprice"), 2).as("total_revenue"),
         countDistinct(col("o_custkey")).as("active_customers"))
-      .orderBy("c_mktsegment")
   }
 
   val q02Sql: String = s"""
@@ -151,7 +149,6 @@ object Relational {
         "left_semi")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("order_cnt"))
-      .orderBy("o_orderpriority")
   }
 
   val q04Sql: String = """
@@ -174,7 +171,6 @@ object Relational {
     c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
       .groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("cust_cnt"))
-      .orderBy("c_nationkey")
   }
 
   val q05Sql: String = """
@@ -221,7 +217,6 @@ object Relational {
       .filter(col("rn") <= 3)
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
         col("rn"))
-      .orderBy("o_custkey", "rn")
   }
 
   val q07Sql: String = """
@@ -251,7 +246,6 @@ object Relational {
       .select(col("o_custkey"), col("p.tag").as("o_orderkey"),
         col("p.score").as("o_totalprice"),
         (col("pos") + 1).cast("long").as("rn"))
-      .orderBy("o_custkey", "rn")
   }
 
   /** q28 — GROUPING SETS with an ASYMMETRIC margin set: (region,
@@ -277,7 +271,6 @@ object Relational {
       .select(coalesce(col("r_name"), lit("ALL")).as("region"),
         coalesce(col("n_name"), lit("ALL")).as("nation"),
         col("revenue"), col("order_cnt"))
-      .orderBy("region", "nation")
   }
 
   val q28Sql: String = s"""
@@ -309,7 +302,6 @@ object Relational {
       .select(coalesce(col("r_name"), lit("ALL")).as("region"),
         coalesce(col("n_name"), lit("ALL")).as("nation"),
         col("revenue"), col("order_cnt"))
-      .orderBy("region", "nation")
   }
 
   val q08Sql: String = s"""
@@ -335,7 +327,6 @@ object Relational {
         countDistinct(col("l_suppkey")).as("supp_cnt"),
         countDistinct(col("l_orderkey")).as("order_cnt"),
         count(lit(1)).as("lineitem_cnt"))
-      .orderBy("p_brand")
   }
 
   val q09Sql: String = """
@@ -358,7 +349,6 @@ object Relational {
       .distinct()
       .except(n.filter(col("n_regionkey") === 0)
         .select(col("n_nationkey").as("nationkey")))
-      .orderBy("nationkey")
   }
 
   val q10Sql: String = """
@@ -380,7 +370,6 @@ object Relational {
         concat(col("p_brand"), lit("/"), col("p_type")).as("brand_type"),
         length(col("p_name")).cast("long").as("name_len"),
         regexp_replace(col("p_name"), " ", "_").as("name_snake"))
-      .orderBy("p_partkey")
   }
 
   val q11Sql: String = """
@@ -401,7 +390,6 @@ object Relational {
         month(col("o_orderdate")).cast("long").as("o_month"))
       .agg(count(lit(1)).as("order_cnt"),
         dsum(col("o_totalprice"), 2).as("revenue"))
-      .orderBy("o_year", "o_month")
   }
 
   val q12Sql: String = s"""
@@ -427,7 +415,6 @@ object Relational {
         dsum(col("l_quantity"), 2).as("total_qty"),
         count(lit(1)).as("li_cnt"),
         countDistinct(col("o_orderkey")).as("order_cnt"))
-      .orderBy("o_orderpriority")
   }
 
   val q13Sql: String = s"""
@@ -449,7 +436,6 @@ object Relational {
       .filter(col("rn") <= 5)
       .select(col("p_brand"), col("p_partkey"), col("p_name"),
         col("p_retailprice"), col("rn"))
-      .orderBy("p_brand", "rn")
   }
 
   val q14Sql: String = """
@@ -473,7 +459,6 @@ object Relational {
       .select(coalesce(col("p_brand"), lit("ALL")).as("brand"),
         coalesce(col("p_size").cast("long"), lit(-1L)).as("size"),
         col("part_cnt"), col("total_price"))
-      .orderBy("brand", "size")
   }
 
   val q15Sql: String = s"""
@@ -499,7 +484,6 @@ object Relational {
         approx_count_distinct(col("l_orderkey"), 0.02).as("approx_orders"),
         countDistinct(col("l_partkey")).as("exact_parts"),
         approx_count_distinct(col("l_partkey"), 0.02).as("approx_parts"))
-      .orderBy("l_returnflag")
   }
 
   /** The exact-distinct columns of q18, split out for the DuckDB
@@ -529,7 +513,6 @@ object Relational {
         expr("percentile(l_extendedprice, 0.5)").as("p50_price"),
         expr("percentile(l_extendedprice, 0.95)").as("p95_price"),
         expr("percentile(l_quantity, 0.5)").as("p50_qty"))
-      .orderBy("l_returnflag")
   }
 
   val q19Sql: String = """
@@ -554,7 +537,6 @@ object Relational {
           .as("p50_price"),
         expr("approx_percentile(l_extendedprice, 0.95, 10000)")
           .as("p95_price"))
-      .orderBy("l_returnflag")
   }
 
   /** name -> (query fn, oracle sql) */
@@ -575,7 +557,6 @@ object Relational {
       .pivot("o_orderstatus", Seq("F", "O", "P"))
       .agg(count(lit(1)).as("n"),
         dsum(col("o_totalprice"), 2).as("rev"))
-      .orderBy("o_year")
 
   val q24Sql: String = s"""
     SELECT EXTRACT(YEAR FROM o_orderdate) AS o_year,
@@ -683,7 +664,6 @@ object Relational {
         ntile(4).over(w).cast("long").as("quartile"),
         sum(col("o_totalprice").cast(DecimalType(18, 2))).over(w)
           .cast("double").as("running_spend"))
-      .orderBy("o_custkey", "o_orderkey")
   }
 
   val q29Sql: String = """
@@ -736,7 +716,6 @@ object Relational {
       .select(col("o_orderpriority"),
         date_format(col("day"), "yyyy-MM-dd").as("day"),
         col("reading"), col("filled"))
-      .orderBy("o_orderpriority", "day")
   }
 
   val q30Sql: String = """
@@ -793,7 +772,6 @@ object Relational {
       .rangeBetween(-30, 0)
     df.withColumn("rolling_cents", sum(col("cents")).over(w))
       .withColumn("n_win", count(lit(1)).over(w))
-      .orderBy("o_orderkey")
   }
 
   val q32Sql: String = """
@@ -834,7 +812,6 @@ object Relational {
         "stack(3, 'F', F_n, F_rev, 'O', O_n, O_rev, 'P', P_n, P_rev) " +
           "AS (o_status, n_orders, revenue)")
       .filter(col("n_orders") > 0)
-      .orderBy("o_year", "o_status")
 
   val q34Sql: String = s"""
     SELECT EXTRACT(YEAR FROM o_orderdate) AS o_year,
@@ -893,7 +870,6 @@ object Relational {
       .groupBy("month")
       .agg(max(col("open")).as("max_open"),
         count(lit(1)).as("days_changed"))
-      .orderBy("month")
   }
 
   val q35Sql: String = """
@@ -984,7 +960,7 @@ object Relational {
     val exc = cn.exceptAll(sn)
       .groupBy("n").agg(count(lit(1)).as("cnt"))
       .select(lit("except_all").as("op"), col("n"), col("cnt"))
-    inter.unionAll(exc).orderBy("op", "n")
+    inter.unionAll(exc)
   }
 
   val q37Sql: String = """
@@ -1035,7 +1011,6 @@ object Relational {
       .agg(count(lit(1)).as("n_customers"))
       .select(label.as("cohort"), col("month_offset"),
         col("n_customers"))
-      .orderBy("cohort", "month_offset")
   }
 
   val q39Sql: String = """
@@ -1088,7 +1063,6 @@ object Relational {
             x => x.getField("c_custkey").cast("string")), ",")
           .as("top3_custkeys"),
         count(lit(1)).as("n_top"))
-      .orderBy("c_nationkey")
   }
 
   val q40Sql: String = """
@@ -1134,7 +1108,6 @@ object Relational {
           .as("n_priorities"),
         aggregate(map_values(col("profile")), lit(0L), _ + _)
           .as("n_orders"))
-      .orderBy("o_custkey")
   }
 
   val q41Sql: String = """

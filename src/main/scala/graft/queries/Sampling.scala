@@ -56,7 +56,6 @@ object Sampling {
       Map("en" -> 0.25, "de" -> 0.8, "fr" -> 0.8, "es" -> 0.8,
         "zh" -> 1.0),
       seed = 4242)
-      .orderBy("doc_id")
 
   // ------------------------------------------------- mixture sampling
   private val MixShards = 8
@@ -117,7 +116,7 @@ object Sampling {
     * same budget derivation and window. */
   def mixtureDemo(s: SparkSession, dir: String): DataFrame =
     mixtureSample(Relational.table(s, dir, "documents"),
-      MixTargets.toMap).orderBy("doc_id")
+      MixTargets.toMap)
 
   /** The oracle replays the exact arithmetic: DECIMAL literals are
     * cast to DOUBLE before any division so both engines do the same
@@ -171,7 +170,6 @@ object Sampling {
       .select(col("source"), col("doc_id"))
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= SourceCap)
-      .orderBy("source", "doc_id")
   }
 
   val sourceCapSql: String = s"""
@@ -196,8 +194,8 @@ object Sampling {
     * property `randomSplit()` (per-partition RNG) cannot give. Exactly
     * the same contract as [[deterministicSample]], but 3-way and
     * oracle-checkable end-to-end because the gate is plain arithmetic
-    * rather than an engine hash. Map-only at any scale; the orderBy is
-    * presentation for the compare. */
+    * rather than an engine hash. The split itself is map-side; the
+    * only shuffle is the per-(lang, split) count. */
   def trainSplit(s: SparkSession, dir: String): DataFrame = {
     val h = pmod(col("doc_id") * SplitMult, lit(SplitMod))
     val bucket = pmod(h, lit(100L))
@@ -208,7 +206,6 @@ object Sampling {
       .groupBy("lang", "split")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).as("sum_doc_id"))
-      .orderBy("lang", "split")
   }
 
   val trainSplitSql: String = s"""
@@ -260,7 +257,6 @@ object Sampling {
       .withColumn("pos",
         (col("offset") + row_number().over(wIn) - 1).cast("long"))
       .select(col("doc_id"), col("skey"), col("pos"))
-      .orderBy("doc_id")
   }
 
   val epochShuffleSql: String = s"""
@@ -310,7 +306,6 @@ object Sampling {
       .withColumn("pos",
         (col("offset") + row_number().over(wIn) - 1).cast("long"))
       .select(col("doc_id"), col("stage"), col("pos"))
-      .orderBy("doc_id")
   }
 
   val curriculumOrderSql: String = s"""
@@ -363,7 +358,6 @@ object Sampling {
       .agg(min(struct(col("h"), col("doc_id"))).as("b"))
       .select(col("a").as("anchor_id"), col("j").cast("long").as("j"),
         col("b.doc_id").as("neg_id"))
-      .orderBy("anchor_id", "j")
   }
 
   /** md5 values are distinct across distinct preimages (a collision
@@ -408,7 +402,6 @@ object Sampling {
       .select(col("doc_id"), quality.as("quality"), u.as("draw"))
       .filter(col("draw") * 20 < col("quality") * 4294967296L)
       .select("doc_id", "quality")
-      .orderBy("doc_id")
   }
 
   val importanceResampleSql: String = """
@@ -470,7 +463,6 @@ object Sampling {
       .withColumn("quota", quotaCol)
       .select("source", "quota", "n_selected", "sum_doc_id",
         "max_doc_id")
-      .orderBy("source")
   }
 
   /** The oracle recomputes the apportionment itself in SQL (floors,
@@ -559,7 +551,6 @@ object Sampling {
         min(col("w")).as("w"))
       .select("source", "n_tok", "w", "rate_ppm", "n_accepted",
         "tok_accepted")
-      .orderBy("source")
   }
 
   val temperatureMixtureSql: String = """
@@ -622,7 +613,6 @@ object Sampling {
       .groupBy("fold", "source")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("n_tokens"))
-      .orderBy("fold", "source")
   }
 
   val groupedKfoldSql: String = """
@@ -661,7 +651,6 @@ object Sampling {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("lang"), col("rank"), col("doc_id"))
-      .orderBy("lang", "rank")
   }
 
   val exactHoldoutSql: String = """
@@ -712,7 +701,6 @@ object Sampling {
       .agg(count(lit(1)).as("n_docs"),
         count_distinct(col("cluster_id")).as("n_clusters"),
         sum(col("n_tokens")).as("n_tokens"))
-      .orderBy("bucket")
   }
 
   private def clusterChain(s: SparkSession, dir: String): DataFrame =
@@ -808,7 +796,6 @@ object Sampling {
         sum(col("doc_id")).as("sum_anchor"),
         sum(col("pos_id")).as("sum_pos"),
         sum(col("neg_id")).as("sum_neg"))
-      .orderBy("lang", "status")
   }
 
   val contrastiveTripletsSql: String = """

@@ -77,7 +77,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= TopK)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"))
-      .orderBy("query_id", "rank")
   }
 
   val annBruteForceSql: String = s"""
@@ -132,7 +131,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= TopK)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"))
-      .orderBy("query_id", "rank")
     (out, Seq(bucketed))
   }
 
@@ -262,7 +260,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= TopK)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"))
-      .orderBy("query_id", "rank")
   }
 
   // --------------------------------------- s24 stored IVF index (serve)
@@ -335,7 +332,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"))
-      .orderBy("query_id", "rank")
   }
 
   /** Spec hook: the serve-path scan WITHOUT the final materialization,
@@ -1093,7 +1089,6 @@ object Similarity {
     * normalizer they used to weight). */
   def bm25Erased(s: SparkSession, dir: String): DataFrame =
     hybridLexArmStoredAt(s, dir, buildErasedIndexes(s, dir)._1)
-      .orderBy("query_id", "lex_rank")
 
   lazy val bm25ErasedSql: String = s"""
     WITH corpus AS (
@@ -1211,7 +1206,6 @@ object Similarity {
         aggregate(col("q"), lit(0L), (acc, x) => acc + x).as("qsum"),
         array_min(col("q")).as("qmin"),
         array_max(col("q")).as("qmax"))
-      .orderBy("vec_id")
 
   val quantizeSql: String = """
     SELECT vec_id,
@@ -1242,7 +1236,6 @@ object Similarity {
     emb.select(nearestCentroidCol(col("embedding"), cents)
         .as("cluster_id"))
       .groupBy("cluster_id").agg(count(lit(1)).as("n_points"))
-      .orderBy("cluster_id")
   }
 
   /** Test hook: per-vector assignments through the codegen'd argmax
@@ -1420,7 +1413,6 @@ object Similarity {
       .withColumn("rank", row_number().over(wExact).cast("long"))
       .filter(col("rank") <= TopK)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"))
-      .orderBy("query_id", "rank")
   }
 
   // ---------------------------------------------------- s13 MMR
@@ -1492,7 +1484,6 @@ object Similarity {
         }
       }
       .toDF("query_id", "pick_rank", "vec_id")
-      .orderBy("query_id", "pick_rank")
   }
 
   /** The DuckDB-checkable slice of s13: MMR's first pick IS the
@@ -1501,7 +1492,6 @@ object Similarity {
   def mmrFirstPickInv(s: SparkSession, dir: String): DataFrame =
     mmrDiversify(s, dir).filter(col("pick_rank") === 1)
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
-      .orderBy("query_id")
 
   val mmrFirstPickSql: String = s"""
     SELECT query_id, neighbor_id FROM (
@@ -1556,7 +1546,6 @@ object Similarity {
     }
     quant.select(col("vec_id"), explode(array(ys.toSeq: _*)).as("p"))
       .select(col("vec_id"), col("p.j").as("j"), col("p.y").as("y"))
-      .orderBy("vec_id", "j")
   }
 
   val randomProjectionSql: String = {
@@ -1621,7 +1610,6 @@ object Similarity {
       .filter(col("rank") <= TopK)
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("hamming"), col("rank"))
-      .orderBy("query_id", "rank")
   }
 
   val hammingAnnSql: String = {
@@ -1783,7 +1771,6 @@ object Similarity {
         posexplode(col("top")).as(Seq("pos", "p")))
       .select(col("query_id"), col("p.tag").as("neighbor_id"),
         (col("pos") + 1).cast("long").as("rank"))
-      .orderBy("query_id", "rank")
   }
 
   // ------------------------------------------- s26 hybrid retrieval (RRF)
@@ -1901,7 +1888,6 @@ object Similarity {
       .filter(col("fused_rank") <= HybridFinalK)
       .select(col("query_id"), col("doc_id"), col("lex_rank"),
         col("vec_rank"), col("rrf_nano"), col("fused_rank"))
-      .orderBy("query_id", "fused_rank")
   }
 
   val hybridRrfSql: String = s"""
@@ -2299,7 +2285,6 @@ object Similarity {
     * an approximation-free continuously-ingestible text index. */
   def bm25Upserted(s: SparkSession, dir: String): DataFrame =
     hybridLexArmStoredAt(s, dir, buildUpsertedBm25Index(s, dir)._1)
-      .orderBy("query_id", "lex_rank")
 
   /** s30's structural contract beyond the direct oracle: (1) the
     * upserted index's FILES serve identically to a full rebuild's;
@@ -2510,7 +2495,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= TopK)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"))
-      .orderBy("query_id", "rank")
   }
 
   /** The pre-filter exact ground truth s27 is measured against: filter
@@ -2536,7 +2520,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= TopK)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"))
-      .orderBy("query_id", "rank")
   }
 
   val annFilteredExactSql: String = s"""
@@ -2609,7 +2592,7 @@ object Similarity {
       : Array[Array[Array[Float]]] = {
     val rows = s.read
       .parquet(new java.io.File(root, "codebooks").getAbsolutePath)
-      .orderBy("m", "k").collect()
+      .collect()
     val out = Array.ofDim[Array[Float]](PqM, PqK)
     rows.foreach(r =>
       out(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray)
@@ -2693,7 +2676,6 @@ object Similarity {
       .filter(col("rank") <= TopK)
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("rank"))
-      .orderBy("query_id", "rank")
   }
 
   val all: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] =

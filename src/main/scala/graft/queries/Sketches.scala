@@ -54,7 +54,6 @@ object Sketches {
       .toDF("token", "n_true", "row", "bucket")
     probes.join(broadcast(sketch(toks)), Seq("row", "bucket"))
       .groupBy("token", "n_true").agg(min(col("c")).as("est"))
-      .orderBy(col("n_true").desc, col("token"))
   }
 
   /** t12's invariant projection, fully oracle-checked: the oracle
@@ -130,7 +129,6 @@ object Sketches {
       .select(col("ta"), col("tb"), col("exact_a"), col("exact_b"),
         col("exact_union"), col("exact_inter"), col("est_a"),
         col("est_b"), col("est_union"), col("est_inter"))
-      .orderBy("ta", "tb")
   }
 
   /** Exact pairwise distinct/union/intersection truth over the
@@ -256,7 +254,6 @@ object Sketches {
       .select(col("ta"), col("tb"), col("exact_a"), col("exact_b"),
         col("exact_union"), col("exact_inter"), col("est_a"),
         col("est_b"), col("est_union"), col("est_inter"))
-      .orderBy("ta", "tb")
   }
 
   /** sk02's invariant projection, fully oracle-checked — kmvInv's
@@ -310,7 +307,6 @@ object Sketches {
         col("est").getItem(0).as("est_q50"),
         col("est").getItem(1).as("est_q90"),
         col("est").getItem(2).as("est_q99"))
-      .orderBy("event_type")
 
   /** sk03's invariant projection, fully oracle-checked: exact
     * discrete quantiles (value at rank ⌈q·n⌉ — pure integer rank
@@ -375,7 +371,6 @@ object Sketches {
       .select(col("event_type"), col("n"), col("exact_q50"),
         col("exact_q90"), col("exact_q99"),
         okFlag("q50", 1, 2), okFlag("q90", 9, 10), okFlag("q99", 99, 100))
-      .orderBy("event_type")
   }
 
   val quantileInvSql: String = """
@@ -438,7 +433,6 @@ object Sketches {
         gkEstimate(col("st"), 0.5).cast("long").as("est_q50"),
         gkEstimate(col("st"), 0.9).cast("long").as("est_q90"),
         gkEstimate(col("st"), 0.99).cast("long").as("est_q99"))
-      .orderBy("event_type")
   }
 
   /** sk04's invariant projection — [[quantileInvOn]] at the merged-
@@ -477,7 +471,6 @@ object Sketches {
       .agg(count(lit(1)).as("n_epochs"),
         hll_sketch_estimate(hll_union_agg(col("sk"), lit(true)))
           .as("est_distinct_users"))
-      .orderBy("event_type")
   }
 
   /** sk06's invariant projection, fully oracle-checked: exact
@@ -493,7 +486,6 @@ object Sketches {
         (abs(col("est_distinct_users") - col("exact_distinct_users")) <=
           ceil(col("exact_distinct_users") * HllDistinctBound) + lit(1L))
           .as("ok_est"))
-      .orderBy("event_type")
   }
 
   val hllMvInvSql: String = """
@@ -605,7 +597,6 @@ object Sketches {
         exactEE * 1000L / math.max(1L, estEE.toLong)))
       .toDF("pair", "n_a", "n_b", "exact_join", "est_join", "ok",
         "skew_x1000")
-      .orderBy("pair")
   }
 
   /** sk05's invariant projection — exact truth + the contract flags,
@@ -794,7 +785,6 @@ object Sketches {
     }
     rows.toDF("pair", "n_left", "n_right", "decision", "executed_join",
         "plan_matches", "n_out")
-      .orderBy("pair")
   }
 
   /** DuckDB replays the decision rule from its own exact counts and
@@ -940,7 +930,6 @@ object Sketches {
     rows.toDF("pair", "n_left", "n_right", "est_left", "est_right",
         "decision_est", "decision_exact", "flip", "executed_join",
         "audit_ok", "est_ok", "n_out")
-      .orderBy("pair")
   }
 
   def cboSketchStrategy(s: SparkSession, dir: String): DataFrame =
@@ -1067,7 +1056,6 @@ object Sketches {
         col("exact_rows"), col("est_rows"),
         (abs(col("est_rows") - col("exact_rows")) <=
           lit(4.0) * col("n") / SelAccuracy + 1.0).as("ok"))
-      .orderBy("tbl", "lo")
   }
 
   /** Deterministic projection of sk09 (drops the merge-tree-dependent
@@ -1416,7 +1404,7 @@ object Sketches {
           finalRows)
       }
     }
-    rows.toDF().orderBy("scenario")
+    rows.toDF()
   }
 
   /** sk11's oracle companion — every DECISION replayed by DuckDB from
@@ -1778,7 +1766,7 @@ object Sketches {
     s.createDataFrame(
       rows.map(r => org.apache.spark.sql.Row
         .fromSeq(r.productIterator.toSeq)).asJava,
-      sk12Schema).orderBy("scenario")
+      sk12Schema)
   }
 
   /** sk12's oracle companion — every decision replayed by DuckDB from
@@ -2234,7 +2222,7 @@ object Sketches {
     s.createDataFrame(
       rows.map(r => org.apache.spark.sql.Row
         .fromSeq(r.productIterator.toSeq)).asJava,
-      schema).orderBy("scenario")
+      schema)
   }
 
   /** sk14's oracle companion: order decisions and counts replayed by

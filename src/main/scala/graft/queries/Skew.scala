@@ -37,7 +37,6 @@ object Skew {
         sum(col("l_quantity").cast(
           org.apache.spark.sql.types.DecimalType(18, 2))).cast("double")
           .as("total_qty"))
-      .orderBy("o_orderpriority")
   }
 
   val q16Sql: String = """

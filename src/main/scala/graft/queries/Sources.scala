@@ -39,7 +39,6 @@ object Sources {
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).as("sum_doc_id"),
         sum(length(col("text")).cast("long")).as("sum_chars"))
-      .orderBy("source")
   }
 
   val jsonlRoundtripSql: String = """
@@ -85,7 +84,6 @@ object Sources {
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).as("sum_doc_id"),
         sum(col("n_chars").cast("long")).as("sum_chars"))
-      .orderBy("lang", "source")
   }
 
   val partitionedSinkSql: String = """
@@ -122,7 +120,6 @@ object Sources {
         sum(col("doc_id")).as("sum_doc_id"),
         sum(col("n_chars")).as("sum_n_chars"),
         sum(length(col("text")).cast("long")).as("sum_chars"))
-      .orderBy("source")
   }
 
   val orcRoundtripSql: String = """
@@ -223,7 +220,6 @@ object Sources {
         sum(length(col("text")).cast("long")).as("sum_chars"),
         sum(length(regexp_replace(col("text"), "[^\"\n,]", ""))
           .cast("long")).as("sum_hostile"))
-      .orderBy("lang")
   }
 
   val csvRoundtripSql: String = """
@@ -267,7 +263,6 @@ object Sources {
           get_json_object(col("pr"), "$.k").cast("long")))
       .groupBy("event_type", "status")
       .agg(count(lit(1)).as("n"), sum(col("k")).as("k_sum"))
-      .orderBy("event_type", "status")
   }
 
   val jsonQuarantineSql: String = """
@@ -324,7 +319,6 @@ object Sources {
         sum(when(col("n_chars").isNull, 1L).otherwise(0L))
           .as("null_n_chars"),
         sum(length(col("text"))).as("sum_text_len"))
-      .orderBy("epoch")
   }
 
   val schemaEvolutionSql: String = """
@@ -370,7 +364,6 @@ object Sources {
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).as("sum_doc_id"),
         sum(col("n_chars").cast("long")).as("sum_chars"))
-      .orderBy("bucket")
   }
 
   val dynamicOverwriteSql: String = """
@@ -483,7 +476,6 @@ object Sources {
       .agg(count(lit(1)).as("n_orders"),
         sum(col("o_totalprice").cast(DecimalType(18, 2))).cast("double")
           .as("total_price"))
-      .orderBy("c_mktsegment")
   }
 
   /** Write orders + customer as 16-bucket catalog tables keyed on
@@ -555,7 +547,6 @@ object Sources {
       .agg(count(lit(1)).as("n_lines"),
         sum(col("l_quantity").cast(DecimalType(18, 2))).cast("double")
           .as("sum_qty"))
-      .orderBy("ship_month")
 
   /** The pruned join alone (pre-aggregate) for the plan assert.
     *
@@ -652,7 +643,6 @@ object Sources {
         sum(col("k")).as("sum_key"),
         sum(col("p").cast(DecimalType(18, 2))).cast("double")
           .as("sum_price"))
-      .orderBy("pr")
   }
 
   val variantShredSql: String = """
@@ -726,7 +716,6 @@ object Sources {
       .agg(count(lit(1)).as("n_lines"),
         sum(col("l_quantity").cast(DecimalType(18, 2))).cast("double")
           .as("sum_qty"))
-      .orderBy("l_returnflag")
   }
 
   val bloomJoinSql: String = """
@@ -770,7 +759,6 @@ object Sources {
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).as("sum_doc_id"),
         sum(length(col("text")).cast("long")).as("sum_chars"))
-      .orderBy("source")
   }
 
   val xmlRoundtripSql: String = """
@@ -822,7 +810,6 @@ object Sources {
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).as("sum_doc_id"))
       .withColumn("n_files_total", lit(nFilesSeen))
-      .orderBy("source")
   }
 
   val metadataColumnsSql: String = """

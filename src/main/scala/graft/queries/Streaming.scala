@@ -38,7 +38,7 @@ object Streaming {
   /** Tumbling 1-hour windows per event type. */
   def tumblingWindow(s: SparkSession, dir: String): DataFrame =
     EventStreams.windowedAgg(events(s, dir), "1 hour", "1 hour",
-      "10 minutes").orderBy("w_start", "event_type")
+      "10 minutes")
 
   val tumblingWindowSql: String = """
     SELECT strftime(time_bucket(INTERVAL '1 hour', ts),
@@ -52,7 +52,7 @@ object Streaming {
   /** Sliding windows: 1 hour every 30 minutes. */
   def slidingWindow(s: SparkSession, dir: String): DataFrame =
     EventStreams.windowedAgg(events(s, dir), "1 hour", "30 minutes",
-      "10 minutes").orderBy("w_start", "event_type")
+      "10 minutes")
 
   /** DuckDB has no sliding-window builtin — each event is unnested into
     * its two covering 30-minute-aligned window starts instead. */
@@ -74,7 +74,6 @@ object Streaming {
     EventStreams.sessionizeBatch(events(s, dir), gapMinutes = 30)
       .select(col("user_id"), col("session_start"), col("n_events"),
         col("total_value"))
-      .orderBy("user_id", "session_start")
 
   val sessionizeSql: String = """
     SELECT user_id,
@@ -99,7 +98,6 @@ object Streaming {
   def sessionWindowNative(s: SparkSession, dir: String): DataFrame =
     EventStreams.sessionWindowAgg(events(s, dir), "30 minutes",
       "10 minutes")
-      .orderBy("user_id", "session_start")
 
   /** st03's oracle verbatim: session_window merges windows that
     * TOUCH (event at exactly prev_ts + gap extends the session —
@@ -167,7 +165,6 @@ object Streaming {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("k")).as("k_sum"),
         min(col("k")).as("k_min"), max(col("k")).as("k_max"))
-      .orderBy("event_type")
 
   // DuckDB widens sum(BIGINT) to HUGEINT (int128), which the driver's
   // hasher serializes differently from Spark's LongType — cast the
@@ -194,7 +191,6 @@ object Streaming {
       .select(col("event_id"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_str"),
         col("user_id"), col("event_type"), col("value"))
-      .orderBy("event_id")
   }
 
   val dedupReplaySql: String = """
@@ -224,7 +220,6 @@ object Streaming {
           .cast("double").as("clicks_value"))
       .select(col("purchase_id"), col("p_user").as("user_id"),
         col("n_clicks"), col("last_click_us"), col("clicks_value"))
-      .orderBy("purchase_id")
   }
 
   val attributionSql: String = """
@@ -260,7 +255,6 @@ object Streaming {
           .otherwise(lit(0d))
           .cast(org.apache.spark.sql.types.DecimalType(18, 6)))
           .cast("double").as("kept_value"))
-      .orderBy("user_id", "day")
 
   val quotaSql: String = s"""
     WITH ranked AS (
@@ -295,7 +289,6 @@ object Streaming {
         sum(col("value")
           .cast(org.apache.spark.sql.types.DecimalType(18, 6)))
           .cast("double").as("total_value"))
-      .orderBy("mktsegment", "event_type")
   }
 
   val enrichSegmentsSql: String = """
@@ -329,7 +322,6 @@ object Streaming {
           .cast("double").as("clicks_value"))
       .select(col("purchase_id"), col("p_user").as("user_id"),
         col("n_clicks"), col("last_click_us"), col("clicks_value"))
-      .orderBy("purchase_id")
   }
 
   val attributionOuterSql: String = """
@@ -359,7 +351,6 @@ object Streaming {
     * path emits the identical alert set across batch slicings. */
   def spendAlerts(s: SparkSession, dir: String): DataFrame =
     EventStreams.spendAlertsBatch(events(s, dir), SpendThresholdMicros)
-      .orderBy("user_id", "event_id")
 
   val spendAlertsSql: String = s"""
     WITH purchases AS (
@@ -388,7 +379,6 @@ object Streaming {
     * string compare) and their sum. */
   def recentBaskets(s: SparkSession, dir: String): DataFrame =
     EventStreams.recentBasketBatch(events(s, dir), BasketN)
-      .orderBy("user_id", "event_id")
 
   val recentBasketsSql: String = s"""
     SELECT user_id, event_id,
@@ -414,7 +404,6 @@ object Streaming {
     * the identical alerts under event-time-ordered slicing. */
   def idleUsers(s: SparkSession, dir: String): DataFrame =
     EventStreams.idleBatch(events(s, dir), IdleGapMinutes, IdleWmMinutes)
-      .orderBy("user_id", "last_seen_us")
 
   val idleUsersSql: String = s"""
     WITH mx AS (SELECT max(ts) AS max_ts FROM events),
@@ -440,7 +429,6 @@ object Streaming {
     * integer running counts → bit-exact oracle. */
   def userProfiles(s: SparkSession, dir: String): DataFrame =
     EventStreams.profileBatch(events(s, dir))
-      .orderBy("user_id", "event_id")
 
   val userProfilesSql: String = {
     val counts = EventStreams.ProfileTypes.map(t =>
@@ -458,7 +446,6 @@ $counts
   /** Two-level windowed rollup (chained stateful aggregations). */
   def chainedRollup(s: SparkSession, dir: String): DataFrame =
     EventStreams.chainedRollup(events(s, dir), "10 minutes")
-      .orderBy("w_start", "event_type")
 
   /** One-level hour oracle: the chained two-level sum must match the
     * direct aggregation bit for bit (micro-unit longs all the way);
@@ -494,7 +481,6 @@ $counts
         unix_micros(col("latest.ts")).as("latest_us"),
         col("latest.event_id").as("latest_event_id"),
         col("latest.value").as("latest_value"))
-      .orderBy("user_id", "event_type")
   }
 
   /** st18 core, parameterized by chunk size so the spec can exercise
@@ -545,7 +531,6 @@ $counts
       sum(when(col("late_us") >= 3600000000L, 1L).otherwise(0L))
         .as("late_ge_1h"),
       expr("max(late_us) div 60000000").as("max_late_min"))
-      .orderBy("event_type")
   }
 
   // ------------------------------------------------ st18 lateness audit
@@ -636,7 +621,6 @@ $counts
         expr("n_dropped * 1000000 div n_events"))
       .select("event_type", "delay_us", "n_events", "n_dropped",
         "drop_ppm")
-      .orderBy("event_type")
     CacheScope.materializeAndRelease(out, late)
   }
 
@@ -726,7 +710,6 @@ $counts
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
         sum(micro).as("sum_value_micros"))
-      .orderBy("event_type")
   }
 
   val backfillSeamSql: String = """
@@ -770,7 +753,7 @@ $counts
 
   private type Ev = org.apache.spark.sql.Dataset[EventStreams.Event]
 
-  private val RocksDbProvider =
+  private[graft] val RocksDbProvider =
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
@@ -920,7 +903,7 @@ $counts
       Artifacts.invalidate(s, familyKind(jobs.map(_._1)), dir))
     val weekly = weeklyStateFamily(s, dir, "st21") // rebuilds 7 streams
     attributionPair(s, dir) // rebuilds the st26/st27 pair
-    weekly.orderBy("user_id", "event_id")
+    weekly
   }
 
   /** st21 — st11's ValueState spend monitor executed AS A STREAM:
@@ -930,18 +913,15 @@ $counts
     * path converges to the batch truth. */
   def spendAlertsStreamed(s: SparkSession, dir: String): DataFrame =
     weeklyStateFamily(s, dir, "st21")
-      .orderBy("user_id", "event_id")
 
   /** st22 — st12's ListState basket features executed as a stream. */
   def recentBasketsStreamed(s: SparkSession, dir: String): DataFrame =
     weeklyStateFamily(s, dir, "st22")
-      .orderBy("user_id", "event_id")
 
   /** st23 — st14's MapState point-in-time profiles executed as a
     * stream. */
   def userProfilesStreamed(s: SparkSession, dir: String): DataFrame =
     weeklyStateFamily(s, dir, "st23")
-      .orderBy("user_id", "event_id")
 
   /** st24 — st13's idle detection executed AS A STREAM: the
     * event-time-TIMER path (the subtlest state machine in the repo —
@@ -964,7 +944,6 @@ $counts
     * and the oracle states it rather than hoping the band is empty. */
   def idleUsersStreamed(s: SparkSession, dir: String): DataFrame =
     weeklyStateFamily(s, dir, "st24")
-      .orderBy("user_id", "last_seen_us")
 
   val idleUsersStreamedSql: String = {
     val gapUs = IdleGapMinutes * 60000000L
@@ -1005,7 +984,6 @@ $counts
       .select(col("user_id"), col("event_id"),
         (col("value").cast(DecimalType(18, 6)) * 1000000)
           .cast("long").as("value_micros"))
-      .orderBy("user_id", "event_id")
 
   private val AttribWindowMinutes = 120
 
@@ -1023,7 +1001,6 @@ $counts
     * band: no timers decide membership). */
   def attributionStreamed(s: SparkSession, dir: String): DataFrame =
     attributionPair(s, dir)._1
-      .orderBy("user_id", "purchase_id", "click_id")
 
   /** Both attribution gates (st26 inner, st27 left-outer) executed as
     * concurrent checkpointed streams over one staged weekly replay —
@@ -1065,7 +1042,6 @@ $counts
     * it emits). Matched rows are st26's exact set. */
   def attributionOuterStreamed(s: SparkSession, dir: String): DataFrame =
     attributionPair(s, dir)._2
-      .orderBy("user_id", "purchase_id", "click_id")
 
   val attributionOuterStreamedSql: String = s"""
     WITH wm AS (
@@ -1123,7 +1099,6 @@ $counts
         col("m.est_q50").as("est_q50"),
         col("m.est_q90").as("est_q90"),
         col("m.est_q99").as("est_q99"))
-      .orderBy("event_type")
 
   /** st28's invariant projection — [[Sketches.quantileInvOn]] at the
     * streamed-state band (sequential inserts keep the single-pass ε
@@ -1152,7 +1127,6 @@ $counts
         sum(col("value")
           .cast(org.apache.spark.sql.types.DecimalType(18, 6)))
           .cast("double").as("total_value"))
-      .orderBy("mktsegment", "event_type")
   }
 
   val quotaStreamedSql: String = s"""
@@ -1298,7 +1272,6 @@ $counts
       .filter(col("est_jaccard") >= 0.5)
       .dropDuplicates("a", "b")
       .select(col("a"), col("b"), col("est_jaccard"))
-      .orderBy("a", "b")
   }
 
   /** st30's oracle companion: the streamed pair set (ids AND the
@@ -1416,7 +1389,6 @@ $counts
       .filter(col("est_jaccard") >= 0.5)
       .dropDuplicates("a", "b")
       .select(col("a"), col("b"), col("est_jaccard"))
-      .orderBy("a", "b")
   }
 
   /** st31's oracle companion: handoff set == uninterrupted-stream
@@ -1753,7 +1725,6 @@ $counts
       .filter(col("est_jaccard") >= 0.5)
       .dropDuplicates("a", "b")
       .select(col("a"), col("b"), col("est_jaccard"))
-      .orderBy("a", "b")
   }
 
   /** st39's contract, each leg nonvacuous by construction:
@@ -1859,7 +1830,6 @@ $counts
     s.read.parquet(s"$root/out")
       .dropDuplicates("train_id", "eval_id")
       .select(col("train_id"), col("eval_id"), col("est_jaccard"))
-      .orderBy("train_id", "eval_id")
   }
 
   /** st33's oracle companion: the streamed pair set (ids AND
@@ -2059,7 +2029,6 @@ $counts
   def bm25IngestStreamed(s: SparkSession, dir: String): DataFrame =
     Similarity.hybridLexArmStoredAt(s, dir,
         buildIngestedBm25Index(s, dir))
-      .orderBy("query_id", "lex_rank")
 
   // ------- st36 streamed retraction-aware MV maintenance (c16's twin)
   private val C16Buckets = 16
@@ -2212,7 +2181,6 @@ $counts
         .getAbsolutePath)
       .select("o_orderpriority", "month", "n_orders", "cents",
         "cents_min", "cents_max")
-      .orderBy("o_orderpriority", "month")
   }
 
   // ------- st37 streamed ANALYZE: the CBO catalog maintained by the stream
@@ -2331,7 +2299,6 @@ $counts
     rows.toDF("scenario", "lo", "hi", "n_line", "n_match",
         "kmv_match", "gk_band_ok", "decision",
         "decision_matches_exact")
-      .orderBy("scenario")
   }
 
   val analyzeStreamedSql: String = {

@@ -23,7 +23,6 @@ object TextAnalysis {
         length(col("text")).cast("long").as("n_chars"),
         ceil(length(col("text")).cast("double") / 4).cast("long")
           .as("n_subwords_est"))
-      .orderBy("doc_id")
 
   val tokenCountSql: String = """
     SELECT doc_id,
@@ -53,7 +52,6 @@ object TextAnalysis {
         (nStop.cast("double") / nTokens).as("stop_ratio"),
         (nUnique.cast("double") / nTokens).as("unique_ratio"),
         (totalLen.cast("double") / nTokens).as("mean_token_len"))
-      .orderBy("doc_id")
   }
 
   val qualityScoreSql: String = s"""
@@ -99,7 +97,7 @@ object TextAnalysis {
           .map(o => col(s"score_$lang") >= col(s"score_$o")).reduce(_ && _)
         when(col(s"score_$lang") > 0 && isMax, lit(lang)).otherwise(other)
     }
-    scored.withColumn("predicted", predicted).orderBy("doc_id")
+    scored.withColumn("predicted", predicted)
   }
 
   /** DuckDB replica of [[langId]], generated from the same
@@ -139,7 +137,6 @@ object TextAnalysis {
         md5(array_join(array_sort(array_distinct(tokens(col("text")))),
           " ")).as("fingerprint"),
         xxhash64(col("text")).as("content_hash"))
-      .orderBy("doc_id")
 
   // xxhash64 is Spark-only → fingerprint column alone is oracle-checked
   def fingerprintOracle(s: SparkSession, dir: String): DataFrame =
@@ -177,7 +174,6 @@ object TextAnalysis {
         (col("shard") * lit(1L << 40) +
           floor((col("cum") - col("n_tokens")) / lit(PackLimit.toDouble))
             .cast("long")).as("chunk_id"))
-      .orderBy("doc_id")
   }
 
   val sequencePackSql: String = s"""
@@ -204,7 +200,6 @@ object TextAnalysis {
     Relational.table(s, dir, "documents")
       .select(col("doc_id"), norm.as("norm_text"),
         md5(norm).as("norm_key"))
-      .orderBy("doc_id")
   }
 
   val normalizeSql: String = """
@@ -242,7 +237,6 @@ object TextAnalysis {
       .select(col("doc_id"), nTokens.as("n_tokens"),
         maxFreq.as("max_freq"),
         (maxFreq.cast("double") / nTokens).as("max_token_ratio"))
-      .orderBy("doc_id")
   }
 
   val repetitionSql: String = """
@@ -299,7 +293,7 @@ object TextAnalysis {
     * before IPs so a dotted hostname can never be half-eaten by the
     * IPv4 rule. */
   def piiRedact(s: SparkSession, dir: String): DataFrame =
-    redact(piiPlanted(s, dir)).orderBy("doc_id")
+    redact(piiPlanted(s, dir))
 
   /** The stateless scrub transform alone, on any (doc_id, text) frame —
     * shared verbatim by the batch query above and Structured Streaming
@@ -387,7 +381,6 @@ object TextAnalysis {
         explode(gramHashes(col("text"))).as("gram"))
       .join(broadcast(benchGrams), Seq("gram"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_bench_grams"))
-      .orderBy("doc_id")
   }
 
   /** The held-out documents with contamination planted — every 23rd
@@ -455,7 +448,6 @@ object TextAnalysis {
       .filter(mightContain)
       .join(broadcast(benchGrams), Seq("gram"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_bench_grams"))
-      .orderBy("doc_id")
   }
 
   /** Closed-form oracle: exactly the planted docs, exactly 3 matching
@@ -530,7 +522,6 @@ object TextAnalysis {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= TfIdfTopK)
       .select("doc_id", "rank", "token", "tf", "df", "score_milli")
-      .orderBy("doc_id", "rank")
   }
 
   val tfidfSql: String = s"""
@@ -574,7 +565,6 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_tokens"),
         sum(col("n_global")).as("sum_global"),
         min(col("n_global")).as("rarest"))
-      .orderBy("doc_id")
   }
 
   val tokenRaritySql: String = """
@@ -625,7 +615,6 @@ object TextAnalysis {
       .filter(col("score") >= col("threshold"))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_kept"), min(col("threshold")).as("threshold"))
-      .orderBy("lang")
   }
 
   val qualityGateSql: String = """
@@ -657,8 +646,7 @@ object TextAnalysis {
     *
     * Map-only at any scale: tokens, window count, and every chunk are
     * computed per row inside one codegen'd projection + explode; there
-    * is no shuffle at all (the orderBy exists only for the oracle
-    * compare). The oracle rebuilds every chunk's exact text in DuckDB,
+    * is no shuffle at all. The oracle rebuilds every chunk's exact text in DuckDB,
     * so window arithmetic, clamping of the final short chunk, and
     * reassembly are all proven byte-exact. */
   def chunkOverlap(s: SparkSession, dir: String): DataFrame = {
@@ -678,7 +666,6 @@ object TextAnalysis {
       .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
         size(col("chunk")).cast("long").as("n_tokens"),
         array_join(col("chunk"), " ").as("chunk_text"))
-      .orderBy("doc_id", "chunk_id")
   }
 
   val chunkOverlapSql: String = {
@@ -714,8 +701,7 @@ object TextAnalysis {
     * of t01's whitespace count): token counts per character class over
     * the PII-planted corpus (the planting injects digits/punctuation,
     * so the class split is non-trivial). `regexp_extract_all` is a
-    * codegen'd builtin — scan-speed, map-only; the orderBy is
-    * presentation for the oracle. */
+    * codegen'd builtin — scan-speed, map-only. */
   def regexTokens(s: SparkSession, dir: String): DataFrame = {
     def n(re: String) =
       size(expr(s"regexp_extract_all(text, '$re', 0)")).cast("long")
@@ -723,7 +709,6 @@ object TextAnalysis {
         .select(col("doc_id"), col("text")))
       .select(col("doc_id"), n(AlphaRe).as("n_alpha"),
         n(NumRe).as("n_num"), n(OtherRe).as("n_other"))
-      .orderBy("doc_id")
   }
 
   val regexTokensSql: String = s"""
@@ -779,7 +764,6 @@ object TextAnalysis {
         array_join(transform(
           array_sort(collect_list(struct(col("pos"), col("key")))),
           x => x.getField("key")), " ").as("cleaned_text"))
-      .orderBy("doc_id")
   }
 
   val boilerplateDedupSql: String = {
@@ -936,7 +920,6 @@ object TextAnalysis {
         sum(col("n_tokens")).as("real_tokens"),
         (count(lit(1)) * col("bin")).as("padded_tokens"),
         (count(lit(1)) * col("bin") - sum(col("n_tokens"))).as("waste"))
-      .orderBy("bin", "shard", "batch")
   }
 
   val lengthBinnedBatchesSql: String = {
@@ -1000,7 +983,6 @@ object TextAnalysis {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_grams"),
         sum(when(col("n_global") > 1, 1L).otherwise(0L)).as("n_dup_grams"))
-      .orderBy("doc_id")
   }
 
   val dupNgramFractionSql: String = s"""
@@ -1094,7 +1076,6 @@ object TextAnalysis {
     bpeRules(s, dir)
       .map { case (r, _, merged, cnt) => (r, merged.replace(USep, ""), cnt) }
       .toDF("round", "merged_token", "pair_count")
-      .orderBy("round")
   }
 
   /** The t23 induction loop itself, returning each round's rule in
@@ -1289,7 +1270,6 @@ object TextAnalysis {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"),
         sum(size(split(col("sym"), "  ")).cast("long")).as("n_bpe_tokens"))
-      .orderBy("doc_id")
   }
 
   /** t25 — unigram-LM surprisal scoring, the perplexity-proxy quality
@@ -1319,7 +1299,6 @@ object TextAnalysis {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"),
         sum(col("bits")).as("surprisal_bits"))
-      .orderBy("doc_id")
   }
 
   private val BpeMark = "chr(31)"
@@ -1436,7 +1415,6 @@ object TextAnalysis {
     Relational.table(s, dir, "documents")
       .select(col("doc_id"), score.as("score"))
       .withColumn("kept", (col("score") >= 0).cast("long"))
-      .orderBy("doc_id")
   }
 
   val classifierGateSql: String = s"""
@@ -1496,7 +1474,6 @@ object TextAnalysis {
             lit("[CARD]"))).otherwise(col("planted")))
       .select(col("doc_id"), col("n_cards"), col("n_valid"),
         md5(col("redacted")).as("redacted_fp"))
-      .orderBy("doc_id")
   }
 
   val luhnRedactSql: String = """
@@ -1575,7 +1552,6 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_grams"),
         sum(coalesce(col("hit"), lit(0L))).as("n_eval_hits"))
       .withColumn("contaminated", (col("n_eval_hits") > 0).cast("long"))
-      .orderBy("doc_id")
   }
 
   val evalGramOverlapSql: String = s"""
@@ -1648,7 +1624,6 @@ object TextAnalysis {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
         sum(col("bits")).as("surprisal_bits"))
-      .orderBy("doc_id")
   }
 
   val bigramSurprisalSql: String = """
@@ -1775,7 +1750,6 @@ object TextAnalysis {
         sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L))
           .as("n_novel"))
       .withColumn("novelty_ppm", expr("n_novel * 1000000 div n_grams"))
-      .orderBy("doc_id")
     graft.queries.CacheScope.materializeAndRelease(out, grams)
   }
 
@@ -1846,7 +1820,6 @@ object TextAnalysis {
           .as("tok_start"))
       .withColumn("seq_id", expr(s"tok_start div $SeqLen"))
       .select("doc_id", "n_tok_eos", "tok_start", "seq_id")
-      .orderBy("doc_id")
   }
 
   val trainingSequencesSql: String = """
@@ -1898,7 +1871,6 @@ object TextAnalysis {
           .when(col("q_sum") >= col("n_docs") * 500L, "review")
           .otherwise("drop"))
       .select("host", "n_docs", "q_sum", "q_min", "q_max", "band")
-      .orderBy("host")
   }
 
   val domainQualitySql: String = """
@@ -1971,7 +1943,6 @@ object TextAnalysis {
       .groupBy("final_bucket")
       .agg(count(lit(1)).as("n_docs"),
         sum(size(tokens(col("text"))).cast("long")).as("n_tokens"))
-      .orderBy("final_bucket")
     graft.queries.CacheScope.materializeAndRelease(out, tagged)
   }
 
@@ -2050,7 +2021,6 @@ object TextAnalysis {
         sum(col("repl_chars")).as("repl_chars"),
         sum(col("zw_chars")).as("zw_chars"),
         sum(col("ctl_chars")).as("ctl_chars"))
-      .orderBy("source")
   }
 
   val mojibakeAuditSql: String = """
@@ -2175,7 +2145,6 @@ object TextAnalysis {
           .as("bytes_per_token_milli"),
         expr("(sum(chars) * 1000) div sum(toks)")
           .as("chars_per_token_milli"))
-      .orderBy("lang")
   }
 
   // `all` references this by name; keep object-init safe regardless
@@ -2275,7 +2244,6 @@ object TextAnalysis {
       .groupBy("fate")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("n_chars"))
-      .orderBy("fate")
   }
 
   lazy val pretrainManifestSql: String = s"""
@@ -2429,7 +2397,6 @@ object TextAnalysis {
           - col("freq_bits"))
       .select(col("rank"), col("token"), col("cnt"),
         col("freq_bits"), col("bits_drop"))
-      .orderBy("rank")
   }
 
   val zipfAuditSql: String = s"""
@@ -2502,7 +2469,6 @@ object TextAnalysis {
           .as("n_repetitive"),
         sum((col("ratio_milli") >= IncompressibleMilli).cast("long"))
           .as("n_incompressible"))
-      .orderBy("source")
 
   /** t40's oracle-checked invariants — the falsifiable contract of a
     * kernel DuckDB cannot replay: (a) raw deflate never EXPANDS text
@@ -2602,7 +2568,6 @@ object TextAnalysis {
         avg(col("h")).as("mean_h_bits"), max(col("h")).as("max_h_bits"))
       .select(col("lang"), col("n_docs"), col("n_bigrams"),
         lit(vocab).as("vocab"), col("mean_h_bits"), col("max_h_bits"))
-      .orderBy("lang")
   }
 
   /** t41's oracle companion: the exact integer frame of the LM —
@@ -2619,7 +2584,6 @@ object TextAnalysis {
         (col("mean_h_bits") > 0.0 && col("max_h_bits") > 0.0 &&
           col("max_h_bits") <=
             log2(col("n_total") + col("vocab") + 1.0)).as("h_in_band"))
-      .orderBy("lang")
   }
 
   val lmPerplexityInvSql: String = """
@@ -2703,7 +2667,6 @@ object TextAnalysis {
     deconCandidates(deconBanded(deconTrain(s, dir)),
         deconBanded(deconEval(s, dir)))
       .dropDuplicates("train_id", "eval_id")
-      .orderBy("train_id", "eval_id")
 
   /** t42's contract, surfaced to the driver gate: (a) >= 80% of the
     * planted contamination pairs are flagged (d02's bound — same

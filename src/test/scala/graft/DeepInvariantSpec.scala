@@ -92,12 +92,12 @@ class DeepInvariantSpec extends SparkSpec {
         : graft.gen.Generator),
       (0.5, Generators.FromNormalDistribution(5, 1, 4, seed = 95))),
       maxRoundingAdjustment = 1, seed = 96)
-    def run(parts: Int): Array[String] = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try grp.generate(spark, 4000).orderBy(Gecko.RowId)
-        .select("c0").collect().map(_.getString(0))
-      finally spark.conf.set("spark.sql.shuffle.partitions", 4)
-    }
+    def run(parts: Int): Array[String] =
+      GraftSession.withConf(spark,
+        "spark.sql.shuffle.partitions" -> parts.toString) {
+        grp.generate(spark, 4000).orderBy(Gecko.RowId)
+          .select("c0").collect().map(_.getString(0))
+      }
     assert(run(2).sameElements(run(8)))
   }
 

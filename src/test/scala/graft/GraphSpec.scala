@@ -1,6 +1,8 @@
 package graft
 
-/** Graph-layer conf handling. */
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+
+/** Graph-layer conf handling and plan shape. */
 class GraphSpec extends SparkSpec {
 
   test("a malformed broadcastRows value warns once per value and the " +
@@ -27,5 +29,16 @@ class GraphSpec extends SparkSpec {
     assert(atCap ne df, "2M rows is within the default cap: broadcast")
     assert(overCap eq df, "past the default cap: no broadcast hint")
     assert(rounds == 0, "2 edges are within the default cap: driver path")
+  }
+
+  test("gr03 plan hook ends without a global sort: the frame it " +
+    "localCheckpoints carries no range sort (planned only)") {
+    val (df, caches) = queries.Graph.trianglesPlan(spark, sfDir,
+      queries.Graph.TriOrderCap)
+    try {
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.collect { case s: Sort if s.global => s }.isEmpty,
+        s"global sort in the optimized plan:\n$plan")
+    } finally caches.foreach(_.unpersist(false))
   }
 }

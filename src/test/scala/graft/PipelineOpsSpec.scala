@@ -276,14 +276,14 @@ class PipelineOpsSpec extends SparkSpec {
     "the exact top-k, deterministically") {
     val bf = Similarity.annBruteForce(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Similarity.annIvf(spark, sfDir).collect()
+    val ivf = sortedRows(Similarity.annIvf(spark, sfDir))
       .map(r => (r.getLong(0), r.getLong(1)))
     // k-bounded per query
     assert(ivf.groupBy(_._1).values.forall(_.length <= 5))
     val recall = ivf.toSet.intersect(bf).size.toDouble / bf.size
     assert(recall >= 0.3, s"IVF recall $recall below bound")
     // deterministic: seeded sample + hash-stable init
-    val again = Similarity.annIvf(spark, sfDir).collect()
+    val again = sortedRows(Similarity.annIvf(spark, sfDir))
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(ivf.sameElements(again))
   }
@@ -445,12 +445,12 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("embedding_clusters: clusters partition the corpus, ids in " +
     "[0, k), assignment deterministic across runs") {
-    val rows = Similarity.embeddingClusters(spark, sfDir).collect()
+    val rows = sortedRows(Similarity.embeddingClusters(spark, sfDir))
     val n = spark.read.parquet(s"$sfDir/embeddings.parquet").count()
     assert(rows.map(_.getLong(1)).sum == n)
     assert(rows.forall(r => r.getInt(0) >= 0 && r.getInt(0) < 16))
     assert(rows.length > 1, "degenerate single-cluster solution")
-    val again = Similarity.embeddingClusters(spark, sfDir).collect()
+    val again = sortedRows(Similarity.embeddingClusters(spark, sfDir))
     assert(rows.map(_.toString).sameElements(again.map(_.toString)))
   }
 
@@ -542,7 +542,7 @@ class PipelineOpsSpec extends SparkSpec {
     "decode features") {
     val meta = Multimodal.mediaMeta(spark, sfDir).collect()
     assert(meta.forall(_.getLong(2) > 0))
-    val feats = Multimodal.mediaFeatures(spark, sfDir).collect()
+    val feats = sortedRows(Multimodal.mediaFeatures(spark, sfDir))
     assert(feats.length == meta.length)
     // exact feature arithmetic: n_bytes = 44-byte header + 2/sample;
     // ASCII<128 sources make every sample negative, so 0 < max <= 2^15
@@ -553,7 +553,7 @@ class PipelineOpsSpec extends SparkSpec {
         r.getLong(5) >= r.getLong(6)
     })
     // deterministic: same run twice is identical
-    val again = Multimodal.mediaFeatures(spark, sfDir).collect()
+    val again = sortedRows(Multimodal.mediaFeatures(spark, sfDir))
     assert(feats.map(_.toString).sameElements(again.map(_.toString)))
   }
 }

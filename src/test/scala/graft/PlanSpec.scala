@@ -1,6 +1,8 @@
 package graft
 
 import graft.queries.{LayerADemo, Relational, TextAnalysis}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Sort
 
 /** Physical-plan audit: the properties that decide 100 TB viability —
   * predicate pushdown, column pruning, broadcast choices, absence of
@@ -80,10 +82,10 @@ class PlanSpec extends SparkSpec {
     li.withColumnRenamed("l_orderkey", "o_orderkey")
       .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
       .option("path", s"$wh/li").mode("overwrite").saveAsTable("li_bkt")
-    try {
-      // disable broadcast so the bucketed sort-merge path is exercised
-      // (the 100 TB shape — neither side broadcastable)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // disable broadcast so the bucketed sort-merge path is exercised
+    // (the 100 TB shape — neither side broadcastable)
+    try GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("o_bkt")
         .join(spark.table("li_bkt"), "o_orderkey")
       joined.collect()
@@ -92,7 +94,6 @@ class PlanSpec extends SparkSpec {
       assert(!p.contains("Exchange hashpartitioning"),
         s"bucketed join still shuffles:\n$p")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
       spark.sql("DROP TABLE IF EXISTS o_bkt")
       spark.sql("DROP TABLE IF EXISTS li_bkt")
     }
@@ -342,6 +343,22 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), s"all-pairs join in:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin"), s"all-pairs join in:\n$p")
     d02Caches.foreach(_.unpersist(false))
+  }
+
+  test("d02, d13 and s02 plan hooks end without a global sort: the " +
+    "frames they localCheckpoint carry no range sort (planned only)") {
+    import graft.queries.{Dedup, Similarity}
+    for ((name, hook) <- Seq[(String, () => (DataFrame, Seq[DataFrame]))](
+        "d02" -> (() => Dedup.dedupMinhashLshPlan(spark, sfDir)),
+        "d13" -> (() => Dedup.containmentDedupPlan(spark, sfDir)),
+        "s02" -> (() => Similarity.annLshBucketedPlan(spark, sfDir)))) {
+      val (df, caches) = hook()
+      try {
+        val plan = df.queryExecution.optimizedPlan
+        assert(plan.collect { case s: Sort if s.global => s }.isEmpty,
+          s"$name: global sort in the optimized plan:\n$plan")
+      } finally caches.foreach(_.unpersist(false))
+    }
   }
 
   test("t19 BM25: top-k via TakeOrderedAndProject, no cartesian in the " +

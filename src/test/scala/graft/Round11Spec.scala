@@ -33,10 +33,10 @@ class Round11Spec extends SparkSpec {
   }
 
   test("s24 serve results == in-plan s04 IVF results, bit for bit") {
-    val served = queries.Similarity.annStoredIvf(spark, sfDir)
-      .select("query_id", "neighbor_id", "rank").collect().toSeq
-    val inPlan = queries.Similarity.annIvf(spark, sfDir)
-      .select("query_id", "neighbor_id", "rank").collect().toSeq
+    val served = sortedRows(queries.Similarity.annStoredIvf(spark, sfDir)
+      .select("query_id", "neighbor_id", "rank"))
+    val inPlan = sortedRows(queries.Similarity.annIvf(spark, sfDir)
+      .select("query_id", "neighbor_id", "rank"))
     assert(served == inPlan)
     assert(served.nonEmpty)
   }

@@ -47,9 +47,10 @@ class Round15Spec extends SparkSpec {
           .groupBy("bucket").count()
       }
       val on = q().collect().map(_.toString).toSet // must not throw
-      spark.conf.set(plans.CboCatalog.EnabledKey, "false")
-      val off = q().collect().map(_.toString).toSet
-      spark.conf.set(plans.CboCatalog.EnabledKey, "true")
+      val off = GraftSession.withConf(spark,
+        plans.CboCatalog.EnabledKey -> "false") {
+        q().collect().map(_.toString).toSet
+      }
       assert(on == off, "rule-on answer must equal rule-off")
       assert(on.nonEmpty)
     }
@@ -63,26 +64,28 @@ class Round15Spec extends SparkSpec {
       queries.Sketches.registerCboStats(spark,
         queries.Sketches.analyzeForCbo(spark, sfDir), sfDir)
       // build the UNOPTIMIZED-by-the-rule plan: rule off
-      spark.conf.set(plans.CboCatalog.EnabledKey, "false")
-      val cust = queries.Relational.table(spark, sfDir, "customer")
-        .select("c_custkey")
-      val ord = queries.Relational.table(spark, sfDir, "orders")
-        .select("o_custkey", "o_orderkey")
-      val line = queries.Relational.table(spark, sfDir, "lineitem")
-        .select("l_orderkey")
-      def joined() = cust
-        .join(ord, col("c_custkey") === col("o_custkey"))
-        .join(line, col("o_orderkey") === col("l_orderkey"))
-        .groupBy().count()
-      val plan = joined().union(joined()).queryExecution.optimizedPlan
-      // rule disabled: apply must not list anything
-      val base0 = plans.CboCatalog.fingerprintCalls.get()
-      plans.CboReorder(plan)
-      assert(plans.CboCatalog.fingerprintCalls.get() == base0,
-        "a disabled rule must not touch the filesystem")
-      // rule enabled: two 3-table joins over the same 3 tables →
+      val plan = GraftSession.withConf(spark,
+        plans.CboCatalog.EnabledKey -> "false") {
+        val cust = queries.Relational.table(spark, sfDir, "customer")
+          .select("c_custkey")
+        val ord = queries.Relational.table(spark, sfDir, "orders")
+          .select("o_custkey", "o_orderkey")
+        val line = queries.Relational.table(spark, sfDir, "lineitem")
+          .select("l_orderkey")
+        def joined() = cust
+          .join(ord, col("c_custkey") === col("o_custkey"))
+          .join(line, col("o_orderkey") === col("l_orderkey"))
+          .groupBy().count()
+        val plan = joined().union(joined()).queryExecution.optimizedPlan
+        // rule disabled: apply must not list anything
+        val base0 = plans.CboCatalog.fingerprintCalls.get()
+        plans.CboReorder(plan)
+        assert(plans.CboCatalog.fingerprintCalls.get() == base0,
+          "a disabled rule must not touch the filesystem")
+        plan
+      }
+      // rule enabled again: two 3-table joins over the same 3 tables →
       // exactly 3 listings in one application
-      spark.conf.set(plans.CboCatalog.EnabledKey, "true")
       val base1 = plans.CboCatalog.fingerprintCalls.get()
       plans.CboReorder(plan)
       val listed = plans.CboCatalog.fingerprintCalls.get() - base1
@@ -292,9 +295,10 @@ class Round15Spec extends SparkSpec {
           .groupBy("bucket").count()
       }
       val on = q().collect().map(_.toString).toSet
-      spark.conf.set(plans.CboCatalog.EnabledKey, "false")
-      val off = q().collect().map(_.toString).toSet
-      spark.conf.set(plans.CboCatalog.EnabledKey, "true")
+      val off = GraftSession.withConf(spark,
+        plans.CboCatalog.EnabledKey -> "false") {
+        q().collect().map(_.toString).toSet
+      }
       assert(on == off && on.nonEmpty)
     }
   }
@@ -304,16 +308,16 @@ class Round15Spec extends SparkSpec {
     "via the literal-max threshold) returns byte-identical d09 and " +
     "d16 results to the compiled-literal path") {
     val key = "spark.graft.semdedup.centroidLiteralMax"
-    val lit09 = queries.Dedup.semanticDedup(spark, sfDir)
-      .collect().map(_.toString).toSeq
-    val lit16 = queries.Dedup.semanticCalibration(spark, sfDir)
-      .collect().map(_.toString).toSeq
+    val lit09 = sortedRows(queries.Dedup.semanticDedup(spark, sfDir))
+      .map(_.toString)
+    val lit16 = sortedRows(queries.Dedup.semanticCalibration(spark, sfDir))
+      .map(_.toString)
     // every k takes the join path
     GraftSession.withConf(spark, key -> "0") {
-      val join09 = queries.Dedup.semanticDedup(spark, sfDir)
-        .collect().map(_.toString).toSeq
-      val join16 = queries.Dedup.semanticCalibration(spark, sfDir)
-        .collect().map(_.toString).toSeq
+      val join09 = sortedRows(queries.Dedup.semanticDedup(spark, sfDir))
+        .map(_.toString)
+      val join16 = sortedRows(
+        queries.Dedup.semanticCalibration(spark, sfDir)).map(_.toString)
       assert(join09 == lit09, "d09 paths must agree")
       assert(join16 == lit16, "d16 paths must agree")
       assert(lit09.nonEmpty && lit16.nonEmpty)
@@ -341,9 +345,8 @@ class Round15Spec extends SparkSpec {
         queries.Sketches.executedJoins(df).head.getClass.getSimpleName
       }
       val onOp = innerJoinOp(q())
-      spark.conf.set(plans.CboCatalog.EnabledKey, "false")
-      val offOp = innerJoinOp(q())
-      spark.conf.set(plans.CboCatalog.EnabledKey, "true")
+      val offOp = GraftSession.withConf(spark,
+        plans.CboCatalog.EnabledKey -> "false")(innerJoinOp(q()))
       assert(onOp == "BroadcastHashJoinExec",
         s"rule-on must broadcast the analyzed under-cap leg, got $onOp")
       assert(offOp == "SortMergeJoinExec",

@@ -23,9 +23,8 @@ class Round4Spec extends SparkSpec {
   }
 
   test("d09 is deterministic across partition layouts") {
-    val a = Dedup.semanticDedup(spark, sfDir).collect().toSeq
-    val b = Dedup.semanticDedup(spark, sfDir).repartition(7)
-      .orderBy("vec_id").collect().toSeq
+    val a = sortedRows(Dedup.semanticDedup(spark, sfDir))
+    val b = sortedRows(Dedup.semanticDedup(spark, sfDir).repartition(7))
     assert(a == b)
   }
 
@@ -84,13 +83,12 @@ class Round4Spec extends SparkSpec {
   }
 
   test("j01 jsonl roundtrip aggregates equal the direct parquet path") {
-    val viaJson = Sources.jsonlRoundtrip(spark, sfDir).collect().toSeq
-    val direct = spark.read.parquet(s"$sfDir/documents.parquet")
+    val viaJson = sortedRows(Sources.jsonlRoundtrip(spark, sfDir))
+    val direct = sortedRows(spark.read.parquet(s"$sfDir/documents.parquet")
       .filter(col("lang") === "en")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("sum_doc_id"),
-        sum(length(col("text")).cast("long")).as("sum_chars"))
-      .orderBy("source").collect().toSeq
+        sum(length(col("text")).cast("long")).as("sum_chars")))
     assert(viaJson == direct)
   }
 }

@@ -135,7 +135,7 @@ class Round5Spec extends SparkSpec {
 
   test("s08: split partitions the corpus 80/10/10 and is stable " +
     "under partition layout") {
-    val rows = queries.Sampling.trainSplit(spark, sfDir).collect()
+    val rows = sortedRows(queries.Sampling.trainSplit(spark, sfDir))
     val bySplit = rows.groupBy(_.getAs[String]("split"))
       .map { case (k, rs) => k -> rs.map(_.getAs[Long]("n_docs")).sum }
     val total = bySplit.values.sum
@@ -147,8 +147,8 @@ class Round5Spec extends SparkSpec {
       bySplit("train") < total * 9 / 10, bySplit.toString)
     // the assignment is a pure function of doc_id: same result when
     // the input arrives in a different partition layout
-    val a = queries.Sampling.trainSplit(spark, sfDir).collect().toSeq
-    assert(a == rows.toSeq)
+    val a = sortedRows(queries.Sampling.trainSplit(spark, sfDir))
+    assert(a == rows)
   }
 
   // -------------------------------------------- t17 boilerplate dedup
@@ -436,7 +436,7 @@ class Round5Spec extends SparkSpec {
   test("s12: every anchor gets k negatives, never itself, never its " +
     "own source, and the draw is replay-stable") {
     import graft.queries.Sampling
-    val out = Sampling.negativeSampling(spark, sfDir).collect()
+    val out = sortedRows(Sampling.negativeSampling(spark, sfDir))
     val src = queries.Relational.table(spark, sfDir, "documents")
       .select(col("doc_id"), col("source")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -447,7 +447,7 @@ class Round5Spec extends SparkSpec {
       assert(src(neg) != src(a), s"anchor $a drew its own source")
     }
     // same (anchor, j) -> same negative on a second evaluation
-    val again = Sampling.negativeSampling(spark, sfDir).collect()
+    val again = sortedRows(Sampling.negativeSampling(spark, sfDir))
     assert(out.sameElements(again))
   }
 

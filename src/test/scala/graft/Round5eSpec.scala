@@ -235,7 +235,7 @@ class Round5eSpec extends SparkSpec {
   test("j07: the merged read null-fills exactly the columns each " +
     "epoch never wrote") {
     import graft.queries.Sources
-    val rows = Sources.schemaEvolution(spark, sfDir).collect()
+    val rows = sortedRows(Sources.schemaEvolution(spark, sfDir))
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5)))
     assert(rows.length == 2)

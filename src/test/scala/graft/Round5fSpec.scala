@@ -211,8 +211,8 @@ class Round5fSpec extends SparkSpec {
     "row, partial-aggregates map-side, and never sorts a group") {
     val viaAgg = graft.queries.Similarity.annTopkAgg(spark, sfDir)
     val viaWindow = graft.queries.Similarity.annBruteForce(spark, sfDir)
-    assert(viaAgg.collect().map(_.toString).toSeq ==
-      viaWindow.collect().map(_.toString).toSeq,
+    assert(sortedRows(viaAgg).map(_.toString) ==
+      sortedRows(viaWindow).map(_.toString),
       "heap aggregate ranking diverges from the window rank")
     val plan = viaAgg.queryExecution.executedPlan.toString
     assert(plan.contains("partial_topk_pairs") ||

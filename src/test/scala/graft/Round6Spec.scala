@@ -21,17 +21,16 @@ class Round6Spec extends SparkSpec {
       s"bucketed join must not shuffle either side:\n${p.take(3000)}")
 
     // the full gated query returns exactly the raw-parquet result
-    val bucketed = Sources.bucketedJoin(spark, sfDir).collect()
-    val raw = Relational.table(spark, sfDir, "orders")
+    val bucketed = sortedRows(Sources.bucketedJoin(spark, sfDir))
+    val raw = sortedRows(Relational.table(spark, sfDir, "orders")
       .join(Relational.table(spark, sfDir, "customer"),
         col("o_custkey") === col("c_custkey"))
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n_orders"),
         sum(col("o_totalprice")
           .cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-          .cast("double").as("total_price"))
-      .orderBy("c_mktsegment").collect()
-    assert(bucketed.toSeq == raw.toSeq)
+          .cast("double").as("total_price")))
+    assert(bucketed == raw)
   }
 
   test("j11: the fact scan carries a dynamic partition pruning " +
@@ -40,8 +39,8 @@ class Round6Spec extends SparkSpec {
     val p = joined.queryExecution.executedPlan.toString
     assert(p.toLowerCase.contains("dynamicpruning"),
       s"no DPP filter on the fact scan:\n${p.take(3000)}")
-    val pruned = Sources.dppJoin(spark, sfDir).collect()
-    val raw = Relational.table(spark, sfDir, "lineitem")
+    val pruned = sortedRows(Sources.dppJoin(spark, sfDir))
+    val raw = sortedRows(Relational.table(spark, sfDir, "lineitem")
       .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
       .join(Relational.table(spark, sfDir, "orders")
         .filter(year(col("o_orderdate")) === 1996)
@@ -51,9 +50,8 @@ class Round6Spec extends SparkSpec {
       .agg(count(lit(1)).as("n_lines"),
         sum(col("l_quantity")
           .cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-          .cast("double").as("sum_qty"))
-      .orderBy("ship_month").collect()
-    assert(pruned.toSeq == raw.toSeq)
+          .cast("double").as("sum_qty")))
+    assert(pruned == raw)
     // the pruning is live: 1996 covers 12 of the >80 ship months
     val months = pruned.map(_.getString(0))
     assert(months.forall(_.startsWith("1996")) && months.length >= 10,
@@ -62,16 +60,15 @@ class Round6Spec extends SparkSpec {
 
   test("j12: variant shredding round-trips typed values exactly — " +
     "including doubles through JSON text") {
-    val shredded = Sources.variantShred(spark, sfDir).collect()
-    val raw = Relational.table(spark, sfDir, "orders")
+    val shredded = sortedRows(Sources.variantShred(spark, sfDir))
+    val raw = sortedRows(Relational.table(spark, sfDir, "orders")
       .groupBy(col("o_orderpriority").as("pr"))
       .agg(count(lit(1)).as("n_orders"),
         sum(col("o_orderkey")).as("sum_key"),
         sum(col("o_totalprice")
           .cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-          .cast("double").as("sum_price"))
-      .orderBy("pr").collect()
-    assert(shredded.toSeq == raw.toSeq)
+          .cast("double").as("sum_price")))
+    assert(shredded == raw)
   }
 
   test("j13: the fact side of the plan carries a bloom-filter " +
@@ -87,9 +84,9 @@ class Round6Spec extends SparkSpec {
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("might_contain"),
       s"no runtime bloom filter injected:\n${p.take(3000)}")
-    val viaBloom = Sources.bloomJoin(spark, sfDir).collect()
-    val plain = Sources.bloomJoinOn(spark, sfDir).collect()
-    assert(viaBloom.toSeq == plain.toSeq)
+    val viaBloom = sortedRows(Sources.bloomJoin(spark, sfDir))
+    val plain = sortedRows(Sources.bloomJoinOn(spark, sfDir))
+    assert(viaBloom == plain)
   }
 
   test("j14: XML roundtrip preserves exact text bytes including " +
@@ -121,30 +118,27 @@ class Round6Spec extends SparkSpec {
       4L -> "  leading and trailing  ",
       5L -> " \t mixed\ttabs \t "))
     // and the gate query equals the straight parquet aggregate
-    val viaXml = Sources.xmlRoundtrip(spark, sfDir).collect()
-    val raw = Relational.table(spark, sfDir, "documents")
+    val viaXml = sortedRows(Sources.xmlRoundtrip(spark, sfDir))
+    val raw = sortedRows(Relational.table(spark, sfDir, "documents")
       .filter(col("lang") === "es")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).as("sum_doc_id"),
-        sum(length(col("text")).cast("long")).as("sum_chars"))
-      .orderBy("source").collect()
-    assert(viaXml.toSeq == raw.toSeq)
+        sum(length(col("text")).cast("long")).as("sum_chars")))
+    assert(viaXml == raw)
   }
 
   test("j15: _metadata projection changes no row and sees all 8 " +
     "shards") {
-    val rows = Sources.metadataColumns(spark, sfDir).collect()
+    val rows = sortedRows(Sources.metadataColumns(spark, sfDir))
     assert(rows.forall(_.getLong(3) == 8L),
-      rows.map(_.getLong(3)).toSeq)
-    val raw = Relational.table(spark, sfDir, "documents")
+      rows.map(_.getLong(3)))
+    val raw = sortedRows(Relational.table(spark, sfDir, "documents")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
-        sum(col("doc_id")).as("sum_doc_id"))
-      .orderBy("source").collect()
-    assert(rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .toSeq == raw.map(r => (r.getString(0), r.getLong(1),
-      r.getLong(2))).toSeq)
+        sum(col("doc_id")).as("sum_doc_id")))
+    assert(rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))) ==
+      raw.map(r => (r.getString(0), r.getLong(1), r.getLong(2))))
   }
 
   test("q42: the recursive spine is contiguous min..max month, and " +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per JVM). */
@@ -24,4 +24,10 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sfDir: String = TestSpark.sfDir
+
+  /** `df`'s rows in the gate writer's canonical order ([[Verify.canonical]]).
+    * A query's row order is not its contract, so a test that compares
+    * results row by row compares sorted with sorted. */
+  def sortedRows(df: DataFrame): Seq[Row] =
+    Verify.canonical(df).collect().toSeq
 }

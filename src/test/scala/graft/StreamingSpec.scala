@@ -390,14 +390,7 @@ class StreamingSpec extends SparkSpec {
       EventStreams.Event(5, ts(11), 9L, "purchase", 30.0))
     f1.toDS().coalesce(1).write.mode("append").parquet(s"$dir/in")
 
-    // save-and-restore (not unset): the shared suite session may carry
-    // a pre-existing provider setting — runEventStream's pattern
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, queries.Streaming.RocksDbProvider) {
       val enc = implicitly[org.apache.spark.sql.Encoder[EventStreams.Event]]
       val q = EventStreams.spendAlertsStream(
           spark.readStream.schema(enc.schema).parquet(s"$dir/in")
@@ -420,13 +413,6 @@ class StreamingSpec extends SparkSpec {
         Seq((7L, 2L), (7L, 4L), (9L, 3L)))
       assert(streamed.sameElements(batch),
         s"stream(${streamed.mkString(",")}) != batch(${batch.mkString(",")})")
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -446,14 +432,7 @@ class StreamingSpec extends SparkSpec {
       EventStreams.Event(51, ts(11), 9L, "purchase", 6.0))
     f1.toDS().coalesce(1).write.mode("append").parquet(s"$dir/in")
 
-    // save-and-restore (not unset): the shared suite session may carry
-    // a pre-existing provider setting — runEventStream's pattern
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, queries.Streaming.RocksDbProvider) {
       val enc = implicitly[org.apache.spark.sql.Encoder[EventStreams.Event]]
       val q = EventStreams.recentBasketStream(
           spark.readStream.schema(enc.schema).parquet(s"$dir/in")
@@ -475,13 +454,6 @@ class StreamingSpec extends SparkSpec {
         s"event 4 basket: ${e4.getString(2)}")
       assert(streamed.sameElements(batch),
         s"stream(${streamed.mkString(",")}) != batch(${batch.mkString(",")})")
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -510,14 +482,7 @@ class StreamingSpec extends SparkSpec {
     val f4 = Seq(EventStreams.Event(91, ts(500), 999L, "click", 0.0))
     f1.toDS().coalesce(1).write.mode("append").parquet(s"$dir/in")
 
-    // save-and-restore (not unset): the shared suite session may carry
-    // a pre-existing provider setting — runEventStream's pattern
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, queries.Streaming.RocksDbProvider) {
       val enc = implicitly[org.apache.spark.sql.Encoder[EventStreams.Event]]
       val q = EventStreams.idleStream(
           spark.readStream.schema(enc.schema).parquet(s"$dir/in")
@@ -548,13 +513,6 @@ class StreamingSpec extends SparkSpec {
         .toSeq == Seq((7L, 2L), (7L, 100L), (9L, 40L)))
       assert(streamed.sameElements(batch),
         s"stream(${streamed.mkString(",")}) != batch(${batch.mkString(",")})")
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -587,14 +545,7 @@ class StreamingSpec extends SparkSpec {
       Seq(body.filter(_.ts.getTime <= 20 * 60000L), Seq(sentinelMid),
         body.filter(_.ts.getTime > 20 * 60000L), Seq(sentinelEnd)))
 
-    // save-and-restore (not unset): the shared suite session may carry
-    // a pre-existing provider setting — runEventStream's pattern
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, queries.Streaming.RocksDbProvider) {
       val outs = slicings.zipWithIndex.map { case (slices, i) =>
         val dir = java.nio.file.Files.createTempDirectory(s"idle-slc$i")
         val enc =
@@ -626,13 +577,6 @@ class StreamingSpec extends SparkSpec {
         s"coarse(${outs(0).mkString(",")}) != batch(${batch.mkString(",")})")
       assert(outs(1) == batch,
         s"fine(${outs(1).mkString(",")}) != batch(${batch.mkString(",")})")
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -655,14 +599,7 @@ class StreamingSpec extends SparkSpec {
       EventStreams.Event(3, tsUs(600000999L), 3L, "click", 1.0))
     val f2 = Seq(EventStreams.Event(9, tsUs(3000000000L), 999L, "click", 0.0))
     val dir = java.nio.file.Files.createTempDirectory("idle-quant")
-    // save-and-restore (not unset): the shared suite session may carry
-    // a pre-existing provider setting — runEventStream's pattern
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, queries.Streaming.RocksDbProvider) {
       val enc = implicitly[org.apache.spark.sql.Encoder[EventStreams.Event]]
       f1.toDS().coalesce(1).write.mode("append").parquet(s"$dir/in")
       val q = EventStreams.idleStream(
@@ -689,13 +626,6 @@ class StreamingSpec extends SparkSpec {
         .filter(col("user_id") =!= 999L)
         .collect().map(_.getLong(0)).toSeq.sorted
       assert(batchUsers == Seq(1L))
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -714,14 +644,7 @@ class StreamingSpec extends SparkSpec {
       EventStreams.Event(7, ts(10), 9L, "error", 1.0))
     f1.toDS().coalesce(1).write.mode("append").parquet(s"$dir/in")
 
-    // save-and-restore (not unset): the shared suite session may carry
-    // a pre-existing provider setting — runEventStream's pattern
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, queries.Streaming.RocksDbProvider) {
       val enc = implicitly[org.apache.spark.sql.Encoder[EventStreams.Event]]
       val q = EventStreams.profileStream(
           spark.readStream.schema(enc.schema).parquet(s"$dir/in")
@@ -746,13 +669,6 @@ class StreamingSpec extends SparkSpec {
         s"event 6 profile: $e6")
       assert(streamed.sameElements(batch),
         s"stream(${streamed.mkString(",")}) != batch(${batch.mkString(",")})")
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -920,14 +836,7 @@ class StreamingSpec extends SparkSpec {
         java.nio.file.Files.move(part.toPath, f.toPath)
         f.setLastModified(1700000000000L + i * 60000L)
     }
-    // save-and-restore (not unset): the shared suite session may carry
-    // a pre-existing provider setting — runEventStream's pattern
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, queries.Streaming.RocksDbProvider) {
       val enc = implicitly[org.apache.spark.sql.Encoder[EventStreams.Event]]
       val q = EventStreams.idleStream(
           spark.readStream.schema(enc.schema)
@@ -948,13 +857,6 @@ class StreamingSpec extends SparkSpec {
       // the final file, so its alert proves last-batch timers fire
       assert(got.toSeq == Seq((7L, 2L), (9L, 600L)),
         s"got ${got.mkString(",")}")
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -987,12 +889,7 @@ class StreamingSpec extends SparkSpec {
     // user 3: 1 ms above it; the driver's own timer is far above
     val timerAt = Map(1L -> (wm - 1), 2L -> wm, 3L -> (wm + 1),
       99L -> (wm + 1000000L))
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, queries.Streaming.RocksDbProvider) {
       val q = spark.readStream
         .schema(org.apache.spark.sql.Encoders.product[TimerPins.In].schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$root/in")
@@ -1011,13 +908,6 @@ class StreamingSpec extends SparkSpec {
         .collect().sortBy(_.user_id).toSeq
       assert(fired === Seq(TimerPins.Fired(1L, wm - 1, wm),
         TimerPins.Fired(2L, wm, wm)))
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1194,12 +1084,7 @@ class StreamingSpec extends SparkSpec {
       .select("event_id", "n_click", "n_error").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
 
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, queries.Streaming.RocksDbProvider) {
       // run 1: two clicks for user 7 through the v1 processor
       writeFile(Seq(
         EventStreams.Event(1, ts(1), 7L, "click", 1.0),
@@ -1238,13 +1123,6 @@ class StreamingSpec extends SparkSpec {
         .takeWhile(_ != null).map(_.toString.toLowerCase).mkString(" ")
       assert(msgs.contains("schema") || msgs.contains("compatible"),
         s"expected a state-schema compatibility rejection, got: $e")
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
