@@ -18,7 +18,13 @@ import org.apache.spark.sql.SparkSession
   * evicted and rebuilt. Builds run under a per-key lock rather than
   * inside `computeIfAbsent`, because builds call `memo` for the
   * artifacts they depend on (a stream sink on its staged source) and
-  * a nested `computeIfAbsent` on one map throws "Recursive update". */
+  * a nested `computeIfAbsent` on one map throws "Recursive update".
+  *
+  * Three caches stay outside this store: `HyperplaneBuckets`' plane
+  * cache (seeded hyperplane matrices), `Sources.bloomSessions` (a
+  * SparkSession) and `CboReorder.byPath` (table statistics). They are
+  * in-JVM caches with no scratch root, so there is nothing to sweep
+  * or fingerprint. */
 object Artifacts {
   private type Key = (String, String, String) // (appId, kind, dir)
   private val entries = new ConcurrentHashMap[Key, String]()

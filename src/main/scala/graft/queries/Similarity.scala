@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import graft.core.Artifacts
+import graft.core.{Artifacts, PartitionReplace}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -380,14 +380,9 @@ object Similarity {
     * would take a full postings scan per upsert. */
   private[graft] def writeIvfIndex(s: SparkSession, emb: DataFrame,
       cents: Array[Array[Float]], root: java.io.File): Unit = {
-    import s.implicits._
     if (root.exists())
       org.apache.commons.io.FileUtils.deleteDirectory(root)
-    cents.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "centroid")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(new java.io.File(root, "centroids").getAbsolutePath)
+    writeCentroids(s, root.getAbsolutePath, cents)
     val assigned = assignToLists(emb, cents)
     assigned.write.partitionBy("cid").mode("overwrite")
       .parquet(new java.io.File(root, "postings").getAbsolutePath)
@@ -402,6 +397,17 @@ object Similarity {
     s.read.parquet(new java.io.File(root, "centroids").getAbsolutePath)
       .orderBy("cid").collect()
       .map(_.getSeq[Float](1).toArray)
+
+  /** Writes the centroid table of an index root, `cid` = position:
+    * the build's table and a rebalance's commit point. */
+  private[graft] def writeCentroids(s: SparkSession, root: String,
+      cents: collection.Seq[Array[Float]]): Unit = {
+    import s.implicits._
+    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("cid", "centroid")
+      .coalesce(1).write.mode("overwrite")
+      .parquet(new java.io.File(root, "centroids").getAbsolutePath)
+  }
 
   /** Build an index root training centroids on the given corpus
     * (the s24 build, parameterized by corpus — st32's base build). */
@@ -419,16 +425,15 @@ object Similarity {
     * to the batch ids' hash buckets — a replace whose new embedding
     * assigns to a DIFFERENT list must evict the old row from the list
     * it actually lives in, which the batch's own assignments cannot
-    * reveal), then rewrite ONLY the affected posting lists via
-    * dynamic partition overwrite (the j08 machinery): merged =
-    * (existing rows of the affected lists MINUS rows whose vec_id the
-    * batch replaces) ∪ batch, staged and written with
-    * `partitionOverwriteMode=dynamic` so Spark replaces exactly the
-    * `cid=` directories involved — unaffected lists' files are never
-    * opened OR rewritten (Round12Spec pins both, file-listing-level,
-    * plus the cross-list replace). The id map's touched buckets are
-    * rewritten the same way. An empty batch is a no-op (a replayed
-    * empty micro-batch must not kill the st32 stream).
+    * reveal), then rewrite ONLY the affected posting lists through
+    * [[PartitionReplace.replace]]: merged = (existing rows of the
+    * affected lists MINUS rows whose vec_id the batch replaces) ∪
+    * batch replaces exactly the `cid=` directories involved —
+    * unaffected lists' files are never opened OR rewritten
+    * (Round12Spec pins both, file-listing-level, plus the cross-list
+    * replace). The id map's touched buckets are rewritten the same
+    * way. An empty batch is a no-op (a replayed empty micro-batch
+    * must not kill the st32 stream).
     *
     * This is the vector-database ingest path: at 100 TB the cost of
     * an upsert is ∝ |batch| + |affected lists| + |touched id-map
@@ -460,49 +465,20 @@ object Similarity {
       .join(assigned.select("vec_id"), Seq("vec_id"), "left_semi")
       .select("cid").distinct().collect().map(_.getInt(0))
     val affected = (newCids ++ oldCids).distinct.sorted
-    val existing = s.read.parquet(postingsPath)
-      .filter(col("cid").isin(affected.map(Integer.valueOf): _*))
-      .join(assigned.select("vec_id"), Seq("vec_id"), "left_anti")
-      .select("vec_id", "embedding", "cid")
-    // stage the merged lists first: Spark (correctly) refuses a write
-    // that overwrites a path its own plan is reading
-    val stage = new java.io.File(root, "postings_stage")
-    existing.unionByName(assigned)
-      .write.partitionBy("cid").mode("overwrite")
-      .parquet(stage.getAbsolutePath)
-    s.read.parquet(stage.getAbsolutePath)
-      .select("vec_id", "embedding", "cid")
-      .write.partitionBy("cid").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(postingsPath)
-    // Dynamic overwrite only replaces directories that RECEIVE rows:
-    // a list whose last vector was replaced away (and that got no new
-    // assignment) is absent from the merged frame, so its stale
-    // `cid=` directory would survive — leaving the replaced vec_id
-    // present twice (old payload in the old list, new in the new).
-    // Delete affected lists the merge emptied.
-    val mergedCids = s.read.parquet(stage.getAbsolutePath)
-      .select("cid").distinct().collect().map(_.getInt(0)).toSet
-    affected.filterNot(mergedCids.contains).foreach { cid =>
-      val d = new java.io.File(postingsPath, s"cid=$cid")
-      if (d.isDirectory)
-        org.apache.commons.io.FileUtils.deleteDirectory(d)
-    }
-    org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    // id map: merge the touched buckets the same way
-    val idStage = new java.io.File(root, "idmap_stage")
-    idmapHit.join(assigned.select("vec_id"), Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("cid"), col("bucket"))
-      .unionByName(assigned.select(col("vec_id"), col("cid"),
-        idBucket.as("bucket")))
-      .write.partitionBy("bucket").mode("overwrite")
-      .parquet(idStage.getAbsolutePath)
-    s.read.parquet(idStage.getAbsolutePath)
-      .select("vec_id", "cid", "bucket")
-      .write.partitionBy("bucket").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(idmapPath.getAbsolutePath)
-    org.apache.commons.io.FileUtils.deleteDirectory(idStage)
+    // a list whose last vector was replaced away gets no rows and is
+    // deleted, or the replaced vec_id would stay in it as well
+    PartitionReplace.replace(s.read.parquet(postingsPath)
+        .filter(col("cid").isin(affected.map(Integer.valueOf): _*))
+        .join(assigned.select("vec_id"), Seq("vec_id"), "left_anti")
+        .select("vec_id", "embedding", "cid")
+        .unionByName(assigned),
+      postingsPath, "cid", affected)
+    PartitionReplace.replace(
+      idmapHit.join(assigned.select("vec_id"), Seq("vec_id"), "left_anti")
+        .select(col("vec_id"), col("cid"), col("bucket"))
+        .unionByName(assigned.select(col("vec_id"), col("cid"),
+          idBucket.as("bucket"))),
+      idmapPath.getAbsolutePath, "bucket", buckets)
   }
 
   /** Build-once memo for the s25 pair of roots: the INCREMENTAL index
@@ -614,7 +590,6 @@ object Similarity {
     * Returns the split cids. */
   private[graft] def rebalanceIvfIndex(s: SparkSession, root: String,
       splits: Int = 2): Seq[Int] = {
-    import s.implicits._
     val postingsPath = new java.io.File(root, "postings").getAbsolutePath
     val sizes = s.read.parquet(postingsPath)
       .groupBy("cid").agg(count(lit(1)).as("n"))
@@ -640,37 +615,23 @@ object Similarity {
         // then still points at its OLD cid, and a later s25-style
         // upsert of that id would evict from the wrong list and leave
         // a duplicate. The orphan postings are the ground truth —
-        // republish their ids' idmap buckets from them (same
-        // stage→dynamic-overwrite discipline as the main path; a
-        // no-op rewrite when the idmap publish DID land, so the
+        // republish their ids' idmap buckets from them (a no-op
+        // rewrite when the idmap publish DID land, so the
         // roll-forward stays idempotent).
-        locally {
-          val orphanAssign = s.read.parquet(postingsPath)
-            .filter(col("cid").isin(orphans.map(Integer.valueOf): _*))
-            .select(col("vec_id"), col("cid"), idBucket.as("bucket"))
-          val oBuckets = orphanAssign.select("bucket").distinct()
-            .collect().map(_.getInt(0)).sorted
-          if (oBuckets.nonEmpty) {
-            val idmapPath = new java.io.File(root, "idmap")
-              .getAbsolutePath
-            val idStage = new java.io.File(root, "idmap_rollfwd_stage")
-            s.read.parquet(idmapPath)
-              .filter(col("bucket")
-                .isin(oBuckets.map(Integer.valueOf): _*))
+        val orphanAssign = s.read.parquet(postingsPath)
+          .filter(col("cid").isin(orphans.map(Integer.valueOf): _*))
+          .select(col("vec_id"), col("cid"), idBucket.as("bucket"))
+        val oBuckets = orphanAssign.select("bucket").distinct()
+          .collect().map(_.getInt(0)).sorted
+        if (oBuckets.nonEmpty) {
+          val idmapPath = new java.io.File(root, "idmap").getAbsolutePath
+          PartitionReplace.replace(s.read.parquet(idmapPath)
+              .filter(col("bucket").isin(oBuckets.map(Integer.valueOf): _*))
               .join(orphanAssign.select("vec_id"), Seq("vec_id"),
                 "left_anti")
               .select("vec_id", "cid", "bucket")
-              .unionByName(orphanAssign
-                .select("vec_id", "cid", "bucket"))
-              .write.partitionBy("bucket").mode("overwrite")
-              .parquet(idStage.getAbsolutePath)
-            s.read.parquet(idStage.getAbsolutePath)
-              .select("vec_id", "cid", "bucket")
-              .write.partitionBy("bucket").mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .parquet(idmapPath)
-            org.apache.commons.io.FileUtils.deleteDirectory(idStage)
-          }
+              .unionByName(orphanAssign),
+            idmapPath, "bucket", oBuckets)
         }
         val means = s.read.parquet(postingsPath)
           .filter(col("cid").isin(orphans.map(Integer.valueOf): _*))
@@ -685,11 +646,7 @@ object Similarity {
             .foreach(r => c(r.getInt(1)) = r.getDouble(2).toFloat)
           c
         }
-        (readCentroids(s, root) ++ adopted).zipWithIndex
-          .map { case (c, i) => (i, c.toSeq) }.toSeq
-          .toDF("cid", "centroid")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new java.io.File(root, "centroids").getAbsolutePath)
+        writeCentroids(s, root, readCentroids(s, root) ++ adopted)
       }
     }
     val hot = sizes.filter(_._2 >= 4)
@@ -712,59 +669,29 @@ object Similarity {
         when(nearestCentroidCol(col("embedding"), sub) === 0, lit(cid))
           .otherwise(lit(fresh)).as("cid"))
     }
-    // snapshot the re-clustered rows to a stage dir BEFORE touching
-    // postings/: the publish below refreshes (and so invalidates) any
-    // cached plan that reads postingsPath — a persist() here would
-    // silently recompute from the OVERWRITTEN dir and lose the moved
-    // rows for the idmap merge (the s30 stage discipline, same reason)
-    val stage = new java.io.File(root, "postings_rebal_stage")
-    rewrittenParts.reduce(_ unionByName _)
-      .write.partitionBy("cid").mode("overwrite")
-      .parquet(stage.getAbsolutePath)
-    val rewritten = s.read.parquet(stage.getAbsolutePath)
-      .select(col("vec_id"), col("embedding"),
-        col("cid").cast("int").as("cid"))
-    rewritten.write.partitionBy("cid").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(postingsPath)
-    // a hot list whose vectors ALL moved to the fresh sub-list keeps
-    // its stale dir under dynamic overwrite — delete it (the s25
-    // emptied-list edge, same fix)
-    val keptCids = rewritten.select("cid").distinct()
-      .collect().map(_.getInt(0)).toSet
-    hot.filterNot(keptCids.contains).foreach { cid =>
-      val d = new java.io.File(postingsPath, s"cid=$cid")
-      if (d.isDirectory)
-        org.apache.commons.io.FileUtils.deleteDirectory(d)
-    }
-    // idmap: only ids that moved to a FRESH list change buckets
-    val moved = rewritten.filter(col("cid") >= cents.length)
+    // a hot list whose vectors ALL moved to its fresh sub-list is
+    // deleted
+    val rewritten = rewrittenParts.reduce(_ unionByName _)
+    val kept = PartitionReplace.replace(rewritten, postingsPath, "cid", hot)
+    // idmap: only ids that moved to a FRESH list change buckets. They
+    // are read back from the published lists: `rewritten` reads the
+    // hot lists the publish just replaced
+    val moved = PartitionReplace.published(rewritten, postingsPath, "cid",
+        kept.filter(_ >= cents.length))
       .select(col("vec_id"), col("cid"), idBucket.as("bucket"))
     val movedBuckets = moved.select("bucket").distinct()
       .collect().map(_.getInt(0)).sorted
     if (movedBuckets.nonEmpty) {
       val idmapPath = new java.io.File(root, "idmap").getAbsolutePath
-      val idStage = new java.io.File(root, "idmap_rebal_stage")
-      s.read.parquet(idmapPath)
-        .filter(col("bucket").isin(movedBuckets.map(Integer.valueOf): _*))
-        .join(moved.select("vec_id"), Seq("vec_id"), "left_anti")
-        .select("vec_id", "cid", "bucket")
-        .unionByName(moved.select("vec_id", "cid", "bucket"))
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(idStage.getAbsolutePath)
-      s.read.parquet(idStage.getAbsolutePath)
-        .select("vec_id", "cid", "bucket")
-        .write.partitionBy("bucket").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(idmapPath)
-      org.apache.commons.io.FileUtils.deleteDirectory(idStage)
+      PartitionReplace.replace(s.read.parquet(idmapPath)
+          .filter(col("bucket").isin(movedBuckets.map(Integer.valueOf): _*))
+          .join(moved.select("vec_id"), Seq("vec_id"), "left_anti")
+          .select("vec_id", "cid", "bucket")
+          .unionByName(moved),
+        idmapPath, "bucket", movedBuckets)
     }
     // centroid table LAST — the commit point (KB-scale)
-    newCents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "centroid")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(new java.io.File(root, "centroids").getAbsolutePath)
-    org.apache.commons.io.FileUtils.deleteDirectory(stage)
+    writeCentroids(s, root, newCents)
     hot.toSeq
   }
 
@@ -841,29 +768,16 @@ object Similarity {
     * index keeps serving the deleted embeddings). The ids' CURRENT
     * lists come from the `idmap/` sidecar (pruned to the ids' hash
     * buckets); only those posting lists are rewritten (existing rows
-    * MINUS the ids) via staged dynamic partition overwrite, lists the
-    * delete emptied get their stale dirs removed (the s25 edge), and
-    * the touched idmap buckets merge the same way — with buckets the
-    * delete emptied removed too (a delete, unlike an upsert, CAN
-    * empty a bucket). Centroids are untouched: erasure never retrains
-    * (probing a shrunken or vanished list just reads fewer rows —
-    * the FAISS `remove_ids` contract). Ids not present in the index
+    * MINUS the ids) through [[PartitionReplace.replace]], which also
+    * removes the lists the delete emptied, and the touched idmap
+    * buckets merge the same way. Centroids are untouched: erasure
+    * never retrains (probing a shrunken or vanished list just reads
+    * fewer rows — the FAISS `remove_ids` contract). Ids not present in the index
     * are a no-op, which makes a crash-replay of the whole delete
     * idempotent: every artifact is re-derived as (stored MINUS ids),
     * and the second run finds nothing to touch and rewrites NOTHING
     * (Round14Spec pins both windows at file level). Cost ∝ |ids| +
     * |their lists| + |their idmap buckets| — never ∝ corpus. */
-  /** A staged parquet dir is unreadable when the write that produced
-    * it emitted zero rows (no part files → no schema) — which a
-    * delete, unlike an upsert, can legitimately do to every touched
-    * partition at once. */
-  private def stageHasRows(stage: java.io.File): Boolean = {
-    def walk(f: java.io.File): Boolean =
-      if (f.isFile) f.getName.endsWith(".parquet")
-      else Option(f.listFiles()).getOrElse(Array.empty).exists(walk)
-    walk(stage)
-  }
-
   private[graft] def deleteFromIvfIndex(s: SparkSession, root: String,
       ids: DataFrame): Unit = {
     if (ids.isEmpty) return
@@ -882,55 +796,19 @@ object Similarity {
       .collect().map(_.getInt(0)).sorted
     if (affected.isEmpty) return // nothing stored — replayed delete
     // ---- postings: rewrite only the ids' lists, minus the ids ----
-    val stage = new java.io.File(root, "postings_erase_stage")
-    s.read.parquet(postingsPath)
-      .filter(col("cid").isin(affected.map(Integer.valueOf): _*))
-      .join(ids.select("vec_id"), Seq("vec_id"), "left_anti")
-      .select("vec_id", "embedding", "cid")
-      .write.partitionBy("cid").mode("overwrite")
-      .parquet(stage.getAbsolutePath)
-    val keptCids =
-      if (stageHasRows(stage)) {
-        val kept = s.read.parquet(stage.getAbsolutePath)
-        kept.select("vec_id", "embedding", "cid")
-          .write.partitionBy("cid").mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(postingsPath)
-        kept.select("cid").distinct()
-          .collect().map(_.getInt(0)).toSet
-      } else Set.empty[Int]
-    affected.filterNot(keptCids.contains).foreach { cid =>
-      val d = new java.io.File(postingsPath, s"cid=$cid")
-      if (d.isDirectory)
-        org.apache.commons.io.FileUtils.deleteDirectory(d)
-    }
-    org.apache.commons.io.FileUtils.deleteDirectory(stage)
+    PartitionReplace.replace(s.read.parquet(postingsPath)
+        .filter(col("cid").isin(affected.map(Integer.valueOf): _*))
+        .join(ids.select("vec_id"), Seq("vec_id"), "left_anti")
+        .select("vec_id", "embedding", "cid"),
+      postingsPath, "cid", affected)
     // ---- idmap: merge the touched buckets, minus the ids ----
     val hitBuckets = hit.select("bucket").distinct()
       .collect().map(_.getInt(0)).sorted
-    val idStage = new java.io.File(root, "idmap_erase_stage")
-    s.read.parquet(idmapPath.getAbsolutePath)
-      .filter(col("bucket").isin(hitBuckets.map(Integer.valueOf): _*))
-      .join(ids.select("vec_id"), Seq("vec_id"), "left_anti")
-      .select("vec_id", "cid", "bucket")
-      .write.partitionBy("bucket").mode("overwrite")
-      .parquet(idStage.getAbsolutePath)
-    val keptBuckets =
-      if (stageHasRows(idStage)) {
-        val keptMap = s.read.parquet(idStage.getAbsolutePath)
-        keptMap.select("vec_id", "cid", "bucket")
-          .write.partitionBy("bucket").mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(idmapPath.getAbsolutePath)
-        keptMap.select("bucket").distinct()
-          .collect().map(_.getInt(0)).toSet
-      } else Set.empty[Int]
-    hitBuckets.filterNot(keptBuckets.contains).foreach { b =>
-      val d = new java.io.File(idmapPath, s"bucket=$b")
-      if (d.isDirectory)
-        org.apache.commons.io.FileUtils.deleteDirectory(d)
-    }
-    org.apache.commons.io.FileUtils.deleteDirectory(idStage)
+    PartitionReplace.replace(s.read.parquet(idmapPath.getAbsolutePath)
+        .filter(col("bucket").isin(hitBuckets.map(Integer.valueOf): _*))
+        .join(ids.select("vec_id"), Seq("vec_id"), "left_anti")
+        .select("vec_id", "cid", "bucket"),
+      idmapPath.getAbsolutePath, "bucket", hitBuckets)
   }
 
   /** s32's BM25 mechanism — DELETE a set of doc_ids from a stored
@@ -943,7 +821,7 @@ object Similarity {
     * their `totals/` subtotals are re-derived from the merged docmap
     * — so n_docs/t_tokens (BM25's IDF and length normalizers) are
     * exactly the surviving corpus's. Buckets a delete emptied are
-    * removed dir-by-dir (postings+dict twins, docmap+totals twins).
+    * removed (postings+dict twins, docmap+totals twins).
     * Absent ids are a no-op; replay is idempotent and rewrites
     * nothing. Because every statistic is an exact aggregate, the
     * erased index serves BIT-IDENTICALLY to a rebuild without the
@@ -956,88 +834,26 @@ object Similarity {
       s"index at $root has no doc map — rebuild it with this layout " +
         "(erasure cannot locate the deleted docs' postings)")
     val postingsPath = new java.io.File(root, "postings").getAbsolutePath
-    val dictPath = new java.io.File(root, "dict").getAbsolutePath
     val dbs = docIds.select(docBucket.as("db")).distinct()
       .collect().map(_.getInt(0)).sorted
-    val docmapHit = s.read.parquet(docmapPath.getAbsolutePath)
+    val touched = s.read.parquet(docmapPath.getAbsolutePath)
       .filter(col("db").isin(dbs.map(Integer.valueOf): _*))
       .join(docIds.select("doc_id"), Seq("doc_id"), "left_semi")
-      .persist()
-    val touched = docmapHit.select(explode(col("tbs")).as("tb"))
+      .select(explode(col("tbs")).as("tb"))
       .distinct().collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) { docmapHit.unpersist(false); return }
+    if (touched.isEmpty) return
     // ---- postings: rewrite the touched token buckets, minus the docs
-    val stage = new java.io.File(root, "postings_erase_stage")
-    s.read.parquet(postingsPath)
-      .filter(col("tb").isin(touched.map(Integer.valueOf): _*))
-      .join(docIds.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select("token", "doc_id", "tf", "dl", "tb")
-      .write.partitionBy("tb").mode("overwrite")
-      .parquet(stage.getAbsolutePath)
-    val mergedTbs =
-      if (stageHasRows(stage)) {
-        val merged = s.read.parquet(stage.getAbsolutePath)
-        merged.select("token", "doc_id", "tf", "dl", "tb")
-          .write.partitionBy("tb").mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(postingsPath)
-        // dict: re-derive the touched buckets from merged postings
-        val dictStage = new java.io.File(root, "dict_erase_stage")
-        merged.groupBy("token").agg(count(lit(1)).as("df"))
-          .withColumn("tb", tokenBucket(col("token")))
-          .write.partitionBy("tb").mode("overwrite")
-          .parquet(dictStage.getAbsolutePath)
-        s.read.parquet(dictStage.getAbsolutePath)
-          .select("token", "df", "tb")
-          .write.partitionBy("tb").mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(dictPath)
-        org.apache.commons.io.FileUtils.deleteDirectory(dictStage)
-        merged.select("tb").distinct()
-          .collect().map(_.getInt(0)).toSet
-      } else Set.empty[Int]
-    touched.filterNot(mergedTbs.contains).foreach { tb =>
-      Seq(postingsPath, dictPath).foreach { p =>
-        val d = new java.io.File(p, s"tb=$tb")
-        if (d.isDirectory)
-          org.apache.commons.io.FileUtils.deleteDirectory(d)
-      }
-    }
+    replacePostings(s.read.parquet(postingsPath)
+        .filter(col("tb").isin(touched.map(Integer.valueOf): _*))
+        .join(docIds.select("doc_id"), Seq("doc_id"), "left_anti")
+        .select("token", "doc_id", "tf", "dl", "tb"),
+      root, touched)
     // ---- docmap + totals: merge the touched doc buckets, minus docs
-    val dmStage = new java.io.File(root, "docmap_erase_stage")
-    s.read.parquet(docmapPath.getAbsolutePath)
-      .filter(col("db").isin(dbs.map(Integer.valueOf): _*))
-      .join(docIds.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select("doc_id", "dl", "tbs", "db")
-      .write.partitionBy("db").mode("overwrite")
-      .parquet(dmStage.getAbsolutePath)
-    val keptDbs =
-      if (stageHasRows(dmStage)) {
-        val dmMerged = s.read.parquet(dmStage.getAbsolutePath)
-        dmMerged.select("doc_id", "dl", "tbs", "db")
-          .write.partitionBy("db").mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(docmapPath.getAbsolutePath)
-        dmMerged.groupBy("db")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("dl")).as("t_tokens"))
-          .write.partitionBy("db").mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(new java.io.File(root, "totals").getAbsolutePath)
-        dmMerged.select("db").distinct()
-          .collect().map(_.getInt(0)).toSet
-      } else Set.empty[Int]
-    dbs.filterNot(keptDbs.contains).foreach { db =>
-      Seq(docmapPath.getAbsolutePath,
-        new java.io.File(root, "totals").getAbsolutePath).foreach { p =>
-        val d = new java.io.File(p, s"db=$db")
-        if (d.isDirectory)
-          org.apache.commons.io.FileUtils.deleteDirectory(d)
-      }
-    }
-    org.apache.commons.io.FileUtils.deleteDirectory(dmStage)
-    docmapHit.unpersist(false)
-    ()
+    replaceDocmap(s.read.parquet(docmapPath.getAbsolutePath)
+        .filter(col("db").isin(dbs.map(Integer.valueOf): _*))
+        .join(docIds.select("doc_id"), Seq("doc_id"), "left_anti")
+        .select("doc_id", "dl", "tbs", "db"),
+      root, dbs)
   }
 
   /** The s32 erasure set: a ~1/7 slice of each corpus, EXCLUDING the
@@ -2013,23 +1829,60 @@ object Similarity {
     // the index, not another corpus pass)
     val stored = s.read
       .parquet(new java.io.File(root, "postings").getAbsolutePath)
-    stored.groupBy("token").agg(count(lit(1)).as("df"))
-      .withColumn("tb", tokenBucket(col("token")))
-      .write.partitionBy("tb").mode("overwrite")
+    dictOf(stored).write.partitionBy("tb").mode("overwrite")
       .parquet(new java.io.File(root, "dict").getAbsolutePath)
-    stored.groupBy("doc_id")
-      .agg(first(col("dl")).as("dl"),
-        sort_array(collect_set(col("tb"))).as("tbs"))
-      .withColumn("db", docBucket)
-      .write.partitionBy("db").mode("overwrite")
+    docmapOf(stored).write.partitionBy("db").mode("overwrite")
       .parquet(new java.io.File(root, "docmap").getAbsolutePath)
     // totals derive from the written docmap (KB-scale), NOT from a
     // second tokenize pass over the corpus
-    s.read.parquet(new java.io.File(root, "docmap").getAbsolutePath)
-      .groupBy("db")
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("t_tokens"))
+    totalsOf(s.read
+        .parquet(new java.io.File(root, "docmap").getAbsolutePath))
       .write.partitionBy("db").mode("overwrite")
       .parquet(new java.io.File(root, "totals").getAbsolutePath)
+  }
+
+  /** `dict/` rows (token, df, tb) of a postings frame: df of a token
+    * is its postings row count, a bucket-local aggregate. */
+  private def dictOf(postings: DataFrame): DataFrame =
+    postings.groupBy("token").agg(count(lit(1)).as("df"))
+      .withColumn("tb", tokenBucket(col("token")))
+
+  /** `docmap/` rows (doc_id, dl, tbs, db) of a postings frame. */
+  private def docmapOf(postings: DataFrame): DataFrame =
+    postings.groupBy("doc_id")
+      .agg(first(col("dl")).as("dl"),
+        sort_array(collect_set(col("tb"))).as("tbs"))
+      .withColumn("db", docBucket)
+
+  /** `totals/` rows (db, n_docs, t_tokens) of a docmap frame. */
+  private def totalsOf(docmap: DataFrame): DataFrame =
+    docmap.groupBy("db")
+      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("t_tokens"))
+
+  /** Replaces the `touched` token buckets of `postings/` with
+    * `merged`, then re-derives the same buckets of `dict/` from the
+    * published postings; a bucket the merge emptied loses both. */
+  private def replacePostings(merged: DataFrame, root: String,
+      touched: Iterable[Int]): Unit = {
+    val postingsPath = new java.io.File(root, "postings").getAbsolutePath
+    val kept = PartitionReplace.replace(merged, postingsPath, "tb", touched)
+    PartitionReplace.replace(
+      dictOf(PartitionReplace.published(merged, postingsPath, "tb", kept)),
+      new java.io.File(root, "dict").getAbsolutePath, "tb", touched)
+  }
+
+  /** Replaces the `touched` doc buckets of `docmap/` with `merged`,
+    * then re-derives the same buckets' `totals/` subtotals from the
+    * published docmap — bucket-local and idempotent, never a
+    * read-modify-write of a global row, so a crash-replayed batch
+    * cannot double-count its delta. */
+  private def replaceDocmap(merged: DataFrame, root: String,
+      touched: Iterable[Int]): Unit = {
+    val docmapPath = new java.io.File(root, "docmap").getAbsolutePath
+    val kept = PartitionReplace.replace(merged, docmapPath, "db", touched)
+    PartitionReplace.replace(
+      totalsOf(PartitionReplace.published(merged, docmapPath, "db", kept)),
+      new java.io.File(root, "totals").getAbsolutePath, "db", touched)
   }
 
   /** The single-row (n_docs, t_tokens) BM25 global normalizers —
@@ -2128,14 +1981,13 @@ object Similarity {
     * sidecar (pruned to the batch ids' doc buckets); the touched
     * token buckets = the batch's new tokens' buckets ∪ the replaced
     * docs' old buckets; merge = (touched buckets' postings MINUS
-    * batch doc_ids' rows) ∪ the batch's rows, staged and published
-    * via dynamic partition overwrite, emptied `tb=` dirs deleted
-    * explicitly (the s25 advice edge, same fix). `dict/` is
-    * RE-DERIVED per touched bucket from the merged postings (df of a
-    * token = its postings row count, a bucket-local aggregate — no
-    * global pass), `docmap/`'s touched doc buckets merge the same
-    * way, and `totals/`'s touched subtotal rows are re-derived from
-    * the merged docmap buckets. Replay-idempotent INCLUDING every
+    * batch doc_ids' rows) ∪ the batch's rows, published through
+    * [[PartitionReplace.replace]]. `dict/` is RE-DERIVED per touched
+    * bucket from the merged postings (df of a token = its postings
+    * row count, a bucket-local aggregate — no global pass),
+    * `docmap/`'s touched doc buckets merge the same way, and
+    * `totals/`'s touched subtotal rows are re-derived from the merged
+    * docmap buckets. Replay-idempotent INCLUDING every
     * crash window: each artifact is re-derived from (current stored
     * state MINUS batch ids) ∪ batch — never read-modify-written — so
     * a batch replayed after a partial publish converges to the same
@@ -2160,7 +2012,6 @@ object Similarity {
       s"index at $root has no doc map — rebuild it with this layout " +
         "(upsert cannot locate replaced docs' postings)")
     val postingsPath = new java.io.File(root, "postings").getAbsolutePath
-    val dictPath = new java.io.File(root, "dict").getAbsolutePath
     val toks = batch.select(col("doc_id"),
       explode(split(col("text"), " ")).as("token"))
     val bdl = batch.select(col("doc_id"),
@@ -2173,86 +2024,26 @@ object Similarity {
     // replaced docs' old footprint, from the docmap's touched buckets
     val dbs = batch.select(docBucket.as("db")).distinct()
       .collect().map(_.getInt(0)).sorted
-    val docmapHit = s.read.parquet(docmapPath.getAbsolutePath)
+    val touched = s.read.parquet(docmapPath.getAbsolutePath)
       .filter(col("db").isin(dbs.map(Integer.valueOf): _*))
       .join(batch.select("doc_id"), Seq("doc_id"), "left_semi")
-      .persist()
-    val oldTbs = docmapHit.select(explode(col("tbs")).as("tb"))
-      .distinct().collect().map(_.getInt(0))
-    val newTbs = bPostings.select("tb").distinct()
-      .collect().map(_.getInt(0))
-    val touched = (oldTbs ++ newTbs).distinct.sorted
-    // ---- postings: merge the touched token buckets ----
-    val existing = s.read.parquet(postingsPath)
-      .filter(col("tb").isin(touched.map(Integer.valueOf): _*))
-      .join(batch.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select("token", "doc_id", "tf", "dl", "tb")
-    val stage = new java.io.File(root, "postings_stage")
-    existing.unionByName(bPostings
-        .select("token", "doc_id", "tf", "dl", "tb"))
-      .write.partitionBy("tb").mode("overwrite")
-      .parquet(stage.getAbsolutePath)
-    val merged = s.read.parquet(stage.getAbsolutePath)
-    merged.select("token", "doc_id", "tf", "dl", "tb")
-      .write.partitionBy("tb").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(postingsPath)
-    val mergedTbs = merged.select("tb").distinct()
-      .collect().map(_.getInt(0)).toSet
-    // a bucket the merge emptied keeps its stale dir under dynamic
-    // overwrite — delete it (and its dict twin) explicitly
-    touched.filterNot(mergedTbs.contains).foreach { tb =>
-      Seq(postingsPath, dictPath).foreach { p =>
-        val d = new java.io.File(p, s"tb=$tb")
-        if (d.isDirectory)
-          org.apache.commons.io.FileUtils.deleteDirectory(d)
-      }
-    }
-    // ---- dict: re-derive the touched buckets from merged postings ----
-    val dictStage = new java.io.File(root, "dict_stage")
-    merged.groupBy("token").agg(count(lit(1)).as("df"))
-      .withColumn("tb", tokenBucket(col("token")))
-      .write.partitionBy("tb").mode("overwrite")
-      .parquet(dictStage.getAbsolutePath)
-    s.read.parquet(dictStage.getAbsolutePath)
-      .select("token", "df", "tb")
-      .write.partitionBy("tb").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(dictPath)
-    org.apache.commons.io.FileUtils.deleteDirectory(dictStage)
-    // ---- docmap: merge the touched doc buckets ----
-    val dmStage = new java.io.File(root, "docmap_stage")
-    val newDocmap = bPostings.groupBy("doc_id")
-      .agg(first(col("dl")).as("dl"),
-        sort_array(collect_set(col("tb"))).as("tbs"))
-      .withColumn("db", docBucket)
-    s.read.parquet(docmapPath.getAbsolutePath)
-      .filter(col("db").isin(dbs.map(Integer.valueOf): _*))
-      .join(batch.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select("doc_id", "dl", "tbs", "db")
-      .unionByName(newDocmap.select("doc_id", "dl", "tbs", "db"))
-      .write.partitionBy("db").mode("overwrite")
-      .parquet(dmStage.getAbsolutePath)
-    val dmMerged = s.read.parquet(dmStage.getAbsolutePath)
-    dmMerged.select("doc_id", "dl", "tbs", "db")
-      .write.partitionBy("db").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(docmapPath.getAbsolutePath)
-    // (a touched doc bucket can never empty: every batch doc yields
-    // ≥1 posting and upsert has no delete path — no dir cleanup here)
-    // ---- totals: re-derive the touched doc buckets' subtotals from
-    // the merged docmap (bucket-local, published idempotently via
-    // dynamic overwrite — NOT a read-modify-write of a global row, so
-    // a crash-replayed batch cannot double-count the delta; any crash
-    // window re-derives the same subtotals from the same merge) ----
-    dmMerged.groupBy("db")
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("t_tokens"))
-      .write.partitionBy("db").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(new java.io.File(root, "totals").getAbsolutePath)
-    org.apache.commons.io.FileUtils.deleteDirectory(dmStage)
-    org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    docmapHit.unpersist(false)
+      .select(explode(col("tbs")).as("tb"))
+      .union(bPostings.select("tb")).distinct()
+      .collect().map(_.getInt(0)).sorted
+    // ---- postings (+ dict): merge the touched token buckets ----
+    replacePostings(s.read.parquet(postingsPath)
+        .filter(col("tb").isin(touched.map(Integer.valueOf): _*))
+        .join(batch.select("doc_id"), Seq("doc_id"), "left_anti")
+        .select("token", "doc_id", "tf", "dl", "tb")
+        .unionByName(bPostings.select("token", "doc_id", "tf", "dl", "tb")),
+      root, touched)
+    // ---- docmap (+ totals): merge the touched doc buckets ----
+    replaceDocmap(s.read.parquet(docmapPath.getAbsolutePath)
+        .filter(col("db").isin(dbs.map(Integer.valueOf): _*))
+        .join(batch.select("doc_id"), Seq("doc_id"), "left_anti")
+        .select("doc_id", "dl", "tbs", "db")
+        .unionByName(docmapOf(bPostings)),
+      root, dbs)
     bPostings.unpersist(false)
     ()
   }
@@ -2565,9 +2356,7 @@ object Similarity {
         .select(col("vec_id"), col("embedding"))
       val cents = ivfCentroids(emb, IvfK, IvfIters, seed = 9000)
       val cbs = pqCodebooks(emb, seed = 11000)
-      cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cid", "centroid").coalesce(1).write.mode("overwrite")
-        .parquet(new java.io.File(root, "centroids").getAbsolutePath)
+      writeCentroids(s, root.getAbsolutePath, cents)
       (for (m <- 0 until PqM; k <- 0 until PqK)
         yield (m, k, cbs(m)(k).toSeq)).toDF("m", "k", "sub")
         .coalesce(1).write.mode("overwrite")

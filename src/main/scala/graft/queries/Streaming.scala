@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Artifacts
+import graft.core.{Artifacts, PartitionReplace}
 import org.apache.spark.sql.types.DecimalType
 import graft.GraftSession.withConf
 import graft.streaming.{EventStreams, Replay}
@@ -2124,29 +2124,7 @@ $counts
       .select(col("o_orderkey"), col("o_orderpriority"), col("month"),
         col("cents_new").as("cents"))
       .withColumn("kb", kbOf)
-    // stage→publish: the merge READS base/ and must not overwrite
-    // its own input mid-plan
-    val stage = new java.io.File(new java.io.File(basePath)
-      .getParentFile, "base_stage")
-    kept.unionByName(adds)
-      .write.partitionBy("kb").mode("overwrite")
-      .parquet(stage.getAbsolutePath)
-    val merged = s2.read.parquet(stage.getAbsolutePath)
-    merged.select("o_orderkey", "o_orderpriority", "month", "cents",
-        "kb")
-      .write.partitionBy("kb").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(basePath)
-    // a bucket whose keys were all deleted keeps a stale dir under
-    // dynamic overwrite — delete it explicitly
-    val keptKbs = merged.select("kb").distinct()
-      .collect().map(_.getInt(0)).toSet
-    kbs.filterNot(keptKbs.contains).foreach { b =>
-      val d = new java.io.File(basePath, s"kb=$b")
-      if (d.isDirectory)
-        org.apache.commons.io.FileUtils.deleteDirectory(d)
-    }
-    org.apache.commons.io.FileUtils.deleteDirectory(stage)
+    PartitionReplace.replace(kept.unionByName(adds), basePath, "kb", kbs)
     // ---- the retraction fold into the next epoch ----
     val retr = batch.filter(col("op").isin("D", "U"))
       .select(col("o_orderpriority"), col("month"),

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.AsOf
+import graft.queries.{AsOf, Streaming}
 
 /** As-of join semantics on hand-built data (the DuckDB ASOF JOIN
   * oracle covers the events-table demo; this pins the edge cases). */
@@ -75,5 +75,27 @@ class AsOfSpec extends SparkSpec {
     // unique purchase event ids (sortedRows orders them)
     val ids = rows.map(_.getLong(0))
     assert(ids.sameElements(ids.sorted) && ids.distinct.length == ids.length)
+    // the expected match of every purchase, from the raw events: the
+    // user's latest signup at or before it, ties to the highest event_id
+    case class Ev(id: Long, user: Long, micros: Long, value: Any)
+    def evs(kind: String): Seq[Ev] = Streaming.events(spark, sfDir)
+      .filter(col("event_type") === kind)
+      .select(col("event_id"), col("user_id"),
+        unix_micros(col("ts")), col("value"))
+      .collect().toSeq
+      .map(r => Ev(r.getLong(0), r.getLong(1), r.getLong(2), r.get(3)))
+    val signups = evs("signup").groupBy(_.user)
+    val expected = evs("purchase").flatMap { p =>
+      signups.getOrElse(p.user, Nil).filter(_.micros <= p.micros)
+        .maxByOption(s => (s.micros, s.id))
+        .map(s => p.id -> (p.user, s.value))
+    }.toMap
+    assert(expected.nonEmpty)
+    assert(rows.length == expected.size)
+    rows.foreach { r =>
+      assert(expected.get(r.getLong(0)) == Some((r.getLong(1), r.get(3))),
+        s"purchase ${r.getLong(0)} is not matched to its latest earlier " +
+          "signup")
+    }
   }
 }

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * files scope settings with `GraftSession.withConf`, replay streams
   * with `streaming.Replay` and install rules through the rule's own
   * `install`, so none of them touches the underlying calls; tests
-  * scope settings and install rules the same way. */
+  * scope settings and install rules the same way. Stored partitions
+  * are rewritten in place only through [[core.PartitionReplace]]. */
 class ScratchPathGuardSpec extends AnyFunSuite {
 
   private val mainRoot = new File("src/main/scala/graft")
@@ -97,6 +98,19 @@ class ScratchPathGuardSpec extends AnyFunSuite {
     } yield s"${f.getName}:${i + 1}: $b"
     assert(hits.isEmpty,
       s"use GraftSession.withConf or CboReorder.install: $hits")
+  }
+
+  test("only core.PartitionReplace and Sources' j08 row set " +
+    "partitionOverwriteMode on a write") {
+    val owners = Set("core/PartitionReplace.scala", "queries/Sources.scala")
+    val hits = for {
+      f <- scalaFiles(mainRoot)
+      (line, i) <- text(f).split("\n").zipWithIndex
+      if line.contains(".option(\"partitionOverwriteMode\"")
+    } yield (mainRoot.toPath.relativize(f.toPath).toString, i + 1)
+    assert(hits.map(_._1).toSet == owners,
+      "rewrite stored partitions through PartitionReplace.replace: " +
+        hits.filterNot(h => owners(h._1)).map { case (f, l) => s"$f:$l" })
   }
 
   test("Trigger.AvailableNow appears in one main file: the replay " +
